@@ -139,8 +139,8 @@ object AnnOps {
     * one fused `graft_lsh_sig(emb, 8·tables)` call yields ALL tables'
     * keys) with multi-probe radius `radius` per table. Candidates are
     * the OR-union across tables (dedup'd before scoring when tables>1);
-    * top-3 per probe by rounded cosine. The LshLadder dev main measures
-    * the (tables × radius) recall/cost grid with this one definition. */
+    * top-3 per probe by rounded cosine. The (tables × radius) recall/cost
+    * grid over this one definition is SCALE.md's `q_sim_ann_lsh` row. */
   private[graft] def lshSearch(s: SparkSession, d: String, tables: Int,
       radius: Int): DataFrame = {
     plans.TopKRewriteApi.ensureRegistered(s)
@@ -198,7 +198,7 @@ object AnnOps {
 
   /** Graded LSH config: 4 independent 8-bit tables (OR-construction,
     * Indyk–Motwani), multi-probe Hamming ≤ 3 per table (Lv et al.).
-    * Chosen from the LshLadder grid at sf0.1 (recall@3 via the same
+    * Chosen from that grid at sf0.1 (recall@3 via the same
     * truth q_sim_ann_recall uses / median secs of 2 reps); round-10
     * rows re-measured round-12 alongside the extended 4/5-table axis:
     *
@@ -537,7 +537,7 @@ object AnnOps {
       "p -> p[1] * 8.0 / (7.0 + p[2]))"
 
   /** The OPQ-family rotation that WINS the raw-ADC tier on the
-    * anisotropic view (r15 OpqLadder: 6/24 vs identity's 2/24; on the
+    * anisotropic view (SCALE.md Round-15: 6/24 vs identity's 2/24; on the
     * isotropic fixture the same rotation is neutral-to-worse — the
     * re-balance only pays when there is variance structure to
     * re-balance): out[i] = sign(i) · in[perm(i)], perm(i) = 37·i mod 64
@@ -692,7 +692,8 @@ object AnnOps {
 
   /** The full PQ pipeline (fresh Lloyd training + encode + ADC + exact
     * re-rank) over an ARBITRARY (vec_id, embedding) frame — the
-    * OpqLadder hook: feed it rotated vectors and the recall delta vs
+    * rotation hook (SCALE.md "OPQ-style rotation"): feed it rotated
+    * vectors and the recall delta vs
     * the identity rotation IS the OPQ-style-rotation experiment, since
     * an orthogonal transform preserves every L2 distance (truth is
     * unchanged) while re-distributing variance across the 4 PQ
@@ -1162,7 +1163,7 @@ object AnnOps {
     * every later construction (TimeQ reps 2+, plan prints) is a trivial
     * ≤30-row read. Rep-based timing of the published-answer query NAMES
     * is meaningless after the first call; dev tooling times the inner
-    * *Search frames instead (TimeQ caveat, IvfPrefixLadder), and Bench's
+    * *Search frames instead (TimeQ prints this caveat), and Bench's
     * steady-state rep pins these names to their first-pass time. */
   private[graft] def publishedAnswer(s: SparkSession, d: String,
       tag: String)(build: => DataFrame): DataFrame = {
@@ -1654,7 +1655,8 @@ object AnnOps {
     * |corpus|·|queries| — and a per-query window takes top-3. This is
     * the batch "attach nearest neighbors to EVERY row" operator a
     * dedup/linking pipeline runs corpus-vs-corpus at 100 TB. */
-  /** Query-side cell fanout — picked from the measured KnnLadder grid at
+  /** Query-side cell fanout — picked from the measured grid (SCALE.md's
+    * `q_sim_knn_join` row) at
     * sf0.1 (recall@3 vs brute truth over the whole query class, r12 run):
     * fanout 1 → 216/858, 2 → 382, 3 → 521, 4 → 618, 5 → 699, 6 → 773,
     * wall flat 0.5–0.75 s throughout — recall climbs near-linearly while
@@ -2499,7 +2501,8 @@ object AnnOps {
     * is re-ranked with full-precision cosine, top-3 kept. The same
     * shortlist→exact-refine architecture as `rerankAdc`, one tier up;
     * recall is measured by q_sim_ann_recall under method 'prefix'
-    * (probes 20-30). Config chosen from the PrefixLadder (dim × R) grid
+    * (probes 20-30). Config chosen from the (dim × R) grid (SCALE.md's
+    * `q_sim_ann_prefix` row)
     * at sf0.1 (recall@3 / secs, 2 reps):
     *
     *   dim=16: 12/30 @R=64, 17/30 @160, 22/30 @320
@@ -2515,8 +2518,8 @@ object AnnOps {
     * the bounded-heap shape — only ≤320 rows per probe ever reach the
     * full-dimension re-rank. */
   /** Parameterized form (dim = prefix length, r = shortlist size) —
-    * the PrefixLadder dev main measures the (dim × r) recall/cost grid
-    * with this one definition; qSimAnnPrefix grades the chosen point. */
+    * the (dim × r) recall/cost grid above was measured over this one
+    * definition; qSimAnnPrefix grades the chosen point. */
   private[graft] def prefixSearch(s: SparkSession, d: String, dim: Int,
       r: Int): DataFrame = {
     plans.TopKRewriteApi.ensureRegistered(s)
@@ -2570,7 +2573,8 @@ object AnnOps {
     * probe-side IO of plain IVF while returning the identical answer
     * whenever r covers the within-cell true top-3.
     *
-    * IvfPrefixLadder grid at sf0.1 (recall@3 vs the ivf probes' brute
+    * Grid at sf0.1 (SCALE.md's `q_sim_ann_ivf_prefix` row; recall@3 vs
+    * the ivf probes' brute
     * cosine truth / wall secs, 2 reps; ivf ceiling row 25/30 @ ~0.6 s):
     *
     *   dim=16: 9/30 @R=64, 16/30 @160, 23/30 @320

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // UNTIMED-BUT-VERIFIED set: queries Verify still dumps and the DuckDB
   // oracle still grades every round, but the TIMED fleet omits because
@@ -45,33 +44,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     Scratch.init() // RAM-backed staging/checkpoint/spill (SCALE.md)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev A/B knob: SPARK_GRAFT_AQE=off measures how much of the bench is
-    // AQE per-exchange replanning (it stays ON by default — at real scale
-    // AQE's coalesce/skew handling is load-bearing, see SCALE.md)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle SPILL stays on DISK (Scratch.diskTmp): spill grows
-      // exactly when memory is tight — RAM-backed tmpfs is the wrong
-      // place for it (see Scratch's scaladoc); small bounded scratch
-      // (staging/checkpoints/RocksDB) follows java.io.tmpdir to tmpfs
-      .config("spark.local.dir", Scratch.diskTmp)
-      // managed tables (the ANN index family) are rebuilt per run —
-      // ephemeral, so the warehouse follows the scratch placement too
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, must land before the first session: the default cache
-      // holds 100 generated classes, but 110 queries in one JVM produce
-      // ~1.5k — shared subtree shapes (table scans, family-common projections)
-      // get evicted and re-janino'd mid-run, inflating later queries
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(cpus)
     // untimed JVM/scheduler/codegen warmup (no table IO — that stays timed)
     spark.range(1000).selectExpr("sum(id)").collect()
     // untimed STREAMING-ENGINE warmup, same rule (no table IO): the first
@@ -319,40 +293,13 @@ object Bench {
         """"%s":[%.3f,"%s"]""".formatLocal(java.util.Locale.ROOT,
           stage, secs, q)
       }.sorted.mkString("{", ",", "}")
-    // the cross-environment ledger, stated where the grader reads
-    // (full argument: SCALE.md "cross-environment ledger"): the r15
-    // regression was environment, not code — the interleaved A/B (the
-    // only controlled instrument) showed the code got FASTER while the
-    // driver number rose; total_steady_s is the spike-robust companion.
-    // Since r20 (verdict item 2) the ledger prose lives on STDERR and in
-    // target/ledger.txt + the file artifacts, NOT inside the stdout JSON
-    // line: the ~1.4 KB of embedded prose helped push that line past the
-    // driver's log-tail window five rounds running ("parsed": null).
-    val ledger = // ASCII only: this string crosses the driver's log tail
-      "r20 ledger (OPTIMIZATION round 2): fleet HELD at 168 timed / 179 " +
-        "verified, no query added or renamed, single-pass value " +
-        "methodology unchanged as the graded number. Artifact-contract " +
-        "fixes per the r19 verdict: ledger prose moved OUT of the stdout " +
-        "JSON line (here + target/ledger.txt), per-cpus " +
-        "target/bench_c<cpus>.json written so the scaling run stops " +
-        "clobbering the main-run per-query record, Verify dumps " +
-        "cheapest-first with [verify] ok lines and writes " +
-        "oracle_sql.json first. Optimization changes: q_dedup_substring " +
-        "shuffles a 48-bit md5 gram key instead of the 8-token gram " +
-        "string (both engines hash identically, strict parity at 3 SFs); " +
-        "timetravel v2+v3 bucket rewrites fused into one job; LSH " +
-        "candidate dedup keyed after scoring (embeddings no longer " +
-        "shuffle through dropDuplicates). Cross-round raw-second diffs " +
-        "remain environment-confounded (see SCALE.md Round-19/20); the " +
-        "controlled instrument is tools/ab_bench.sh interleaved medians; " +
-        "see OPTIMIZATION_r20.md"
     // LEAN stdout line (r19 verdict item 2): machine fields only —
     // value / total_steady_s / bench_reps / cpus / queries /
-    // queries_steady / staging / sf. The prose (ledger) and the static
-    // untimed list live in the file artifacts + stderr.
+    // queries_steady / staging / sf. The static untimed list lives in the
+    // file artifacts + stderr.
     val line =
       ("""{"metric":"total","value":%.3f,"unit":"sec",""" +
-        """"total_steady_s":%.3f,"bench_reps":%d,"cpus":%s,"queries":%s,""" +
+        """"total_steady_s":%.3f,"bench_reps":%d,"cpus":%d,"queries":%s,""" +
         """"queries_steady":%s,"staging":%s,"sf":"%s"}""")
         .formatLocal(java.util.Locale.ROOT, total, steadyTotal, repsRun,
           cpus, qs, jmap(steady), stagingJson, sfDir)
@@ -362,23 +309,20 @@ object Bench {
     // trailing one-field line always survives the tail capture
     println("""{"total_s":%.3f,"total_steady_s":%.3f}"""
       .formatLocal(java.util.Locale.ROOT, total, steadyTotal))
-    System.err.println(s"[bench] ledger: $ledger")
-    // land the FULL record (lean line fields + untimed list + ledger) in
+    // land the FULL record (lean line fields + untimed list) in
     // files: target/bench.json (the driver's known lossless fallback,
     // kept) AND target/bench_c<cpus>.json (NEW, r19 verdict item 2: the
     // driver's second, lower-cpus scaling run used to overwrite
     // bench.json and destroy the main run's per-query record — the
     // per-cpus name keeps both runs' artifacts)
     val fileLine = line.dropRight(1) +
-      s""","untimed_verified":$untimedJson,"ledger":"$ledger"}"""
+      s""","untimed_verified":$untimedJson}"""
     try {
       val out = java.nio.file.Paths.get("target/bench.json")
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, fileLine + "\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/bench_c$cpus.json"), fileLine + "\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("target/ledger.txt"), ledger + "\n")
     } catch { case _: Throwable => () }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for the named queries (all by
   * default) so plan quality — pushdown, pruning, join strategy, codegen
   * spans — can be reviewed. Usage: runMain graft.Explain [sfDir] [q...] */
@@ -10,13 +8,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

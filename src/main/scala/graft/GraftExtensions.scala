@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session extension wiring for the engine's custom Catalyst surface.
-  * Usage: SparkSession.builder().withExtensions(new GraftExtensions) or
+  * Usage: `withExtensions(new GraftExtensions)` on a session builder, or
   * spark.sql.extensions=graft.GraftExtensions. Queries that need the
   * functions also self-register via VectorFunctions.register, so the
   * driver's plain sessions work unchanged.

@@ -1,0 +1,38 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one way to build a session: every main and the test suite get the
+  * configuration Bench measures. */
+object GraftSession {
+  /** `SPARK_GRAFT_CPUS`, or every available processor when it is unset. */
+  def envCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(v: Option[String]): Int = v match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
+  def apply(cpus: Int = envCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // static conf, must land before the first session: the default cache
+      // holds 100 generated classes, but one fleet pass produces ~1.5k, so
+      // shared shapes would be evicted and recompiled mid-run
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // shuffle spill stays on disk, not on the tmpfs scratch (see Scratch)
+      .config("spark.local.dir", Scratch.diskTmp)
+      // managed tables (the ANN index family) are rebuilt per run, so the
+      // warehouse follows the scratch placement
+      .config("spark.sql.warehouse.dir",
+        System.getProperty("java.io.tmpdir") + "/graft-warehouse")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

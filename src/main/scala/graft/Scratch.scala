@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Scratch placement for the driver-contract mains (Bench / Verify /
   * TimeQ): point `java.io.tmpdir` — and through it every staging dir
   * (RelOps.stagingDir), streaming temp checkpoint, RocksDB working
-  * dir, and (via Bench's `spark.local.dir`) shuffle spill — at
+  * dir, and (via GraftSession's `spark.local.dir`) shuffle spill — at
   * RAM-backed /dev/shm when it exists. This is the local-mode analogue
   * of the standard production sizing rule "put spark.local.dir on the
   * fastest scratch device you have" (NVMe on a real executor): the
@@ -27,8 +27,8 @@ object Scratch {
     * class whose size grows exactly when memory is tight — putting it
     * on RAM-backed /dev/shm would convert spill relief into RAM
     * demand at the worst moment (and an shm-filling co-tenant would
-    * ENOSPC the run where plain disk absorbs it). The mains therefore
-    * pin `spark.local.dir` HERE while the small, bounded file classes
+    * ENOSPC the run where plain disk absorbs it). GraftSession therefore
+    * pins `spark.local.dir` HERE while the small, bounded file classes
     * (staging, checkpoint logs, manifests, RocksDB working dirs)
     * follow java.io.tmpdir to tmpfs. */
   @volatile var diskTmp: String = System.getProperty("java.io.tmpdir")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.BinaryRecords
 
 /** Standalone TeraSort throughput measurement over binary record files —
@@ -14,14 +12,7 @@ object SortBench {
     val parts = if (args.length > 1) args(1).toInt else 16
     val dir = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft_sortbench").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     BinaryRecords.write(
       BinaryRecords.teragen(spark, rows).repartition(parts), s"$dir/in")

@@ -845,7 +845,8 @@ object TextOps {
     * intermediate job. Worst case every batch degenerates to size 1 =
     * the sequential loop; the oracle is q_text_bpe's UNCHANGED
     * sequential replay, so the hash match IS the vocabulary-equivalence
-    * proof. BpeLadder measures the realized driver-round reduction.
+    * proof. SCALE.md "BPE merge-round scaling" records the realized
+    * driver-round reduction.
     *
     * Returns BOTH outputs of the training run: the merge table and the
     * final per-word symbol table (word, st, n) — the same two artifacts
@@ -983,7 +984,7 @@ object TextOps {
   }
 
   /** One safe-batch selection step — a PURE function over the snapshots
-    * (shared by bpeTrainBatched and BpeLadder.runSafe; unit-testable
+    * (used by bpeTrainBatched; unit-testable
     * without Spark). Returns accepted merges in application order; each
     * entry (x, y, cnt) has an EXACT count, so token totals decrement per
     * merge without intermediate jobs. The full safety argument lives on

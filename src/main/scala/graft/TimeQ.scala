@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: time named SparkEntry queries (args) on SPARK_GRAFT_SF_DIR,
   * N repetitions each, printing per-run seconds — the tool for isolating a
@@ -8,32 +7,8 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     Scratch.init() // match Bench's scratch placement
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", Scratch.diskTmp) // spill on DISK (see Scratch)
-      // managed tables (the ANN index family) are rebuilt per run —
-      // ephemeral, so the warehouse follows the scratch placement too
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: see the comment there on the 100-entry default
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    // A/B overrides: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
-        }
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     spark.range(1000).selectExpr("sum(id)").collect()
     args.foreach { name =>
       if (AnnOps.publishedAnswerQueries(name))

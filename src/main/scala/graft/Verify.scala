@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -60,19 +59,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     Scratch.init() // match Bench's scratch placement (SCALE.md)
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", Scratch.diskTmp) // spill on DISK (see Scratch)
-      // managed tables (the ANN index family) are rebuilt per run —
-      // ephemeral, so the warehouse follows the scratch placement too
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft-warehouse")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated name prefixes); the driver
     // never sets it, so the graded run always dumps the full fleet

@@ -572,13 +572,16 @@ object VectorFunctions {
       (es: Seq[Expression]) => NfcNormalize(es.head)),
   )
 
-  /** Session-local registration (idempotent) — lets any query use the
-    * expressions through `expr("graft_dot(...)")` without requiring the
-    * session to have been built with GraftExtensions. */
+  /** Session-local registration — lets any query use the expressions
+    * through `expr("graft_dot(...)")` without requiring the session to
+    * have been built with GraftExtensions. Idempotent: a function already
+    * in the registry is left alone, so repeat calls neither re-register
+    * nor log Spark's "replaced a previously registered function" warning. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
-      reg.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      if (!reg.functionExists(id))
+        reg.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
   }
 }

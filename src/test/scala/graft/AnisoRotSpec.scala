@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * quality shows (the exact-re-rank tier saturates under every
   * rotation on every fixture, so it can't distinguish them).
   *
-  * Ladder numbers (deterministic): sf0.001 identity 3/24 vs rot 9/24;
+  * Measured numbers (deterministic): sf0.001 identity 3/24 vs rot 9/24;
   * sf0.01 4 vs 9; sf0.1 2 vs 6. This spec asserts the sf0.001 flip.
   * The graded form (qSimAnnPqRotAnisoSql) was un-armed r15–r17 against
   * the red bench gate (+1.88 s fresh Lloyd train, 3-rep interleaved

@@ -1,0 +1,50 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The session factory's cpu parse, and a guard that keeps it the only
+  * session builder and keeps `src/main` to its five mains. */
+class GraftSessionSpec extends AnyFunSuite {
+  test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
+    assert(GraftSession.parseCpus(Some("8")) == 8)
+    assert(GraftSession.parseCpus(Some(" 2 ")) == 2)
+    assert(GraftSession.parseCpus(None) ==
+      Runtime.getRuntime.availableProcessors)
+    Seq("*", "", "0", "-1", "4.5", "four").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    }
+  }
+
+  private def sources(dir: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  test("src/main has exactly the five mains") {
+    // each `def main` belongs to the nearest object declared above it
+    val mains = sources("src/main/scala").flatMap { f =>
+      val src = Files.readString(f)
+      """def\s+main\s*\(""".r.findAllMatchIn(src).map { m =>
+        """object\s+(\w+)""".r.findAllMatchIn(src.take(m.start))
+          .toSeq.last.group(1)
+      }
+    }
+    assert(mains.sorted ==
+      Seq("Bench", "Explain", "SortBench", "TimeQ", "Verify"))
+  }
+
+  test("GraftSession is the only session builder in src") {
+    val needle = "SparkSession" + ".builder"
+    val users = (sources("src/main/scala") ++ sources("src/test/scala"))
+      .filter(f => Files.readString(f).contains(needle))
+      .map(_.getFileName.toString)
+    assert(users == Seq("GraftSession.scala"))
+  }
+}

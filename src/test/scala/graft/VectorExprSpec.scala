@@ -127,4 +127,26 @@ class VectorExprSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("register is idempotent: a second call replaces no function") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val s = spark // Spark configures log4j on first use; attach after that
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val probe = new AbstractAppender("graft-register-probe", null, null,
+        true, null) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(probe)
+    try { VectorFunctions.register(s); VectorFunctions.register(s) }
+    finally { root.removeAppender(probe); probe.stop() }
+    assert(!warnings.toArray.exists(
+      _.toString.contains("replaced a previously registered function")))
+    assert(s.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
+  }
 }
