@@ -32,12 +32,8 @@ object AnnOps {
   private val Dim = 64
   /** IVF probe fan-out (nearest cells searched per probe) — shared by
     * ivf / ivf_pq / the persisted index so all three search the same
-    * candidate set. 4, by the r10 sf0.1 ceiling ladder (recall@3 19/21/25
-    * at nprobe 2/3/4 over 8 seed cells): on these isotropic synthetics
-    * nprobe is the only lever that raises recall without probe-coincident
-    * seed artifacts or mean-collapsed trained centroids (see
-    * ScaleOps.qSimAnnIvf's measurement note); candidate cost stays
-    * ~6% of the corpus per probe. */
+    * candidate set; the measured nprobe ladder is SCALE.md's "ANN grids"
+    * section (IvfNProbe). */
   private[graft] val IvfNProbe = 4
   /** Coarse bucket width for the ANN probe query (full-signature lookup —
     * a 256-bucket table is the point: probes land in a populated cell). */
@@ -75,7 +71,7 @@ object AnnOps {
   /** DuckDB: same dot as a literal DOUBLE[] zip. */
   private def planeDotSql(embExpr: String, j: Int): String = {
     val lits = planes(j).map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-    s"list_sum(list_transform(list_zip($embExpr, [$lits]::DOUBLE[]), x -> x[1] * x[2]))"
+    dotSql(embExpr, s"[$lits]::DOUBLE[]")
   }
 
   private def bitCol(embName: String, j: Int): Column =
@@ -90,13 +86,8 @@ object AnnOps {
     * graft_dot(emb, array(<64 literals>)) calls whose janino compile was
     * the r6 bench's largest one-shot cost (~4 s on q_dedup_embed alone);
     * results are bit-identical (VectorExprSpec asserts both forms). */
-  private def signatures(s: SparkSession, d: String, bits: Int = Bits): DataFrame = {
-    VectorFunctions.register(s)
-    embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-      .withColumn("bucket", expr(s"graft_lsh_sig(embedding, $bits)"))
-  }
+  private def signatures(s: SparkSession, d: String, bits: Int = Bits): DataFrame =
+    vectors(s, d).withColumn("bucket", expr(s"graft_lsh_sig(embedding, $bits)"))
 
   /** The pre-kernel signature form (sum of per-plane dot whens) — kept as
     * the spec's cross-check that the fused kernel is bit-identical. */
@@ -105,17 +96,133 @@ object AnnOps {
 
   private def signaturesSqlCte(bits: Int): String = {
     val bucket = (0 until bits).map(j => bitSql("emb", j)).mkString(" + ")
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |sigs AS (
-       |  SELECT vec_id, emb,
-       |    list_sum(list_transform(emb, x -> x * x)) AS na,
-       |    $bucket AS bucket
-       |  FROM e),
+    s"""${embSql("emb")},
+       |sigs AS (SELECT vec_id, emb, na, $bucket AS bucket FROM e),
        |banded AS (
        |  SELECT vec_id, emb, na, bucket,
        |    ${(0 until NBands).map(b => s"(bucket // ${1L << (BandBits * b)}) % ${1 << BandBits} AS s$b").mkString(", ")}
        |  FROM sigs)""".stripMargin
   }
+
+  // ------------------------------------------------- shared ANN skeleton
+  //
+  // Every vector search below is the REPOSE shape: the method's own
+  // candidate generation (LSH keys, ADC tables, IVF cells, a prefix or
+  // sign-bit shortlist, int8 codes, the kNN cell join), then the same
+  // exact re-score and per-probe top-k. These are the shared parts: the
+  // Spark Column/DataFrame builders, then their DuckDB SQL-fragment twins.
+
+  /** The corpus (vec_id, embedding), with the vector kernels registered. */
+  private def plainVectors(s: SparkSession, d: String): DataFrame = {
+    VectorFunctions.register(s)
+    embeddings(s, d).select(col("vec_id"), col("embedding"))
+  }
+
+  /** The corpus with its squared norms (vec_id, embedding, na). */
+  private[graft] def vectors(s: SparkSession, d: String): DataFrame =
+    plainVectors(s, d).withColumn("na", expr("graft_norm_sq(embedding)"))
+
+  /** The IVF family's 8 seed cells (cell_id, cvec, nc): the vectors of
+    * `e(vec_id, embedding, na)` with vec_id < 8. */
+  private[graft] def seedCells(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
+        col("na").as("nc"))
+
+  private def probeRange(lo: Long, hi: Long): Column =
+    col("vec_id") >= lo && col("vec_id") < hi
+
+  private def cosineRaw(a: String, b: String, na: String, nb: String): Column =
+    expr(s"graft_dot($a, $b)") / sqrt(col(na) * col(nb))
+
+  /** Cosine of vector columns `a`, `b` (squared norms `na`, `nb`), 4 dp. */
+  private[graft] def cosine(a: String, b: String, na: String, nb: String): Column =
+    round(cosineRaw(a, b, na, nb), 4)
+
+  /** Squared L2 ‖c‖² − 2·c·p + ‖p‖², 4 dp. */
+  private def l2(c: String, p: String, nc: String, np: String): Column =
+    round(col(nc) - lit(2.0) * expr(s"graft_dot($c, $p)") + col(np), 4)
+
+  /** The top `k` rows per `by` under `order`, numbered `rn` from 1. */
+  private[graft] def topK(df: DataFrame, by: String, k: Int, order: Column*): DataFrame =
+    rankLimit(df, Seq(by), k, "rn", order)
+
+  private def rankLimit(df: DataFrame, by: Seq[String], k: Int, rn: String,
+      order: Seq[Column]): DataFrame =
+    df.withColumn(rn, row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col(rn) <= k)
+
+  /** Shortlist → exact re-score → top-k: the `r` best candidates per
+    * probe under the method's cheap `approx` order, re-scored by
+    * `rescore`, then the top `k` under the `exact` order. */
+  private def refine(cand: DataFrame, r: Int, approx: Seq[Column], k: Int,
+      exact: Seq[Column])(rescore: DataFrame => DataFrame): DataFrame = {
+    // the shortlist IS the bounded-heap rewrite's namesake shape — register
+    // here so the plan never depends on which query touched the session first
+    plans.TopKRewriteApi.ensureRegistered(cand.sparkSession)
+    topK(rescore(rankLimit(cand, Seq("probe_id"), r, "srn", approx)),
+      "probe_id", k, exact: _*)
+  }
+
+  /** ADC scoring: code rows (vec_id, m, code, …) meet the broadcast ADC
+    * table (c_id, pm, pd, …) on subspace, code and `on`; each (probe,
+    * vector)'s partials sum through an exact decimal cast, so the total
+    * is order-independent → (probe_id, vec_id, adist). */
+  private def adcScore(codes: DataFrame, adc: DataFrame, on: Column): DataFrame =
+    codes.join(broadcast(adc),
+        col("m") === col("pm") && col("code") === col("c_id") && on)
+      .groupBy(col("probe_id"), col("vec_id"))
+      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
+        .as("adist"))
+
+  /** DuckDB twin of [[vectors]]: CTE `e(vec_id, <v>, na)`. */
+  private[graft] def embSql(v: String = "v"): String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS $v,
+       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
+       |           FROM embeddings)""".stripMargin
+
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), x -> x[1] * x[2]))"
+
+  private[graft] def cosineSql(a: String, b: String, na: String, nb: String): String =
+    s"round(${dotSql(a, b)} / sqrt($na * $nb), 4)"
+
+  private def l2Sql(c: String, p: String, nc: String, np: String): String =
+    s"round($nc - 2.0 * ${dotSql(c, p)} + $np, 4)"
+
+  /** DuckDB twin of [[seedCells]] + CellAssign.rank over `e(vec_id, <v>,
+    * na)`: CTEs `cents`, `dists` and `ranked(vec_id, <v>, na, cell_id,
+    * arn ≤ top)`. */
+  private[graft] def cellsSql(top: Int, v: String = "v"): String =
+    s"""cents AS (SELECT vec_id AS cell_id, $v AS cvec, na AS nc FROM e WHERE vec_id < 8),
+       |dists AS (
+       |  SELECT e.vec_id, e.$v, e.na, c.cell_id,
+       |    e.na - 2.0 * ${dotSql(s"e.$v", "c.cvec")} + c.nc AS dist
+       |  FROM e, cents c),
+       |ranked AS (
+       |  SELECT vec_id, $v, na, cell_id, arn FROM (
+       |    ${rankSql("dists", s"vec_id, $v, na, cell_id", "vec_id", "dist, cell_id", "arn")}
+       |  ) t WHERE arn <= $top)""".stripMargin
+
+  private def rankSql(from: String, cols: String, by: String, order: String,
+      rn: String = "rn"): String =
+    s"SELECT $cols, ROW_NUMBER() OVER (PARTITION BY $by ORDER BY $order) AS $rn FROM $from"
+
+  /** DuckDB twin of [[topK]], as a query's final SELECT. */
+  private[graft] def topKSql(from: String, cols: String, k: Int, order: String,
+      by: String = "probe_id"): String =
+    s"""SELECT $cols, rn FROM (${rankSql(from, cols, by, order)}) t WHERE rn <= $k
+       |ORDER BY $by, rn""".stripMargin
+
+  /** DuckDB twin of [[adcScore]]: CTE `scored(probe_id, neighbor_id,
+    * adist)` over `from`, which joins `adc` to `code`. */
+  private def adcScoredSql(probe: String, vec: String, from: String): String =
+    s"""scored AS (
+       |  SELECT $probe AS probe_id, $vec AS neighbor_id,
+       |    round(CAST(SUM(CAST(adc.pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
+       |  $from
+       |  GROUP BY 1, 2)""".stripMargin
 
   // ----------------------------------------------------------- ANN search
 
@@ -144,11 +251,8 @@ object AnnOps {
   private[graft] def lshSearch(s: SparkSession, d: String, tables: Int,
       radius: Int): DataFrame = {
     plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
     val totalBits = Bits * tables
-    val sigs = embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
+    val sigs = vectors(s, d)
       .withColumn("sig", expr(s"graft_lsh_sig(embedding, $totalBits)"))
     val mask = (1L << Bits) - 1
     // single long join key: table-id in the high bits, 8-bit bucket low
@@ -184,53 +288,26 @@ object AnnOps {
     // the scorer — emitted rows unchanged.
     val scoredAll = cand
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
+        cosine("embedding", "pvec", "na", "pna").as("score"))
     val scored =
       if (tables == 1) scoredAll
       else scoredAll.dropDuplicates("probe_id", "neighbor_id")
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    topK(scored, "probe_id", 3, col("score").desc, col("neighbor_id"))
       .orderBy(col("probe_id"), col("rn"))
   }
 
   /** Graded LSH config: 4 independent 8-bit tables (OR-construction,
-    * Indyk–Motwani), multi-probe Hamming ≤ 3 per table (Lv et al.).
-    * Chosen from that grid at sf0.1 (recall@3 via the same
-    * truth q_sim_ann_recall uses / median secs of 2 reps); round-10
-    * rows re-measured round-12 alongside the extended 4/5-table axis:
-    *
-    *   tables=1 r=2: 14/30 0.7s    tables=1 r=3: 19/30 0.5s
-    *   tables=2 r=2: 18/30 0.6s    tables=2 r=3: 20/30 0.7s
-    *   tables=3 r=2: 21/30 0.6s (the r10–r11 graded point)
-    *   tables=3 r=3: 21/30 0.7s    tables=4 r=2: 21/30 0.65s
-    *   tables=4 r=3: 23/30 0.85s ← graded (r12)
-    *   tables=5 r=2: 22/30 0.7s    tables=5 r=3: 23/30 1.7s (rejected:
-    *   same recall as 4×r3 at 2× cost)
-    *
-    * The r10 reading stands — fresh plane families beat a wider Hamming
-    * ball at EQUAL key budgets — but the two levers compose: past three
-    * tables, recall only moves when BOTH a fourth family and the
-    * radius-3 ball are in play (4×r2 and 3×r3 both stall at 21/30;
-    * 4×r3 reaches 23/30 for +0.25 s). 5 tables buys nothing further at
-    * this corpus — the remaining misses are pairs whose 64-dim sign
-    * patterns disagree in ≥4 bits of every family, i.e. the documented
-    * honest ceiling of 8-bit hyperplane LSH; the prefix tier (29/30) is
-    * the graded path past it. */
+    * Indyk–Motwani), multi-probe Hamming ≤ 3 per table (Lv et al.); the
+    * measured (tables × radius) grid is SCALE.md's `q_sim_ann_lsh` row. */
   private val LshTables = 4
   private val LshRadius = 3
 
-  /** LSH-bucketed ANN: delegates to the parameterized `lshSearch` at the
-    * graded (tables=4, radius=3) point — see `LshTables` for the
-    * measured ladder. Still the scale path vs q_sim_topk's brute force:
+  /** LSH-bucketed ANN at the graded (tables=4, radius=3) point — the
+    * pipeline frame plan-shape audits pin; qSimAnnLsh serves its
+    * published answer. Still the scale path vs q_sim_topk's brute force:
     * the 372-key fan-out is per-PROBE (tiny, broadcast); the corpus side
-    * is a row-local 4-key explode into one bucket equi-join — no
-    * corpus shuffle at any scale. Top-3 per probe by rounded cosine. */
-  /** The graded (tables=4, radius=3) pipeline frame — plan-shape audits
-    * pin THIS (the executing plan); the query below serves its published
-    * answer. */
+    * is a row-local 4-key explode into one bucket equi-join — no corpus
+    * shuffle at any scale. Top-3 per probe by rounded cosine. */
   private[graft] def lshSearchGraded(s: SparkSession, d: String): DataFrame =
     lshSearch(s, d, LshTables, LshRadius)
 
@@ -238,12 +315,12 @@ object AnnOps {
     publishedAnswer(s, d, "ans_lsh")(lshSearchGraded(s, d))
       .orderBy(col("probe_id"), col("rn"))
 
-  /** Oracle for the graded (3-table × radius-2) LSH: one 24-bit
-    * signature carries all three tables' 8-bit keys (table t = bits
-    * [8t, 8t+8)); `tabs(t, d)` supplies the per-table divisor, flips
-    * come from the SAME `lshFlipsFor` the Spark plan uses, and
-    * candidate pairs are DISTINCT'd across tables before scoring
-    * (OR-construction), mirroring lshSearch's dropDuplicates. */
+  /** Oracle for the graded LSH: one 32-bit signature carries all four
+    * tables' 8-bit keys (table t = bits [8t, 8t+8)); `tabs(t, d)`
+    * supplies the per-table divisor, flips come from the SAME
+    * `lshFlipsFor` the Spark plan uses, and candidate pairs are
+    * DISTINCT'd across tables before scoring (OR-construction),
+    * mirroring lshSearch's dropDuplicates. */
   val qSimAnnLshSql: String = {
     val tabs = (0 until LshTables)
       .map(t => s"($t, ${1L << (Bits * t)})").mkString(", ")
@@ -262,16 +339,10 @@ object AnnOps {
        |                          AND c.vec_id <> pk.probe_id),
        |scored AS (
        |  SELECT cand.probe_id, cand.neighbor_id,
-       |    round(list_sum(list_transform(list_zip(n.emb, p.pemb), x -> x[1] * x[2]))
-       |          / sqrt(n.na * p.pna), 4) AS score
+       |    ${cosineSql("n.emb", "p.pemb", "n.na", "p.pna")} AS score
        |  FROM cand JOIN sigs n ON n.vec_id = cand.neighbor_id
-       |            JOIN p ON p.probe_id = cand.probe_id),
-       |r AS (SELECT probe_id, neighbor_id, score,
-       |        ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                           ORDER BY score DESC, neighbor_id) AS rn
-       |      FROM scored)
-       |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 3
-       |ORDER BY probe_id, rn""".stripMargin
+       |            JOIN p ON p.probe_id = cand.probe_id)
+       |${topKSql("scored", "probe_id, neighbor_id, score", 3, "score DESC, neighbor_id")}""".stripMargin
   }
 
   // ------------------------------------------------ embedding near-dup
@@ -307,9 +378,7 @@ object AnnOps {
       col("na").as("na_b"))
     pairs.join(ea, Seq("va")).join(eb, Seq("vb"))
       .select(col("va"), col("vb"),
-        round(expr("graft_dot(emb_a, emb_b)") /
-          sqrt(col("na_a") * col("na_b")), 4)
-          .as("score"))
+        cosine("emb_a", "emb_b", "na_a", "na_b").as("score"))
       .filter(col("score") >= 0.35)
       .orderBy(col("va"), col("vb"))
   }
@@ -323,9 +392,7 @@ object AnnOps {
        |  FROM band_rows a JOIN band_rows b
        |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id),
        |scored AS (
-       |  SELECT va, vb,
-       |    round(list_sum(list_transform(list_zip(ea.emb, eb.emb), x -> x[1] * x[2]))
-       |          / sqrt(ea.na * eb.na), 4) AS score
+       |  SELECT va, vb, ${cosineSql("ea.emb", "eb.emb", "ea.na", "eb.na")} AS score
        |  FROM pairs
        |  JOIN banded ea ON ea.vec_id = va
        |  JOIN banded eb ON eb.vec_id = vb)
@@ -355,14 +422,9 @@ object AnnOps {
     * the global loop remains the fallback for graphs nobody partitioned
     * (q_dedup_components). */
   def qDedupSemantic(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
+    val e = vectors(s, d)
     // one materialization feeds both sides of the within-cell self-join
-    val assigned = CellAssign.rank(e, cents, "embedding", "na", top = 1)
+    val assigned = CellAssign.rank(e, seedCells(e), "embedding", "na", top = 1)
       .select(col("vec_id"), col("embedding"), col("na"), col("cell_id"))
       // lazy despite the self-join diamond: unlike qPipelineCuration's
       // six expensive branches, double-computing this 16k-row assignment
@@ -374,7 +436,7 @@ object AnnOps {
       col("embedding").as("eb"), col("na").as("nab"))
     // unrounded-cosine threshold, same arithmetic order as the oracle
     val pairs = a.join(b, col("cell_id") === col("cell_b") && col("va") < col("vb"))
-      .filter(expr("graft_dot(ea, eb)") / sqrt(col("naa") * col("nab")) >= 0.35)
+      .filter(cosineRaw("ea", "eb", "naa", "nab") >= 0.35)
       .select(col("cell_id"), col("va"), col("vb"))
     import s.implicits._
     // per-cell union-find, root = component min (union always attaches
@@ -413,26 +475,13 @@ object AnnOps {
   }
 
   val qDedupSemanticSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-      |    list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-      |  FROM embeddings),
-      |cents AS (SELECT vec_id AS cell_id, v AS cvec, na AS nc FROM e WHERE vec_id < 8),
-      |dists AS (
-      |  SELECT e.vec_id, e.v, e.na, c.cell_id,
-      |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-      |  FROM e, cents c),
-      |assigned AS (
-      |  SELECT vec_id, v, na, cell_id FROM (
-      |    SELECT vec_id, v, na, cell_id,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-      |    FROM dists) t WHERE arn = 1),
+    s"""WITH RECURSIVE ${embSql()},
+      |${cellsSql(1)},
       |pairs AS (
       |  SELECT a.vec_id AS va, b.vec_id AS vb
-      |  FROM assigned a JOIN assigned b
+      |  FROM ranked a JOIN ranked b
       |    ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-      |  WHERE list_sum(list_transform(list_zip(a.v, b.v), x -> x[1] * x[2]))
-      |        / sqrt(a.na * b.na) >= 0.35),
+      |  WHERE ${dotSql("a.v", "b.v")} / sqrt(a.na * b.na) >= 0.35),
       |edges AS (SELECT va, vb FROM pairs UNION SELECT vb, va FROM pairs),
       |reach(a, b) AS (
       |  SELECT va, vb FROM edges
@@ -479,7 +528,7 @@ object AnnOps {
     * lever: 64 floats (256 B) become 4 B per vector, the code table is
     * scanned, and the per-probe ADC table (M × 16 doubles) is a broadcast.
     *
-    * Topology: the codebook (TRAINED — 2 rounds of per-subspace
+    * Topology: the codebook (TRAINED — PqLloydRounds of per-subspace
     * fixed-point Lloyd seeded from the first 16 vectors, the same
     * machinery as q_sim_ann_ivf_trained; see pqCbRows) is a 1-row
     * broadcast array; ENCODING is a row-local fold over that array (no
@@ -488,38 +537,12 @@ object AnnOps {
     * code) rows to the broadcast ADC table and sums the 4 partials
     * through an exact decimal cast (order-independent, so the doubles
     * survive the strict oracle compare). Top-3 per probe by (distance,
-    * vec_id). */
-  /** Lloyd rounds for the PQ subspace codebooks. Exactly 2: the r8
-    * prototype measured recall@3 2/24 → 6/24 at 2 rounds, a plateau at 4
-    * and DEGRADATION at 8 (cells chase mass, not probes) on these
-    * near-random synthetic embeddings. */
+    * vec_id).
+    *
+    * Lloyd rounds for the PQ subspace codebooks: exactly 2 — the measured
+    * round grid is SCALE.md's "ANN grids" section (PqLloydRounds). */
   private val PqLloydRounds = 2
 
-  /** TRAINED 16-entry codebook rows (c_id, cv) — ONE definition feeding
-    * both the 1-row encode array and the ADC table rows, so the whole PQ
-    * family (pq, ivf_pq, persisted index, incremental ingest, recall)
-    * co-evolves with the training.
-    *
-    * Seed: the first 16 vectors (deterministic). Then PqLloydRounds of
-    * per-subspace Lloyd: each vector's m-th subvector is assigned to its
-    * argmin-L2 codebook entry (ties to the lower c_id — the same strict-<
-    * rule as graft_pq_encode), and each (c_id, m) centroid becomes the
-    * fixed-point mean of its members: coordinates quantized to
-    * floor(x·10⁶ + 0.5), summed as BIGINT (exact, associative — the
-    * map-side-combinable form), divided back in double arithmetic. That
-    * makes every trained centroid bit-identical between Spark and DuckDB
-    * regardless of summation order — the qSimAnnIvfTrained discipline,
-    * which is what lets five PQ-family oracles stay hash-gated over a
-    * TRAINED quantizer. A (c_id, m) cell that loses all members keeps its
-    * previous subvector (the standard empty-cell guard, expressed as a
-    * left join + coalesce in both engines).
-    *
-    * The 4 per-subspace centroids are reassembled into one 64-dim cv per
-    * c_id, so every downstream consumer (graft_pq_encode /
-    * graft_pq_subdists and the oracle's list_slice CTEs) is unchanged.
-    * Scale: per round, one broadcast of the 64-row codebook against the
-    * corpus (vectors never shuffle to assign) and two keyed shuffles of
-    * (16 × 64) fixed-point aggregates — IvfTraining.scala's topology. */
   /** The ANISOTROPIC embedding view (r15): dim i scaled by 8/(8+i), a
     * fixed rational variance-decay ladder. Real embedding models
     * front-load variance into the leading dimensions; the synthetic
@@ -576,7 +599,42 @@ object AnnOps {
        |  (element_at($c, CAST((i * 37) % 64 AS INT) + 1) * 8.0D
        |   / (8.0D + CAST((i * 37) % 64 AS DOUBLE))))""".stripMargin
 
-  private def pqCbRows(emb: DataFrame, seedLo: Long = 0L,
+  /** DuckDB twin of the rot∘aniso view: CTEs `${name}a` and
+    * `$name(vec_id, <v>, na)` — the nested composition, which the fused
+    * Spark form equals bit for bit. */
+  private def rotAnisoSqlCtes(name: String, v: String): String =
+    s"""${name}a AS (SELECT vec_id,
+       |              ${anisoSqlDuck("CAST(embedding AS DOUBLE[])")} AS a
+       |            FROM embeddings),
+       |$name AS (SELECT vec_id, r AS $v, list_sum(list_transform(r, x -> x * x)) AS na
+       |      FROM (SELECT vec_id, ${rotSqlDuck("a")} AS r FROM ${name}a) t0)""".stripMargin
+
+  /** TRAINED 16-entry codebook rows (c_id, cv) — ONE definition feeding
+    * both the 1-row encode array and the ADC table rows, so the whole PQ
+    * family (pq, ivf_pq, persisted index, incremental ingest, recall)
+    * co-evolves with the training.
+    *
+    * Seed: the first 16 vectors (deterministic). Then PqLloydRounds of
+    * per-subspace Lloyd: each vector's m-th subvector is assigned to its
+    * argmin-L2 codebook entry (ties to the lower c_id — the same strict-<
+    * rule as graft_pq_encode), and each (c_id, m) centroid becomes the
+    * fixed-point mean of its members: coordinates quantized to
+    * floor(x·10⁶ + 0.5), summed as BIGINT (exact, associative — the
+    * map-side-combinable form), divided back in double arithmetic. That
+    * makes every trained centroid bit-identical between Spark and DuckDB
+    * regardless of summation order — the qSimAnnIvfTrained discipline,
+    * which is what lets five PQ-family oracles stay hash-gated over a
+    * TRAINED quantizer. A (c_id, m) cell that loses all members keeps its
+    * previous subvector (the standard empty-cell guard, expressed as a
+    * left join + coalesce in both engines).
+    *
+    * The 4 per-subspace centroids are reassembled into one 64-dim cv per
+    * c_id, so every downstream consumer (graft_pq_encode /
+    * graft_pq_subdists and the oracle's list_slice CTEs) is unchanged.
+    * Scale: per round, one broadcast of the 64-row codebook against the
+    * corpus (vectors never shuffle to assign) and two keyed shuffles of
+    * (16 × 64) fixed-point aggregates — IvfTraining.scala's topology. */
+  private[graft] def pqCbRows(emb: DataFrame, seedLo: Long = 0L,
       rounds: Int = PqLloydRounds): DataFrame = {
     var cb = emb.filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + PqK)
       .select(col("vec_id").cast(IntegerType).as("c_id"), col("embedding").as("cv"))
@@ -634,17 +692,16 @@ object AnnOps {
     cb
   }
 
-  /** PQ codes (vec_id, m, code) for every vector: a row-local argmin loop
-    * over the broadcast codebook array — no shuffle to encode. The array
-    * is sorted by centroid id, so the kernel visits centroids in id order
-    * and strict-< keeps the smallest id on ties — same tie rule as the
-    * oracle's MIN(c_id) on minima. */
-  /** Codes for `vecs` against the trained codebook rows `cb` — `vecs` may
-    * be a subset of the corpus during incremental ingest, where only the
-    * delta encodes but the codebook stays the full corpus's. The caller
-    * trains `cb` ONCE per query (pqCbRows) and threads it here and into
-    * pqAdc, so the Lloyd rounds never run twice in one plan. */
-  private def pqCodeArrWith(vecs: DataFrame, cb: DataFrame): DataFrame = {
+  /** PQ codes (vec_id, codes) for `vecs` against the trained codebook rows
+    * `cb`: a row-local argmin loop over the broadcast codebook array — no
+    * shuffle to encode. The array is sorted by centroid id, so the kernel
+    * visits centroids in id order and strict-< keeps the smallest id on
+    * ties — same tie rule as the oracle's MIN(c_id) on minima. `vecs` may
+    * be a subset of the corpus (incremental ingest encodes only the
+    * delta against the full corpus's codebook); the caller trains `cb`
+    * ONCE per query and threads it here and into pqAdc, so the Lloyd
+    * rounds never run twice in one plan. */
+  private[graft] def pqCodeArrWith(vecs: DataFrame, cb: DataFrame): DataFrame = {
     val cbArr = cb
       .agg(sort_array(collect_list(struct(col("c_id").as("c"), col("cv"))))
         .as("cb"))
@@ -652,34 +709,40 @@ object AnnOps {
       .select(col("vec_id"), expr(s"graft_pq_encode(embedding, cb, $PqM)").as("codes"))
   }
 
-  /** Per-probe ADC table (probe_id, c_id, pm, pd): probe-to-centroid
-    * subspace distances — M × 16 doubles per probe, a broadcast. */
-  private def pqAdc(probes: DataFrame, cb: DataFrame): DataFrame =
-    probes.crossJoin(broadcast(cb))
+  /** One row per (vec_id, m, code) of the code arrays `codes(vec_id, codes)`. */
+  private def codeRows(codes: DataFrame): DataFrame =
+    codes.select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
+
+  /** Per-probe ADC table (probe_id, c_id, pm, pd) for the vectors of `e`
+    * matching `probes`: probe-to-centroid subspace distances — M × 16
+    * doubles per probe, a broadcast. */
+  private def pqAdc(e: DataFrame, probes: Column, cb: DataFrame): DataFrame =
+    e.filter(probes)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+      .crossJoin(broadcast(cb))
       .select(col("probe_id"), col("c_id"),
         posexplode(expr(s"graft_pq_subdists(pv, cv, $PqM)"))
           .as(Seq("pm", "pd")))
+
+  /** Raw-ADC PQ search over `emb(vec_id, embedding)` with codebook `cb`
+    * and code arrays `codes`: probes vec_id < 8, each answered by the
+    * quantizer's OWN top-3 — no exact re-rank, the tier where codebook
+    * quality (and so a rotation's effect) shows. */
+  private[graft] def pqRawAdc(emb: DataFrame, cb: DataFrame,
+      codes: DataFrame): DataFrame =
+    topK(adcScore(codeRows(codes), pqAdc(emb, col("vec_id") < 8, cb),
+        col("vec_id") =!= col("probe_id")),
+      "probe_id", 3, col("adist"), col("vec_id"))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
 
   /** The graded PQ pipeline frame (shared staged codebook/codes + ADC +
     * exact re-rank) — plan audits pin this; qSimAnnPq serves its
     * published answer. */
   private[graft] def pqSearchGraded(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
     val cb = sharedPqCb(s, d)
-    val enc = sharedPqCodes(s, d)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-    val adc = pqAdc(
-      emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-      cb)
-    val scored = enc.join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
+    val scored = adcScore(codeRows(sharedPqCodes(s, d)),
+      pqAdc(e, col("vec_id") < 8, cb), col("vec_id") =!= col("probe_id"))
     // same refine tier as IVF-PQ (rerankAdc): plain PQ ADC-scans the WHOLE
     // corpus, so its shortlist ceiling is the true top-3 — the re-rank
     // recovers what the 4×16 quantizer's ranking tail loses
@@ -689,45 +752,6 @@ object AnnOps {
   def qSimAnnPq(s: SparkSession, d: String): DataFrame =
     publishedAnswer(s, d, "ans_pq")(pqSearchGraded(s, d))
       .orderBy(col("probe_id"), col("rn"))
-
-  /** The full PQ pipeline (fresh Lloyd training + encode + ADC + exact
-    * re-rank) over an ARBITRARY (vec_id, embedding) frame — the
-    * rotation hook (SCALE.md "OPQ-style rotation"): feed it rotated
-    * vectors and the recall delta vs
-    * the identity rotation IS the OPQ-style-rotation experiment, since
-    * an orthogonal transform preserves every L2 distance (truth is
-    * unchanged) while re-distributing variance across the 4 PQ
-    * subspaces (the thing OPQ optimizes). Not graded; the graded
-    * qSimAnnPq reads the shared staged artifacts instead. */
-  private[graft] def pqSearchOn(s: SparkSession, emb: DataFrame,
-      rerank: Boolean = true,
-      lloydRounds: Int = PqLloydRounds): DataFrame = {
-    VectorFunctions.register(s)
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cb = pqCbRows(emb, rounds = lloydRounds)
-    val enc = pqCodeArrWith(emb, cb)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-    val adc = pqAdc(
-      emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-      cb)
-    val scored = enc.join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
-    if (rerank) rerankAdc(scored, e, 0, 8)
-    else {
-      // RAW ADC ranking — the quantizer's own top-3, no exact refine:
-      // this is the tier where a rotation's codebook-quality effect is
-      // visible (the re-rank saturates recall on this corpus)
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("adist"), col("vec_id"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    }
-  }
 
   /** One oracle Lloyd round `inCb` → `cb$r`: per-(vec, subspace) argmin
     * assignment, fixed-point subvector means, empty-cell coalesce from
@@ -739,9 +763,8 @@ object AnnOps {
        |  FROM $src, $inCb cb, ms),
        |a$r AS (
        |  SELECT vec_id, v, m, c_id FROM (
-       |    SELECT vec_id, v, m, c_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, c_id) AS arn
-       |    FROM d$r) t WHERE arn = 1),
+       |    ${rankSql(s"d$r", "vec_id, v, m, c_id", "vec_id, m", "dist, c_id", "arn")}
+       |  ) t WHERE arn = 1),
        |m$r AS (
        |  SELECT c_id, m, sd,
        |    CAST(SUM(CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
@@ -762,7 +785,7 @@ object AnnOps {
 
   /** Shared oracle CTEs: TRAINED codebook (seed = first 16 vectors,
     * PqLloydRounds of fixed-point Lloyd — the mirror of pqCbRows) +
-    * per-vector codes, assuming a CTE `e(vec_id, v, …)` is in scope. */
+    * per-vector codes, over a CTE `src(vec_id, v, …)` in scope. */
   private def pqCodeSqlCtesOver(src: String, seedLo: Int): String =
     s"""ms AS (SELECT unnest([${(0 until PqM).mkString(", ")}]) AS m),
        |cb0 AS (SELECT vec_id AS c_id, v AS cv FROM $src
@@ -779,8 +802,6 @@ object AnnOps {
        |  FROM d JOIN mn ON d.vec_id = mn.vec_id AND d.m = mn.m AND d.dist = mn.md
        |  GROUP BY 1, 2)""".stripMargin
 
-  private lazy val pqCodeSqlCtes: String = pqCodeSqlCtesOver("e", 0)
-
   /** Shared oracle ADC CTE over a probe CTE `p(probe_id, pv)`. */
   private val pqAdcSqlCte: String =
     s"""adc AS (
@@ -788,22 +809,26 @@ object AnnOps {
        |    ${pqSubdistSql("p.pv", "cb.cv", "ms.m")} AS pd
        |  FROM p, cb, ms)""".stripMargin
 
-  // lazy: interpolates PqRerank, which is declared below — a strict val
-  // here would capture 0 at object init (the qSimAnnRecallSql precedent)
-  lazy val qSimAnnPqSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |$pqCodeSqlCtes,
+  /** The plain-PQ oracle over the embedding CTEs `eCtes` (ending in
+    * `e(vec_id, v, na)`): train, encode, ADC-score probes vec_id < 8,
+    * then the exact re-rank (`rerank`) or the quantizer's own top-3. */
+  private def pqSql(eCtes: String, rerank: Boolean): String = {
+    val scored = adcScoredSql("adc.probe_id", "code.vec_id",
+      """FROM code JOIN adc ON adc.m = code.m AND adc.c_id = code.code
+        |  WHERE code.vec_id <> adc.probe_id""".stripMargin)
+    val tail =
+      if (rerank) s",\n$rerankSqlTail"
+      else "\n" + topKSql("scored", "probe_id, neighbor_id", 3, "adist, neighbor_id")
+    s"""WITH $eCtes,
+       |${pqCodeSqlCtesOver("e", 0)},
        |p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 8),
        |$pqAdcSqlCte,
-       |scored AS (
-       |  SELECT adc.probe_id, code.vec_id AS neighbor_id,
-       |    round(CAST(SUM(CAST(pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
-       |  FROM code JOIN adc ON adc.m = code.m AND adc.c_id = code.code
-       |  WHERE code.vec_id <> adc.probe_id
-       |  GROUP BY 1, 2),
-       |${rerankSqlTail}""".stripMargin
+       |$scored""".stripMargin + tail
+  }
+
+  // lazy: interpolates PqRerank, which is declared below — a strict val
+  // here would capture 0 at object init (the qSimAnnRecallSql precedent)
+  lazy val qSimAnnPqSql: String = pqSql(embSql(), rerank = true)
 
   // ------------------------------------------------------------- IVF-PQ
 
@@ -813,12 +838,9 @@ object AnnOps {
     * per probe (a constant: ~200 KB at R=768, negligible against
     * scanning a cell at any corpus size). R is sized to the DATA: these
     * isotropic synthetic embeddings give the 4×16 quantizer a long ADC
-    * tail (r9 ladder at nprobe=2: R=8→8/30, 64→13, 128→17, 320→19;
-    * r10 at nprobe=4, where the candidate-set ceiling is 25/30:
-    * R=320→22, 512→24, 768→25 = the ceiling, and plain pq reaches its
-    * perfect 24/24 at 768). On clustered real embeddings the tail
-    * collapses and R=8–16 suffices; the knob, not the topology, is what
-    * a deployment retunes. */
+    * tail (the measured R ladder is SCALE.md's "ANN grids" section); on
+    * clustered real embeddings the tail collapses and R=8–16 suffices —
+    * the knob, not the topology, is what a deployment retunes. */
   private val PqRerank = 768
 
   /** Exact-L2 re-rank of an ADC shortlist: keep the top-PqRerank rows of
@@ -829,27 +851,19 @@ object AnnOps {
     * vec_id). `e` must carry (vec_id, embedding, na). */
   private def rerankAdc(scored: DataFrame, e: DataFrame, probeLo: Long,
       probeHi: Long): DataFrame = {
-    // the shortlist IS the bounded-heap rewrite's namesake shape — register
-    // here so the plan never depends on which query touched the session first
-    plans.TopKRewriteApi.ensureRegistered(scored.sparkSession)
-    val wAdc = Window.partitionBy(col("probe_id")).orderBy(col("adist"), col("vec_id"))
-    val shortlist = scored.withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= PqRerank)
-      .select(col("probe_id"), col("vec_id"), col("adist"))
     val cands = e.select(col("vec_id"), col("embedding").as("cemb"),
       col("na").as("cna"))
-    val pvecs = e.filter(col("vec_id") >= probeLo && col("vec_id") < probeHi)
+    val pvecs = e.filter(probeRange(probeLo, probeHi))
       .select(col("vec_id").as("probe_id"), col("embedding").as("pemb"),
         col("na").as("pna"))
-    val reranked = shortlist.join(cands, Seq("vec_id"))
-      .join(broadcast(pvecs), Seq("probe_id"))
-      .select(col("probe_id"), col("vec_id"), col("adist"),
-        round(col("cna") - lit(2.0) * expr("graft_dot(cemb, pemb)") +
-          col("pna"), 4).as("dist"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("dist"), col("vec_id"))
-    reranked.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+    refine(scored, PqRerank, Seq(col("adist"), col("vec_id")),
+        3, Seq(col("dist"), col("vec_id"))) {
+      _.select(col("probe_id"), col("vec_id"), col("adist"))
+        .join(cands, Seq("vec_id"))
+        .join(broadcast(pvecs), Seq("probe_id"))
+        .select(col("probe_id"), col("vec_id"), col("adist"),
+          l2("cemb", "pemb", "cna", "pna").as("dist"))
+    }.select(col("probe_id"), col("vec_id").as("neighbor_id"),
         col("adist"), col("dist"), col("rn"))
       .orderBy(col("probe_id"), col("rn"))
   }
@@ -857,30 +871,38 @@ object AnnOps {
   /** Shared oracle tail: ADC shortlist → exact-L2 re-rank → top-3, over
     * CTEs `scored(probe_id, neighbor_id, adist)` and `e(vec_id, v, na)`.
     * No probe-range parameters on purpose: `scored` is already
-    * restricted to the caller's probe set (`p2` joins on its probe_id),
-    * so a range predicate here would be dead — and dead parameters
-    * invited a silent drift from rerankAdc's real probeLo/probeHi
-    * filtering (r9 ADVICE). */
+    * restricted to the caller's probe set, so a range predicate here
+    * would be dead — and dead parameters invited a silent drift from
+    * rerankAdc's real probeLo/probeHi filtering (r9 ADVICE). */
   private def rerankSqlTail: String =
-    s"""short AS (
-       |  SELECT probe_id, neighbor_id, adist,
-       |    ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                       ORDER BY adist, neighbor_id) AS srn
-       |  FROM scored),
+    s"""short AS (${rankSql("scored", "probe_id, neighbor_id, adist", "probe_id",
+         "adist, neighbor_id", "srn")}),
        |rr AS (
        |  SELECT s.probe_id, s.neighbor_id, s.adist,
-       |    round(c.na - 2.0 * list_sum(list_transform(list_zip(c.v, p2.v), x -> x[1] * x[2])) + p2.na, 4) AS dist
+       |    ${l2Sql("c.v", "p2.v", "c.na", "p2.na")} AS dist
        |  FROM short s
        |  JOIN e c ON c.vec_id = s.neighbor_id
        |  JOIN e p2 ON p2.vec_id = s.probe_id
-       |  WHERE s.srn <= $PqRerank),
-       |r AS (
-       |  SELECT probe_id, neighbor_id, adist, dist,
-       |    ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                       ORDER BY dist, neighbor_id) AS rn
-       |  FROM rr)
-       |SELECT probe_id, neighbor_id, adist, dist, rn FROM r WHERE rn <= 3
-       |ORDER BY probe_id, rn""".stripMargin
+       |  WHERE s.srn <= $PqRerank)
+       |${topKSql("rr", "probe_id, neighbor_id, adist, dist", 3, "dist, neighbor_id")}""".stripMargin
+
+  /** The probes' [10, 20) nprobe-cell fan-out (probe_id, pcell) from a
+    * ranked assignment (vec_id, cell_id, arn). */
+  private def probeCells(ranked: DataFrame): DataFrame =
+    ranked.filter(probeRange(10, 20))
+      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
+
+  /** Each vector's own (arn = 1) cell (vec_id, cell_id). */
+  private def assignedCells(ranked: DataFrame): DataFrame =
+    ranked.filter(col("arn") === 1).select(col("vec_id"), col("cell_id"))
+
+  /** IVF candidate pairs: the cell equi-join of corpus rows (vec_id,
+    * cell_id, …) with the broadcast probe fan-out (probe_id, pcell, …).
+    * A vector sits in exactly one cell and a probe's cells are distinct,
+    * so no pair dedup is needed. */
+  private[graft] def cellJoin(cand: DataFrame, probes: DataFrame): DataFrame =
+    cand.join(broadcast(probes),
+      col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
 
   /** IVF-PQ — the production ANN architecture, composed from the two
     * graded halves plus the refine step: the IVF coarse quantizer (8
@@ -894,44 +916,24 @@ object AnnOps {
     * ever touches full-precision vectors — the three levers multiply.
     * Everything small (centroids, codebook, per-probe ADC tables, probe
     * cell fan-out) broadcasts; the only shuffles are the argmin window
-    * and the final per-pair rollup. */
-  /** The graded IVF-PQ pipeline frame — plan audits pin this; the query
-    * serves its published answer. */
+    * and the final per-pair rollup. This is the graded pipeline frame
+    * plan audits pin; the query serves its published answer. */
   private[graft] def ivfPqSearch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
     // SEED cells + nprobe=IvfNProbe: Lloyd-trained centroids were
     // measured and rejected here (r10 — they collapse angular separation
-    // on isotropic embeddings, recall@3 19→15; ScaleOps.qSimAnnIvf's
-    // note has the full ladder). Assignment, codebook and codes are the
+    // on isotropic embeddings, recall@3 19→15; SCALE.md's "ANN grids"
+    // section has the full ladder). Assignment, codebook and codes are the
     // shared staged midpoints — candidates (arn=1) and the probes'
     // nprobe-cell fan-out are filters over one staged frame.
     val ranked = sharedRanked(s, d)
-    val assigned = ranked.filter(col("arn") === 1)
-      .select(col("vec_id"), col("cell_id"))
-    val probeCells = ranked
-      .filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
     val cb = sharedPqCb(s, d)
-    val enc = sharedPqCodes(s, d)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-    val adc = pqAdc(
-      emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-      cb)
+    val enc = codeRows(sharedPqCodes(s, d))
+    val adc = pqAdc(e, probeRange(10, 20), cb)
       .withColumnRenamed("probe_id", "a_probe_id")
-    // candidate pairs: cell equi-join (a vector sits in exactly one cell,
-    // the probe fans out to 2 — no pair dedup needed), then ADC-score
-    val cand = assigned.join(broadcast(probeCells),
-      col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-    val scored = cand.join(enc, Seq("vec_id"))
-      .join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("probe_id") === col("a_probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
+    val cand = cellJoin(assignedCells(ranked), probeCells(ranked))
+    val scored = adcScore(cand.join(enc, Seq("vec_id")), adc,
+      col("probe_id") === col("a_probe_id"))
     rerankAdc(scored, e, 10, 20)
   }
 
@@ -939,43 +941,40 @@ object AnnOps {
     publishedAnswer(s, d, "ans_ivf_pq")(ivfPqSearch(s, d))
       .orderBy(col("probe_id"), col("rn"))
 
-  /** The inline IVF-PQ oracle, parameterized by a candidate predicate on
-    * `a` (the assigned corpus) — "TRUE" for the plain query, a deletion
-    * filter for the tombstone-compaction index (whose answer must equal
-    * a fresh build excluding the deleted vectors, with centroids and
-    * codebook still trained on the FULL corpus — frozen quantizers). */
-  private def ivfPqSqlWith(candPred: String): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |cents AS (SELECT vec_id AS cell_id, v AS cvec, na AS nc FROM e WHERE vec_id < 8),
-       |dists AS (
-       |  SELECT e.vec_id, e.na, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-       |  FROM e, cents c),
-       |ranked AS (
-       |  SELECT vec_id, cell_id, arn FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM dists) t WHERE arn <= $IvfNProbe),
-       |assigned AS (SELECT vec_id, cell_id FROM ranked WHERE arn = 1),
-       |pcells AS (SELECT vec_id AS probe_id, cell_id AS pcell
-       |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20),
+  /** The inline IVF-PQ oracle: `cellCtes` define the candidate cells
+    * `assigned(vec_id, cell_id)` and the probe fan-out `pcells(probe_id,
+    * pcell)` over `e(vec_id, v, na)`; `candPred` filters the candidates
+    * `a` — "TRUE" for the plain query, a deletion filter for the
+    * tombstone-compaction index (whose answer must equal a fresh build
+    * excluding the deleted vectors, with centroids and codebook still
+    * trained on the FULL corpus — frozen quantizers). */
+  private def ivfPqSqlWith(candPred: String,
+      cellCtes: String = seedIvfCellsSql): String = {
+    val scored = adcScoredSql("pc.probe_id", "a.vec_id",
+      s"""FROM assigned a
+         |  JOIN pcells pc ON a.cell_id = pc.pcell AND a.vec_id <> pc.probe_id
+         |       AND ($candPred)
+         |  JOIN code ON code.vec_id = a.vec_id
+         |  JOIN adc ON adc.probe_id = pc.probe_id
+         |           AND adc.m = code.m AND adc.c_id = code.code""".stripMargin)
+    s"""WITH ${embSql()},
+       |$cellCtes,
        |$pqCodeSqlCtes,
        |p AS (SELECT vec_id AS probe_id, v AS pv FROM e
        |      WHERE vec_id >= 10 AND vec_id < 20),
        |$pqAdcSqlCte,
-       |scored AS (
-       |  SELECT pc.probe_id, a.vec_id AS neighbor_id,
-       |    round(CAST(SUM(CAST(adc.pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
-       |  FROM assigned a
-       |  JOIN pcells pc ON a.cell_id = pc.pcell AND a.vec_id <> pc.probe_id
-       |       AND ($candPred)
-       |  JOIN code ON code.vec_id = a.vec_id
-       |  JOIN adc ON adc.probe_id = pc.probe_id
-       |           AND adc.m = code.m AND adc.c_id = code.code
-       |  GROUP BY 1, 2),
-       |${rerankSqlTail}""".stripMargin
+       |$scored,
+       |$rerankSqlTail""".stripMargin
+  }
+
+  /** The seed-cell IVF candidates and probe fan-out, as oracle CTEs. */
+  private def seedIvfCellsSql: String =
+    s"""${cellsSql(IvfNProbe)},
+       |assigned AS (SELECT vec_id, cell_id FROM ranked WHERE arn = 1),
+       |pcells AS (SELECT vec_id AS probe_id, cell_id AS pcell
+       |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20)""".stripMargin
+
+  private lazy val pqCodeSqlCtes: String = pqCodeSqlCtesOver("e", 0)
 
   val qSimAnnIvfPqSql: String = ivfPqSqlWith("TRUE")
 
@@ -997,45 +996,25 @@ object AnnOps {
     *
     * Codebook seeds come from vec_ids [20, 20+PqK): vec_ids < 8 ARE the
     * centroids, so their residuals are zero vectors and would collapse
-    * half the seed set (probes are 10–19). Everything is IEEE +/− on
-    * identical doubles, so the whole pipeline — residuals, Lloyd
-    * training on residuals, encode, per-cell ADC, refine — is replayed
-    * hash-exact by the DuckDB oracle.
+    * half the seed set (probes are 10–19).
     *
-    * MEASURED (r12, sf0.1 recall@3 vs brute truth, graded in
-    * q_sim_ann_recall): residual 23/30 vs plain IVF-PQ's 25/30. On
-    * these ISOTROPIC synthetic embeddings residuals are no smaller than
-    * the raw vectors (there is no cluster structure for the coarse
-    * quantizer to explain — the same reason Lloyd-trained coarse
-    * centroids were measured and rejected in r10), so the residual
-    * rotation buys nothing here and the plain tier stays the
-    * recommended config for THIS corpus. On real clustered embeddings
-    * the residual form is the standard win — the operator exists,
-    * graded and oracle-exact, so the data can decide. */
+    * Spec-only since r15 (QueriesSpec keeps it proven): its measured
+    * recall against plain IVF-PQ is SCALE.md's `q_sim_ann_ivf_pq_residual`
+    * row. */
   def qSimAnnIvfPqResidual(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
+    val e = vectors(s, d)
     // assignment + residual codebook + residual codes are the shared
     // staged midpoints (residVectors/sharedResidCb/sharedResidCodes) —
     // corpus residuals are only touched by those build jobs now
     val ranked = sharedRanked(s, d)
-    val assigned = ranked.filter(col("arn") === 1)
-      .select(col("vec_id"), col("cell_id"))
-    val probeCells = ranked
-      .filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
+    val pcells = probeCells(ranked)
     val cb = sharedResidCb(s, d)
-    val enc = sharedResidCodes(s, d)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
+    val enc = codeRows(sharedResidCodes(s, d))
     // probe residual PER FANNED-OUT CELL → per-(probe, cell) ADC table
-    val probeResid = probeCells
-      .join(emb.select(col("vec_id").as("probe_id"),
+    val probeResid = pcells
+      .join(e.select(col("vec_id").as("probe_id"),
         col("embedding").as("pe")), Seq("probe_id"))
-      .join(broadcast(cents.select(col("cell_id").as("pcell"), col("cvec"))),
+      .join(broadcast(seedCells(e).select(col("cell_id").as("pcell"), col("cvec"))),
         Seq("pcell"))
       .select(col("probe_id"), col("pcell"),
         expr("zip_with(pe, cvec, (a, b) -> a - b)").as("pv"))
@@ -1044,87 +1023,16 @@ object AnnOps {
         col("c_id"),
         posexplode(expr(s"graft_pq_subdists(pv, cv, $PqM)"))
           .as(Seq("pm", "pd")))
-    val cand = assigned.join(broadcast(probeCells),
-      col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-    val scored = cand.join(enc, Seq("vec_id"))
-      .join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("probe_id") === col("a_probe_id") &&
-          col("cell_id") === col("a_pcell"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
+    val cand = cellJoin(assignedCells(ranked), pcells)
+    val scored = adcScore(cand.join(enc, Seq("vec_id")), adc,
+      col("probe_id") === col("a_probe_id") && col("cell_id") === col("a_pcell"))
     rerankAdc(scored, e, 10, 20)
   }
 
-  lazy val qSimAnnIvfPqResidualSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |cents AS (SELECT vec_id AS cell_id, v AS cvec, na AS nc FROM e WHERE vec_id < 8),
-       |dists AS (
-       |  SELECT e.vec_id, e.na, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-       |  FROM e, cents c),
-       |ranked AS (
-       |  SELECT vec_id, cell_id, arn FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM dists) t WHERE arn <= $IvfNProbe),
-       |assigned AS (SELECT vec_id, cell_id FROM ranked WHERE arn = 1),
-       |pcells AS (SELECT vec_id AS probe_id, cell_id AS pcell
-       |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20),
-       |er AS (
-       |  SELECT a.vec_id,
-       |    list_transform(list_zip(e.v, c.cvec), x -> x[1] - x[2]) AS v
-       |  FROM assigned a
-       |  JOIN e ON e.vec_id = a.vec_id
-       |  JOIN cents c ON c.cell_id = a.cell_id),
-       |${pqCodeSqlCtesOver("er", 20)},
-       |pr AS (
-       |  SELECT pc.probe_id, pc.pcell,
-       |    list_transform(list_zip(e.v, c.cvec), x -> x[1] - x[2]) AS pv
-       |  FROM pcells pc
-       |  JOIN e ON e.vec_id = pc.probe_id
-       |  JOIN cents c ON c.cell_id = pc.pcell),
-       |adc AS (
-       |  SELECT probe_id, pcell, c_id, ms.m,
-       |    ${pqSubdistSql("pr.pv", "cb.cv", "ms.m")} AS pd
-       |  FROM pr, cb, ms),
-       |scored AS (
-       |  SELECT pc.probe_id, a.vec_id AS neighbor_id,
-       |    round(CAST(SUM(CAST(adc.pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
-       |  FROM assigned a
-       |  JOIN pcells pc ON a.cell_id = pc.pcell AND a.vec_id <> pc.probe_id
-       |  JOIN code ON code.vec_id = a.vec_id
-       |  JOIN adc ON adc.probe_id = pc.probe_id AND adc.pcell = pc.pcell
-       |           AND adc.m = code.m AND adc.c_id = code.code
-       |  GROUP BY 1, 2),
-       |${rerankSqlTail}""".stripMargin
-
-  // ------------------------------------------------- persisted ANN index
-
-  /** PERSISTED IVF-PQ index — the build-once/probe-many serving topology
-    * a 100 TB vector store actually runs (every other ANN query here
-    * recomputes assignment + codes inline). Build phase: cell assignment
-    * (nearest of 8 seeded centroids) + the 4-byte PQ code array per
-    * vector, saved ONCE as a managed parquet table PARTITIONED BY cell_id
-    * — Spark's native layout for "read only the probed cells": each cell
-    * is a directory, so a probe touches nprobe directories out of C, and
-    * the probe-side join prunes them at RUNTIME via dynamic partition
-    * pruning (the probe→cell fan-out is a broadcast, and DPP turns it
-    * into a partition filter on the scan — PlanQualitySpec asserts the
-    * dynamicpruning subquery is in the index scan's partition filters).
-    * Probe phase shortlists candidates by pure ADC over the stored codes
-    * and touches full-precision embeddings only for the ≤R-per-probe
-    * re-rank shortlist (rerankAdc — the refine tier read). Bucketing
-    * was the alternative layout (RelOps.qJoinBucketed); partitioning wins
-    * here because cell_id is low-cardinality and the probe predicate is
-    * cell membership, not key equality. */
   // ------------------------------------------- shared trained midpoints
   //
   // The whole PQ/IVF family — six method queries, the four index
-  // maintenance verbs, and the 7-method recall scorecard that replays
+  // maintenance verbs, and the 8-method recall scorecard that replays
   // them — derives from four deterministic artifacts: the seed-cell
   // ranked assignment, the trained raw-vector PQ codebook, the corpus
   // code arrays, and their residual twins. Each is a pure function of
@@ -1136,10 +1044,6 @@ object AnnOps {
   // This IS the production split: quantizer training and corpus encoding
   // are offline build jobs; search queries scan their output.
 
-  /** Seed-cell ranked assignment (vec_id, cell_id, arn ≤ IvfNProbe):
-    * nearest-IvfNProbe cells of the 8 seed centroids per vector. arn=1
-    * rows are the IVF candidate assignment; the probe rows' fan-out is
-    * a filter. */
   /** PUBLISHED ANSWER tables (r15): each graded ANN method query writes
     * its tiny (≤30-row) result once per (application, sfDir) and returns
     * the read-back — the build-once/serve-many split applied to the
@@ -1173,43 +1077,34 @@ object AnnOps {
     s.read.parquet(dir)
   }
 
+  /** Seed-cell ranked assignment (vec_id, cell_id, arn ≤ IvfNProbe):
+    * nearest-IvfNProbe cells of the 8 seed centroids per vector. arn=1
+    * rows are the IVF candidate assignment; the probe rows' fan-out is
+    * a filter. */
   private[graft] def sharedRanked(s: SparkSession, d: String): DataFrame =
     SharedStage(s, d, "ann_ranked") {
-      VectorFunctions.register(s)
-      val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .withColumn("na", expr("graft_norm_sq(embedding)"))
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-          col("na").as("nc"))
-      CellAssign.rank(e, cents, "embedding", "na", top = IvfNProbe)
+      val e = vectors(s, d)
+      CellAssign.rank(e, seedCells(e), "embedding", "na", top = IvfNProbe)
         .select(col("vec_id"), col("cell_id"), col("arn"))
     }
 
   /** Trained raw-vector PQ codebook (c_id, cv) — one Lloyd training per
     * (application, sfDir) for pq / ivf_pq / the index family / recall. */
   private def sharedPqCb(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_pqcb") {
-      VectorFunctions.register(s)
-      pqCbRows(embeddings(s, d).select(col("vec_id"), col("embedding")))
-    }
+    SharedStage(s, d, "ann_pqcb")(pqCbRows(plainVectors(s, d)))
 
   /** Corpus PQ code arrays (vec_id, codes) against the shared codebook —
     * one encode pass per (application, sfDir). */
   private def sharedPqCodes(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_pqcodes") {
-      VectorFunctions.register(s)
-      pqCodeArrWith(embeddings(s, d).select(col("vec_id"), col("embedding")),
-        sharedPqCb(s, d))
-    }
+    SharedStage(s, d, "ann_pqcodes")(
+      pqCodeArrWith(plainVectors(s, d), sharedPqCb(s, d)))
 
   /** The rot∘aniso embedding view (vec_id, embedding) — the pq_rot_aniso
     * arm's input, the FUSED row-local IEEE-exact transform of the raw
     * corpus (see [[rotAnisoSql]] for why not the nested composition). */
-  private[graft] def rotAnisoEmb(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    embeddings(s, d)
+  private[graft] def rotAnisoEmb(s: SparkSession, d: String): DataFrame =
+    plainVectors(s, d)
       .select(col("vec_id"), expr(rotAnisoSql("embedding")).as("embedding"))
-  }
 
   /** Trained ROTATED-view PQ codebook — one Lloyd training per
     * (application, sfDir) for the pq_rot_aniso scorecard arm (r19: the
@@ -1218,48 +1113,28 @@ object AnnOps {
     * the disclosed staging map and the per-pass arm plan collapses to
     * the same staged-read ADC shapes the pq arm compiles). */
   private def sharedRotCb(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_rotcb") {
-      pqCbRows(rotAnisoEmb(s, d))
-    }
+    SharedStage(s, d, "ann_rotcb")(pqCbRows(rotAnisoEmb(s, d)))
 
   /** Rotated-view PQ code arrays against the rotated codebook. */
   private def sharedRotCodes(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_rotcodes") {
-      pqCodeArrWith(rotAnisoEmb(s, d), sharedRotCb(s, d))
-    }
+    SharedStage(s, d, "ann_rotcodes")(
+      pqCodeArrWith(rotAnisoEmb(s, d), sharedRotCb(s, d)))
 
   /** The pq_rot_aniso arm at the RAW-ADC tier over the STAGED rotated
-    * codebook/codes — arithmetic, rounding, and ties verbatim
-    * [[pqSearchOn]](rerank = false), so the arm's rows are unchanged;
-    * parquet round-trips the trained doubles bit-exactly. */
+    * codebook/codes; parquet round-trips the trained doubles
+    * bit-exactly. */
   private[graft] def rotPqSearchStaged(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val enc = sharedRotCodes(s, d)
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-    val adc = pqAdc(
-      rotAnisoEmb(s, d).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-      sharedRotCb(s, d))
-    val scored = enc.join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
+    val codes = sharedRotCodes(s, d)
+    pqRawAdc(rotAnisoEmb(s, d), sharedRotCb(s, d), codes)
   }
 
   /** Corpus residuals (vec_id, embedding = v − centroid(owning cell)) —
     * the residual-PQ build input, derived from the shared assignment. */
   private def residVectors(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val emb = plainVectors(s, d)
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"))
-    sharedRanked(s, d).filter(col("arn") === 1)
-      .select(col("vec_id"), col("cell_id"))
+    assignedCells(sharedRanked(s, d))
       .join(emb, Seq("vec_id"))
       .join(broadcast(cents), Seq("cell_id"))
       .select(col("vec_id"),
@@ -1269,61 +1144,65 @@ object AnnOps {
   /** Trained RESIDUAL codebook (seeds from vec_ids [20, 20+PqK) — see
     * qSimAnnIvfPqResidual's scaladoc for why). */
   private def sharedResidCb(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_rescb") {
-      VectorFunctions.register(s)
-      pqCbRows(residVectors(s, d), seedLo = 20L)
-    }
+    SharedStage(s, d, "ann_rescb")(pqCbRows(residVectors(s, d), seedLo = 20L))
 
   /** Residual code arrays (vec_id, codes) against the residual codebook. */
   private def sharedResidCodes(s: SparkSession, d: String): DataFrame =
-    SharedStage(s, d, "ann_rescodes") {
-      VectorFunctions.register(s)
-      pqCodeArrWith(residVectors(s, d), sharedResidCb(s, d))
-    }
+    SharedStage(s, d, "ann_rescodes")(
+      pqCodeArrWith(residVectors(s, d), sharedResidCb(s, d)))
 
-  /** The four q_sim_ann_index* queries grade four different maintenance
-    * verbs (build / append / delete+compact / rebalance) over the SAME
-    * deterministic base index — frozen quantizers trained on the full
-    * corpus. The base rows (assignment + codes) derive from the staged
-    * trained midpoints; each query then pays only for its own verb and
-    * its own table write — the build-once / maintain-many topology a
-    * production vector store has. r19: the former separate `ann_base`
-    * staged parquet is gone — its ONLY consumers were the store build
-    * (which now derives the rows inline, one staged write instead of
-    * two back-to-back) and the incremental query's delta (which reads
-    * the store's seg=d files — the same rows at FILE level, see
-    * qSimAnnIndexIncr). */
-  private def annIndexShared(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    VectorFunctions.register(s)
-    val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cb = sharedPqCb(s, d)
-    (emb, cb)
-  }
+  // ------------------------------------------------- persisted ANN index
 
-  /** The WRITTEN base index, staged once per (application, sfDir) — r16
-    * verdict item 1: each of the four index queries needs its own mutable
-    * cell-partitioned copy of the SAME deterministic base table, and four
-    * full `partitionBy("cell_id")` writes per pass were the largest
-    * code-owned block in the graded number (14.9 s single-pass / 5.1 s
-    * steady at r16). The store is written ONCE (first consumer pays,
-    * inside the timed run — the established SharedStage discipline), with
-    * a `seg` sub-partition separating the incremental-ingest delta class
-    * (vec_id % 4 == 3, seg=d) from the rest (seg=m), so a consumer can
-    * materialize either the full table or the initial-build 3/4 state
-    * purely at FILE level. Each query then gets its own catalog table
-    * whose data files are hard links into the store (~2 small files per
-    * cell — a metadata op, not a shuffle+write) and mutates that copy
-    * freely: parquet files are immutable here, every mutation path
-    * (dynamic partition overwrite, DROP PARTITION purge, append) replaces
-    * whole files, so a clone can never write through a link into the
-    * store. At 100 TB this is the shallow-clone primitive Delta/Iceberg
-    * expose for exactly this build-once/maintain-many topology. */
   /** The staged index store's path WITHOUT forcing a build — the naming
     * authority for tests (IndexCloneIsolationSpec) per r17 ADVICE. */
   private[graft] def indexStorePath(s: SparkSession, d: String): String =
     SharedStage.stagedPath(s, d, "ann_index_store")
 
+  /** PERSISTED IVF-PQ index — the build-once/probe-many serving topology
+    * a 100 TB vector store actually runs (every other ANN query here
+    * recomputes assignment + codes inline). Build phase: cell assignment
+    * (nearest of 8 seeded centroids) + the 4-byte PQ code array per
+    * vector, saved ONCE as a managed parquet table PARTITIONED BY cell_id
+    * — Spark's native layout for "read only the probed cells": each cell
+    * is a directory, so a probe touches nprobe directories out of C, and
+    * the probe-side join prunes them at RUNTIME via dynamic partition
+    * pruning (the probe→cell fan-out is a broadcast, and DPP turns it
+    * into a partition filter on the scan — PlanQualitySpec asserts the
+    * dynamicpruning subquery is in the index scan's partition filters).
+    * Probe phase shortlists candidates by pure ADC over the stored codes
+    * and touches full-precision embeddings only for the ≤R-per-probe
+    * re-rank shortlist (rerankAdc — the refine tier read). Bucketing
+    * was the alternative layout (RelOps.qJoinBucketed); partitioning wins
+    * here because cell_id is low-cardinality and the probe predicate is
+    * cell membership, not key equality.
+    *
+    * The four q_sim_ann_index* queries grade four different maintenance
+    * verbs (build / append / delete+compact / rebalance) over the SAME
+    * deterministic base index — frozen quantizers trained on the full
+    * corpus. The base rows (assignment + codes) derive from the staged
+    * trained midpoints; each query then pays only for its own verb and
+    * its own table write — the build-once / maintain-many topology a
+    * production vector store has.
+    *
+    * The WRITTEN base index is staged once per (application, sfDir) —
+    * r16 verdict item 1: each of the four index queries needs its own
+    * mutable cell-partitioned copy of the SAME deterministic base table,
+    * and four full `partitionBy("cell_id")` writes per pass were the
+    * largest code-owned block in the graded number (14.9 s single-pass /
+    * 5.1 s steady at r16). The store is written ONCE (first consumer
+    * pays, inside the timed run — the established SharedStage
+    * discipline), with a `seg` sub-partition separating the
+    * incremental-ingest delta class (vec_id % 4 == 3, seg=d) from the
+    * rest (seg=m), so a consumer can materialize either the full table
+    * or the initial-build 3/4 state purely at FILE level. Each query
+    * then gets its own catalog table whose data files are hard links
+    * into the store (~2 small files per cell — a metadata op, not a
+    * shuffle+write) and mutates that copy freely: parquet files are
+    * immutable here, every mutation path (dynamic partition overwrite,
+    * DROP PARTITION purge, append) replaces whole files, so a clone can
+    * never write through a link into the store. At 100 TB this is the
+    * shallow-clone primitive Delta/Iceberg expose for exactly this
+    * build-once/maintain-many topology. */
   private def stagedIndexStore(s: SparkSession, d: String): String =
     SharedStage.memoDir(s, d, "ann_index_store")(
       dir => new java.io.File(dir, "_SUCCESS").exists()) { dir =>
@@ -1352,60 +1231,30 @@ object AnnOps {
     }
   }
 
-  /** Probe fan-out for the probe vectors [10, 20): CellAssign.rank is
-    * row-local (broadcast centroid array, no shuffle), so ranking the
-    * filtered probes equals filtering the full-corpus ranked frame — the
-    * per-query recompute costs 10 rows, not a corpus pass. */
-  private def probeRanked(emb: DataFrame): DataFrame = {
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
-    CellAssign.rank(e.filter(col("vec_id") >= 10 && col("vec_id") < 20),
-      cents, "embedding", "na", top = IvfNProbe)
-      .select(col("vec_id"), col("cell_id"), col("arn"))
-  }
-
-  /** Probe the saved index `table`: broadcast nprobe-cell fan-out + per-probe
-    * ADC tables against the stored codes, then the exact re-rank of the
-    * ADC top-R shortlist (rerankAdc) — embeddings are read only for the probe
-    * vectors and the ≤R-per-probe shortlist (the full-precision refine
-    * read); the index scan prunes cells via DPP. */
-  private def probeIndex(s: SparkSession, emb: DataFrame,
-      cb: DataFrame, table: String): DataFrame = {
-    val probeCells = probeRanked(emb)
-      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
-    probeIndexWith(s, emb, probeCells, cb, table)
-  }
-
-  /** Probe with an explicit probe→cell fan-out (the rebalanced index
-    * probes over an UPDATED centroid set, so its fan-out cannot come
-    * from the shared original-centroid `ranked`). */
-  private def probeIndexWith(s: SparkSession, emb: DataFrame,
-      probeCells: DataFrame, cb: DataFrame, table: String): DataFrame = {
-    val adc = pqAdc(
-      emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-      cb)
+  /** Probe the saved index `table`: the probes' [10, 20) nprobe-cell
+    * fan-out over the centroid set `cents(e)` (seed cells, or the
+    * rebalanced index's updated set) — CellAssign.rank is row-local, so
+    * ranking just the probes costs 10 rows, not a corpus pass — then
+    * per-probe ADC tables against the stored codes and the exact re-rank
+    * of the ADC top-R shortlist (rerankAdc). Embeddings are read only
+    * for the probe vectors and the ≤R-per-probe shortlist (the
+    * full-precision refine read); the index scan prunes cells via DPP. */
+  private def probeIndex(s: SparkSession, d: String, table: String,
+      cents: DataFrame => DataFrame = seedCells): DataFrame = {
+    val e = vectors(s, d)
+    val adc = pqAdc(e, probeRange(10, 20), sharedPqCb(s, d))
       .withColumnRenamed("probe_id", "a_probe_id")
-    val cand = s.table(table).join(broadcast(probeCells),
-        col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
+    val fanout = CellAssign.rank(e.filter(probeRange(10, 20)), cents(e),
+        "embedding", "na", top = IvfNProbe)
+      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
+    val cand = cellJoin(s.table(table), fanout)
       .select(col("probe_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("m", "code")))
-    val scored = cand.join(broadcast(adc),
-        col("m") === col("pm") && col("code") === col("c_id") &&
-          col("probe_id") === col("a_probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(round(sum(col("pd").cast(DecimalType(38, 12))).cast(DoubleType), 4)
-        .as("adist"))
-    rerankAdc(scored, emb.withColumn("na", expr("graft_norm_sq(embedding)")), 10, 20)
+    rerankAdc(adcScore(cand, adc, col("probe_id") === col("a_probe_id")), e, 10, 20)
   }
 
-  def qSimAnnIndex(s: SparkSession, d: String): DataFrame = {
-    val (emb, cb) = annIndexShared(s, d)
-    val t = cloneIndexTable(s, d, "graft_ann_index", includeDelta = true)
-    probeIndex(s, emb, cb, t)
-  }
+  def qSimAnnIndex(s: SparkSession, d: String): DataFrame =
+    probeIndex(s, d, cloneIndexTable(s, d, "graft_ann_index", includeDelta = true))
 
   /** INCREMENTAL index ingest — the maintenance half of build-once/
     * probe-many: the initial build covers 3 of 4 vec_id classes, then the
@@ -1421,7 +1270,6 @@ object AnnOps {
     * absorbs a daily crawl: delta-sized work, partition-local appends,
     * no rebuild. */
   def qSimAnnIndexIncr(s: SparkSession, d: String): DataFrame = {
-    val (emb, cb) = annIndexShared(s, d)
     // The delta rows ARE the store's seg=d files (vec_id % 4 == 3 by the
     // store build's seg rule) because the quantizers are frozen on the
     // full corpus: a subset's assignment + codes equal the full build's
@@ -1433,14 +1281,17 @@ object AnnOps {
     // the former separate ann_base parquet, which this fold removed).
     val store = stagedIndexStore(s, d)
     val t = cloneIndexTable(s, d, "graft_ann_index_i", includeDelta = false)
-    s.read.parquet(s"$store/seg=d")
-      // cell_id comes back as a DISCOVERED partition column here (its
-      // values are directory names) — pin the original LongType so the
-      // append's schema matches the cloned table exactly
-      .select(col("vec_id"), col("codes"), col("cell_id").cast(LongType))
-      .repartition(col("cell_id"))
-      .write.mode("append").partitionBy("cell_id").saveAsTable(t)
-    probeIndex(s, emb, cb, t)
+    // a corpus with no vec_id % 4 == 3 row has no delta: the store then
+    // holds no seg=d directory and there is nothing to append
+    if (new java.io.File(store, "seg=d").isDirectory)
+      s.read.parquet(s"$store/seg=d")
+        // cell_id comes back as a DISCOVERED partition column here (its
+        // values are directory names) — pin the original LongType so the
+        // append's schema matches the cloned table exactly
+        .select(col("vec_id"), col("codes"), col("cell_id").cast(LongType))
+        .repartition(col("cell_id"))
+        .write.mode("append").partitionBy("cell_id").saveAsTable(t)
+    probeIndex(s, d, t)
   }
 
   /** Index DELETE + partition-confined compaction — the maintenance story
@@ -1461,7 +1312,6 @@ object AnnOps {
     * corpus (frozen quantizers, as between incremental ingests), which
     * is what the parameterized inline oracle grades. */
   def qSimAnnIndexDelete(s: SparkSession, d: String): DataFrame = {
-    val (emb, cb) = annIndexShared(s, d)
     val t = cloneIndexTable(s, d, "graft_ann_index_d", includeDelta = true)
     val deleted = col("vec_id") % 5 === 2
     // tombstones resolved FROM THE INDEX; affected-cell list is bounded
@@ -1483,7 +1333,7 @@ object AnnOps {
         s.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (cell_id = $c)")
       }
     }
-    probeIndex(s, emb, cb, t)
+    probeIndex(s, d, t)
   }
 
   /** Index CELL RE-BALANCING after drift — the third maintenance verb
@@ -1505,40 +1355,36 @@ object AnnOps {
     * diverges. */
   private val RebalanceTable = "default.graft_ann_index_r"
 
-  /** Phase 1: full build + split-cell choice. Returns (emb, cb, bigCell).
-    * Extracted so the spec can hash the untouched cell directories
-    * between build and compaction. */
-  private[graft] def rebalanceBuild(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Long) = {
-    val (emb, cb) = annIndexShared(s, d)
+  /** Phase 1: full build + split-cell choice — the most crowded cell, or
+    * None for an empty index. Extracted so the spec can hash the
+    * untouched cell directories between build and compaction. */
+  private[graft] def rebalanceBuild(s: SparkSession, d: String): Option[Long] = {
     cloneIndexTable(s, d, "graft_ann_index_r", includeDelta = true)
     // the most crowded cell (count desc, cell_id asc) — metadata-scale
-    val bigCell = s.table(RebalanceTable).groupBy(col("cell_id")).count()
+    s.table(RebalanceTable).groupBy(col("cell_id")).count()
       .orderBy(col("count").desc, col("cell_id")).limit(1)
-      .collect()(0).getLong(0)
-    (emb, cb, bigCell)
+      .collect().headOption.map(_.getLong(0))
   }
 
   /** Phase 2: split the crowded cell in place. Returns the updated
     * centroid set (for the probe fan-out). */
-  private[graft] def rebalanceCompact(s: SparkSession, emb: DataFrame,
+  private[graft] def rebalanceCompact(s: SparkSession, d: String,
       bigCell: Long): DataFrame = {
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
     // split seeds: the cell's min/max vec_id members (deterministic);
     // this reads ONLY the crowded cell's directory
     val members = s.table(RebalanceTable).filter(col("cell_id") === bigCell)
       .select(col("vec_id"), col("codes"))
     val seedRow = members.agg(min(col("vec_id")).as("a"),
       max(col("vec_id")).as("b")).collect()(0)
-    val (seedA, seedB) = (seedRow.getLong(0), seedRow.getLong(1))
     // two explicit sub-centroid rows (cells 8 and 9) even if the seeds
     // coincide — mirrors the oracle's UNION ALL shape exactly
-    val subCents = e.filter(col("vec_id") === seedA)
-      .select(lit(8L).as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
-      .union(e.filter(col("vec_id") === seedB)
-        .select(lit(9L).as("cell_id"), col("embedding").as("cvec"),
-          col("na").as("nc")))
+    def subCell(cell: Long, seed: Long): DataFrame =
+      e.filter(col("vec_id") === seed)
+        .select(lit(cell).as("cell_id"), col("embedding").as("cvec"),
+          col("na").as("nc"))
+    val subCents = subCell(8L, seedRow.getLong(0))
+      .union(subCell(9L, seedRow.getLong(1)))
     // EAGER checkpoint before the DROP: reassigned READS the partition the
     // next statement deletes — a lazy plan would re-resolve the table
     // after the drop and silently write zero rows (this bit at sf0.01:
@@ -1556,43 +1402,25 @@ object AnnOps {
       .write.mode("append").partitionBy("cell_id").saveAsTable(RebalanceTable)
     // the updated centroid set: originals minus the split cell, plus the
     // two sub-centroids as cells 8/9
-    e.filter(col("vec_id") < 8 && col("vec_id") =!= bigCell)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
-      .union(subCents)
+    seedCells(e).filter(col("cell_id") =!= bigCell).union(subCents)
   }
 
-  def qSimAnnIndexRebalance(s: SparkSession, d: String): DataFrame = {
-    val (emb, cb, bigCell) = rebalanceBuild(s, d)
-    val cents2 = rebalanceCompact(s, emb, bigCell)
-    val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
-    val probeCells = CellAssign.rank(
-      e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding"), col("na")),
-      cents2, "embedding", "na", top = IvfNProbe)
-      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
-    probeIndexWith(s, emb, probeCells, cb, RebalanceTable)
-  }
+  def qSimAnnIndexRebalance(s: SparkSession, d: String): DataFrame =
+    rebalanceBuild(s, d) match {
+      case Some(bigCell) =>
+        val cents2 = rebalanceCompact(s, d, bigCell)
+        probeIndex(s, d, RebalanceTable, _ => cents2)
+      // an empty index has no cell to split: probe it as built
+      case None => probeIndex(s, d, RebalanceTable)
+    }
 
   /** Oracle for the rebalanced index: the inline IVF-PQ pipeline with
     * the split topology replayed relationally. */
-  lazy val qSimAnnIndexRebalanceSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |cents AS (SELECT vec_id AS cell_id, v AS cvec, na AS nc FROM e WHERE vec_id < 8),
-       |dists AS (
-       |  SELECT e.vec_id, e.na, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-       |  FROM e, cents c),
-       |assigned AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM dists) t WHERE arn = 1),
-       |big AS (SELECT cell_id FROM assigned GROUP BY cell_id
+  lazy val qSimAnnIndexRebalanceSql: String = ivfPqSqlWith("TRUE",
+    s"""${cellsSql(1)},
+       |big AS (SELECT cell_id FROM ranked GROUP BY cell_id
        |        ORDER BY COUNT(*) DESC, cell_id LIMIT 1),
-       |mem AS (SELECT vec_id FROM assigned
+       |mem AS (SELECT vec_id FROM ranked
        |        WHERE cell_id = (SELECT cell_id FROM big)),
        |subc AS (
        |  SELECT 8 AS cell_id, e.v AS cvec, e.na AS nc FROM e
@@ -1602,15 +1430,14 @@ object AnnOps {
        |  WHERE e.vec_id = (SELECT MAX(vec_id) FROM mem)),
        |redists AS (
        |  SELECT m.vec_id, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
+       |    e.na - 2.0 * ${dotSql("e.v", "c.cvec")} + c.nc AS dist
        |  FROM mem m JOIN e ON e.vec_id = m.vec_id, subc c),
        |reassigned AS (
        |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS rn
-       |    FROM redists) t WHERE rn = 1),
-       |assigned2 AS (
-       |  SELECT vec_id, cell_id FROM assigned
+       |    ${rankSql("redists", "vec_id, cell_id", "vec_id", "dist, cell_id")}
+       |  ) t WHERE rn = 1),
+       |assigned AS (
+       |  SELECT vec_id, cell_id FROM ranked
        |  WHERE cell_id <> (SELECT cell_id FROM big)
        |  UNION ALL SELECT vec_id, cell_id FROM reassigned),
        |cents2 AS (
@@ -1619,63 +1446,37 @@ object AnnOps {
        |  UNION ALL SELECT cell_id, cvec, nc FROM subc),
        |pdists AS (
        |  SELECT e.vec_id, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.v, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
+       |    e.na - 2.0 * ${dotSql("e.v", "c.cvec")} + c.nc AS dist
        |  FROM e, cents2 c WHERE e.vec_id >= 10 AND e.vec_id < 20),
        |pcells AS (
        |  SELECT vec_id AS probe_id, cell_id AS pcell FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM pdists) t WHERE arn <= $IvfNProbe),
-       |$pqCodeSqlCtes,
-       |p AS (SELECT vec_id AS probe_id, v AS pv FROM e
-       |      WHERE vec_id >= 10 AND vec_id < 20),
-       |$pqAdcSqlCte,
-       |scored AS (
-       |  SELECT pc.probe_id, a.vec_id AS neighbor_id,
-       |    round(CAST(SUM(CAST(adc.pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
-       |  FROM assigned2 a
-       |  JOIN pcells pc ON a.cell_id = pc.pcell AND a.vec_id <> pc.probe_id
-       |  JOIN code ON code.vec_id = a.vec_id
-       |  JOIN adc ON adc.probe_id = pc.probe_id
-       |           AND adc.m = code.m AND adc.c_id = code.code
-       |  GROUP BY 1, 2),
-       |${rerankSqlTail}""".stripMargin
+       |    ${rankSql("pdists", "vec_id, cell_id", "vec_id", "dist, cell_id", "arn")}
+       |  ) t WHERE arn <= $IvfNProbe)""".stripMargin)
 
   // --------------------------------------------------------- kNN JOIN
+
+  /** Query-side cell fanout, picked from the measured grid: SCALE.md's
+    * `q_sim_knn_join` row (rerun it at the deployed cell count before
+    * copying this constant — fanout multiplies the query-side shuffle
+    * volume linearly). */
+  private val KnnJoinFanout = 6
 
   /** Corpus-scale kNN JOIN — the ANN shape every other search query here
     * deliberately avoids: the probe set is NOT a handful of broadcast
     * vectors but a corpus-sized CLASS (vec_id % 7 = 3, ~14% of the
     * table), so nothing can broadcast. Topology: both sides take the
     * same IVF cell assignment (corpus at its nearest cell, each query
-    * fanned out to its 2 nearest), then a cell-keyed SHUFFLE join
-    * (hinted shuffle_hash so the plan at any scale is the partitioned
-    * join, never a broadcast that would OOM at corpus-sized probes)
-    * scores only within-cell pairs — Σ|cell|·|queries∩cell| work, never
-    * |corpus|·|queries| — and a per-query window takes top-3. This is
-    * the batch "attach nearest neighbors to EVERY row" operator a
-    * dedup/linking pipeline runs corpus-vs-corpus at 100 TB. */
-  /** Query-side cell fanout — picked from the measured grid (SCALE.md's
-    * `q_sim_knn_join` row) at
-    * sf0.1 (recall@3 vs brute truth over the whole query class, r12 run):
-    * fanout 1 → 216/858, 2 → 382, 3 → 521, 4 → 618, 5 → 699, 6 → 773,
-    * wall flat 0.5–0.75 s throughout — recall climbs near-linearly while
-    * wall barely moves at this scale, so the graded config sits at 6
-    * (90% recall). Caveat for real scale: with only 8 seed cells,
-    * fanout 6 probes 3/4 of the corpus; a production index holds ~√n
-    * cells, where the SAME recall curve is traversed at a tiny
-    * fanout/cell-count ratio and fanout multiplies the query-side
-    * shuffle volume linearly — rerun the ladder at the deployed cell
-    * count before copying this constant. */
-  private val KnnJoinFanout = 6
-
+    * fanned out to its KnnJoinFanout nearest), then a cell-keyed SHUFFLE
+    * join (hinted shuffle_hash so the plan at any scale is the
+    * partitioned join, never a broadcast that would OOM at corpus-sized
+    * probes) scores only within-cell pairs — Σ|cell|·|queries∩cell|
+    * work, never |corpus|·|queries| — and a per-query window takes
+    * top-3. This is the batch "attach nearest neighbors to EVERY row"
+    * operator a dedup/linking pipeline runs corpus-vs-corpus at 100 TB.
+ */
   def qSimKnnJoin(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
+    val e = vectors(s, d)
+    val cents = seedCells(e)
     // Two independent ROW-LOCAL assignment passes, each shaped to its
     // side: the corpus takes only its nearest cell (top=1 — 1× corpus
     // rows), and ONLY the ~14% query class fans out to KnnJoinFanout
@@ -1697,43 +1498,24 @@ object AnnOps {
     val scored = corpus.hint("shuffle_hash").join(queries, Seq("cell_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(expr("graft_dot(nvec, qvec)") /
-          sqrt(col("nna") * col("qna")), 4).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        cosine("nvec", "qvec", "nna", "qna").as("sim"))
+    topK(scored, "query_id", 3, col("sim").desc, col("neighbor_id"))
       .orderBy(col("query_id"), col("rn"))
   }
 
   val qSimKnnJoinSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |cents AS (SELECT vec_id AS cell_id, emb AS cvec, na AS nc FROM e WHERE vec_id < 8),
-       |dists AS (
-       |  SELECT e.vec_id, e.emb, e.na, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.emb, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-       |  FROM e, cents c),
-       |ranked AS (
-       |  SELECT vec_id, emb, na, cell_id, arn FROM (
-       |    SELECT vec_id, emb, na, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM dists) t WHERE arn <= $KnnJoinFanout),
+    s"""WITH ${embSql("emb")},
+       |${cellsSql(KnnJoinFanout, "emb")},
        |corpus AS (SELECT vec_id AS neighbor_id, emb AS nvec, na AS nna, cell_id
        |           FROM ranked WHERE arn = 1),
        |queries AS (SELECT vec_id AS query_id, emb AS qvec, na AS qna, cell_id
        |            FROM ranked WHERE vec_id % 7 = 3),
        |scored AS (
        |  SELECT q.query_id, c.neighbor_id,
-       |    round(list_sum(list_transform(list_zip(c.nvec, q.qvec), x -> x[1] * x[2]))
-       |          / sqrt(c.nna * q.qna), 4) AS sim
+       |    ${cosineSql("c.nvec", "q.qvec", "c.nna", "q.qna")} AS sim
        |  FROM corpus c JOIN queries q USING (cell_id)
        |  WHERE c.neighbor_id <> q.query_id)
-       |SELECT query_id, neighbor_id, sim, rn FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-       |  FROM scored) t WHERE rn <= 3
-       |ORDER BY query_id, rn""".stripMargin
+       |${topKSql("scored", "query_id, neighbor_id, sim", 3, "sim DESC, neighbor_id", "query_id")}""".stripMargin
 
   // ------------------------------------------------------- ANN recall@3
 
@@ -1750,158 +1532,103 @@ object AnnOps {
     * windowed top-k over ≤10 probes — recall evaluation always runs on
     * a probe SAMPLE, never the corpus, so brute force here is the
     * correct tool (same reason q_sim_topk is the documented non-scale
-    * path for search itself). */
-  /** The six per-method scorecard frames (method, probe_id, hits) —
-    * extracted so PlanQualitySpec can assert each pipeline's plan
-    * (broadcast probes, no cartesian) now that qSimAnnRecall's OUTPUT
-    * plan is a local relation (see below). */
-  /** The single-pass all-methods truth frame (un-checkpointed — the spec
-    * asserts its plan: one broadcast cross-join, no cartesian). */
-  private[graft] def recallTruthAll(s: SparkSession, e: DataFrame,
-      specs: Seq[(String, Long, Long, Boolean, Long)]): DataFrame = {
-    val probesAll = specs.map { case (m, lo, hi, l2, minC) =>
-      e.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .select(lit(m).as("t_method"), col("vec_id").as("probe_id"),
-          col("embedding").as("pvec"), col("na").as("pna"),
-          lit(l2).as("l2"), lit(minC).as("min_corpus"))
+    * path for search itself).
+    *
+    * One row of the scorecard: the method, its probe range [lo, hi),
+    * its truth metric (`l2`, else cosine), its corpus floor (bit
+    * excludes the probe ids from its corpus, so its truth must too —
+    * otherwise a probe-only neighbor would be an unreachable "miss"),
+    * whether its truth ranks the rot∘aniso view (`rot`), and its answer
+    * in both engines. */
+  private[graft] case class RecallMethod(name: String, lo: Long, hi: Long,
+      l2: Boolean, minCorpus: Long = 0L, rot: Boolean = false)(
+      val answer: (SparkSession, String) => DataFrame, val answerSql: String)
+
+  /** The scorecard, one row per method — the graded method answers are
+    * read from their published tables, and their oracles are embedded
+    * verbatim, so recall is measured on exactly what each method
+    * returns. */
+  private[graft] lazy val recallMethods: Seq[RecallMethod] = Seq(
+    RecallMethod("ivf", 10, 20, l2 = false)(ScaleOps.qSimAnnIvf, ScaleOps.qSimAnnIvfSql),
+    // same truth row as ivf (same probes, same cosine metric): the
+    // scorecard states the equal-recall claim the ladder measured
+    RecallMethod("ivf_prefix", 10, 20, l2 = false)(qSimAnnIvfPrefix, qSimAnnIvfPrefixSql),
+    RecallMethod("ivf_pq", 10, 20, l2 = true)(qSimAnnIvfPq, qSimAnnIvfPqSql),
+    RecallMethod("lsh", 0, 10, l2 = false)(qSimAnnLsh, qSimAnnLshSql),
+    RecallMethod("pq", 0, 8, l2 = true)(qSimAnnPq, qSimAnnPqSql),
+    // The rotated-anisotropic PQ arm (r15): the PQ pipeline over the
+    // rotated variance-decay view, graded at the RAW-ADC tier (the
+    // re-ranked tier saturates 24/24 under every rotation on both
+    // fixtures). Its truth is exact L2 over the SAME transformed vectors
+    // (the rotation is orthogonal, but truth-on-own-vectors keeps the
+    // rounding boundary identical in both engines).
+    RecallMethod("pq_rot_aniso", 0, 8, l2 = true, rot = true)(
+      rotPqSearchStaged, qSimAnnPqRotAnisoSql),
+    RecallMethod("prefix", 20, 30, l2 = false)(qSimAnnPrefix, qSimAnnPrefixSql),
+    // bit's re-rank metric is cosine; its top-3 (of the emitted top-5)
+    // is what recall@3 grades, over its own corpus (vec_id >= 3)
+    RecallMethod("bit", 0, 3, l2 = false, minCorpus = 3)(
+      (s, d) => qEmbedBit(s, d).filter(col("rn") <= 3),
+      s"SELECT * FROM ($qEmbedBitSql) b WHERE rn <= 3"))
+
+  /** The corpus carrying BOTH truth views: `embedding`/`na` (raw) and
+    * `emb2`/`na2` (rot∘aniso, row-local), so every method's truth —
+    * the pq_rot_aniso arm's included — rides ONE cross-join pass. */
+  private[graft] def recallViews(s: SparkSession, d: String): DataFrame =
+    vectors(s, d)
+      .withColumn("emb2", expr(rotAnisoSql("embedding")))
+      .withColumn("na2", expr("graft_norm_sq(emb2)"))
+
+  /** SINGLE-PASS brute-force truths (r11): tag each method's probe set,
+    * cross-join the two-view corpus `eb` ONCE against their union, and
+    * rank per (method, probe) → (t_method, probe_id, neighbor_id). Score
+    * expressions are the graded methods' own, so ranking ties break
+    * identically in both engines; the l2-ascending and cosine-descending
+    * orders collapse into one ascending key by negating the rounded
+    * cosine (distinct rounded values keep their relative order, ties
+    * still break on vec_id). */
+  private[graft] def recallTruth(eb: DataFrame, methods: Seq[RecallMethod]): DataFrame = {
+    val probesAll = (methods.filterNot(_.rot) ++ methods.filter(_.rot)).map { m =>
+      val (vec, nrm) = if (m.rot) ("emb2", "na2") else ("embedding", "na")
+      eb.filter(probeRange(m.lo, m.hi))
+        .select(lit(m.name).as("t_method"), col("vec_id").as("probe_id"),
+          col(vec).as("pvec"), col(nrm).as("pna"),
+          lit(m.l2).as("l2"), lit(m.rot).as("rot"), lit(m.minCorpus).as("min_corpus"))
     }.reduce(_ union _)
-    e.crossJoin(broadcast(probesAll))
-      .filter(col("vec_id") =!= col("probe_id") &&
-        col("vec_id") >= col("min_corpus"))
-      .withColumn("okey", when(col("l2"),
-          round(col("na") - lit(2.0) * expr("graft_dot(embedding, pvec)") +
-            col("pna"), 4))
-        .otherwise(-round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("t_method"), col("probe_id"))
-          .orderBy(col("okey"), col("vec_id"))))
-      .filter(col("rn") <= 3)
-      .select(col("t_method"), col("probe_id"), col("vec_id").as("neighbor_id"))
-  }
-
-  private[graft] def recallEmb(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-  }
-
-  /** The single-pass truth frame over a corpus carrying BOTH views —
-    * `embedding`/`na` (raw) and `emb2`/`na2` (rot∘aniso) — so the
-    * pq_rot_aniso arm's exact-L2 truth rides the SAME broadcast
-    * cross-join + window as the seven raw-fixture truths instead of a
-    * second corpus pass (r19, guide §2.4: two ops keyed the same way
-    * share one pass). Per (method, probe) the score expression, 4-dp
-    * rounding, and vec_id tie-break are verbatim those of
-    * [[recallTruthAll]], so every emitted (t_method, probe_id,
-    * neighbor_id) row is unchanged. */
-  private[graft] def recallTruthBoth(s: SparkSession, eb: DataFrame,
-      rawSpecs: Seq[(String, Long, Long, Boolean, Long)],
-      rotSpecs: Seq[(String, Long, Long, Boolean, Long)]): DataFrame = {
-    def probeSet(specs: Seq[(String, Long, Long, Boolean, Long)],
-        vec: String, nrm: String, rot: Boolean) =
-      specs.map { case (m, lo, hi, l2, minC) =>
-        eb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-          .select(lit(m).as("t_method"), col("vec_id").as("probe_id"),
-            col(vec).as("pvec"), col(nrm).as("pna"),
-            lit(l2).as("l2"), lit(rot).as("rot"), lit(minC).as("min_corpus"))
-      }
-    val probesAll = (probeSet(rawSpecs, "embedding", "na", rot = false) ++
-      probeSet(rotSpecs, "emb2", "na2", rot = true)).reduce(_ union _)
-    eb.crossJoin(broadcast(probesAll))
+    val scored = eb.crossJoin(broadcast(probesAll))
       .filter(col("vec_id") =!= col("probe_id") &&
         col("vec_id") >= col("min_corpus"))
       .withColumn("cvec", when(col("rot"), col("emb2")).otherwise(col("embedding")))
       .withColumn("cna", when(col("rot"), col("na2")).otherwise(col("na")))
-      .withColumn("okey", when(col("l2"),
-          round(col("cna") - lit(2.0) * expr("graft_dot(cvec, pvec)") +
-            col("pna"), 4))
-        .otherwise(-round(expr("graft_dot(cvec, pvec)") /
-          sqrt(col("cna") * col("pna")), 4)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("t_method"), col("probe_id"))
-          .orderBy(col("okey"), col("vec_id"))))
-      .filter(col("rn") <= 3)
+      .withColumn("okey", when(col("l2"), l2("cvec", "pvec", "cna", "pna"))
+        .otherwise(-cosine("cvec", "pvec", "cna", "pna")))
+    rankLimit(scored, Seq("t_method", "probe_id"), 3, "rn",
+        Seq(col("okey"), col("vec_id")))
       .select(col("t_method"), col("probe_id"), col("vec_id").as("neighbor_id"))
   }
 
-  private[graft] val recallSpecs: Seq[(String, Long, Long, Boolean, Long)] = Seq(
-    ("ivf", 10L, 20L, false, 0L),
-    ("ivf_prefix", 10L, 20L, false, 0L),
-    ("ivf_pq", 10L, 20L, true, 0L),
-    ("lsh", 0L, 10L, false, 0L),
-    ("pq", 0L, 8L, true, 0L),
-    ("prefix", 20L, 30L, false, 0L),
-    ("bit", 0L, 3L, false, 3L))
-
+  /** The per-method scorecard frames (method, probe_id, hits) — extracted
+    * so PlanQualitySpec can assert each pipeline's plan (broadcast
+    * probes, no cartesian) now that qSimAnnRecall's OUTPUT plan is a
+    * local relation. */
   private[graft] def recallFrames(s: SparkSession, d: String): Seq[DataFrame] = {
     plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
-    val e = recallEmb(s, d)
-    // per-method probe specs (recallSpecs): (method, lo, hi, l2-metric,
-    // minCorpus). minCorpus matches the method's candidate universe (bit
-    // excludes the probe ids from the corpus, so its truth must too —
-    // otherwise a probe-only neighbor would be an unreachable "miss").
-    val specs = recallSpecs
-    // SINGLE-PASS brute-force truths (r11, verdict item 3): the eight
-    // truth pipelines each cost a corpus scan + broadcast cross-join +
-    // window — tag the probe sets by method, cross-join the corpus ONCE
-    // against their union, and rank per (method, probe). Score
-    // expressions are copied verbatim from the graded method queries so
-    // ranking ties break identically in both engines; the l2-ascending
-    // and cosine-descending orders collapse into one ascending key by
-    // negating the rounded cosine (orderings are identical: distinct
-    // rounded values keep their relative order, ties still break on
-    // vec_id). Lazily checkpointed — eight consumers, one computation.
-    // r19: the pq_rot_aniso exact-L2 truth now rides THIS pass too — the
-    // corpus row carries the row-local rot∘aniso view (emb2/na2) and the
-    // rot probes select it, so the arm's former second cross-join +
-    // window over e2 is gone (recallTruthBoth's scaladoc pins the
-    // row-identity argument).
-    // The rotated-anisotropic PQ arm (r15): full PQ pipeline over the
-    // rotated variance-decay view, graded at the RAW-ADC tier (no
-    // exact re-rank — the tier where codebook quality shows; the
-    // re-ranked tier saturates 24/24 under every rotation on both
-    // fixtures). Un-armed r15–r17 against the red bench gate (+1.88 s,
-    // measured, 3-rep interleaved A/B); PROMOTED r18 per the standing
-    // order "promote the first round the DRIVER's number is green".
-    // Its truth is exact L2 over the SAME transformed vectors (the
-    // rotation is orthogonal, but truth-on-own-vectors keeps the
-    // rounding boundary identical in both engines). r19: its training +
-    // corpus encode are STAGED (sharedRotCb/sharedRotCodes — the same
-    // build-once discipline as ann_pqcb) instead of re-run every pass.
-    val eb = e
-      .withColumn("emb2", expr(rotAnisoSql("embedding")))
-      .withColumn("na2", expr("graft_norm_sq(emb2)"))
-    val truthAll = recallTruthBoth(s, eb, specs,
-      Seq(("pq_rot_aniso", 0L, 8L, true, 0L))).localCheckpoint(eager = false)
-    val methods: Seq[(String, DataFrame, (Long, Long))] = Seq(
-      ("ivf", ScaleOps.qSimAnnIvf(s, d), (10L, 20L)),
-      // same truth row as ivf (same probes, same cosine metric): the
-      // scorecard states the equal-recall claim the ladder measured
-      ("ivf_prefix", qSimAnnIvfPrefix(s, d), (10L, 20L)),
-      ("ivf_pq", qSimAnnIvfPq(s, d), (10L, 20L)),
-      ("lsh", qSimAnnLsh(s, d), (0L, 10L)),
-      ("pq", qSimAnnPq(s, d), (0L, 8L)),
-      ("pq_rot_aniso", rotPqSearchStaged(s, d), (0L, 8L)),
-      ("prefix", qSimAnnPrefix(s, d), (20L, 30L)),
-      // bit's re-rank metric is cosine; its top-3 (of the emitted top-5)
-      // is what recall@3 grades, over its own corpus (vec_id >= 3)
-      ("bit", qEmbedBit(s, d).filter(col("rn") <= 3), (0L, 3L)))
-    methods.map { case (m, ans, (lo, hi)) =>
-      val truth = truthAll.filter(col("t_method") === m)
+    val eb = recallViews(s, d)
+    // eight consumers, one computation
+    val truthAll = recallTruth(eb, recallMethods).localCheckpoint(eager = false)
+    recallMethods.map { m =>
+      val truth = truthAll.filter(col("t_method") === m.name)
         .select(col("probe_id"), col("neighbor_id"))
-      val hits = ans.select(col("probe_id"), col("neighbor_id"))
+      val hits = m.answer(s, d).select(col("probe_id"), col("neighbor_id"))
         .join(truth, Seq("probe_id", "neighbor_id"))
         .groupBy(col("probe_id")).agg(count(lit(1)).as("h"))
       // probe spine: a probe whose method found 0 true neighbors (or no
       // candidates at all — possible for a sparse LSH bucket) must still
-      // report hits=0, not vanish (e and e2 share vec_ids, so the spine
-      // reads e for every method)
-      e.filter(col("vec_id") >= lo && col("vec_id") < hi)
+      // report hits=0, not vanish
+      eb.filter(probeRange(m.lo, m.hi))
         .select(col("vec_id").as("probe_id"))
         .join(hits, Seq("probe_id"), "left_outer")
-        .select(lit(m).as("method"), col("probe_id"),
+        .select(lit(m.name).as("method"), col("probe_id"),
           coalesce(col("h"), lit(0L)).as("hits"))
     }
   }
@@ -1916,129 +1643,63 @@ object AnnOps {
       .orderBy(col("method"), col("probe_id"))
   }
 
-  /** Brute-force truth CTE body for the oracle (same score expressions
-    * as the method oracles). `src` selects the embedding view the truth
-    * ranks over — `e` for the seven raw-fixture arms, `e2` (the rotated
-    * anisotropic view) for pq_rot_aniso. */
-  private def bruteSql(lo: Long, hi: Long, l2: Boolean,
-      minCorpus: Long = 0L, src: String = "e"): String = {
+  /** Brute-force truth for one method (same score expressions as the
+    * method oracles), over `e` or — for the rot arm — `e2`. */
+  private def bruteSql(m: RecallMethod): String = {
     val key =
-      if (l2) s"round(c.na - 2.0 * list_sum(list_transform(list_zip(c.emb, p.pemb), x -> x[1] * x[2])) + p.pna, 4) ASC"
-      else s"round(list_sum(list_transform(list_zip(c.emb, p.pemb), x -> x[1] * x[2])) / sqrt(c.na * p.pna), 4) DESC"
-    s"""SELECT probe_id, neighbor_id FROM (
-       |  SELECT p.probe_id, c.vec_id AS neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.probe_id ORDER BY $key, c.vec_id) AS rn
-       |  FROM $src c JOIN (SELECT vec_id AS probe_id, emb AS pemb, na AS pna
-       |                 FROM $src WHERE vec_id >= $lo AND vec_id < $hi) p
-       |    ON c.vec_id <> p.probe_id
-       |  WHERE c.vec_id >= $minCorpus) t WHERE rn <= 3""".stripMargin
+      if (m.l2) s"${l2Sql("c.emb", "p.pemb", "c.na", "p.pna")} ASC"
+      else s"${cosineSql("c.emb", "p.pemb", "c.na", "p.pna")} DESC"
+    val src = if (m.rot) "e2" else "e"
+    val pairs =
+      s"""$src c JOIN (SELECT vec_id AS probe_id, emb AS pemb, na AS pna
+         |    FROM $src WHERE vec_id >= ${m.lo} AND vec_id < ${m.hi}) p
+         |  ON c.vec_id <> p.probe_id WHERE c.vec_id >= ${m.minCorpus}""".stripMargin
+    val ranked = rankSql(pairs, "p.probe_id, c.vec_id AS neighbor_id", "p.probe_id",
+      s"$key, c.vec_id")
+    s"SELECT probe_id, neighbor_id FROM ($ranked) t WHERE rn <= 3"
   }
 
   /** The rotated-anisotropic PQ method at the RAW-ADC tier, as a
-    * self-contained oracle subquery: the same Lloyd-train/encode/ADC
-    * CTEs as the pq arm, over e = rot(aniso(embeddings)), final rank =
-    * the quantizer's OWN top-3 (no exact re-rank — the tier where the
-    * rotation's codebook effect is visible). */
+    * self-contained oracle: the pq arm's Lloyd-train/encode/ADC CTEs
+    * over e = rot(aniso(embeddings)), final rank = the quantizer's OWN
+    * top-3. */
   private lazy val qSimAnnPqRotAnisoSql: String =
-    s"""WITH ea AS (SELECT vec_id,
-       |              ${anisoSqlDuck("CAST(embedding AS DOUBLE[])")} AS a
-       |            FROM embeddings),
-       |e AS (SELECT vec_id, r AS v, list_sum(list_transform(r, x -> x * x)) AS na
-       |      FROM (SELECT vec_id, ${rotSqlDuck("a")} AS r FROM ea) t0),
-       |${pqCodeSqlCtesOver("e", 0)},
-       |p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 8),
-       |$pqAdcSqlCte,
-       |scored AS (
-       |  SELECT adc.probe_id, code.vec_id AS neighbor_id,
-       |    round(CAST(SUM(CAST(pd AS DECIMAL(38,12))) AS DOUBLE), 4) AS adist
-       |  FROM code JOIN adc ON adc.m = code.m AND adc.c_id = code.code
-       |  WHERE code.vec_id <> adc.probe_id
-       |  GROUP BY 1, 2)
-       |SELECT probe_id, neighbor_id FROM (
-       |  SELECT probe_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                       ORDER BY adist, neighbor_id) AS rn
-       |  FROM scored) t WHERE rn <= 3""".stripMargin
+    pqSql(rotAnisoSqlCtes("e", "v"), rerank = false)
 
-  /** The graded method answers are embedded verbatim as subqueries —
-    * whatever each method oracle returns is what recall is measured on. */
-  lazy val qSimAnnRecallSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
-       |t_ivf AS (${bruteSql(10, 20, l2 = false)}),
-       |t_ivf_prefix AS (${bruteSql(10, 20, l2 = false)}),
-       |t_ivf_pq AS (${bruteSql(10, 20, l2 = true)}),
-       |t_lsh AS (${bruteSql(0, 10, l2 = false)}),
-       |t_pq AS (${bruteSql(0, 8, l2 = true)}),
-       |e2a AS (SELECT vec_id,
-       |          ${anisoSqlDuck("CAST(embedding AS DOUBLE[])")} AS a
-       |        FROM embeddings),
-       |e2 AS (SELECT vec_id, r AS emb, list_sum(list_transform(r, x -> x * x)) AS na
-       |       FROM (SELECT vec_id, ${rotSqlDuck("a")} AS r FROM e2a) t0),
-       |t_pq_rot_aniso AS (${bruteSql(0, 8, l2 = true, src = "e2")}),
-       |t_prefix AS (${bruteSql(20, 30, l2 = false)}),
-       |t_bit AS (${bruteSql(0, 3, l2 = false, minCorpus = 3)}),
-       |a_ivf AS (SELECT probe_id, neighbor_id FROM (${ScaleOps.qSimAnnIvfSql}) q),
-       |a_ivf_prefix AS (SELECT probe_id, neighbor_id FROM ($qSimAnnIvfPrefixSql) q),
-       |a_ivf_pq AS (SELECT probe_id, neighbor_id FROM ($qSimAnnIvfPqSql) q),
-       |a_lsh AS (SELECT probe_id, neighbor_id FROM ($qSimAnnLshSql) q),
-       |a_pq AS (SELECT probe_id, neighbor_id FROM ($qSimAnnPqSql) q),
-       |a_pq_rot_aniso AS (SELECT probe_id, neighbor_id FROM ($qSimAnnPqRotAnisoSql) q),
-       |a_prefix AS (SELECT probe_id, neighbor_id FROM ($qSimAnnPrefixSql) q),
-       |a_bit AS (SELECT probe_id, neighbor_id FROM ($qEmbedBitSql) q WHERE rn <= 3),
+  lazy val qSimAnnRecallSql: String = {
+    def each(sep: String)(f: RecallMethod => String): String =
+      recallMethods.map(f).mkString(sep)
+    val union = "\n  UNION ALL\n  "
+    val truths = each(",\n")(m => s"t_${m.name} AS (${bruteSql(m)})")
+    val answers = each(",\n")(m =>
+      s"a_${m.name} AS (SELECT probe_id, neighbor_id FROM (${m.answerSql}) q)")
+    val hits = each(union)(m =>
+      s"SELECT '${m.name}' AS method, probe_id, COUNT(*) AS h\n" +
+        s"  FROM a_${m.name} JOIN t_${m.name} USING (probe_id, neighbor_id) GROUP BY 2")
+    val spine = each(union)(m =>
+      s"SELECT '${m.name}' AS method, vec_id AS probe_id FROM e\n" +
+        s"  WHERE vec_id >= ${m.lo} AND vec_id < ${m.hi}")
+    s"""WITH ${embSql("emb")},
+       |${rotAnisoSqlCtes("e2", "emb")},
+       |$truths,
+       |$answers,
        |hits AS (
-       |  SELECT 'ivf' AS method, probe_id, COUNT(*) AS h
-       |  FROM a_ivf JOIN t_ivf USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'ivf_prefix', probe_id, COUNT(*)
-       |  FROM a_ivf_prefix JOIN t_ivf_prefix USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'ivf_pq', probe_id, COUNT(*)
-       |  FROM a_ivf_pq JOIN t_ivf_pq USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'lsh', probe_id, COUNT(*)
-       |  FROM a_lsh JOIN t_lsh USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'pq', probe_id, COUNT(*)
-       |  FROM a_pq JOIN t_pq USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'pq_rot_aniso', probe_id, COUNT(*)
-       |  FROM a_pq_rot_aniso JOIN t_pq_rot_aniso USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'prefix', probe_id, COUNT(*)
-       |  FROM a_prefix JOIN t_prefix USING (probe_id, neighbor_id) GROUP BY 2
-       |  UNION ALL
-       |  SELECT 'bit', probe_id, COUNT(*)
-       |  FROM a_bit JOIN t_bit USING (probe_id, neighbor_id) GROUP BY 2),
+       |  $hits),
        |spine AS (
-       |  SELECT 'ivf' AS method, vec_id AS probe_id FROM e WHERE vec_id >= 10 AND vec_id < 20
-       |  UNION ALL
-       |  SELECT 'ivf_prefix', vec_id FROM e WHERE vec_id >= 10 AND vec_id < 20
-       |  UNION ALL
-       |  SELECT 'ivf_pq', vec_id FROM e WHERE vec_id >= 10 AND vec_id < 20
-       |  UNION ALL
-       |  SELECT 'lsh', vec_id FROM e WHERE vec_id >= 0 AND vec_id < 10
-       |  UNION ALL
-       |  SELECT 'pq', vec_id FROM e WHERE vec_id >= 0 AND vec_id < 8
-       |  UNION ALL
-       |  SELECT 'pq_rot_aniso', vec_id FROM e WHERE vec_id >= 0 AND vec_id < 8
-       |  UNION ALL
-       |  SELECT 'prefix', vec_id FROM e WHERE vec_id >= 20 AND vec_id < 30
-       |  UNION ALL
-       |  SELECT 'bit', vec_id FROM e WHERE vec_id >= 0 AND vec_id < 3)
+       |  $spine)
        |SELECT s.method, s.probe_id, CAST(COALESCE(h.h, 0) AS BIGINT) AS hits
        |FROM spine s LEFT JOIN hits h ON s.method = h.method AND s.probe_id = h.probe_id
        |ORDER BY s.method, s.probe_id""".stripMargin
+  }
 
   // ------------------------------------------- multimodal binary pipeline
 
   /** Multimodal binary-column pipeline: text re-encoded as an opaque
     * binary payload with typed metadata, decoded by a REAL partition-
     * batched RIFF/WAVE parser (graft.functions.WavCodec — see
-    * qMultimodalBinary below, which replaced the r5–r10 stub). */
-
-  /** Frame SAMPLING over the multimodal binary payload — the video-shaped
+    * qMultimodalBinary below, which replaced the r5–r10 stub).
+    *
+    * Frame SAMPLING over the multimodal binary payload — the video-shaped
     * half of the decode pipeline: each payload is treated as a sequence
     * of fixed-size "frames" (16 bytes), every 4th frame is sampled, and a
     * stub per-frame feature (the frame's leading byte — where a real
@@ -2455,15 +2116,12 @@ object AnnOps {
         (expr("CAST(aggregate(zip_with(pqc, qc, (x, y) -> x * y), 0L, " +
           "(acc, v) -> acc + v) AS DOUBLE)") * col("psc") * col("sc"))
           .as("score_q"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score_q").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
+    topK(scored, "probe_id", 5, col("score_q").desc, col("neighbor_id"))
       .orderBy(col("probe_id"), col("rn"))
   }
 
   val qEmbedInt8Sql: String =
-    """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
       |s AS (SELECT vec_id, e,
       |        list_max(list_transform(e, x -> abs(x))) / 127.0 AS sc FROM v),
       |q AS (SELECT vec_id, sc, list_transform(e, x ->
@@ -2479,75 +2137,70 @@ object AnnOps {
       |        CAST(SUM(pq * cq) AS BIGINT) AS dotq,
       |        MAX(psc) AS psc, MAX(csc) AS csc
       |      FROM pairs GROUP BY probe_id, neighbor_id),
-      |r AS (SELECT probe_id, neighbor_id,
-      |        CAST(dotq AS DOUBLE) * psc * csc AS score_q,
-      |        ROW_NUMBER() OVER (PARTITION BY probe_id
-      |          ORDER BY CAST(dotq AS DOUBLE) * psc * csc DESC, neighbor_id) AS rn
-      |      FROM d)
-      |SELECT probe_id, neighbor_id, score_q, rn FROM r WHERE rn <= 5
-      |ORDER BY probe_id, rn""".stripMargin
+      |sq AS (SELECT probe_id, neighbor_id, CAST(dotq AS DOUBLE) * psc * csc AS score_q
+      |       FROM d)
+      |${topKSql("sq", "probe_id, neighbor_id, score_q", 5, "score_q DESC, neighbor_id")}""".stripMargin
+
+  // ---------------------------------------- exact cosine refine (shared)
+
+  /** The cosine methods' refine tier: the `r` best candidates per probe
+    * under `approx`, re-scored with full-precision cosine, the top `k`
+    * kept. `cand` carries (probe_id, vec_id, embedding, na, pvec, pna)
+    * and the `keep` columns, which pass through to the answer. */
+  private def cosineRefine(cand: DataFrame, r: Int, approx: Seq[Column], k: Int,
+      keep: Column*): DataFrame =
+    refine(cand, r, approx, k, Seq(col("score").desc, col("neighbor_id"))) {
+      _.select(Seq(col("probe_id"), col("vec_id").as("neighbor_id")) ++ keep :+
+        cosine("embedding", "pvec", "na", "pna").as("score"): _*)
+    }.orderBy(col("probe_id"), col("rn"))
+
+  /** DuckDB twin of [[cosineRefine]] over a CTE `pre(probe_id, vec_id,
+    * emb, na, pemb, pna, …)`; `keep` lists pass-through columns, each
+    * with a leading ", ". */
+  private def cosineRefineSql(r: Int, approx: String, k: Int, keep: String = ""): String =
+    s"""short AS (SELECT * FROM (${rankSql("pre", "*", "probe_id", approx, "srn")}) t
+       |          WHERE srn <= $r),
+       |scored AS (
+       |  SELECT probe_id, vec_id AS neighbor_id$keep,
+       |    ${cosineSql("emb", "pemb", "na", "pna")} AS score
+       |  FROM short)
+       |${topKSql("scored", s"probe_id, neighbor_id$keep, score", k, "score DESC, neighbor_id")}""".stripMargin
 
   // ----------------------------------- prefix-dimension (matryoshka) search
 
+  /** Graded prefix length and shortlist: the measured (dim × R) grid is
+    * SCALE.md's `q_sim_ann_prefix` row. */
   private val PrefixDim = 32
   private val PrefixShortlist = 320
 
   /** PREFIX-DIMENSION ANN — the dimension tier of the quantization
     * ladder (q_embed_int8 = precision tier, q_sim_ann_pq = code tier):
-    * candidates are scored on the FIRST 32 of 64 dims (matryoshka-style
+    * candidates are scored on the FIRST `dim` of 64 dims (matryoshka-style
     * truncation — prefix cosine costs half the flops, and with the
     * prefix persisted as its own parquet column the scan READS half the
-    * bytes via column pruning), the top-320 prefix shortlist per probe
+    * bytes via column pruning), the top-`r` prefix shortlist per probe
     * is re-ranked with full-precision cosine, top-3 kept. The same
     * shortlist→exact-refine architecture as `rerankAdc`, one tier up;
     * recall is measured by q_sim_ann_recall under method 'prefix'
-    * (probes 20-30). Config chosen from the (dim × R) grid (SCALE.md's
-    * `q_sim_ann_prefix` row)
-    * at sf0.1 (recall@3 / secs, 2 reps):
-    *
-    *   dim=16: 12/30 @R=64, 17/30 @160, 22/30 @320
-    *   dim=24: 20/30 @R=64, 25/30 @160, 27/30 @320
-    *   dim=32: 22/30 @R=64, 26/30 @160, **29/30 @320 ← graded**
-    *
-    * Wall cost was flat (~0.5 s) across the grid at this corpus size,
-    * so recall decides; on these isotropic synthetics a d-dim prefix
-    * carries d/64 of the signal, so dim dominates R — real matryoshka
-    * embeddings front-load variance and would shift the knee toward
-    * smaller dims. Scale: prefix slice + norms are row-local in the
-    * scan projection, probes broadcast, and both rank-limit windows are
-    * the bounded-heap shape — only ≤320 rows per probe ever reach the
-    * full-dimension re-rank. */
-  /** Parameterized form (dim = prefix length, r = shortlist size) —
-    * the (dim × r) recall/cost grid above was measured over this one
-    * definition; qSimAnnPrefix grades the chosen point. */
+    * (probes 20-30). On isotropic synthetics a d-dim prefix carries d/64
+    * of the signal, so dim dominates R — real matryoshka embeddings
+    * front-load variance and would shift the knee toward smaller dims.
+    * Scale: prefix slice + norms are row-local in the scan projection,
+    * probes broadcast, and both rank-limit windows are the bounded-heap
+    * shape — only ≤r rows per probe ever reach the full-dimension
+    * re-rank. */
   private[graft] def prefixSearch(s: SparkSession, d: String, dim: Int,
       r: Int): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
       .withColumn("p16", expr(s"slice(embedding, 1, $dim)"))
       .withColumn("na16", expr("graft_norm_sq(p16)"))
-    val probes = e.filter(col("vec_id") >= 20 && col("vec_id") < 30)
+    val probes = e.filter(probeRange(20, 30))
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"),
         col("na").as("pna"), col("p16").as("pp16"), col("na16").as("pna16"))
     val pre = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("pscore",
-        round(expr("graft_dot(p16, pp16)") /
-          sqrt(col("na16") * col("pna16")), 4))
-    val wp = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pscore").desc, col("vec_id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    pre.withColumn("srn", row_number().over(wp))
-      .filter(col("srn") <= r)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy(col("probe_id"), col("rn"))
+      .withColumn("pscore", cosine("p16", "pp16", "na16", "pna16"))
+    cosineRefine(pre, r, Seq(col("pscore").desc, col("vec_id")), 3)
   }
 
   /** The graded (PrefixDim, PrefixShortlist) pipeline frame — plan
@@ -2564,63 +2217,34 @@ object AnnOps {
     * the probe's nprobe IVF cells instead of over the whole corpus.
     * Candidates come from the shared seed-cell assignment (exactly
     * qSimAnnIvf's candidate set, so the cell-recall ceiling is ivf's
-    * 25/30 by construction); each candidate is scored on the first
+    * by construction); each candidate is scored on the first
     * `dim` dims, the top-`r` prefix shortlist per probe is re-ranked
     * with full-precision cosine, top-3 kept. What the composition buys
     * is COST at equal recall, not recall: the within-cell scan reads
     * and multiplies half the vector bytes, and only ≤r rows per probe
     * ever touch full dimensions — at 100 TB that halves the dominant
     * probe-side IO of plain IVF while returning the identical answer
-    * whenever r covers the within-cell true top-3.
-    *
-    * Grid at sf0.1 (SCALE.md's `q_sim_ann_ivf_prefix` row; recall@3 vs
-    * the ivf probes' brute
-    * cosine truth / wall secs, 2 reps; ivf ceiling row 25/30 @ ~0.6 s):
-    *
-    *   dim=16: 9/30 @R=64, 16/30 @160, 23/30 @320
-    *   dim=32: 22/30 @R=64, 24/30 @160, **25/30 @320 ← graded, ~0.45 s**
-    *
-    * d32/R320 meets the cell ceiling exactly — the composition returns
-    * plain IVF's answer at ~2/3 its wall cost here, and the gap widens
-    * with corpus size because the saved full-width scoring grows with
+    * whenever r covers the within-cell true top-3. The gap widens with
+    * corpus size because the saved full-width scoring grows with
     * Σ|probed cells| while the re-rank stays ≤R rows per probe. */
   private[graft] def ivfPrefixSearch(s: SparkSession, d: String, dim: Int,
       r: Int): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
       .withColumn("pfx", expr(s"slice(embedding, 1, $dim)"))
       .withColumn("npfx", expr("graft_norm_sq(pfx)"))
     val ranked = sharedRanked(s, d)
-    val cand = ranked.filter(col("arn") === 1)
-      .select(col("vec_id"), col("cell_id"))
-      .join(e, Seq("vec_id"))
-    val probes = ranked
-      .filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("cell_id").as("pcell"))
+    val cand = assignedCells(ranked).join(e, Seq("vec_id"))
+    val probes = probeCells(ranked)
       .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("pvec"),
         col("na").as("pna"), col("pfx").as("ppfx"), col("npfx").as("pnpfx")),
         Seq("probe_id"))
-    val pre = cand.join(broadcast(probes),
-        col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-      .withColumn("pscore",
-        round(expr("graft_dot(pfx, ppfx)") /
-          sqrt(col("npfx") * col("pnpfx")), 4))
-    val wp = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pscore").desc, col("vec_id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    pre.withColumn("srn", row_number().over(wp))
-      .filter(col("srn") <= r)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy(col("probe_id"), col("rn"))
+    val pre = cellJoin(cand, probes)
+      .withColumn("pscore", cosine("pfx", "ppfx", "npfx", "pnpfx"))
+    cosineRefine(pre, r, Seq(col("pscore").desc, col("vec_id")), 3)
   }
 
+  /** Graded prefix length and shortlist inside IVF: the measured grid is
+    * SCALE.md's `q_sim_ann_ivf_prefix` row. */
   private val IvfPrefixDim = 32
   private val IvfPrefixShortlist = 320
 
@@ -2634,22 +2258,11 @@ object AnnOps {
       .orderBy(col("probe_id"), col("rn"))
 
   val qSimAnnIvfPrefixSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
+    s"""WITH ${embSql("emb")},
        |pe AS (SELECT vec_id, emb, na, emb[1:$IvfPrefixDim] AS pfx,
        |         list_sum(list_transform(emb[1:$IvfPrefixDim], x -> x * x)) AS npfx
        |       FROM e),
-       |cents AS (SELECT vec_id AS cell_id, emb AS cvec, na AS nc FROM e WHERE vec_id < 8),
-       |dists AS (
-       |  SELECT e.vec_id, c.cell_id,
-       |    e.na - 2.0 * list_sum(list_transform(list_zip(e.emb, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-       |  FROM e, cents c),
-       |ranked AS (
-       |  SELECT vec_id, cell_id, arn FROM (
-       |    SELECT vec_id, cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-       |    FROM dists) t WHERE arn <= $IvfNProbe),
+       |${cellsSql(IvfNProbe, "emb")},
        |cand AS (SELECT r.vec_id, r.cell_id, p.emb, p.na, p.pfx, p.npfx
        |         FROM ranked r JOIN pe p USING (vec_id) WHERE r.arn = 1),
        |probes AS (SELECT r.vec_id AS probe_id, r.cell_id AS pcell,
@@ -2658,32 +2271,13 @@ object AnnOps {
        |           WHERE r.vec_id >= 10 AND r.vec_id < 20),
        |pre AS (
        |  SELECT p.probe_id, c.vec_id, c.emb, c.na, p.pemb, p.pna,
-       |    round(list_sum(list_transform(list_zip(c.pfx, p.ppfx), x -> x[1] * x[2]))
-       |          / sqrt(c.npfx * p.pnpfx), 4) AS pscore
+       |    ${cosineSql("c.pfx", "p.ppfx", "c.npfx", "p.pnpfx")} AS pscore
        |  FROM cand c JOIN probes p
        |    ON c.cell_id = p.pcell AND c.vec_id <> p.probe_id),
-       |short AS (
-       |  SELECT probe_id, vec_id, emb, na, pemb, pna FROM (
-       |    SELECT probe_id, vec_id, emb, na, pemb, pna,
-       |      ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                         ORDER BY pscore DESC, vec_id) AS srn
-       |    FROM pre) t WHERE srn <= $IvfPrefixShortlist),
-       |scored AS (
-       |  SELECT probe_id, vec_id AS neighbor_id,
-       |    round(list_sum(list_transform(list_zip(emb, pemb), x -> x[1] * x[2]))
-       |          / sqrt(na * pna), 4) AS score
-       |  FROM short),
-       |r AS (SELECT probe_id, neighbor_id, score,
-       |        ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                           ORDER BY score DESC, neighbor_id) AS rn
-       |      FROM scored)
-       |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 3
-       |ORDER BY probe_id, rn""".stripMargin
+       |${cosineRefineSql(IvfPrefixShortlist, "pscore DESC, vec_id", 3)}""".stripMargin
 
   val qSimAnnPrefixSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-       |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-       |           FROM embeddings),
+    s"""WITH ${embSql("emb")},
        |pe AS (SELECT vec_id, emb, na, emb[1:$PrefixDim] AS p16,
        |         list_sum(list_transform(emb[1:$PrefixDim], x -> x * x)) AS na16
        |       FROM e),
@@ -2692,29 +2286,14 @@ object AnnOps {
        |      FROM pe WHERE vec_id >= 20 AND vec_id < 30),
        |pre AS (
        |  SELECT probe_id, c.vec_id, c.emb, c.na, p.pemb, p.pna,
-       |    round(list_sum(list_transform(list_zip(c.p16, p.pp16), x -> x[1] * x[2]))
-       |          / sqrt(c.na16 * p.pna16), 4) AS pscore
+       |    ${cosineSql("c.p16", "p.pp16", "c.na16", "p.pna16")} AS pscore
        |  FROM pe c, p WHERE c.vec_id <> p.probe_id),
-       |short AS (
-       |  SELECT probe_id, vec_id, emb, na, pemb, pna FROM (
-       |    SELECT probe_id, vec_id, emb, na, pemb, pna,
-       |      ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                         ORDER BY pscore DESC, vec_id) AS srn
-       |    FROM pre) WHERE srn <= $PrefixShortlist),
-       |scored AS (
-       |  SELECT probe_id, vec_id AS neighbor_id,
-       |    round(list_sum(list_transform(list_zip(emb, pemb), x -> x[1] * x[2]))
-       |          / sqrt(na * pna), 4) AS score
-       |  FROM short),
-       |r AS (SELECT probe_id, neighbor_id, score,
-       |        ROW_NUMBER() OVER (PARTITION BY probe_id
-       |                           ORDER BY score DESC, neighbor_id) AS rn
-       |      FROM scored)
-       |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 3
-       |ORDER BY probe_id, rn""".stripMargin
+       |${cosineRefineSql(PrefixShortlist, "pscore DESC, vec_id", 3)}""".stripMargin
 
   // ------------------------------------------- 1-bit binary quantization
 
+  /** Graded Hamming shortlist: the measured R ladder is SCALE.md's
+    * `q_embed_bit` row. */
   private val BitShortlist = 640
 
   /** BINARY QUANTIZATION + Hamming search — the terminal rung of the
@@ -2727,17 +2306,9 @@ object AnnOps {
     * vector comparison that exists — SIMD-free integer ops, 16 bytes per
     * vector. The top-`BitShortlist` Hamming shortlist per probe is then
     * re-ranked with full-precision cosine (the same shortlist→refine
-    * architecture as `rerankAdc` and the prefix tier), top-5 kept.
-    *
-    * BitShortlist chosen from the measured R ladder at sf0.1 (recall@3
-    * over 3 probes, 5k corpus, cosine truth): 64→3/9, 128→6/9, 384→7/9,
-    * 448→8/9, **640→9/9 ← graded** (wall flat across the ladder at this
-    * size, so recall decides). A ~13% oversample for full recall is the
-    * expected worst case: on isotropic synthetics each sign bit carries
-    * only 1/64 of the signal; real embeddings front-load variance into
-    * sign structure, shifting the knee far down (production BQ ships
-    * ~10× k oversampling). R is an absolute constant — at 100 TB it is
-    * the same ≤640 full-precision reads per probe.
+    * architecture as `rerankAdc` and the prefix tier), top-5 kept. R is
+    * an absolute constant — at 100 TB it is the same ≤640 full-precision
+    * reads per probe.
     *
     * Scale shape: encode is a row-local fold in the scan projection (the
     * corpus never shuffles), probes broadcast, and both rank-limit
@@ -2746,17 +2317,14 @@ object AnnOps {
     * columns: the Hamming sweep reads 16 B/vector instead of 256 B —
     * the recall-for-bytes trade every production vector store ships
     * (sign-bit BQ with exact re-rank). Sign is exact on both engines
-    * (no rounding mode is involved, unlike int8's half-up guard). */
-  /** The graded sign-bit pipeline frame — plan audits pin this; the
-    * query serves its published answer. */
+    * (no rounding mode is involved, unlike int8's half-up guard). This
+    * is the graded pipeline frame plan audits pin; the query serves its
+    * published answer. */
   private[graft] def bitSearch(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
     def pack(offset: Int): String =
       s"aggregate(sequence(0, 31), 0L, (acc, i) -> " +
         s"acc + IF(element_at(embedding, i + ${offset + 1}) >= 0.0D, shiftleft(1L, i), 0L))"
-    val e = embeddings(s, d)
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
+    val e = vectors(s, d)
       .withColumn("lo", expr(pack(0)))
       .withColumn("hi", expr(pack(32)))
     val probes = e.filter(col("vec_id") < 3)
@@ -2766,18 +2334,8 @@ object AnnOps {
       .crossJoin(broadcast(probes))
       .withColumn("hamming",
         (expr("bit_count(lo ^ plo)") + expr("bit_count(hi ^ phi)")).cast("long"))
-    val ws = Window.partitionBy(col("probe_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    ham.withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= BitShortlist)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("hamming"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .orderBy(col("probe_id"), col("rn"))
+    cosineRefine(ham, BitShortlist, Seq(col("hamming"), col("vec_id")), 5,
+      col("hamming"))
   }
 
   def qEmbedBit(s: SparkSession, d: String): DataFrame =
@@ -2785,31 +2343,19 @@ object AnnOps {
       .orderBy(col("probe_id"), col("rn"))
 
   val qEmbedBitSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |n AS (SELECT vec_id, emb,
-       |        list_sum(list_transform(emb, x -> x * x)) AS na FROM e),
+    s"""WITH ${embSql("emb")},
        |bits AS (
        |  SELECT vec_id,
        |    CAST(SUM(CASE WHEN emb[t.i + 1] >= 0 THEN (1::BIGINT << t.i) ELSE 0 END) AS BIGINT) AS lo,
        |    CAST(SUM(CASE WHEN emb[t.i + 33] >= 0 THEN (1::BIGINT << t.i) ELSE 0 END) AS BIGINT) AS hi
-       |  FROM n, range(32) t(i) GROUP BY vec_id),
-       |f AS (SELECT n.vec_id, n.emb, n.na, bits.lo, bits.hi
-       |      FROM n JOIN bits USING (vec_id)),
-       |h AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-       |        CAST(bit_count(xor(c.lo, p.lo)) + bit_count(xor(c.hi, p.hi)) AS BIGINT) AS hamming,
-       |        c.emb AS cemb, c.na AS cna, p.emb AS pemb, p.na AS pna
-       |      FROM f p, f c WHERE p.vec_id < 3 AND c.vec_id >= 3),
-       |sl AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-       |         ORDER BY hamming, neighbor_id) AS srn FROM h),
-       |scored AS (SELECT probe_id, neighbor_id, hamming,
-       |    round(list_sum(list_transform(list_zip(cemb, pemb), x -> x[1] * x[2]))
-       |          / sqrt(cna * pna), 4) AS score
-       |  FROM sl WHERE srn <= $BitShortlist),
-       |r AS (SELECT probe_id, neighbor_id, hamming, score,
-       |        ROW_NUMBER() OVER (PARTITION BY probe_id
-       |          ORDER BY score DESC, neighbor_id) AS rn FROM scored)
-       |SELECT probe_id, neighbor_id, hamming, score, rn FROM r WHERE rn <= 5
-       |ORDER BY probe_id, rn""".stripMargin
+       |  FROM e, range(32) t(i) GROUP BY vec_id),
+       |f AS (SELECT e.vec_id, e.emb, e.na, bits.lo, bits.hi
+       |      FROM e JOIN bits USING (vec_id)),
+       |pre AS (SELECT p.vec_id AS probe_id, c.vec_id,
+       |          CAST(bit_count(xor(c.lo, p.lo)) + bit_count(xor(c.hi, p.hi)) AS BIGINT) AS hamming,
+       |          c.emb, c.na, p.emb AS pemb, p.na AS pna
+       |        FROM f p, f c WHERE p.vec_id < 3 AND c.vec_id >= 3),
+       |${cosineRefineSql(BitShortlist, "hamming, vec_id", 5, ", hamming")}""".stripMargin
 
   // ------------------------------------------------------------- registry
 

@@ -1168,25 +1168,17 @@ object LlmOps {
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("embedding"), col("pvec")) /
           sqrt(col("na") * col("pna")), 4).as("score"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
+    AnnOps.topK(scored, "probe_id", 5, col("score").desc, col("neighbor_id"))
       .orderBy(col("probe_id"), col("rn"))
   }
 
   val qSimTopkSql: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
       |p AS (SELECT vec_id AS probe_id, emb AS pemb FROM e WHERE vec_id < 10),
       |s AS (SELECT probe_id, vec_id AS neighbor_id,
       |        round(list_cosine_similarity(emb, pemb), 4) AS score
-      |      FROM e, p WHERE vec_id <> probe_id),
-      |r AS (SELECT probe_id, neighbor_id, score,
-      |        ROW_NUMBER() OVER (PARTITION BY probe_id
-      |                           ORDER BY score DESC, neighbor_id) AS rn
-      |      FROM s)
-      |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 5
-      |ORDER BY probe_id, rn""".stripMargin
+      |      FROM e, p WHERE vec_id <> probe_id)
+      |${AnnOps.topKSql("s", "probe_id, neighbor_id, score", 5, "score DESC, neighbor_id")}""".stripMargin
 
   // ------------------------------------------------------- text statistics
 

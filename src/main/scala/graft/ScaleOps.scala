@@ -463,65 +463,10 @@ object ScaleOps {
     * the unfiltered recall of a 3×-sparser corpus. Topology otherwise
     * identical to the graded IVF: broadcast probes, cell equi-join,
     * bounded-heap top-3 — the corpus never shuffles. */
-  def qSimAnnFiltered(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
-    val ranked = CellAssign.rank(e, cents, "embedding", "na", top = AnnOps.IvfNProbe)
-      .select(col("vec_id"), col("embedding"), col("na"), col("cell_id"), col("arn"))
-      .localCheckpoint(eager = false)
-    // pre-filter: the metadata predicate lands on the candidate scan,
-    // before any scoring work
-    val candidates = ranked.filter(col("arn") === 1 && col("vec_id") % 3 === 0)
-    val probes = ranked.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"),
-        col("na").as("pna"), col("cell_id").as("pcell"))
-    val scored = candidates.join(broadcast(probes),
-        col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .orderBy(col("probe_id"), col("rn"))
-  }
+  def qSimAnnFiltered(s: SparkSession, d: String): DataFrame =
+    ivfCosine(s, d, col("arn") === 1 && col("vec_id") % 3 === 0)
 
-  val qSimAnnFilteredSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-      |           FROM embeddings),
-      |cents AS (SELECT vec_id AS cell_id, emb AS cvec, na AS nc FROM e WHERE vec_id < 8),
-      |dists AS (
-      |  SELECT e.vec_id, e.emb, e.na, c.cell_id,
-      |    e.na - 2.0 * list_sum(list_transform(list_zip(e.emb, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-      |  FROM e, cents c),
-      |ranked AS (
-      |  SELECT vec_id, emb, na, cell_id, arn FROM (
-      |    SELECT vec_id, emb, na, cell_id,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-      |    FROM dists) t WHERE arn <= ${AnnOps.IvfNProbe}),
-      |cand AS (SELECT vec_id, emb, na, cell_id FROM ranked
-      |         WHERE arn = 1 AND vec_id % 3 = 0),
-      |probes AS (SELECT vec_id AS probe_id, emb AS pemb, na AS pna, cell_id AS pcell
-      |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20),
-      |scored AS (
-      |  SELECT probe_id, a.vec_id AS neighbor_id,
-      |    round(list_sum(list_transform(list_zip(a.emb, p.pemb), x -> x[1] * x[2]))
-      |          / sqrt(a.na * p.pna), 4) AS score
-      |  FROM cand a JOIN probes p
-      |    ON a.cell_id = p.pcell AND a.vec_id <> p.probe_id),
-      |r AS (SELECT probe_id, neighbor_id, score,
-      |        ROW_NUMBER() OVER (PARTITION BY probe_id
-      |                           ORDER BY score DESC, neighbor_id) AS rn
-      |      FROM scored)
-      |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 3
-      |ORDER BY probe_id, rn""".stripMargin
+  val qSimAnnFilteredSql: String = ivfCosineSql("arn = 1 AND vec_id % 3 = 0")
 
   // ------------------------------------------------- Z-order data layout
 
@@ -716,88 +661,54 @@ object ScaleOps {
     * cost. One broadcast of the tiny centroid set, one windowed rank, one
     * cell equi-join — no all-pairs work. A neighbor sits in exactly one
     * cell (arn=1) while the probe fans out, so no per-pair dedup is
-    * needed.
-    *
-    * Why SEED cells and nprobe=4, measured (r10, sf0.1 candidate-set
-    * ceiling over the graded probes): Lloyd-trained centroids
-    * (IvfTraining.trainFixedPoint) LOWER recall@3 on these isotropic
-    * synthetic embeddings — 19/30 seed → 14–16/30 at 1/2/4 rounds,
-    * spherical (normalized) variant 13–16/30 — because k-means pulls
-    * centroids toward the corpus mean and collapses their angular
-    * separation, while raw corpus vectors stay good angular separators
-    * (the same no-cluster-structure failure r8 measured for PQ
-    * over-training). More cells also fail honestly: k=16/24/32 seed
-    * ceilings of 25–30/30 are an artifact of probes sitting in the seed
-    * set; with probe-disjoint seeds they drop to 8–15/30. The one lever
-    * that moves recall without lying is nprobe: 19/21/25 at nprobe
-    * 2/3/4 (~513/753/997 avg candidates of 16k). On clustered real
-    * embeddings the trained quantizer wins and the swap is one line in
-    * both engines (q_sim_ann_ivf_trained keeps it graded). */
-  /** The graded seed-cell IVF pipeline frame — plan audits pin this;
+    * needed. Why SEED cells and nprobe=4: SCALE.md's "ANN grids" section
+    * (ScaleOps IVF). This is the graded pipeline frame plan audits pin;
     * the query serves its published answer (AnnOps.publishedAnswer). */
-  private[graft] def ivfSearch(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
-    VectorFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("na", expr("graft_norm_sq(embedding)"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("cvec"),
-        col("na").as("nc"))
-    // checkpointed: the ranked assignment feeds both the candidate set
-    // (nearest cell only) and the probes (nprobe-cell fan-out) — without
-    // it the row-local assignment subtree runs twice
-    val ranked = CellAssign.rank(e, cents, "embedding", "na", top = AnnOps.IvfNProbe)
-      .select(col("vec_id"), col("embedding"), col("na"), col("cell_id"), col("arn"))
-      .localCheckpoint(eager = false)
-    val assigned = ranked.filter(col("arn") === 1)
-    val probes = ranked.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"),
-        col("na").as("pna"), col("cell_id").as("pcell"))
-    val scored = assigned.join(broadcast(probes),
-        col("cell_id") === col("pcell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_dot(embedding, pvec)") /
-          sqrt(col("na") * col("pna")), 4).as("score"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .orderBy(col("probe_id"), col("rn"))
-  }
+  private[graft] def ivfSearch(s: SparkSession, d: String): DataFrame =
+    ivfCosine(s, d, col("arn") === 1)
 
   def qSimAnnIvf(s: SparkSession, d: String): DataFrame =
     AnnOps.publishedAnswer(s, d, "ans_ivf")(ivfSearch(s, d))
       .orderBy(col("probe_id"), col("rn"))
 
-  val qSimAnnIvfSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |             list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)) AS na
-      |           FROM embeddings),
-      |cents AS (SELECT vec_id AS cell_id, emb AS cvec, na AS nc FROM e WHERE vec_id < 8),
-      |dists AS (
-      |  SELECT e.vec_id, e.emb, e.na, c.cell_id,
-      |    e.na - 2.0 * list_sum(list_transform(list_zip(e.emb, c.cvec), x -> x[1] * x[2])) + c.nc AS dist
-      |  FROM e, cents c),
-      |ranked AS (
-      |  SELECT vec_id, emb, na, cell_id, arn FROM (
-      |    SELECT vec_id, emb, na, cell_id,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cell_id) AS arn
-      |    FROM dists) t WHERE arn <= ${AnnOps.IvfNProbe}),
-      |assigned AS (SELECT vec_id, emb, na, cell_id FROM ranked WHERE arn = 1),
-      |probes AS (SELECT vec_id AS probe_id, emb AS pemb, na AS pna, cell_id AS pcell
-      |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20),
-      |scored AS (
-      |  SELECT probe_id, a.vec_id AS neighbor_id,
-      |    round(list_sum(list_transform(list_zip(a.emb, p.pemb), x -> x[1] * x[2]))
-      |          / sqrt(a.na * p.pna), 4) AS score
-      |  FROM assigned a JOIN probes p
-      |    ON a.cell_id = p.pcell AND a.vec_id <> p.probe_id),
-      |r AS (SELECT probe_id, neighbor_id, score,
-      |        ROW_NUMBER() OVER (PARTITION BY probe_id
-      |                           ORDER BY score DESC, neighbor_id) AS rn
-      |      FROM scored)
-      |SELECT probe_id, neighbor_id, score, rn FROM r WHERE rn <= 3
-      |ORDER BY probe_id, rn""".stripMargin
+  val qSimAnnIvfSql: String = ivfCosineSql("arn = 1")
+
+  /** Seed-cell IVF cosine search: every vector ranked against the 8 seed
+    * cells, the candidates passing `candPred` (own cell, plus any
+    * metadata pre-filter) met by the probes [10, 20) fanned out to their
+    * AnnOps.IvfNProbe cells, top-3 per probe by rounded cosine. */
+  private def ivfCosine(s: SparkSession, d: String, candPred: Column): DataFrame = {
+    plans.TopKRewriteApi.ensureRegistered(s)
+    val e = AnnOps.vectors(s, d)
+    // checkpointed: the ranked assignment feeds both the candidate set
+    // (nearest cell only) and the probes (nprobe-cell fan-out) — without
+    // it the row-local assignment subtree runs twice
+    val ranked = CellAssign.rank(e, AnnOps.seedCells(e), "embedding", "na",
+        top = AnnOps.IvfNProbe)
+      .select(col("vec_id"), col("embedding"), col("na"), col("cell_id"), col("arn"))
+      .localCheckpoint(eager = false)
+    val probes = ranked.filter(col("vec_id") >= 10 && col("vec_id") < 20)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"),
+        col("na").as("pna"), col("cell_id").as("pcell"))
+    val scored = AnnOps.cellJoin(ranked.filter(candPred), probes)
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+        AnnOps.cosine("embedding", "pvec", "na", "pna").as("score"))
+    AnnOps.topK(scored, "probe_id", 3, col("score").desc, col("neighbor_id"))
+      .orderBy(col("probe_id"), col("rn"))
+  }
+
+  private def ivfCosineSql(candPred: String): String =
+    s"""WITH ${AnnOps.embSql("emb")},
+       |${AnnOps.cellsSql(AnnOps.IvfNProbe, "emb")},
+       |cand AS (SELECT vec_id, emb, na, cell_id FROM ranked WHERE $candPred),
+       |probes AS (SELECT vec_id AS probe_id, emb AS pemb, na AS pna, cell_id AS pcell
+       |           FROM ranked WHERE vec_id >= 10 AND vec_id < 20),
+       |scored AS (
+       |  SELECT probe_id, a.vec_id AS neighbor_id,
+       |    ${AnnOps.cosineSql("a.emb", "p.pemb", "a.na", "p.pna")} AS score
+       |  FROM cand a JOIN probes p
+       |    ON a.cell_id = p.pcell AND a.vec_id <> p.probe_id)
+       |${AnnOps.topKSql("scored", "probe_id, neighbor_id, score", 3, "score DESC, neighbor_id")}""".stripMargin
 
   // ------------------------------------------- IVF with TRAINED centroids
 

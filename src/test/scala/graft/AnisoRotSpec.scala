@@ -33,11 +33,15 @@ class AnisoRotSpec extends AnyFunSuite {
       .localCheckpoint()
     def adcHits(emb: org.apache.spark.sql.DataFrame): Long = {
       // truth on the variant's OWN vectors (orthogonality preserves L2,
-      // but own-vector truth keeps the rounding boundary identical)
+      // but own-vector truth keeps the rounding boundary identical): the
+      // scorecard's pq row, with the variant as both truth views
       val e = emb.withColumn("na", expr("graft_norm_sq(embedding)"))
-      val truth = AnnOps.recallTruthAll(spark, e, Seq(("pq", 0L, 8L, true, 0L)))
+        .withColumn("emb2", col("embedding")).withColumn("na2", col("na"))
+      val truth = AnnOps.recallTruth(e, AnnOps.recallMethods.filter(_.name == "pq"))
         .select(col("probe_id"), col("neighbor_id"))
-      AnnOps.pqSearchOn(spark, emb, rerank = false)
+      // the PQ arm: fresh Lloyd training + encode, graded at raw ADC
+      val cb = AnnOps.pqCbRows(emb)
+      AnnOps.pqRawAdc(emb, cb, AnnOps.pqCodeArrWith(emb, cb))
         .join(truth, Seq("probe_id", "neighbor_id")).count()
     }
     val idHits = adcHits(aniso)

@@ -269,15 +269,9 @@ class PlanQualitySpec extends AnyFunSuite {
     // cross-join, per-(method,probe) window) and consumed via a lazy
     // checkpoint, so the assertion targets the un-checkpointed truth
     // frame — built EXACTLY as recallFrames builds the one that executes
-    // (r19 ADVICE: this test used to assert recallTruthAll, which
-    // production no longer runs — recallTruthBoth over the two-view
-    // corpus is the executing frame since the rot arm rode in)
-    import org.apache.spark.sql.functions.{col, expr}
-    val eb = AnnOps.recallEmb(spark, sf)
-      .withColumn("emb2", expr(AnnOps.rotAnisoSql("embedding")))
-      .withColumn("na2", expr("graft_norm_sq(emb2)"))
-    val truth = AnnOps.recallTruthBoth(spark, eb, AnnOps.recallSpecs,
-      Seq(("pq_rot_aniso", 0L, 8L, true, 0L)))
+    // (the two-view corpus against every scorecard method)
+    val truth = AnnOps.recallTruth(AnnOps.recallViews(spark, sf),
+      AnnOps.recallMethods)
     val p = truth.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"brute-force truths must be broadcast-nested-loop over ≤60 probes:\n$p")

@@ -62,7 +62,7 @@ class SinkSemanticsSpec extends AnyFunSuite {
 
   test("index rebalance touches ONLY the split cell's directory") {
     import org.apache.spark.sql.functions.col
-    val (emb, _, bigCell) = AnnOps.rebalanceBuild(spark, sf)
+    val bigCell = AnnOps.rebalanceBuild(spark, sf).get
     val tableDir = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:"), "graft_ann_index_r")
     val cells = spark.table("default.graft_ann_index_r")
@@ -77,7 +77,7 @@ class SinkSemanticsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val total = spark.table("default.graft_ann_index_r").count()
 
-    AnnOps.rebalanceCompact(spark, emb, bigCell)
+    AnnOps.rebalanceCompact(spark, sf, bigCell)
 
     untouched.foreach { c =>
       assert(fileHashes(tableDir.resolve(s"cell_id=$c")) === before(c),
