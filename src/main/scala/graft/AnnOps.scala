@@ -1323,12 +1323,11 @@ object AnnOps {
       val survivors = touched.filter(!deleted)
       val surviving = survivors.select(col("cell_id")).distinct()
         .collect().map(_.getLong(0)).toSet
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.select(col("vec_id"), col("codes"), col("cell_id"))
-        .repartition(col("cell_id"))
-        .write.mode("overwrite").insertInto(t)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      GraftSession.withConfs(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        survivors.select(col("vec_id"), col("codes"), col("cell_id"))
+          .repartition(col("cell_id"))
+          .write.mode("overwrite").insertInto(t)
+      }
       affected.filterNot(surviving).foreach { c =>
         s.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (cell_id = $c)")
       }

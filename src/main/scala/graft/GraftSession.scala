@@ -35,4 +35,17 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with `confs` set on the session, then put each key back
+    * as it was: its previous value, or unset if it had none. The change
+    * is session-global while `body` runs, so a query planned concurrently
+    * on the same session would see it; every caller runs sequentially. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

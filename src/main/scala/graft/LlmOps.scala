@@ -424,17 +424,16 @@ object LlmOps {
     * silent partial labeling is a wrong answer. */
   private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // Shuffle parallelism inside the loop follows STATE volume, not the
-    // session's scan parallelism (the same sizing decision as
-    // StreamOps.withStreamParts): each round shuffles only (node, label)
-    // pairs — latency-bound at 32 partitions for label sets this size,
-    // and at 100 TB the knob moves with the graph. Conf restored on exit;
-    // the per-round eager checkpoints materialize under the pinned value,
-    // so the returned labels frame is independent of the session conf.
+    // session's scan parallelism (the same sizing decision as the
+    // streaming runs' conf scope, GraftSession.withConfs): each round
+    // shuffles only (node, label) pairs — latency-bound at 32 partitions
+    // for label sets this size, and at 100 TB the knob moves with the
+    // graph. Conf restored on exit; the per-round eager checkpoints
+    // materialize under the pinned value, so the returned labels frame
+    // is independent of the session conf.
     val s = pairs.sparkSession
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
     val algo = s.conf.getOption("spark.graft.ccAlgo").getOrElse("minlabel")
-    try algo match {
+    GraftSession.withConfs(s, "spark.sql.shuffle.partitions" -> "8")(algo match {
       // stars trades per-round distance-doubling for a shape-independent
       // O(log² n) ROUND bound — its cap must budget for that bound, not
       // inherit minlabel's diameter-tuned default (a 2048-path already
@@ -447,8 +446,7 @@ object LlmOps {
           .map(_.toInt).getOrElse(math.max(maxIter, 60))
         connectedComponentsStars(pairs, cap)
       case _ => connectedComponentsLoop(pairs, maxIter)
-    }
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    })
   }
 
   /** Alternating large-star/small-star contraction. Edge set kept
@@ -495,10 +493,6 @@ object LlmOps {
       // must run before the prior round's blocks are freed below)
       changed = updated.exceptAll(edges).count() +
         edges.exceptAll(updated).count()
-      if (pairs.sparkSession.conf.getOption("spark.graft.ccLog").exists(_.toBoolean))
-        // scalastyle:off println
-        println(s"[cc-stars] round=$iter changed=$changed")
-        // scalastyle:on println
       org.apache.spark.sql.GraftShim.freeCheckpointBlocks(edges)
       edges = updated
       iter += 1
@@ -542,10 +536,6 @@ object LlmOps {
             coalesce(col("nmin"), col("label")),
             coalesce(col("jlabel"), col("label"))).as("new_label")))
       changed = updated.filter(col("new_label") < col("label")).count()
-      if (pairs.sparkSession.conf.getOption("spark.graft.ccLog").exists(_.toBoolean))
-        // scalastyle:off println
-        println(s"[cc] round=$iter changed=$changed")
-        // scalastyle:on println
       // the count above is LOAD-BEARING: Checkpoints.cut is lazy, so that
       // count is the only action materializing `updated`'s blocks — they
       // MUST be live before the prior round's blocks are freed below

@@ -926,11 +926,10 @@ object RelOps {
   }
 
   private[graft] def mergeOverwriteEn(s: SparkSession, base: DataFrame): Unit = {
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try mergedEn(base).repartition(col("lang"))
-      .write.mode("overwrite").insertInto("default.graft_merge_docs")
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    GraftSession.withConfs(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      mergedEn(base).repartition(col("lang"))
+        .write.mode("overwrite").insertInto("default.graft_merge_docs")
+    }
   }
 
   val qMergeOverwriteSql: String =
@@ -1246,15 +1245,15 @@ object RelOps {
   private def timetravelLogBuild(s: SparkSession, table: String, d: String): Unit = {
     import graft.sources.MiniLog
     deleteRecursively(table)
-    val base = orders(s, d)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        (col("o_orderkey") % 8).as("bucket"))
+    val base = timetravelBase(s, d)
     // v1: initial load, one immutable file per bucket
     val v1 = MiniLog.writeBucketFiles(base, table, "v1")
     MiniLog.commit(table, 1, v1)
     // v2: copy-on-write UPDATE of exactly the keys in bucket 2
     // (o_orderkey % 8 = 2): rewrite that one file, share the rest.
-    // v3: DELETE of bucket 5's 'F' rows — rewrite that one file.
+    // v3: DELETE of bucket 5's 'F' rows — rewrite that one file, or drop
+    // the bucket from the manifest when the delete empties it. A bucket
+    // the load left empty has no file and no rewrite.
     // The two rewrites are FUSED into one write job (r19 verdict item 4,
     // guide §2.6 overlap / §2.4 fewer passes): they touch DISJOINT
     // buckets and both read only v1 files (the old sequential build read
@@ -1263,24 +1262,30 @@ object RelOps {
     // v3's file before v2 commits changes neither snapshot. Commit
     // ORDER and manifest CONTENTS are identical to the sequential form:
     // v2 = v1 + new bucket-2 file, v3 = v2 + new bucket-5 file.
-    val b2 = s.read.parquet(v1(2L))
+    val b2 = v1.get(2L).map(s.read.parquet(_)
       .withColumn("o_totalprice", col("o_totalprice") + lit(100))
-      .withColumn("bucket", lit(2L))
-    val b5 = s.read.parquet(v1(5L))
+      .withColumn("bucket", lit(2L)))
+    val b5 = v1.get(5L).map(s.read.parquet(_)
       .filter(col("o_orderstatus") =!= "F")
-      .withColumn("bucket", lit(5L))
-    val rw = MiniLog.writeBucketFiles(b2.unionByName(b5), table, "v2v3")
-    val v2 = v1 + (2L -> rw(2L))
+      .withColumn("bucket", lit(5L)))
+    val rw = (b2 ++ b5).reduceOption(_.unionByName(_))
+      .fold(Map.empty[Long, String])(MiniLog.writeBucketFiles(_, table, "v2v3"))
+    val v2 = v1 ++ rw.get(2L).map(2L -> _)
     MiniLog.commit(table, 2, v2)
-    val v3 = v2 + (5L -> rw(5L))
+    val v3 = v2 - 5L ++ rw.get(5L).map(5L -> _)
     MiniLog.commit(table, 3, v3)
   }
+
+  /** The orders columns the time-travel log stores, keyed by bucket. */
+  private def timetravelBase(s: SparkSession, d: String): DataFrame =
+    orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      col("o_totalprice"), (col("o_orderkey") % 8).as("bucket"))
 
   def qTimetravel(s: SparkSession, d: String): DataFrame = {
     import graft.sources.MiniLog
     val table = timetravelLog(s, d)
     // time-travel: read AS OF v2 — sees the update, not the delete
-    MiniLog.readAsOf(s, table, 2)
+    MiniLog.readAsOf(s, table, 2, timetravelBase(s, d).schema)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .orderBy(col("o_orderstatus"))
@@ -1298,10 +1303,9 @@ object RelOps {
   def qTimetravelDiff(s: SparkSession, d: String): DataFrame = {
     import graft.sources.MiniLog
     val table = timetravelLog(s, d)
-    val v1 = MiniLog.readAsOf(s, table, 1)
-      .select(col("o_orderkey"), col("o_totalprice").as("p1"))
-    val v3 = MiniLog.readAsOf(s, table, 3)
-      .select(col("o_orderkey"), col("o_totalprice").as("p3"))
+    def asOf(v: Int) = MiniLog.readAsOf(s, table, v, timetravelBase(s, d).schema)
+    val v1 = asOf(1).select(col("o_orderkey"), col("o_totalprice").as("p1"))
+    val v3 = asOf(3).select(col("o_orderkey"), col("o_totalprice").as("p3"))
     v1.join(v3, Seq("o_orderkey"), "full_outer")
       .select(
         when(col("p1").isNull, "insert")

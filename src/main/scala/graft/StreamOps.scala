@@ -3,22 +3,26 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-/** Streaming-shaped queries over the events table (SURVEY.md §2.4). Each is
-  * written with the exact constructs Structured Streaming executes
+/** Streaming queries over the events table (SURVEY.md §2.4). Four are
+  * batch forms written with the constructs Structured Streaming executes
   * (`window()` tumbling/sliding groupings; sessionization via the gap
-  * trick, whose incremental analogue is `session_window`), run here in
-  * batch mode so the DuckDB oracle can check them. Window starts are
-  * emitted as epoch seconds (BIGINT) — timestamps never cross the oracle
-  * boundary raw (FIXTURES.md §C).
+  * trick, whose incremental analogue is `session_window`). The other
+  * twelve run live through the Structured Streaming engine — file-stream
+  * sources, watermarks, state stores, memory / file / foreachBatch sinks,
+  * driven to completion with Trigger.AvailableNow — and are graded
+  * against the same DuckDB oracles as their batch truths. Window starts
+  * are emitted as epoch seconds (BIGINT) — timestamps never cross the
+  * oracle boundary raw (FIXTURES.md §C).
   *
-  * A true `readStream`/`writeStream` demo with watermarks lives in the test
-  * suite (non-graded): the identical aggregation code runs under
-  * Structured Streaming unchanged.
+  * Each live query is its own operator between shared parts: a source
+  * ([[eventStream]], or a staged directory through [[reader]]), and one
+  * bounded [[run]] under one conf scope ([[drain]] for memory sinks).
   */
 object StreamOps {
   import Tables._
@@ -39,14 +43,17 @@ object StreamOps {
     schemaCache.computeIfAbsent((s.sparkContext.applicationId, path),
       _ => s.read.parquet(path).schema)
 
-  /** 1-hour tumbling window counts + sums per event type. */
-  def qStreamTumbling(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+  /** 1-hour tumbling window counts + sums per event type: the batch
+    * query, the live stream and the file-sink stream all run this. */
+  private def tumbling(ev: DataFrame): DataFrame =
+    ev.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
       .select(unix_seconds(col("w.start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
-      .orderBy(col("win_start"), col("event_type"))
+
+  /** 1-hour tumbling window counts + sums per event type. */
+  def qStreamTumbling(s: SparkSession, d: String): DataFrame =
+    tumbling(events(s, d)).orderBy(col("win_start"), col("event_type"))
 
   val qStreamTumblingSql: String =
     """SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS win_start,
@@ -55,16 +62,18 @@ object StreamOps {
       |FROM events
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** 1-hour windows sliding every 15 minutes, batch and live. */
+  private def sliding(ev: DataFrame): DataFrame =
+    ev.groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
+      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
+      .select(unix_seconds(col("w.start")).as("win_start"),
+        col("n"), col("sum_value"))
+
   /** 1-hour window sliding every 15 minutes: each event lands in 4
     * overlapping windows. Oracle reproduces the epoch-aligned window grid
     * by shifting the 15-minute bucket k∈[0,3] steps back. */
   def qStreamSliding(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
-      .select(unix_seconds(col("w.start")).as("win_start"),
-        col("n"), col("sum_value"))
-      .orderBy(col("win_start"))
+    sliding(events(s, d)).orderBy(col("win_start"))
 
   val qStreamSlidingSql: String =
     """SELECT CAST(epoch(time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP))
@@ -146,54 +155,74 @@ object StreamOps {
       |GROUP BY user_id, event_type, minute
       |ORDER BY user_id, event_type, minute""".stripMargin
 
-  // ----------------------------------------- true readStream (graded)
+  // ------------------------------------------------ streaming skeleton
 
-  /** Run `body` with the streaming query's shuffle-partition count pinned
-    * low. Every stateful streaming operator materializes state-store
-    * instances PER shuffle partition (a stream-stream join: four per
-    * partition), and the count is frozen into the query at start — at the
-    * session's 32 partitions that is pure fixed overhead against these
-    * single-micro-batch state volumes. Production sizing is the same
-    * decision: state-store parallelism follows state volume, not the
-    * batch session's scan parallelism. Batch queries are unaffected (conf
-    * restored on exit).
+  /** The conf scope of a bounded streaming run, set only while the query
+    * runs ([[GraftSession.withConfs]] restores the session after).
     *
-    * CAVEAT: the conf change is SESSION-GLOBAL while `body` runs — a
-    * batch query planned concurrently on the same session would silently
-    * pick up the low partition count. Fine for the sequential
-    * Verify/Bench harness (RerunSpec checks the restore); if concurrent
-    * use ever appears, scope the change via s.cloneSession() instead. */
-  private def withStreamParts[T](s: SparkSession, parts: Int = 4,
-      noDataBatches: Boolean = false)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // spark.graft.streamParts: the A/B knob for the state-store count
-    // ladder (see the ladder note below) — the graded default stays 4
-    val p = s.conf.getOption("spark.graft.streamParts")
-      .map(_.toInt).getOrElse(parts)
-    s.conf.set("spark.sql.shuffle.partitions", p.toString)
-    // Trailing no-data micro-batches exist to advance the watermark and
-    // flush/evict state when no new data will do it. The bounded
-    // AvailableNow queries here whose OUTPUT doesn't depend on that
-    // flush (complete-mode aggs re-emit full state each batch;
-    // update-mode stateful ops with TimeMode.None have no timers;
-    // inner stream-stream joins emit on match, not on eviction) turn
-    // them off — one full IncrementalExecution + state-commit round
-    // per query for nothing (3-rep TimeQ: −0.8 s across the eight
-    // eligible queries, q_stream_join −0.4 alone). The two queries
-    // whose SEMANTICS need the trailing flush — q_stream_sink and
-    // q_stream_join_outer, whose sentinel design exists exactly to
-    // drive it — pass noDataBatches = true and keep the default.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.getOption(ndKey)
-    if (!noDataBatches) s.conf.set(ndKey, "false")
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      if (!noDataBatches) prevNd match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None => s.conf.unset(ndKey)
-      }
-    }
+    * Shuffle partitions pinned to 4: every stateful streaming operator
+    * materializes state-store instances PER shuffle partition (a
+    * stream-stream join: four per partition), and the count is frozen
+    * into the query at start — at the batch session's partition count
+    * that is fixed overhead against these single-micro-batch state
+    * volumes, and 2 or 1 measured flat to worse (SCALE.md, r14 ladder).
+    * Production sizing is the same decision: state-store parallelism
+    * follows state volume, not the batch session's scan parallelism.
+    *
+    * Trailing no-data micro-batches off: they exist to advance the
+    * watermark and flush/evict state when no new data will do it. The
+    * bounded AvailableNow queries whose OUTPUT doesn't depend on that
+    * flush (complete-mode aggs re-emit full state each batch;
+    * update-mode stateful ops with TimeMode.None have no timers; inner
+    * stream-stream joins emit on match, not on eviction) turn them off —
+    * one full IncrementalExecution + state-commit round per query for
+    * nothing (3-rep TimeQ: −0.8 s across the eight eligible queries,
+    * q_stream_join −0.4 alone). The two queries whose SEMANTICS need the
+    * trailing flush — q_stream_sink and q_stream_join_outer, whose
+    * sentinel design exists exactly to drive it — run [[flushing]]. */
+  private val flushing = Seq("spark.sql.shuffle.partitions" -> "4")
+  private val bounded =
+    flushing :+ ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+  /** transformWithState runs only on the RocksDB state store provider. */
+  private val rocksDb = bounded :+
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** A file-stream reader with the (memoized) schema of `schemaPath`. */
+  private def reader(s: SparkSession, schemaPath: String) =
+    s.readStream.schema(cachedSchema(s, schemaPath))
+
+  /** The events table as a file stream, `ts` normalised like the batch
+    * read. Glob form: the file source requires a directory basePath, and
+    * the driver's tables are single parquet files — the [e] glob matches
+    * only the events file while the basePath resolves to the sf dir. */
+  private def eventStream(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.normalizeTs(reader(s, s"$d/events.parquet").parquet(s"$d/[e]vents.parquet"))
   }
+
+  /** One bounded run: start `w` with Trigger.AvailableNow under `confs`,
+    * process every available input, stop. */
+  private def run(s: SparkSession, w: DataStreamWriter[Row],
+      confs: Seq[(String, String)] = bounded): Unit =
+    GraftSession.withConfs(s, confs: _*) {
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** Drain `df` into the memory sink `sink` and return the sink's table.
+    * Fixed per-query sink names: the memory sink registers the result via
+    * createOrReplaceTempView, so a rerun REPLACES the prior run's table
+    * instead of accumulating a fresh UUID-named copy in driver memory for
+    * the session lifetime (bench loops run these repeatedly). */
+  private def drain(df: DataFrame, sink: String, mode: String,
+      confs: Seq[(String, String)] = bounded): DataFrame = {
+    run(df.sparkSession,
+      df.writeStream.format("memory").queryName(sink).outputMode(mode), confs)
+    df.sparkSession.table(sink)
+  }
+
+  // ------------------------------------------------------ live queries
 
   /** The SAME tumbling aggregation as q_stream_tumbling, but executed
     * through the real Structured Streaming engine: parquet file-stream
@@ -205,32 +234,10 @@ object StreamOps {
     * window-state) works, not just its batch-shaped equivalent. At scale
     * the same topology runs unbounded: the watermark bounds window state,
     * and the file source becomes Kafka/object-store listing. */
-  def qStreamLive(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    // glob form: the file source requires a directory basePath, and the
-    // driver's tables are single parquet files — the [e] glob matches only
-    // the events file while the basePath resolves to the sf directory
-    val agg = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .transform(Tables.normalizeTs(_))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
-      .select(unix_seconds(col("w.start")).as("win_start"),
-        col("event_type"), col("n"), col("sum_value"))
-    // fixed per-query sink name: the memory sink registers the result via
-    // createOrReplaceTempView, so a rerun REPLACES the prior run's table
-    // instead of accumulating a fresh UUID-named copy in driver memory
-    // for the session lifetime (bench loops run this repeatedly)
-    val sink = "graft_stream_live_sink"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("win_start"), col("event_type"))
-  }
+  def qStreamLive(s: SparkSession, d: String): DataFrame =
+    drain(tumbling(eventStream(s, d).withWatermark("ts", "2 hours")),
+      "graft_stream_live_sink", "complete")
+      .orderBy(col("win_start"), col("event_type"))
 
   /** The SLIDING-window aggregation through the real streaming engine —
     * the last window shape not yet run live: 1-hour windows sliding every
@@ -242,26 +249,10 @@ object StreamOps {
     * gates the live path. At scale the watermark expires windows whose
     * end has passed, bounding state to (watermark span / slide) windows
     * per key — the same bound tumbling gets, ×(len/slide) overlap. */
-  def qStreamLiveSliding(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    val agg = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .transform(Tables.normalizeTs(_))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
-      .select(unix_seconds(col("w.start")).as("win_start"),
-        col("n"), col("sum_value"))
-    // fixed sink name — reruns replace instead of accumulate (see above)
-    val sink = "graft_stream_slide_sink"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("win_start"))
-  }
+  def qStreamLiveSliding(s: SparkSession, d: String): DataFrame =
+    drain(sliding(eventStream(s, d).withWatermark("ts", "2 hours")),
+      "graft_stream_slide_sink", "complete")
+      .orderBy(col("win_start"))
 
   /** Streaming DEDUP through the real engine — the last batch-only
     * stream query shape run live: one survivor per (user_id, event_type,
@@ -273,29 +264,17 @@ object StreamOps {
     * reproducible across engines — while min-survivor is deterministic
     * and therefore oracle-checkable. Same state bound either way: one
     * row per in-watermark key, expired as the watermark passes. */
-  def qStreamLiveDedup(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    val agg = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .transform(Tables.normalizeTs(_))
-      .withWatermark("ts", "2 hours")
+  def qStreamLiveDedup(s: SparkSession, d: String): DataFrame =
+    drain(eventStream(s, d).withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), col("event_type"),
         window(col("ts"), "1 minute").as("w"))
       .agg(min(col("event_id")).as("survivor_event_id"),
         count(lit(1)).as("n_collapsed"))
       .select(col("user_id"), col("event_type"),
         unix_seconds(col("w.start")).as("minute"),
-        col("survivor_event_id"), col("n_collapsed"))
-    // fixed sink name — reruns replace instead of accumulate (see above)
-    val sink = "graft_stream_dedup_sink"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("user_id"), col("event_type"), col("minute"))
-  }
+        col("survivor_event_id"), col("n_collapsed")),
+      "graft_stream_dedup_sink", "complete")
+      .orderBy(col("user_id"), col("event_type"), col("minute"))
 
   /** Stateful SESSIONIZATION through the real streaming engine:
     * `session_window` (dynamic, gap-merged window state) over the
@@ -303,25 +282,34 @@ object StreamOps {
     * sessions equal the batch gap-trick answer. Session identity crosses
     * the oracle boundary as epoch seconds of the session start (= first
     * event time). */
-  def qStreamLiveSession(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    val agg = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .transform(Tables.normalizeTs(_))
-      .withWatermark("ts", "2 hours")
+  def qStreamLiveSession(s: SparkSession, d: String): DataFrame =
+    drain(eventStream(s, d).withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), unix_seconds(col("w.start")).as("sess_start"),
-        col("n_events"))
-    // fixed sink name — reruns replace instead of accumulate (see above)
-    val sink = "graft_stream_sess_sink"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("user_id"), col("sess_start"))
+        col("n_events")),
+      "graft_stream_sess_sink", "complete")
+      .orderBy(col("user_id"), col("sess_start"))
+
+  /** The per-user (user_id, event_id % 1000) stream both stateful APIs
+    * consume, run through `stateful` into an update-mode sink. Both
+    * emitted measures are MONOTONE (count strictly, modular-token sum
+    * non-decreasing since event_id ≥ 0), so max-per-user over the sink
+    * equals the converged state and the plain batch aggregate oracle
+    * hash-checks the whole stateful path. */
+  private def tokenStats(s: SparkSession, d: String, sink: String,
+      confs: Seq[(String, String)] = bounded)(
+      stateful: KeyValueGroupedDataset[Long, (Long, Long)] =>
+        Dataset[(Long, Long, Long)]): DataFrame = {
+    import s.implicits._
+    val byUser = eventStream(s, d)
+      .select(col("user_id").cast(LongType), (col("event_id") % 1000L).as("tok"))
+      .as[(Long, Long)].groupByKey(_._1)
+    drain(stateful(byUser).toDF("user_id", "n_events", "tok_sum"), sink,
+        "update", confs)
+      .groupBy(col("user_id"))
+      .agg(max(col("n_events")).as("n_events"), max(col("tok_sum")).as("tok_sum"))
+      .orderBy(col("user_id"))
   }
 
   /** ARBITRARY STATEFUL processing through the real streaming engine:
@@ -329,40 +317,20 @@ object StreamOps {
     * and emits the running totals on every update — the API for state
     * machines that windowed aggregation can't express (the
     * `KeyValueGroupedDataset` surface of the brief). Update output mode
-    * writes one row per (user, micro-batch) to the memory sink; both
-    * emitted measures are MONOTONE (count strictly, modular-token sum
-    * non-decreasing since event_id ≥ 0), so max-per-user over the sink
-    * equals the converged state and the plain batch aggregate oracle
-    * hash-checks the whole stateful path. At scale the same code runs
-    * unbounded with a timeout policy (`GroupStateTimeout`) bounding
-    * state. */
-  def qStreamCustomState(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
+    * writes one row per (user, micro-batch) to the memory sink, read
+    * back through [[tokenStats]]. At scale the same code runs unbounded
+    * with a timeout policy (`GroupStateTimeout`) bounding state. */
+  def qStreamCustomState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    val src = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .select(col("user_id").cast(LongType), (col("event_id") % 1000L).as("tok"))
-      .as[(Long, Long)]
-    val updates = src.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+    tokenStats(s, d, "graft_stream_state_sink")(
+      _.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
           var (n, sum) = state.getOption.getOrElse((0L, 0L))
           rows.foreach { r => n += 1; sum += r._2 }
           state.update((n, sum))
           Iterator((user, n, sum))
-      }
-      .toDF("user_id", "n_events", "tok_sum")
-    val sink = "graft_stream_state_sink"
-    val q = updates.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"), max(col("tok_sum")).as("tok_sum"))
-      .orderBy(col("user_id"))
+      })
   }
 
   /** The StatefulProcessor behind q_stream_transform_state: per-user
@@ -401,37 +369,11 @@ object StreamOps {
     * truth. At 100 TB the named-state model is what bounds memory:
     * RocksDB spills per-key state to local SSD and TTL evicts cold
     * keys, neither of which the V1 blob API could do. */
-  def qStreamTransformState(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
+  def qStreamTransformState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = cachedSchema(s, s"$d/events.parquet")
-      val src = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-        .select(col("user_id").cast(LongType), (col("event_id") % 1000L).as("tok"))
-        .as[(Long, Long)]
-      val updates = src.groupByKey(_._1)
-        .transformWithState(new TokenStatsProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n_events", "tok_sum")
-      val sink = "graft_stream_tws_sink"
-      val q = updates.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"), max(col("tok_sum")).as("tok_sum"))
-        .orderBy(col("user_id"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
-    }
+    tokenStats(s, d, "graft_stream_tws_sink", rocksDb)(
+      _.transformWithState(new TokenStatsProcessor, TimeMode.None(), OutputMode.Update()))
   }
 
   /** STREAMING FILE SINK — the missing half of the streaming story until
@@ -482,22 +424,14 @@ object StreamOps {
         .write.mode("overwrite").parquet(dd)
     }
 
-  /** One bounded run of the file-sink stream over `src` into out/ckpt. */
+  /** One bounded run of the file-sink stream over `src` into out/ckpt;
+    * the sentinel NEEDS the trailing flush. */
   private def streamSinkRun(s: SparkSession, src: String,
-      out: String, ckpt: String): Unit = {
-    val agg = s.readStream.schema(cachedSchema(s, src)).parquet(src)
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
-      .select(unix_seconds(col("w.start")).as("win_start"),
-        col("event_type"), col("n"), col("sum_value"))
-    val q = agg.writeStream.format("parquet")
+      out: String, ckpt: String): Unit =
+    run(s, tumbling(reader(s, src).parquet(src).withWatermark("ts", "2 hours"))
+      .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      .outputMode("append"), flushing)
 
   /** The exactly-once RESTART half of the file-sink contract: start the
     * same stream on the sink's existing out/ckpt — the commit log must
@@ -519,13 +453,10 @@ object StreamOps {
     require(java.nio.file.Files.exists(sfTag) &&
       java.nio.file.Files.readString(sfTag) == SharedStage.pathTag(d),
       s"streamSinkRestart($d) against a checkpoint from a different sfDir")
-    withStreamParts(s, noDataBatches = true) {
-      streamSinkRun(s, streamSinkSrc(s, d), out, ckpt)
-    }
+    streamSinkRun(s, streamSinkSrc(s, d), out, ckpt)
   }
 
-  def qStreamSink(s: SparkSession, d: String): DataFrame =
-      withStreamParts(s, noDataBatches = true) { // sentinel NEEDS the trailing flush
+  def qStreamSink(s: SparkSession, d: String): DataFrame = {
     val src = streamSinkSrc(s, d)
     val out = RelOps.stagingDir(s, "stream_sink_out")
     val ckpt = RelOps.stagingDir(s, "stream_sink_ckpt")
@@ -549,23 +480,14 @@ object StreamOps {
     * equals the batch join+rollup, so the plain-SQL oracle hash-gates the
     * stream-static path. At 100 TB/day the dim broadcast refreshes per
     * batch while the stream never re-reads history. */
-  def qStreamEnrich(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = cachedSchema(s, s"$d/events.parquet")
+  def qStreamEnrich(s: SparkSession, d: String): DataFrame = {
     val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-    val agg = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
+    drain(eventStream(s, d)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value"))
-    // fixed sink name — reruns replace instead of accumulate (see above)
-    val sink = "graft_stream_enrich_sink"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("c_mktsegment"), col("event_type"))
+      .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("sum_value")),
+      "graft_stream_enrich_sink", "complete")
+      .orderBy(col("c_mktsegment"), col("event_type"))
   }
 
   val qStreamEnrichSql: String =
@@ -586,18 +508,17 @@ object StreamOps {
     * Inner join emits each matched pair exactly once (append mode), so
     * the drained sink equals the batch join and the plain-SQL oracle
     * hash-gates the whole stream-join path. */
-  def qStreamJoin(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    withStreamParts(s)(qStreamJoinInner(s, d))
-  }
+  def qStreamJoin(s: SparkSession, d: String): DataFrame =
+    // two independent sources (`src` is by-name) measured slightly faster
+    // than a one-source self-join here (self-join state bookkeeping
+    // outweighs the saved file listing at this scale)
+    drain(attribution(eventStream(s, d), "inner"), "graft_stream_join_sink", "append")
+      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
 
-  private def qStreamJoinInner(s: SparkSession, d: String): DataFrame = {
-    val schema = cachedSchema(s, s"$d/events.parquet")
-    // def, not val: two independent sources measured slightly faster than
-    // a one-source self-join here (self-join state bookkeeping outweighs
-    // the saved file listing at this scale)
-    def src = s.readStream.schema(schema).parquet(s"$d/[e]vents.parquet")
-      .transform(Tables.normalizeTs(_))
+  /** The click → purchase attribution join of q_stream_join (inner) and
+    * q_stream_join_outer (left_outer) over two watermarked streams of
+    * `src`, with purchase ∈ [click, click + 30 min]. */
+  private def attribution(src: => DataFrame, joinType: String): DataFrame = {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -606,21 +527,14 @@ object StreamOps {
       .select(col("event_id").as("purchase_id"), col("user_id").as("b_user_id"),
         col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", "2 hours")
-    val joined = clicks.join(buys,
+    clicks.join(buys,
         col("user_id") === col("b_user_id") &&
           col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
+          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
+        joinType)
       .select(col("user_id"), col("click_id"), col("purchase_id"),
         ((unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))) /
           lit(1000000L)).cast(LongType).as("secs_to_purchase"))
-    val sink = "graft_stream_join_sink"
-    val q = joined.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
 
   val qStreamJoinSql: String =
@@ -683,8 +597,7 @@ object StreamOps {
     * termination story again: a watermark heartbeat, not a mode switch.
     * State stays bounded by the 30-min join range + watermark on BOTH
     * sides. */
-  def qStreamJoinOuter(s: SparkSession, d: String): DataFrame =
-      withStreamParts(s, noDataBatches = true) { // unmatched-left eviction NEEDS the trailing flush
+  def qStreamJoinOuter(s: SparkSession, d: String): DataFrame = {
     // staged source (events + both sentinels) is a pure function of
     // sfDir → stage once per (application, sfDir); the memory sink
     // holds no cross-call state, so only the source needs sharing
@@ -699,32 +612,10 @@ object StreamOps {
         .union(sentinel("2100-01-02 00:00:00", "purchase"))
         .write.mode("overwrite").parquet(dd) // no coalesce(1): see qStreamSink
     }
-    val schema = cachedSchema(s, src)
-    def srcStream = s.readStream.schema(schema).parquet(src)
-    val clicks = srcStream.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val buys = srcStream.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("b_user_id"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "2 hours")
-    val joined = clicks.join(buys,
-        col("user_id") === col("b_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        ((unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))) /
-          lit(1000000L)).cast(LongType).as("secs_to_purchase"))
-    val sink = "graft_stream_join_outer_sink"
-    val q = joined.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink).filter(col("user_id") >= 0)
+    // unmatched-left eviction NEEDS the trailing flush
+    drain(attribution(reader(s, src).parquet(src), "left_outer"),
+        "graft_stream_join_outer_sink", "append", flushing)
+      .filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
 
@@ -837,7 +728,7 @@ object StreamOps {
     }
   }
 
-  def qStreamMinilog(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
+  def qStreamMinilog(s: SparkSession, d: String): DataFrame = {
     import graft.sources.MiniLog
     // the 2-file staged source is a pure function of sfDir → stage once
     // per (application, sfDir); the mini-log TABLE stays fresh per call
@@ -849,7 +740,6 @@ object StreamOps {
     }
     val table = RelOps.stagingDir(s, "stream_minilog_tbl")
     RelOps.deleteRecursively(table)
-    val schema = cachedSchema(s, src)
     def aggOf(df: DataFrame): DataFrame = df
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
@@ -857,16 +747,13 @@ object StreamOps {
       .select(col("user_id"), col("n_events"),
         col("s").cast(DecimalType(18, 4)).as("sum_value"),
         pmod(col("user_id"), lit(8L)).as("bucket"))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        minilogMergeBatch(s, table, aggOf(batch), batchId)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    MiniLog.readAsOf(s, table, MiniLog.latestVersion(table))
+    val stream = reader(s, src).option("maxFilesPerTrigger", "1").parquet(src)
+    run(s, stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      minilogMergeBatch(s, table, aggOf(batch), batchId)
+    })
+    // an empty events table commits a snapshot with no file: it reads as
+    // an empty frame of the merged deltas' schema
+    MiniLog.readAsOf(s, table, MiniLog.latestVersion(table), aggOf(stream).schema)
       .select(col("user_id"), col("n_events"),
         col("sum_value").cast(DoubleType).as("sum_value"))
       .orderBy(col("user_id"))
@@ -981,86 +868,68 @@ object StreamOps {
     * disappears (the log is already time-ordered) and per-key state
     * stays two longs regardless of history length; the range-exchange
     * slicer is only the bounded-replay staging, not the operator. */
-  def qStreamPattern(s: SparkSession, d: String): DataFrame = withStreamParts(s) {
+  def qStreamPattern(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the time-sliced replay source is a pure function of sfDir →
-      // stage once per (application, sfDir) (SharedStage); the RocksDB
-      // state and memory sink are per-call. Validity marker is our own
-      // (the dir is hand-assembled by rename, no _SUCCESS).
-      val src = SharedStage.memoDir(s, d, "stream_pattern_src")(
-        dd => new java.io.File(dd, "_GRAFT_STAGED").exists()) { dd =>
-        // clean slate: a failed prior build leaves moved slices without
-        // the marker, and a retry's Files.move would die on them (the
-        // tryCommit stale-tmp lockout class) — parquet writers overwrite
-        // for free, hand-assembled dirs must do it themselves
-        RelOps.deleteRecursively(dd)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dd))
-        // ONE staging job: a 2-way range exchange on ts (sampled cut
-        // points, no global sort) writes the slices such that part-file
-        // INDEX is ts order — part-00000 holds the earliest range by the
-        // range partitioner's contract — so renaming in index order with
-        // ascending mtimes pins the file source's oldest-first replay
-        val tmp = s"$dd/_tmp"
-        // event_id rides along: (tsu, event_id) is the batch window's
-        // total order, so same-timestamp ties sort identically in both
-        // engines AND a tie straddling the range cut still lands in
-        // (tsu, event_id) order across slices
-        events(s, d).select(col("user_id"),
-            unix_micros(col("ts")).as("tsu"), col("event_id"),
-            substring(col("event_type"), 1, 1).as("t"))
-          .repartitionByRange(2, col("tsu"), col("event_id"))
-          .write.mode("overwrite").parquet(tmp)
-        val parts = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        val pfs = try parts.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toList
-          .sortBy(_.getFileName.toString)
-        finally parts.close()
-        pfs.zipWithIndex.foreach { case (pf, i) =>
-          val dst = java.nio.file.Paths.get(dd, f"slice$i%02d.parquet")
-          java.nio.file.Files.move(pf, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000L + i * 1000L))
-        }
-        RelOps.deleteRecursively(tmp)
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(dd, "_GRAFT_STAGED"))
+    // the time-sliced replay source is a pure function of sfDir →
+    // stage once per (application, sfDir) (SharedStage); the RocksDB
+    // state and memory sink are per-call. Validity marker is our own
+    // (the dir is hand-assembled by rename, no _SUCCESS).
+    val src = SharedStage.memoDir(s, d, "stream_pattern_src")(
+      dd => new java.io.File(dd, "_GRAFT_STAGED").exists()) { dd =>
+      // clean slate: a failed prior build leaves moved slices without
+      // the marker, and a retry's Files.move would die on them (the
+      // tryCommit stale-tmp lockout class) — parquet writers overwrite
+      // for free, hand-assembled dirs must do it themselves
+      RelOps.deleteRecursively(dd)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dd))
+      // ONE staging job: a 2-way range exchange on ts (sampled cut
+      // points, no global sort) writes the slices such that part-file
+      // INDEX is ts order — part-00000 holds the earliest range by the
+      // range partitioner's contract — so renaming in index order with
+      // ascending mtimes pins the file source's oldest-first replay
+      val tmp = s"$dd/_tmp"
+      // event_id rides along: (tsu, event_id) is the batch window's
+      // total order, so same-timestamp ties sort identically in both
+      // engines AND a tie straddling the range cut still lands in
+      // (tsu, event_id) order across slices
+      events(s, d).select(col("user_id"),
+          unix_micros(col("ts")).as("tsu"), col("event_id"),
+          substring(col("event_type"), 1, 1).as("t"))
+        .repartitionByRange(2, col("tsu"), col("event_id"))
+        .write.mode("overwrite").parquet(tmp)
+      val parts = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+      val pfs = try parts.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+        .sortBy(_.getFileName.toString)
+      finally parts.close()
+      pfs.zipWithIndex.foreach { case (pf, i) =>
+        val dst = java.nio.file.Paths.get(dd, f"slice$i%02d.parquet")
+        java.nio.file.Files.move(pf, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1000000000L + i * 1000L))
       }
-      val schema = cachedSchema(s, s"$src/slice00.parquet")
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(col("user_id"), col("tsu"), col("event_id"), col("t"))
-        .as[(Long, Long, Long, String)]
-      val updates = stream.groupByKey(_._1)
-        .transformWithState(new PatternProcessor(PatternMachine.GradedAll),
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "pat_idx", "n")
-      val sink = "graft_stream_pattern_sink"
-      val q = updates.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val names = array(PatternMachine.GradedAll.map { case (n, _) => lit(n) }: _*)
-      s.table(sink)
-        .groupBy(col("user_id"), col("pat_idx"))
-        .agg(max(col("n")).as("n_matches"))
-        .select(col("user_id"),
-          element_at(names, col("pat_idx").cast(IntegerType) + 1).as("pattern"),
-          col("n_matches"))
-        .filter(col("n_matches") > 0)
-        .orderBy(col("user_id"), col("pattern"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
+      RelOps.deleteRecursively(tmp)
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(dd, "_GRAFT_STAGED"))
     }
+    val updates = reader(s, s"$src/slice00.parquet")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+      .select(col("user_id"), col("tsu"), col("event_id"), col("t"))
+      .as[(Long, Long, Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new PatternProcessor(PatternMachine.GradedAll),
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "pat_idx", "n")
+    val names = array(PatternMachine.GradedAll.map { case (n, _) => lit(n) }: _*)
+    drain(updates, "graft_stream_pattern_sink", "update", rocksDb)
+      .groupBy(col("user_id"), col("pat_idx"))
+      .agg(max(col("n")).as("n_matches"))
+      .select(col("user_id"),
+        element_at(names, col("pat_idx").cast(IntegerType) + 1).as("pattern"),
+        col("n_matches"))
+      .filter(col("n_matches") > 0)
+      .orderBy(col("user_id"), col("pattern"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1114,12 +1114,6 @@ object TextOps {
         }
         val beatsFailed = c3 > failedCnt || (c3 == failedCnt &&
           tupleWins(chainTuple._1, chainTuple._2, failedTuple._1, failedTuple._2))
-        if (sys.env.contains("GRAFT_BPE_DEBUG")) {
-          println(s"[bpe-debug] chain try: j=($jx,$jy) ext=($side,$z,$c3) " +
-            s"failedCnt=$failedCnt others=$othersBeaten cap=${capOk(c3)} " +
-            s"pairB=$pairBoundsBeaten unamb=$unambiguous surv=$survives " +
-            s"clash=${clash.contains(merged)}")
-        }
         if (beatsFailed && othersBeaten && capOk(c3) &&
             pairBoundsBeaten && unambiguous && survives &&
             !clash.contains(merged)) {
@@ -1188,9 +1182,6 @@ object TextOps {
                   }
                 }
                 if (altsBeaten && wSafe && beats && othersOk && pairBoundsOk) {
-                  if (sys.env.contains("GRAFT_BPE_DEBUG")) {
-                    println(s"[bpe-debug] forced chain: $dir $w + $curToken @ $c3")
-                  }
                   accepted += ((newTuple._1, newTuple._2, c3))
                   toks = if (dir == "L") w +: toks else toks :+ w
                   curToken = newTuple._1 + newTuple._2
@@ -1200,15 +1191,7 @@ object TextOps {
             }
           }
         }
-      } else if (sys.env.contains("GRAFT_BPE_DEBUG")) {
-        println(s"[bpe-debug] chain: no extensions for accepted=$accepted")
       }
-    } else if (sys.env.contains("GRAFT_BPE_DEBUG")) {
-      println(s"[bpe-debug] no chain: failedCnt=$failedCnt " +
-        s"nAccepted=${accepted.length} maxBatch=$maxBatch remaining=$remaining")
-    }
-    if (sys.env.contains("GRAFT_BPE_DEBUG")) {
-      println(s"[bpe-debug] batch=${accepted.map(a => s"(${a._1},${a._2},${a._3})").mkString(" ")}")
     }
     accepted.toSeq
   }

@@ -1,61 +1,40 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Budget-proofing (r19 verdict item 1 — the r19 driver verify never
   * completed on a degraded box and left an EMPTY record): oracle_sql.json
   * is written FIRST, every successful dump prints `[verify] ok <name>
-  * <secs>`, and the dump order is cheapest-first (static measured-cost
-  * hints below), so a driver-side timeout leaves the LARGEST diagnosable
+  * <secs>`, and the dump order is cheapest-first by the newest Bench
+  * record, so a driver-side timeout leaves the LARGEST diagnosable
   * partial record instead of `{}` — the expensive staged-build families
   * (ANN, streaming) can no longer starve the other ~150 queries. */
 object Verify {
-  /** Static dump-order hints: measured full-fleet bench seconds
-    * (target/bench.json, sf0.1, 8 cpus, r19 driver run) for every query
-    * that cost ≥1 s; unlisted queries default to 0 and run first in name
-    * order. The ABSOLUTE numbers are stale the moment code changes — only
-    * the ORDERING is consumed, and a coarse, slightly-stale order still
-    * achieves the goal (cheap majority first, staged-build families last).
-    * Untimed-fleet members (no bench row) carry family-informed guesses. */
-  private val costHint: Map[String, Double] = Map(
-    "q_join_cross" -> 1.0, "q_dedup_simhash_pairs" -> 1.1,
-    "q_tpch_q18" -> 1.1, "q_merge_overwrite" -> 1.1,
-    "q_dedup_embed" -> 1.1, "q_dedup_incremental" -> 1.2,
-    "q_source_csv_robust" -> 1.2, "q_maintenance_compact" -> 1.2,
-    "q_source_corrupt_resilience" -> 1.3, "q_timetravel" -> 1.3,
-    "q_sim_knn_join" -> 1.4, "q_sim_ann_ivf" -> 1.5,
-    "q_sim_ann_ivf_trained" -> 1.5, "q_sim_ann_ivf_pq" -> 1.5,
-    "q_text_lm_score" -> 1.5, "q_join_broadcast" -> 1.5,
-    "q_join_anti" -> 1.5, "q_sink_partitioned" -> 1.5,
-    "q_dedup_substring" -> 1.5, "q_sort_range_partition" -> 1.6,
-    "q_sim_ann_index_delete" -> 1.6, "q_pairs_contrastive" -> 1.6,
-    "q_join_asof_native" -> 1.6, "q_join_full_outer" -> 1.6,
-    "q_agg_approx_percentile" -> 1.6, "q_sim_ann_index_incr" -> 1.7,
-    "q_sim_ann_pq" -> 1.7, "q_join_salted" -> 1.7,
-    "q_dedup_components" -> 1.7, "q_agg_approx_distinct" -> 1.8,
-    "q_source_schema_evolution" -> 2.0, "q_sim_ann_index_rebalance" -> 2.2,
-    "q_text_bpe_apply" -> 2.2, "q_join_interval" -> 2.2,
-    "q_merge_scd2" -> 2.2, "q_graph_pagerank" -> 2.3,
-    "q_join_sortmerge" -> 2.3, "q_graph_triangles" -> 2.5,
-    "q_sql_pipe" -> 2.6, "q_pipeline_curation" -> 2.8,
-    "q_sort_validate" -> 2.8, "q_source_terarecord" -> 2.9,
-    "q_source_json_csv" -> 2.9, "q_stream_transform_state" -> 2.9,
-    "q_layout_zorder" -> 3.1, "q_sim_ann_lsh" -> 3.2,
-    "q_stream_sink" -> 3.5, "q_stream_live" -> 3.6,
-    "q_stream_live_sliding" -> 4.0, "q_source_orc" -> 4.2,
-    "q_stream_live_dedup" -> 4.3, "q_stream_minilog" -> 5.2,
-    "q_stream_pattern" -> 5.6, "q_stream_enrich" -> 5.6,
-    "q_stream_live_session" -> 6.2, "q_join_bucketed" -> 6.8,
-    "q_sim_ann_index" -> 6.9, "q_sim_ann_recall" -> 8.0,
-    "q_stream_join" -> 10.5, "q_stream_join_outer" -> 12.8,
-    // untimed fleet (no bench row): batch twins are cheap; the live
-    // custom-state twin starts a real streaming engine; the sequential
-    // BPE trainer runs BpeRounds driver-sequential jobs
-    "q_stream_custom_state" -> 3.0, "q_text_bpe" -> 4.0,
-    "q_sim_topk" -> 1.5, "q_dedup_minhash_agg" -> 1.0,
-    "q_join_asof" -> 1.0, "q_window_pattern" -> 1.0,
-    "q_sim_ann_prefix" -> 1.0)
+  /** Per-query seconds of the newest `bench_c<cpus>.json` Bench wrote
+    * into `dir`, or none without a readable record. */
+  private[graft] def benchSeconds(dir: String): Map[String, Double] = {
+    val records = Option(new java.io.File(dir).listFiles(
+      (_, n) => n.matches("bench_c\\d+\\.json"))).toSeq.flatten
+    records.sortBy(_.lastModified).lastOption.fold(Map.empty[String, Double]) { f =>
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+        .get("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+      catch { case e: Exception =>
+        System.err.println(s"[verify] ignoring unreadable $f: $e")
+        Map.empty
+      }
+    }
+  }
+
+  /** Cheapest first by `seconds`, then the queries with no time, by name. */
+  private[graft] def dumpOrder(names: Seq[String],
+      seconds: Map[String, Double]): Seq[String] =
+    names.sortBy(n => seconds.get(n).fold((1, 0.0, n))(t => (0, t, n)))
+
   def main(args: Array[String]): Unit = {
     Scratch.init() // match Bench's scratch placement (SCALE.md)
     val Array(sfDir, outDir) = args
@@ -94,14 +73,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // cheapest-first (then name: deterministic): the ~150 sub-second
-    // queries all land before the first staged-build family
-    val order = SparkEntry.queries.toSeq
-      .sortBy { case (name, _) => (costHint.getOrElse(name, 0.0), name) }
+    // cheapest-first: the ~150 sub-second queries all land before the
+    // first staged-build family
+    val order = dumpOrder(SparkEntry.queries.keys.toSeq, benchSeconds("target"))
     val t0 = System.nanoTime()
     var done = 0
-    order.filter { case (name, _) => selected(name) }
-      .foreach { case (name, fn) =>
+    order.filter(selected).foreach { name =>
+      val fn = SparkEntry.queries(name)
       val q0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Native MINI-LOG table format — the snapshot / time-travel commit log
   * that Delta/Iceberg provide, reduced to its load-bearing core and
@@ -198,9 +199,18 @@ object MiniLog {
     finally fs.close()
   }
 
-  /** Snapshot read AS OF `version`: scan exactly that manifest's files. */
-  def readAsOf(s: SparkSession, table: String, version: Int): DataFrame =
-    s.read.parquet(manifest(table, version).values.toSeq.sorted: _*)
+  /** Snapshot read AS OF `version`: scan exactly that manifest's files.
+    * A snapshot with no file (an empty load, or deletes that emptied
+    * every bucket) has no footer to infer a schema from, so it reads as
+    * an empty frame of `schema`, the schema of the frame the table was
+    * written from; only that case evaluates it. */
+  def readAsOf(s: SparkSession, table: String, version: Int,
+      schema: => StructType = throw new IllegalArgumentException(
+        "an empty snapshot needs the table's schema")): DataFrame = {
+    val files = manifest(table, version).values.toSeq.sorted
+    if (files.isEmpty) s.createDataFrame(java.util.List.of[Row](), schema)
+    else s.read.parquet(files: _*)
+  }
 
   /** VACUUM — the explicit retention act every commit above relies on
     * never happening implicitly: delete the data files referenced ONLY

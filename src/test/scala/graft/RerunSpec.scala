@@ -85,11 +85,19 @@ class RerunSpec extends AnyFunSuite {
   }
 
   test("stream-stream join is rerun-idempotent and restores shuffle partitions") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    // every events read sets nanosAsLong for the whole session, on purpose
+    Tables.events(spark, sf)
+    val before = spark.conf.getAll // holds the shuffle partition count
     val a = StreamOps.qStreamJoin(spark, sf).collect().map(_.toSeq)
     val b = StreamOps.qStreamJoin(spark, sf).collect().map(_.toSeq)
     assert(a.nonEmpty && a.sameElements(b))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
-      "withStreamParts must restore the session's partition count")
+    assert(spark.conf.getAll === before, "q_stream_join left the session confs changed")
+    // the runs that keep the trailing no-data batch and the two on the
+    // RocksDB state store restore every conf they set, too
+    for (q <- Seq("q_stream_join_outer", "q_stream_sink",
+        "q_stream_transform_state", "q_stream_pattern")) {
+      StreamOps.queries(q)(spark, sf).collect()
+      assert(spark.conf.getAll === before, s"$q left the session confs changed")
+    }
   }
 }
