@@ -14,8 +14,11 @@ import org.apache.spark.sql.types._
   *  - terasort → `orderBy(key)`: Catalyst plans Exchange(RangePartitioning)
   *    (reservoir-sampled cut points — the reference's
   *    TeraInputFormat.writePartitionFile idea, built into Spark) followed by
-  *    per-partition SortExec (Tungsten radix/prefix sort — the reference's
-  *    normalized-key OptimizedText idea, built into Spark).
+  *    per-partition SortExec (Tungsten prefix sort: an 8-byte key prefix,
+  *    then a full comparison on prefix ties — the reference's
+  *    normalized-key OptimizedText idea, built into Spark). Spark
+  *    radix-sorts only when the prefix decides the order, which it does
+  *    not for a BinaryType key.
   *  - teravalidate → global monotonicity-violation count + order-independent
   *    modular key checksum.
   *

@@ -36,36 +36,49 @@ object BinaryRecords {
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
 
   /** Scan a directory/file of fixed 100-byte records. */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String): DataFrame =
+    records(spark, path).select(
+      expr(s"substring(rec, 1, $KeyLen)").as("key"),
+      expr(s"substring(rec, ${KeyLen + 1}, ${RecordLen - KeyLen})").as("payload"))
+
+  /** The records of a directory/file as one binary `rec` column. */
+  private def records(spark: SparkSession, path: String): DataFrame = {
     val rdd = spark.sparkContext.binaryRecords(path, RecordLen).map(Row(_))
     spark.createDataFrame(rdd, StructType(Seq(StructField("rec", BinaryType, nullable = false))))
-      .select(
-        expr(s"substring(rec, 1, $KeyLen)").as("key"),
-        expr(s"substring(rec, ${KeyLen + 1}, ${RecordLen - KeyLen})").as("payload"))
   }
 
   /** Sink a DataFrame with binary `key` and `payload` columns as raw
     * fixed-width records. Partition order (and order within partitions) is
     * preserved — callers wanting a globally sorted file set should pass a
     * `repartitionByRange(...).sortWithinPartitions(...)` DataFrame. */
-  def write(df: DataFrame, path: String): Unit = {
-    val recs = df.select(concat(col("key"), col("payload")).as("rec"))
-    recs.queryExecution.toRdd // force analysis before the rdd hop
-    recs.rdd
-      .map(r => (NullWritable.get(), new BytesWritable(r.getAs[Array[Byte]](0))))
+  def write(df: DataFrame, path: String): Unit =
+    sink(df.select(concat(col("key"), col("payload")).as("rec")), path)
+
+  /** Write a one-column binary frame's values verbatim, one part file per
+    * partition. The plan runs once: `toRdd` executes it (under adaptive
+    * execution that includes any range sampling and shuffle-map stages)
+    * and the sink consumes its `InternalRow`s directly. `getBinary` copies,
+    * so reused rows are safe. */
+  private def sink(recs: DataFrame, path: String): Unit =
+    recs.queryExecution.toRdd
+      .map(r => (NullWritable.get(), new BytesWritable(r.getBinary(0))))
       .saveAsNewAPIHadoopFile(path, classOf[NullWritable], classOf[BytesWritable],
         classOf[RawRecordOutputFormat])
-  }
 
-  /** End-to-end TeraSort over binary record files: read, globally sort by
-    * the 10-byte key (range exchange + per-partition radix sort), write.
-    * The whole reference pipeline as three lines of DataFrame API. */
-  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
-    val sorted = read(spark, in)
-      .repartitionByRange(partitions, col("key"))
-      .sortWithinPartitions(col("key"))
-    write(sorted, out)
-  }
+  /** End-to-end TeraSort over binary record files: read, range-partition
+    * and sort each partition, write — the plan executes once (one sampling
+    * scan, one shuffle-map stage, one reduce stage with the sink). Each
+    * record stays one 100-byte binary value from scan to sink and is
+    * ordered as a whole: byte order of the record is key order first
+    * (TeraSort/valsort semantics), with the payload breaking ties, so the
+    * order is total and deterministic, and records sharing a key spread
+    * over reducers by payload. Spark sorts binary values by an 8-byte prefix plus a full
+    * comparison on prefix ties, not by radix sort (the prefix does not
+    * decide a binary order). */
+  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit =
+    sink(records(spark, in)
+      .repartitionByRange(partitions, col("rec"))
+      .sortWithinPartitions(col("rec")), out)
 }
 
 /** Raw byte sink: writes each record's bytes verbatim, no markers/headers —

@@ -1,16 +1,23 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import graft.sources.BinaryRecords
 
 /** Round-trip + TeraSort property for the fixed-width binary source/sink:
   * gen → write unsorted → terasort → files concatenated in name order are
-  * globally key-sorted, record count and key multiset preserved. */
+  * globally sorted, the record multiset is preserved, and the sort runs
+  * one shuffle-map stage — over a spread input, one hot key, no records
+  * and one record. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -27,29 +34,68 @@ class BinaryRecordsSpec extends AnyFunSuite {
     assert(r.length === 1 && r(0).getInt(0) === 10 && r(0).getInt(1) === 90)
   }
 
-  test("terasort over binary files: name-ordered concatenation is globally sorted") {
-    val dir = Files.createTempDirectory("graft_tera").toString
-    val in = s"$dir/in"
-    val out = s"$dir/out"
-    BinaryRecords.write(genTeraRecords(5000), in)
-    BinaryRecords.terasort(spark, in, out, partitions = 6)
-
-    // read output files in name order, byte-concatenate, check sortedness
-    val parts = Files.list(Paths.get(out)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .toSeq.sortBy(_.getFileName.toString)
-    assert(parts.size === 6)
-    val keys = parts.flatMap { p =>
-      val bytes = Files.readAllBytes(p)
-      assert(bytes.length % 100 === 0, s"partial record in $p")
-      bytes.grouped(100).map(r => new String(r.take(10), "UTF-8")).toSeq
+  /** Runs `body` and counts its shuffle-map stages (stages that wrote
+    * shuffle records). Listener events arrive in posting order, so once a
+    * marker job started after `body` is seen, every stage of `body` is. */
+  private def mapStages(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val seen = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) seen.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null) markerSeen.countDown()
     }
-    assert(keys.length === 5000)
-    assert(keys.sliding(2).forall { case Seq(a, b) => a <= b; case _ => true },
-      "concatenated output not globally sorted")
-    // permutation: same key multiset as input
-    val inKeys = genTeraRecords(5000)
-      .select(col("key").cast("string")).collect().map(_.getString(0))
-    assert(keys.sorted.sameElements(inKeys.sorted))
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+      seen.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("terasort over binary files: name-ordered concatenation is globally sorted") {
+    val oneKey = spark.range(1000).select(
+      expr("cast('0000000000' as binary)").as("key"),
+      expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
+    // (input, requested partitions, check on the part files' sizes)
+    val inputs: Seq[(String, DataFrame, Int, Seq[Long] => Boolean)] = Seq(
+      ("5000 records", genTeraRecords(5000), 6, _.size == 6),
+      ("1000 records of one key", oneKey, 4, _ == Seq.fill(4)(25000L)),
+      ("no records", genTeraRecords(0), 3, _.forall(_ == 0L)),
+      ("one record", genTeraRecords(1), 3, _.sum == 100L))
+
+    for ((label, input, partitions, partsOk) <- inputs) withClue(s"$label: ") {
+      val dir = Files.createTempDirectory("graft_tera").toString
+      val in = s"$dir/in"
+      val out = s"$dir/out"
+      BinaryRecords.write(input, in)
+      val inRecs = input.select(concat(col("key"), col("payload")))
+        .collect().map(r => new String(r.getAs[Array[Byte]](0), ISO_8859_1))
+      // the plan runs once: one shuffle-map stage (none writes on no input)
+      val maps = mapStages(BinaryRecords.terasort(spark, in, out, partitions))
+      assert(maps === inRecs.length.min(1))
+
+      // read output files in name order, byte-concatenate, check sortedness
+      val parts = Files.list(Paths.get(out)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq.sortBy(_.getFileName.toString)
+      val sizes = parts.map(Files.size(_))
+      assert(partsOk(sizes), s"part file sizes $sizes")
+      val recs = parts.flatMap { p =>
+        val bytes = Files.readAllBytes(p)
+        assert(bytes.length % 100 === 0, s"partial record in $p")
+        bytes.grouped(100).map(new String(_, ISO_8859_1)).toSeq
+      }
+      // whole records in unsigned byte order: key order, payload breaks ties
+      assert(recs.sliding(2).forall { case Seq(a, b) => a <= b; case _ => true },
+        "concatenated output not globally sorted")
+      // permutation: same multiset of whole records (key ‖ payload) as input
+      assert(recs.sorted.sameElements(inRecs.sorted))
+    }
   }
 }
