@@ -139,7 +139,7 @@ object SortOps {
     summaries
       .withColumn("prev_last", lag(col("last_key"), 1).over(w))
       .agg(
-        sum(col("n_part")).as("n_rows"),
+        coalesce(sum(col("n_part")), lit(0L)).as("n_rows"),
         (sum(col("viol_part")) +
           sum(when(col("prev_last") > col("first_key"), 1L).otherwise(0L)))
           .as("violations"),
@@ -179,8 +179,8 @@ object SortOps {
     parts
       .withColumn("prev_max", lag(col("pmax"), 1).over(w))
       .agg(
-        sum(col("n_part")).as("n_rows"),
-        sum(when(col("prev_max") > col("pmin"), 1L).otherwise(0L))
+        coalesce(sum(col("n_part")), lit(0L)).as("n_rows"),
+        coalesce(sum(when(col("prev_max") > col("pmin"), 1L).otherwise(0L)), lit(0L))
           .as("boundary_overlaps"),
         min(col("pmin")).as("min_key"),
         max(col("pmax")).as("max_key"))

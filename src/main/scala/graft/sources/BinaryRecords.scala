@@ -1,21 +1,35 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.{BytesWritable, NullWritable}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.ByteArray
 
-/** Fixed-width 100-byte TeraSort record I/O — the Spark-native equivalent
-  * of the reference's vendored Hadoop TeraInputFormat / TeraOutputFormat
-  * (SURVEY.md §2.3 R1/R6; gensort record spec: 10-byte key ‖ 90-byte
+import graft.functions.RangePartitionId
+
+/** Fixed-width 100-byte TeraSort record I/O and the TeraSort itself — the
+  * Spark-native equivalent of the reference's vendored Hadoop
+  * TeraInputFormat / TeraOutputFormat and its total-order partitioner
+  * (SURVEY.md §2.3 R1–R6; gensort record spec: 10-byte key ‖ 90-byte
   * payload, unsigned byte-lexicographic key order).
   *
   * Read: `sparkContext.binaryRecords` (Hadoop FixedLengthInputFormat
   * underneath — splits on exact record boundaries, no record parsing on
   * the driver) lifted to a DataFrame of (key BinaryType, payload
   * BinaryType).
+  *
+  * Sort: like TeraInputFormat.writePartitionFile, the driver reads a small
+  * fixed sample of the input files before the job and takes the cut
+  * points from it; each record is then routed to its range by partition
+  * id, so the job reads its input once and runs no sampling scan. The
+  * sample decides only how evenly the ranges fill, never whether the
+  * output is sorted.
   *
   * Write: raw record bytes through a minimal FileOutputFormat — one part
   * file per partition, named in partition order, so writing a
@@ -65,20 +79,92 @@ object BinaryRecords {
       .saveAsNewAPIHadoopFile(path, classOf[NullWritable], classOf[BytesWritable],
         classOf[RawRecordOutputFormat])
 
-  /** End-to-end TeraSort over binary record files: read, range-partition
-    * and sort each partition, write — the plan executes once (one sampling
-    * scan, one shuffle-map stage, one reduce stage with the sink). Each
-    * record stays one 100-byte binary value from scan to sink and is
-    * ordered as a whole: byte order of the record is key order first
-    * (TeraSort/valsort semantics), with the payload breaking ties, so the
-    * order is total and deterministic, and records sharing a key spread
-    * over reducers by payload. Spark sorts binary values by an 8-byte prefix plus a full
-    * comparison on prefix ties, not by radix sort (the prefix does not
-    * decide a binary order). */
-  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit =
+  /** Records the driver reads to choose the cut points, and the most
+    * splits it reads them from (Hadoop TeraSort reads 100,000 keys from at
+    * most 10 splits). They are read in runs of `SampleRun` contiguous
+    * records, so the sample costs a tenth of the seeks. */
+  private val SampleSize = 10000
+  private val SampleSplits = 10
+  private val SampleRun = 10
+
+  /** The `partitions` − 1 cut records for the input at `in`, ascending in
+    * unsigned byte order: the quantiles of a driver-side sample of
+    * `SampleSize` records from at most `SampleSplits` evenly chosen
+    * record-aligned splits. An input of at most `SampleSize` records is
+    * read whole. No records, no cuts. */
+  private def cutPoints(spark: SparkSession, in: String, partitions: Int): Array[Array[Byte]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val all = TeraRecordSource.splits(in, conf)
+    val k =
+      if (all.map(_.length).sum <= SampleSize.toLong * RecordLen) all.length
+      else math.min(SampleSplits, all.length)
+    val sample = sampleRecords(Array.tabulate(k)(i => all((i.toLong * all.length / k).toInt)), conf)
+    java.util.Arrays.sort(sample, (a: Array[Byte], b: Array[Byte]) => ByteArray.compareBinary(a, b))
+    if (sample.isEmpty) Array.empty
+    else Array.tabulate(partitions - 1)(i => sample(((i + 1).toLong * sample.length / partitions).toInt))
+  }
+
+  /** `SampleSize` records of `splits`, in `SampleSize / SampleRun` runs at
+    * evenly spaced offsets over their concatenated records — spread out,
+    * not each split's head, which is no independent sample of a presorted
+    * input — or all of them when they hold no more. One stream per file,
+    * positioned by `seek`, with a 4 KB buffer: a positioned
+    * `readFully(pos, buf)` opens a fresh checksum reader on every call,
+    * and the session's default 64 KB buffer would be refilled on every
+    * run. */
+  private def sampleRecords(splits: Array[TeraRecordPartition], conf: Configuration): Array[Array[Byte]] = {
+    val total = splits.map(_.length / RecordLen).sum
+    val n = math.min(total, SampleSize.toLong).toInt
+    val runs = SampleSize / SampleRun
+    def offset(j: Int): Long =
+      if (n == total) j else j / SampleRun * total / runs + j % SampleRun
+    val sample = Array.fill(n)(new Array[Byte](RecordLen))
+    var j = 0
+    var first = 0L // records in the splits before `s`
+    var file: String = null
+    var in: FSDataInputStream = null
+    try for (s <- splits) {
+      val last = first + s.length / RecordLen
+      while (j < n && offset(j) < last) {
+        if (s.file != file) {
+          if (in != null) in.close()
+          file = s.file
+          in = new Path(file).getFileSystem(conf).open(new Path(file), 4096)
+        }
+        val pos = s.start + (offset(j) - first) * RecordLen
+        if (in.getPos != pos) in.seek(pos)
+        in.readFully(sample(j))
+        j += 1
+      }
+      first = last
+    } finally if (in != null) in.close()
+    sample
+  }
+
+  /** End-to-end TeraSort over binary record files (`in` names a directory
+    * of record files or one file): choose the cut points from the driver
+    * sample (`cutPoints`), route each record to its range by partition
+    * id (`repartitionById` over `RangePartitionId`: a binary search of the
+    * cuts, no sampling job), sort each partition, write. The plan executes
+    * once: one shuffle-map stage that reads the input once, one reduce
+    * stage with the sink; the exchange keeps exactly `partitions`
+    * partitions, so an empty one still writes its (empty) part file (an
+    * input with no records at all writes none). Each record
+    * stays one 100-byte binary value from scan to sink and is ordered as a
+    * whole: byte order of the record is key order first (TeraSort/valsort
+    * semantics), with the payload breaking ties, so the order is total and
+    * deterministic, and records sharing a key spread over reducers by
+    * payload. The order does not depend on the sample: routing is
+    * monotone in the record, so any cuts give sorted output, and a poor
+    * sample only unbalances the parts. Spark sorts binary values by an
+    * 8-byte prefix plus a full comparison on prefix ties, not by radix
+    * sort (the prefix does not decide a binary order). */
+  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
+    val pid = RangePartitionId(UnresolvedAttribute("rec"), cutPoints(spark, in, partitions))
     sink(records(spark, in)
-      .repartitionByRange(partitions, col("rec"))
+      .repartitionById(partitions, GraftShim.column(pid))
       .sortWithinPartitions(col("rec")), out)
+  }
 }
 
 /** Raw byte sink: writes each record's bytes verbatim, no markers/headers —

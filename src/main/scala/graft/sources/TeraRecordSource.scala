@@ -15,6 +15,8 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.util
 import scala.jdk.CollectionConverters._
 
+import BinaryRecords.{KeyLen, RecordLen}
+
 /** Java-serializable Hadoop Configuration carrier (Configuration itself is
   * Writable but not Serializable) — the standard wrapper pattern, so the
   * session's `spark.hadoop.*` settings captured on the driver reach the
@@ -58,12 +60,33 @@ class TeraRecordSource extends TableProvider with DataSourceRegister {
 }
 
 object TeraRecordSource {
-  val RecordLen = 100
-  val KeyLen = 10
   val TargetSplitBytes: Long = 32L * 1024 * 1024
   val fullSchema: StructType = StructType(Seq(
     StructField("key", BinaryType, nullable = false),
     StructField("payload", BinaryType, nullable = false)))
+
+  /** The record-aligned splits of the record files at `path` (a directory
+    * or one file), in file-name order. As in Hadoop's FileInputFormat,
+    * names starting with `_` or `.` are skipped; so are empty files. */
+  def splits(path: String, conf: Configuration): Array[TeraRecordPartition] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val files =
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).filter { f =>
+          val name = f.getPath.getName
+          f.isFile && f.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
+        }.sortBy(_.getPath.getName)
+      else Array(fs.getFileStatus(p))
+    val step = math.max(RecordLen, TargetSplitBytes / RecordLen * RecordLen) // record-aligned
+    files.flatMap { f =>
+      require(f.getLen % RecordLen == 0,
+        s"${f.getPath}: length ${f.getLen} is not a multiple of $RecordLen")
+      (0L until f.getLen by step).map { start =>
+        TeraRecordPartition(f.getPath.toString, start, math.min(step, f.getLen - start))
+      }
+    }
+  }
 }
 
 class TeraRecordTable(path: String) extends Table with SupportsRead {
@@ -99,27 +122,8 @@ class TeraScan(path: String, required: StructType,
   override def description(): String =
     s"TeraRecordScan($path, columns=${required.fieldNames.mkString(",")})"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    val files = {
-      val p = new Path(path)
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(f => f.isFile && f.getLen > 0)
-          .sortBy(_.getPath.getName)
-      else Array(fs.getFileStatus(p))
-    }
-    val rl = TeraRecordSource.RecordLen
-    files.flatMap { f =>
-      require(f.getLen % rl == 0,
-        s"${f.getPath}: length ${f.getLen} is not a multiple of $rl")
-      val step = math.max(rl,
-        TeraRecordSource.TargetSplitBytes / rl * rl) // record-aligned
-      (0L until f.getLen by step).map { start =>
-        TeraRecordPartition(f.getPath.toString, start,
-          math.min(step, f.getLen - start))
-      }
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    TeraRecordSource.splits(path, conf.value).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TeraReaderFactory(required.fieldNames, conf)
@@ -133,10 +137,8 @@ class TeraReaderFactory(columns: Array[String], conf: SerializableHadoopConf)
       private val fs = new Path(p.file).getFileSystem(conf.value)
       private val in = fs.open(new Path(p.file))
       in.seek(p.start)
-      private val rl = TeraRecordSource.RecordLen
-      private val kl = TeraRecordSource.KeyLen
-      private val buf = new Array[Byte](rl)
-      private var remaining = p.length / rl
+      private val buf = new Array[Byte](RecordLen)
+      private var remaining = p.length / RecordLen
       private val wantKey = columns.contains("key")
       private val wantPayload = columns.contains("payload")
 
@@ -149,8 +151,8 @@ class TeraReaderFactory(columns: Array[String], conf: SerializableHadoopConf)
 
       override def get(): InternalRow = {
         val vals = columns.map {
-          case "key" if wantKey => java.util.Arrays.copyOfRange(buf, 0, kl)
-          case "payload" if wantPayload => java.util.Arrays.copyOfRange(buf, kl, rl)
+          case "key" if wantKey => java.util.Arrays.copyOfRange(buf, 0, KeyLen)
+          case "payload" if wantPayload => java.util.Arrays.copyOfRange(buf, KeyLen, RecordLen)
           case other => throw new IllegalArgumentException(s"unknown column $other")
         }
         new GenericInternalRow(vals.asInstanceOf[Array[Any]])

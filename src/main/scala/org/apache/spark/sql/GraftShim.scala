@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Library shim into the `private[sql]` Dataset factory — the standard way
@@ -9,6 +10,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression built in code (one whose
+    * arguments SQL text cannot carry). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** Unpersist the storage blocks behind a `localCheckpoint()`ed DataFrame
     * (or a projection over one). `Dataset.unpersist` only talks to the

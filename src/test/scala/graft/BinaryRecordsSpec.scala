@@ -14,10 +14,11 @@ import scala.jdk.CollectionConverters._
 import graft.sources.BinaryRecords
 
 /** Round-trip + TeraSort property for the fixed-width binary source/sink:
-  * gen → write unsorted → terasort → files concatenated in name order are
-  * globally sorted, the record multiset is preserved, and the sort runs
-  * one shuffle-map stage — over a spread input, one hot key, no records
-  * and one record. */
+  * gen → write → terasort → files concatenated in name order are globally
+  * sorted, the record multiset is preserved, the sort runs one
+  * shuffle-map stage and no sampling scan, and the parts are balanced —
+  * over a spread input, one hot key, presorted and reverse-sorted input,
+  * no records, one record, and 256 partitions. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -35,16 +36,21 @@ class BinaryRecordsSpec extends AnyFunSuite {
   }
 
   /** Runs `body` and counts its shuffle-map stages (stages that wrote
-    * shuffle records). Listener events arrive in posting order, so once a
-    * marker job started after `body` is seen, every stage of `body` is. */
-  private def mapStages(body: => Unit): Int = {
+    * shuffle records) and its sampling scans (stages that read input but
+    * wrote no shuffle records). Listener events arrive in posting order, so
+    * once a marker job started after `body` is seen, every stage of `body`
+    * is. */
+  private def mapStages(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val marker = "graft.test.marker"
-    val seen = new AtomicInteger
+    val seen, scans = new AtomicInteger
     val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) seen.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m.shuffleWriteMetrics.recordsWritten > 0) seen.incrementAndGet()
+        else if (m.inputMetrics.bytesRead > 0) scans.incrementAndGet()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(marker) != null) markerSeen.countDown()
     }
@@ -54,7 +60,7 @@ class BinaryRecordsSpec extends AnyFunSuite {
       sc.setLocalProperty(marker, "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
       assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
-      seen.get
+      (seen.get, scans.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -62,10 +68,19 @@ class BinaryRecordsSpec extends AnyFunSuite {
     val oneKey = spark.range(1000).select(
       expr("cast('0000000000' as binary)").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
-    // (input, requested partitions, check on the part files' sizes)
+    val byRecord = Seq(col("key"), col("payload"))
+    // the largest part holds at most 1.5x the mean part
+    def balanced(sizes: Seq[Long]) = sizes.max <= 1.5 * sizes.sum / sizes.size
+    // (input, requested partitions, check on the part files' sizes); the
+    // sorted inputs hold more records than the driver samples
     val inputs: Seq[(String, DataFrame, Int, Seq[Long] => Boolean)] = Seq(
-      ("5000 records", genTeraRecords(5000), 6, _.size == 6),
+      ("5000 records", genTeraRecords(5000), 6, s => s.size == 6 && balanced(s)),
       ("1000 records of one key", oneKey, 4, _ == Seq.fill(4)(25000L)),
+      ("20000 presorted records", genTeraRecords(20000).orderBy(byRecord: _*), 4,
+        s => s.size == 4 && balanced(s)),
+      ("20000 reverse-sorted records", genTeraRecords(20000).orderBy(byRecord.map(_.desc): _*), 4,
+        s => s.size == 4 && balanced(s)),
+      ("5000 records over 256 partitions", genTeraRecords(5000), 256, _.size == 256),
       ("no records", genTeraRecords(0), 3, _.forall(_ == 0L)),
       ("one record", genTeraRecords(1), 3, _.sum == 100L))
 
@@ -76,9 +91,11 @@ class BinaryRecordsSpec extends AnyFunSuite {
       BinaryRecords.write(input, in)
       val inRecs = input.select(concat(col("key"), col("payload")))
         .collect().map(r => new String(r.getAs[Array[Byte]](0), ISO_8859_1))
-      // the plan runs once: one shuffle-map stage (none writes on no input)
-      val maps = mapStages(BinaryRecords.terasort(spark, in, out, partitions))
+      // the plan runs once: one shuffle-map stage (none writes on no input),
+      // and no stage scans the input only to sample it
+      val (maps, scans) = mapStages(BinaryRecords.terasort(spark, in, out, partitions))
       assert(maps === inRecs.length.min(1))
+      assert(scans === 0)
 
       // read output files in name order, byte-concatenate, check sortedness
       val parts = Files.list(Paths.get(out)).iterator().asScala
