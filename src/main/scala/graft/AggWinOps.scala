@@ -36,7 +36,9 @@ object AggWinOps {
   /** HLL-sketch count-distinct (approx_count_distinct) sanity-gated against
     * the exact count; emits only the pass/fail boolean so the oracle is
     * engine-independent. At 100 TB the sketch is the only affordable form —
-    * it's a partial-aggregable fixed-size buffer, no shuffle of distincts. */
+    * it's a partial-aggregable fixed-size buffer, no shuffle of distincts.
+    * The gate multiplies instead of dividing by the exact count, so an
+    * empty table (0 vs 0) passes instead of dividing by zero. */
   def qAggApproxDistinct(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
       .agg(
@@ -45,8 +47,8 @@ object AggWinOps {
         approx_count_distinct(col("l_orderkey"), 0.02).as("approx"),
         countDistinct(col("l_orderkey")).as("exact"))
       .select(
-        (abs(col("approx").cast(DoubleType) - col("exact").cast(DoubleType)) /
-          col("exact").cast(DoubleType) <= 0.05).as("within_5pct"))
+        (abs(col("approx").cast(DoubleType) - col("exact").cast(DoubleType)) <=
+          col("exact").cast(DoubleType) * 0.05).as("within_5pct"))
 
   val qAggApproxDistinctSql: String = "SELECT TRUE AS within_5pct"
 

@@ -261,8 +261,8 @@ object LlmOps {
       |  ${(0 until MH.K).map(j => s"MIN(${MH.duckExpr(j)}) AS m$j").mkString(",\n  ")}
       |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** The same minima through the catalyst-native TypedImperativeAggregate
-    * (graft.functions.MinHashSketchAgg, called via SQL function
+  /** The same minima through the MinHash sketch aggregate
+    * ([[graft.functions.MinHashSketchAgg]], called via SQL function
     * graft_minhash) — serialized-partial merge path, same oracle. */
   def qDedupMinhashNative(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)

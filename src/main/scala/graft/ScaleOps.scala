@@ -189,8 +189,8 @@ object ScaleOps {
 
   // ------------------------------------------------------ heavy hitters
 
-  /** Heavy hitters per key through the native Misra-Gries sketch
-    * (graft.functions.MisraGriesAgg — K counters per group, mergeable
+  /** Heavy hitters per key through the Misra-Gries sketch
+    * ([[graft.functions.MisraGriesAgg]] — K counters per group, mergeable
     * partials, O(K) state at any input size). event_type has 5 distinct
     * values ≤ K = 8, so the sketch is provably exact here and the plain
     * GROUP BY oracle hash-checks the whole sketch path: per-partition
@@ -216,8 +216,8 @@ object ScaleOps {
 
   // ------------------------------------------------- KMV distinct sketch
 
-  /** Distinct users per event type through the native KMV cardinality
-    * sketch (graft.functions.KmvDistinctAgg — K minima per group,
+  /** Distinct users per event type through the KMV cardinality sketch
+    * ([[graft.functions.KmvDistinctAgg]] — K minima per group,
     * mergeable partials, O(K) state at any input size): the sketch answer
     * to COUNT(DISTINCT) once the value domain outgrows an exact
     * aggregate. user_id is folded to a ≤200-value domain so the sketch
@@ -579,8 +579,8 @@ object ScaleOps {
 
   // ------------------------------------------------- HLL register sketch
 
-  /** Distinct users per event type through a native HyperLogLog register
-    * sketch (graft.functions.HllSketchAgg): fixed 256-byte state per
+  /** Distinct users per event type through the HyperLogLog register
+    * sketch ([[graft.functions.HllSketchAgg]]): fixed 256-byte state per
     * group at ANY input size, partials merge by element-wise max, so a
     * 1e12-row distinct count shuffles 256 bytes per group — the sketch
     * that replaces q_profile_stats' exact multi-distinct at 100 TB.
@@ -796,8 +796,8 @@ object ScaleOps {
 
   // ------------------------------------------------- Count-Min sketch
 
-  /** Per-user frequency estimates through the native Count-Min sketch
-    * (graft.functions.CountMinAgg — 3×256 counter matrix, elementwise-add
+  /** Per-user frequency estimates through the Count-Min sketch
+    * ([[graft.functions.CountMinAgg]] — 3×256 counter matrix, elementwise-add
     * merge, 6 KB of state at ANY input size): ONE global sketch over all
     * events, then every probe user's estimate is min over its 3 cells,
     * read by plain array indexing from the broadcast 1-row aggregate.
@@ -1170,7 +1170,7 @@ object ScaleOps {
       |ORDER BY w.event_type""".stripMargin
 
   /** EXACT distinct at scale via CONTAINER BITMAPS (the roaring
-    * architecture, 8th native TypedImperativeAggregate) — the exact
+    * architecture, [[graft.functions.BitmapDistinctAgg]]) — the exact
     * complement to the HLL/KMV sketch family: ids are sharded by their
     * high bits in the GROUP BY (`id div 65536`), `graft_bitmap_distinct`
     * owns one 8 KiB container per shard (bit = low 16 id bits, partials
@@ -1199,7 +1199,10 @@ object ScaleOps {
     val globalBm = mapped
       .groupBy(expr("mid div 65536").as("cont"))
       .agg(expr("graft_bitmap_distinct(mid)").as("c"))
-      .agg(sum(col("c")).as("n_distinct"), count(lit(1)).as("n_containers"))
+      // coalesce: an empty table has no containers to sum, and
+      // COUNT(DISTINCT) over it is 0, not NULL
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n_distinct"),
+        count(lit(1)).as("n_containers"))
     val globalDirect = events(s, d)
       .agg(countDistinct(col("user_id")).as("n_direct"))
     val global = globalBm.crossJoin(globalDirect)

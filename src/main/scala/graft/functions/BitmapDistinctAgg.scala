@@ -1,16 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** EXACT distinct counting via container bitmaps — the roaring-bitmap
   * architecture (Chambi et al. 2016; ClickHouse/Druid ship the same
   * shape) reduced to its dense container: the caller shards ids by their
   * high bits (`id div 65536` in the GROUP BY), this aggregate owns one
-  * 2^16-bit container per group and sets bit `id & 0xFFFF`; eval returns
+  * 2^16-bit container per group and sets bit `id & 0xFFFF`; the result is
   * the container POPCOUNT, and the per-shard counts SUM to the exact
   * global distinct because the sharding makes the containers disjoint.
   *
@@ -27,70 +23,38 @@ import org.apache.spark.sql.types._
   * Negative inputs are ignored (the id domain is non-negative; a negative
   * id would alias another container's ordinal through the mask).
   */
-case class BitmapDistinctAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
+object BitmapDistinctAgg extends Sketch[Array[Long]] {
+  /** 2^16 bits = 1024 longs = 8 KiB per container. */
+  val Words: Int = 1024
 
-  import BitmapDistinctAgg.Words
+  val name = "graft_bitmap_distinct"
+  val inputTypes: Seq[DataType] = Seq(LongType)
+  val dataType: DataType = LongType
 
-  override def inputTypes: Seq[DataType] = Seq(LongType)
+  def zero(): Array[Long] = new Array[Long](Words)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Words)
-
-  override def update(bits: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val id = v.asInstanceOf[Long]
-      if (id >= 0L) {
-        val ord = (id & 0xFFFFL).toInt
-        bits(ord >>> 6) |= 1L << (ord & 63)
-      }
+  def update(bits: Array[Long], x: Any, y: Any): Array[Long] = {
+    val id = x.asInstanceOf[Long]
+    if (id >= 0L) {
+      val ord = (id & 0xFFFFL).toInt
+      bits(ord >>> 6) |= 1L << (ord & 63)
     }
     bits
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < Words) { a(i) |= b(i); i += 1 }
     a
   }
 
-  override def eval(bits: Array[Long]): Any = {
+  def result(bits: Array[Long]): Any = {
     var n = 0L
     var i = 0
     while (i < Words) { n += java.lang.Long.bitCount(bits(i)); i += 1 }
     n
   }
 
-  override def serialize(bits: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(Words * 8)
-    bb.asLongBuffer().put(bits)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](Words)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_bitmap_distinct"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BitmapDistinctAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BitmapDistinctAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BitmapDistinctAgg =
-    copy(child = newChild)
-}
-
-object BitmapDistinctAgg {
-  /** 2^16 bits = 1024 longs = 8 KiB per container. */
-  val Words: Int = 1024
+  def toBytes(bits: Array[Long]): Array[Byte] = Sketch.longsToBytes(bits)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = Sketch.longsFromBytes(bytes)
 }

@@ -1,26 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-import java.nio.ByteBuffer
-
-/** Count-Min sketch (Cormode & Muthukrishnan) as a catalyst-native
-  * TypedImperativeAggregate: a DEPTH × WIDTH matrix of counters; each
-  * input key increments one cell per row (cell h_r(k)), and a key's
-  * frequency estimate is the MIN over its DEPTH cells — an upper-biased
-  * estimate (est ≥ true count, overcount bounded by collisions).
+/** Count-Min sketch (Cormode & Muthukrishnan): a DEPTH × WIDTH matrix of
+  * counters; each input key increments one cell per row (cell h_r(k)),
+  * and a key's frequency estimate is the MIN over its DEPTH cells — an
+  * upper-biased estimate (est ≥ true count, overcount bounded by
+  * collisions).
   *
   * The hash family is the engine's shared LCG family (MinHash.A/B rows
   * 0..DEPTH−1, mod P then mod WIDTH) — explicit integer arithmetic, so a
   * SQL oracle can reproduce every cell EXACTLY: cell(r, i) equals the
   * total count of all keys k with h_r(k) = i, which is a plain GROUP BY.
   * That makes the whole native path (per-partition update, partial
-  * serialization, merge, eval) hash-gradeable even in the colliding
+  * serialization, merge, result) hash-gradeable even in the colliding
   * regime — unlike a sketch with an opaque hash, nothing here is
   * approximate-by-nondeterminism, only approximate-by-collision.
   *
@@ -32,64 +26,7 @@ import java.nio.ByteBuffer
   * Registered as `graft_count_min(bigint) → array<bigint>` (row-major
   * DEPTH × WIDTH cells).
   */
-case class CountMinAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
-
-  import CountMinAgg._
-
-  // non-bigint keys coerce (or fail) at analysis time instead of a
-  // ClassCastException inside update()
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Depth * Width)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val k = v.asInstanceOf[Long]
-      var r = 0
-      while (r < Depth) { buf(r * Width + cell(r, k)) += 1; r += 1 }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong())
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_count_min"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CountMinAgg =
-    copy(child = newChild)
-}
-
-object CountMinAgg {
+object CountMinAgg extends Sketch[Array[Long]] {
   val P: Long = MinHash.P
   /** 3 × 256: small enough that the 1,500-user events fixture actually
     * collides (the estimator regime is exercised, not just the exact
@@ -110,4 +47,29 @@ object CountMinAgg {
     * C-style sign-preserving, so floorMod is spelled ((k % P) + P) % P. */
   def cellSql(r: Int, k: String): String =
     s"((${MinHash.A(r)} * ((($k) % $P + $P) % $P) + ${MinHash.B(r)}) % $P) % ${Width}"
+
+  val name = "graft_count_min"
+  // non-bigint keys coerce (or fail) at analysis time instead of a
+  // ClassCastException inside update()
+  val inputTypes: Seq[DataType] = Seq(LongType)
+  val dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  def zero(): Array[Long] = new Array[Long](Depth * Width)
+
+  def update(buf: Array[Long], x: Any, y: Any): Array[Long] = {
+    val k = x.asInstanceOf[Long]
+    var r = 0
+    while (r < Depth) { buf(r * Width + cell(r, k)) += 1; r += 1 }
+    buf
+  }
+
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  def result(buf: Array[Long]): Any = new GenericArrayData(buf)
+  def toBytes(buf: Array[Long]): Array[Byte] = Sketch.longsToBytes(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = Sketch.longsFromBytes(bytes)
 }

@@ -1,15 +1,29 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** HyperLogLog register sketch as a catalyst-native
-  * TypedImperativeAggregate — the cardinality sketch that actually runs
-  * at 100 TB (Flajolet et al. 2007; Heule et al.'s HLL++ is the same
+/** The state the HLL pair shares: m = 256 one-byte registers, merged by
+  * element-wise max and exposed as `array<int>`. The two sketches differ
+  * only in what a row folds in. */
+sealed trait HllRegisters extends Sketch[Array[Byte]] {
+  val dataType: DataType = ArrayType(IntegerType, containsNull = false)
+
+  def zero(): Array[Byte] = new Array[Byte](HllSketchAgg.M)
+
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    var i = 0
+    while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
+    a
+  }
+
+  def result(regs: Array[Byte]): Any = new GenericArrayData(regs.map(_.toInt))
+  def toBytes(regs: Array[Byte]): Array[Byte] = regs
+  def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes
+}
+
+/** HyperLogLog register sketch — the cardinality sketch that actually
+  * runs at 100 TB (Flajolet et al. 2007; Heule et al.'s HLL++ is the same
   * register array with bias tweaks). State is the fixed m = 256-byte
   * register array per group regardless of input size, partials merge by
   * element-wise max (commutative, associative, idempotent — the result
@@ -21,7 +35,7 @@ import org.apache.spark.sql.types._
   * from the oracle), this sketch is graded END TO END: the input is a
   * 48-bit md5-derived hash both engines compute byte-identically, the
   * register update (bucket = top 8 bits, rank = leading-zero rank of the
-  * 40-bit suffix) is integer-exact, and eval returns the REGISTERS, not
+  * 40-bit suffix) is integer-exact, and the result is the REGISTERS, not
   * an estimate — so the DuckDB oracle rebuilds the whole register array
   * relationally (MAX over buckets) and every derived statistic, including
   * the harmonic-mean estimate itself, is checked hash-exact. The only
@@ -35,130 +49,23 @@ import org.apache.spark.sql.types._
   *
   * Registered as `graft_hll(bigint) → array<int>` (m = 256 registers).
   */
-case class HllSketchAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
-
-  import HllSketchAgg._
-
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(regs: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long] & ((1L << 48) - 1) // 48-bit hash domain
-      val bucket = (h >>> 40).toInt                   // top 8 bits
-      val suffix = h & ((1L << 40) - 1)
-      val rank =
-        if (suffix == 0L) 41
-        else 41 - (64 - java.lang.Long.numberOfLeadingZeros(suffix))
-      if (rank > regs(bucket)) regs(bucket) = rank.toByte
-    }
-    regs
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < M) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(regs: Array[Byte]): Any =
-    new GenericArrayData(regs.map(_.toInt))
-
-  override def serialize(regs: Array[Byte]): Array[Byte] = regs
-
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_hll"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
-    copy(child = newChild)
-}
-
-/** Merge aggregate over PERSISTED HLL register arrays — the second half
-  * of the sketch-rollup-table pattern: store `graft_hll` registers at a
-  * fine grain (per day, per shard), answer any coarser distinct-count by
-  * element-wise-max MERGING the stored sketches — no raw data re-read.
-  * Exact same max-merge semantics as HllSketchAgg's partial combine, so
-  * merged(fine sketches) == direct(raw) is an algebraic identity the
-  * graded query checks cross-engine.
-  *
-  * Registered as `graft_hll_merge(array<int>) → array<int>`. */
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
-
-  import HllSketchAgg.M
-
-  // Without declared input types an array<bigint> column would resolve
-  // uncast and arr.getInt would read the wrong 4 bytes of each element.
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(regs: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      val n = math.min(arr.numElements(), M)
-      var i = 0
-      while (i < n) {
-        // Clamp to the valid rank domain [0, 41]: an out-of-domain element
-        // in a malformed persisted sketch (e.g. 300) must not win the max
-        // then wrap negative/garbage via toByte.
-        val r0 = if (arr.isNullAt(i)) 0 else arr.getInt(i)
-        val r = if (r0 < 0) 0 else if (r0 > 41) 41 else r0
-        if (r > regs(i)) regs(i) = r.toByte
-        i += 1
-      }
-    }
-    regs
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < M) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(regs: Array[Byte]): Any =
-    new GenericArrayData(regs.map(_.toInt))
-
-  override def serialize(regs: Array[Byte]): Array[Byte] = regs
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_hll_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllMergeAgg =
-    copy(child = newChild)
-}
-
-object HllSketchAgg {
+object HllSketchAgg extends HllRegisters {
   /** Register count (p = 8 bucket bits). RSE ≈ 1.04/√m ≈ 6.5%. */
   val M: Int = 256
+
+  val name = "graft_hll"
+  val inputTypes: Seq[DataType] = Seq(LongType)
+
+  def update(regs: Array[Byte], x: Any, y: Any): Array[Byte] = {
+    val h = x.asInstanceOf[Long] & ((1L << 48) - 1) // 48-bit hash domain
+    val bucket = (h >>> 40).toInt                   // top 8 bits
+    val suffix = h & ((1L << 40) - 1)
+    val rank =
+      if (suffix == 0L) 41
+      else 41 - (64 - java.lang.Long.numberOfLeadingZeros(suffix))
+    if (rank > regs(bucket)) regs(bucket) = rank.toByte
+    regs
+  }
 
   /** Reference estimator for specs (the graded queries re-derive this in
     * SQL on both engines instead of calling it): linear counting while
@@ -172,5 +79,37 @@ object HllSketchAgg {
       val c = 1846528.0 / 2570790.0 * 144115188075855872.0 // alpha·m²·2⁴¹
       math.floor(c / sScaled + 0.5).toLong
     }
+  }
+}
+
+/** Merge aggregate over PERSISTED HLL register arrays — the second half
+  * of the sketch-rollup-table pattern: store `graft_hll` registers at a
+  * fine grain (per day, per shard), answer any coarser distinct-count by
+  * element-wise-max MERGING the stored sketches — no raw data re-read.
+  * The same registers and max-merge as HllSketchAgg, so merged(fine
+  * sketches) == direct(raw) is an algebraic identity the graded query
+  * checks cross-engine.
+  *
+  * Registered as `graft_hll_merge(array<int>) → array<int>`. */
+object HllMergeAgg extends HllRegisters {
+  val name = "graft_hll_merge"
+  // Without declared input types an array<bigint> column would resolve
+  // uncast and arr.getInt would read the wrong 4 bytes of each element.
+  val inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
+
+  def update(regs: Array[Byte], x: Any, y: Any): Array[Byte] = {
+    val arr = x.asInstanceOf[ArrayData]
+    val n = math.min(arr.numElements(), regs.length)
+    var i = 0
+    while (i < n) {
+      // Clamp to the valid rank domain [0, 41]: an out-of-domain element
+      // in a malformed persisted sketch (e.g. 300) must not win the max
+      // then wrap negative/garbage via toByte.
+      val r0 = if (arr.isNullAt(i)) 0 else arr.getInt(i)
+      val r = if (r0 < 0) 0 else if (r0 > 41) 41 else r0
+      if (r > regs(i)) regs(i) = r.toByte
+      i += 1
+    }
+    regs
   }
 }

@@ -1,28 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.types._
 
-import java.nio.ByteBuffer
 import scala.collection.mutable
 
-/** KMV (k-minimum-values) distinct-count sketch as a catalyst-native
-  * TypedImperativeAggregate — the mergeable cardinality sketch of the
-  * HLL/theta family (Bar-Yossef et al.'s "counting distinct elements"
-  * line), with the same gradeability trick as MisraGriesAgg: inputs are
-  * first permuted through a BIJECTIVE Lehmer-style LCG on [0, P)
-  * (h(v) = (48271·v + 11) mod P — a permutation, not a lossy hash), and
-  * the sketch keeps the K smallest permuted values plus a saw-overflow
-  * flag.
+/** KMV (k-minimum-values) distinct-count sketch — the mergeable
+  * cardinality sketch of the HLL/theta family (Bar-Yossef et al.'s
+  * "counting distinct elements" line), with the same gradeability trick
+  * as MisraGriesAgg: inputs are first permuted through a BIJECTIVE
+  * Lehmer-style LCG on [0, P) (h(v) = (48271·v + 11) mod P — a
+  * permutation, not a lossy hash), and the sketch keeps the K smallest
+  * permuted values plus a saw-overflow flag.
   *
   * Accuracy contract: while no value has ever been evicted (≤ K distinct
   * inputs per group) the buffer holds EVERY distinct value, the flag is
-  * false, and eval returns the exact cardinality — which is what lets
+  * false, and the result is the exact cardinality — which is what lets
   * the graded query hash-check the whole native path (per-partition
-  * update, partial serialization, merge, final eval) against a plain
+  * update, partial serialization, merge, result) against a plain
   * COUNT(DISTINCT ...) oracle. Past K the classic KMV estimator
   * (K−1)·P/θ_K takes over, with relative standard error ≈ 1/√(K−2) —
   * covered by property tests, not the oracle.
@@ -33,69 +29,7 @@ import scala.collection.mutable
   *
   * Registered as `graft_approx_distinct(bigint) → bigint`.
   */
-case class KmvDistinctAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvDistinctAgg.Buffer]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
-
-  import KmvDistinctAgg._
-
-  // non-bigint keys coerce (or fail) at analysis time instead of a
-  // ClassCastException inside update()
-  override def inputTypes: Seq[org.apache.spark.sql.types.DataType] =
-    Seq(org.apache.spark.sql.types.LongType)
-
-  override def createAggregationBuffer(): Buffer = new Buffer
-
-  override def update(buf: Buffer, input: InternalRow): Buffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(permute(v.asInstanceOf[Long]))
-    buf
-  }
-
-  override def merge(a: Buffer, b: Buffer): Buffer = {
-    a.sawOverflow |= b.sawOverflow
-    b.mins.foreach(a.add)
-    a
-  }
-
-  override def eval(buf: Buffer): Any =
-    if (!buf.sawOverflow) buf.mins.size.toLong
-    else math.round((K - 1).toDouble * P / buf.mins.max.toDouble)
-
-  override def serialize(buf: Buffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 1 + 8 * buf.mins.size)
-    bb.putInt(buf.mins.size)
-    bb.put(if (buf.sawOverflow) 1.toByte else 0.toByte)
-    buf.mins.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val buf = new Buffer
-    buf.sawOverflow = bb.get() == 1.toByte
-    (0 until n).foreach(_ => buf.mins.add(bb.getLong()))
-    buf
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_approx_distinct"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvDistinctAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvDistinctAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvDistinctAgg =
-    copy(child = newChild)
-}
-
-object KmvDistinctAgg {
+object KmvDistinctAgg extends Sketch[KmvBuffer] {
   val P: Long = 2147483647L
   /** Sketch budget: 256 minima ⇒ exact ≤ 256 distinct, ~6% RSE beyond. */
   val K: Int = 256
@@ -104,15 +38,59 @@ object KmvDistinctAgg {
     * expected in [0, P) (reduce wider domains before aggregating). */
   def permute(v: Long): Long = (48271L * (((v % P) + P) % P) + 11L) % P
 
-  /** K smallest permuted values + whether anything was ever evicted. */
-  final class Buffer {
-    val mins: mutable.TreeSet[Long] = mutable.TreeSet.empty
-    var sawOverflow: Boolean = false
-    def add(h: Long): Unit =
-      if (!mins.contains(h)) {
-        if (mins.size < K) mins.add(h)
-        else if (h < mins.max) { mins.remove(mins.max); mins.add(h); sawOverflow = true }
-        else sawOverflow = true
-      }
+  type Buffer = KmvBuffer
+
+  val name = "graft_approx_distinct"
+  // non-bigint keys coerce (or fail) at analysis time instead of a
+  // ClassCastException inside update()
+  val inputTypes: Seq[DataType] = Seq(LongType)
+  val dataType: DataType = LongType
+
+  def zero(): Buffer = new Buffer
+
+  def update(buf: Buffer, x: Any, y: Any): Buffer = {
+    buf.add(permute(x.asInstanceOf[Long]))
+    buf
   }
+
+  def merge(a: Buffer, b: Buffer): Buffer = {
+    a.sawOverflow |= b.sawOverflow
+    b.mins.foreach(a.add)
+    a
+  }
+
+  def result(buf: Buffer): Any =
+    if (!buf.sawOverflow) buf.mins.size.toLong
+    else math.round((K - 1).toDouble * P / buf.mins.max.toDouble)
+
+  def toBytes(buf: Buffer): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + 1 + 8 * buf.mins.size)
+    bb.putInt(buf.mins.size)
+    bb.put(if (buf.sawOverflow) 1.toByte else 0.toByte)
+    buf.mins.foreach(bb.putLong)
+    bb.array()
+  }
+
+  def fromBytes(bytes: Array[Byte]): Buffer = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt()
+    val buf = new Buffer
+    buf.sawOverflow = bb.get() == 1.toByte
+    (0 until n).foreach(_ => buf.mins.add(bb.getLong()))
+    buf
+  }
+}
+
+/** K smallest permuted values + whether anything was ever evicted
+  * (`KmvDistinctAgg.Buffer`). */
+final class KmvBuffer {
+  import KmvDistinctAgg.K
+  val mins: mutable.TreeSet[Long] = mutable.TreeSet.empty
+  var sawOverflow: Boolean = false
+  def add(h: Long): Unit =
+    if (!mins.contains(h)) {
+      if (mins.size < K) mins.add(h)
+      else if (h < mins.max) { mins.remove(mins.max); mins.add(h); sawOverflow = true }
+      else sawOverflow = true
+    }
 }

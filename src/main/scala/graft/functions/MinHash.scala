@@ -2,9 +2,9 @@ package graft.functions
 
 /** The ONE source of truth for the MinHash permutation family, shared by
   * the expression-based sketch (LlmOps.minhashOf), the typed Aggregator
-  * (MinHashAggregator), the native TypedImperativeAggregate
-  * (MinHashSketchAgg), and every generated DuckDB oracle — so all four
-  * stay arithmetically identical by construction.
+  * (MinHashAggregator), the sketch aggregate (MinHashSketchAgg), and
+  * every generated DuckDB oracle — so all four stay arithmetically
+  * identical by construction.
   *
   * k = 16 permutations in 4 LSH bands of 4 rows: the r4 demo width
   * (4 perms, 2×2 bands) had a ~0.71 Jaccard threshold but only 2-value

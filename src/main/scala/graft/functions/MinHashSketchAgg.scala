@@ -1,60 +1,41 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-import java.nio.ByteBuffer
-
-/** MinHash sketch as a catalyst-internal TypedImperativeAggregate — the
-  * third implementation of the same arithmetic (expression minima in
-  * qDedupNear, typed Aggregator in MinHashAggregator), here exercising the
-  * native imperative-aggregate path: mutable buffer per group,
-  * serialize/deserialize for shuffle partials, merge-associative combine.
-  * All three produce identical results, so the same DuckDB oracle checks
-  * this one too.
+/** MinHash sketch as a native aggregate — the third implementation of
+  * the same arithmetic (expression minima in qDedupNear, typed Aggregator
+  * in MinHashAggregator), here exercising the imperative-aggregate path:
+  * mutable buffer per group, byte partials for the shuffle,
+  * merge-associative combine. All three produce identical results, so
+  * the same DuckDB oracle checks this one too.
   *
   * Registered in the FunctionRegistry as `graft_minhash(bigint) →
   * array<bigint>[k]` (k = MinHash.K shared constants).
   */
-case class MinHashSketchAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
+object MinHashSketchAgg extends Sketch[Array[Long]] {
+  import MinHash.{A, B, K, P}
 
+  val name = "graft_minhash"
   // non-bigint shingle values coerce (or fail) at analysis time instead
   // of a ClassCastException inside update()
-  override def inputTypes: Seq[org.apache.spark.sql.types.DataType] =
-    Seq(org.apache.spark.sql.types.LongType)
+  val inputTypes: Seq[DataType] = Seq(LongType)
+  val dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private val P = MinHash.P
-  private val A = MinHash.A
-  private val B = MinHash.B
-  private val K = A.length
+  def zero(): Array[Long] = Array.fill(K)(Long.MaxValue)
 
-  override def createAggregationBuffer(): Array[Long] = Array.fill(K)(Long.MaxValue)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val x = v.asInstanceOf[Long]
-      var j = 0
-      while (j < K) {
-        val h = (A(j) * x + B(j)) % P
-        if (h < buf(j)) buf(j) = h
-        j += 1
-      }
+  def update(buf: Array[Long], x: Any, y: Any): Array[Long] = {
+    val v = x.asInstanceOf[Long]
+    var j = 0
+    while (j < K) {
+      val h = (A(j) * v + B(j)) % P
+      if (h < buf(j)) buf(j) = h
+      j += 1
     }
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var j = 0
     while (j < K) {
       if (b(j) < a(j)) a(j) = b(j)
@@ -63,27 +44,7 @@ case class MinHashSketchAgg(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * K)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(K)(bb.getLong())
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_minhash"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MinHashSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MinHashSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MinHashSketchAgg =
-    copy(child = newChild)
+  def result(buf: Array[Long]): Any = new GenericArrayData(buf)
+  def toBytes(buf: Array[Long]): Array[Byte] = Sketch.longsToBytes(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = Sketch.longsFromBytes(bytes)
 }

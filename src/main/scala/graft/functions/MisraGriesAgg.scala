@@ -1,19 +1,16 @@
 package graft.functions
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
-/** Misra-Gries heavy-hitters sketch as a catalyst-native
-  * TypedImperativeAggregate: a fixed budget of K counters per group,
+/** Misra-Gries heavy-hitters sketch: a fixed budget of K counters per group,
   * mergeable partials (Agarwal et al.'s mergeable-summaries combine:
   * sum counters, then subtract the (K+1)-th largest), O(K) memory per
   * group at any input size — the 100 TB answer to "top event types per
@@ -29,38 +26,34 @@ import scala.collection.mutable
   *
   * Registered as `graft_topk_freq(string) → array<struct<value,cnt>>`.
   */
-case class MisraGriesAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
+object MisraGriesAgg extends Sketch[mutable.HashMap[String, Long]] {
+  val K: Int = 8
 
-  private val K = 8
+  val name = "graft_topk_freq"
+  val inputTypes: Seq[DataType] = Seq(StringType)
+  val dataType: DataType = ArrayType(StructType(Seq(
+    StructField("value", StringType, nullable = false),
+    StructField("cnt", LongType, nullable = false))), containsNull = false)
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
+  def zero(): mutable.HashMap[String, Long] = mutable.HashMap.empty
 
-  override def update(buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.toString
-      buf.get(s) match {
-        case Some(c) => buf.update(s, c + 1)
-        case None if buf.size < K => buf.update(s, 1L)
-        case None => // decrement-all step: every tracked counter pays one
-          val dead = mutable.ArrayBuffer.empty[String]
-          buf.foreach { case (key, c) =>
-            if (c == 1L) dead += key else buf.update(key, c - 1)
-          }
-          dead.foreach(buf.remove)
-      }
+  def update(buf: mutable.HashMap[String, Long], x: Any, y: Any)
+      : mutable.HashMap[String, Long] = {
+    val s = x.toString
+    buf.get(s) match {
+      case Some(c) => buf.update(s, c + 1)
+      case None if buf.size < K => buf.update(s, 1L)
+      case None => // decrement-all step: every tracked counter pays one
+        val dead = mutable.ArrayBuffer.empty[String]
+        buf.foreach { case (key, c) =>
+          if (c == 1L) dead += key else buf.update(key, c - 1)
+        }
+        dead.foreach(buf.remove)
     }
     buf
   }
 
-  override def merge(a: mutable.HashMap[String, Long],
+  def merge(a: mutable.HashMap[String, Long],
       b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
     b.foreach { case (key, c) => a.update(key, a.getOrElse(key, 0L) + c) }
     if (a.size > K) {
@@ -75,14 +68,14 @@ case class MisraGriesAgg(
     a
   }
 
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
+  def result(buf: mutable.HashMap[String, Long]): Any = {
     val rows = buf.toArray.sortBy { case (s, c) => (-c, s) }.map { case (s, c) =>
       InternalRow(UTF8String.fromString(s), c)
     }
     new GenericArrayData(rows.asInstanceOf[Array[Any]])
   }
 
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
+  def toBytes(buf: mutable.HashMap[String, Long]): Array[Byte] = {
     val entries = buf.toArray.map { case (s, c) =>
       (s.getBytes(StandardCharsets.UTF_8), c)
     }
@@ -94,7 +87,7 @@ case class MisraGriesAgg(
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
+  def fromBytes(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt()
     val buf = mutable.HashMap.empty[String, Long]
@@ -106,17 +99,4 @@ case class MisraGriesAgg(
     }
     buf
   }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("value", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_topk_freq"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MisraGriesAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MisraGriesAgg =
-    copy(child = newChild)
 }

@@ -3,15 +3,41 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Mergeable QUANTILE sketch as the 7th catalyst-native
-  * TypedImperativeAggregate (pattern: [[HllSketchAgg]]) — bounded state,
-  * map-side combinable, re-aggregatable from persisted partials.
+/** The state the quantile pair shares: (hash, value) pairs cut back to
+  * the bottom K, merged by union then re-truncation. The two sketches
+  * differ only in what a row folds in. */
+sealed trait BottomKPairs extends Sketch[ArrayBuffer[(Long, Double)]] {
+  import QuantileSketchAgg._
+
+  def dataType: DataType = PairArrayType
+
+  def zero(): ArrayBuffer[(Long, Double)] = new ArrayBuffer[(Long, Double)]
+
+  /** Amortized truncation: let the buffer grow to 2K, then cut back to
+    * K — retention between K and 2K never changes the final bottom-K
+    * (every global bottom-K element is below any cut line). */
+  protected def bounded(buf: ArrayBuffer[(Long, Double)]): ArrayBuffer[(Long, Double)] = {
+    if (buf.length >= 2 * K) truncate(buf)
+    buf
+  }
+
+  def merge(a: ArrayBuffer[(Long, Double)],
+      b: ArrayBuffer[(Long, Double)]): ArrayBuffer[(Long, Double)] = {
+    a ++= b
+    if (a.length > K) truncate(a)
+    a
+  }
+
+  def result(buf: ArrayBuffer[(Long, Double)]): Any = evalPairs(buf)
+  def toBytes(buf: ArrayBuffer[(Long, Double)]): Array[Byte] = serializePairs(buf)
+  def fromBytes(bytes: Array[Byte]): ArrayBuffer[(Long, Double)] = deserializePairs(bytes)
+}
+
+/** Mergeable QUANTILE sketch (pattern: [[HllSketchAgg]]) — bounded
+  * state, map-side combinable, re-aggregatable from persisted partials.
   *
   * Design: deterministic BOTTOM-K HASH SAMPLING (bottom-k sketches,
   * Cohen & Kaplan 2007; random samples are fully mergeable summaries,
@@ -49,132 +75,7 @@ import org.apache.spark.sql.types._
   * Registered as `graft_quantile(bigint, double) →
   * array<struct<h: bigint, v: double>>` (K = 512, (h,v)-sorted).
   */
-case class QuantileSketchAgg(
-    left: Expression,
-    right: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayBuffer[(Long, Double)]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with BinaryLike[Expression] {
-
-  import QuantileSketchAgg._
-
-  override def inputTypes: Seq[DataType] = Seq(LongType, DoubleType)
-
-  override def createAggregationBuffer(): ArrayBuffer[(Long, Double)] =
-    new ArrayBuffer[(Long, Double)]
-
-  override def update(buf: ArrayBuffer[(Long, Double)], input: InternalRow)
-      : ArrayBuffer[(Long, Double)] = {
-    val h = left.eval(input)
-    val v = right.eval(input)
-    if (h != null && v != null) {
-      buf += ((h.asInstanceOf[Long], v.asInstanceOf[Double]))
-      // amortized truncation: let the buffer grow to 2K, then cut back
-      // to K — retention between K and 2K never changes the final
-      // bottom-K (every global bottom-K element is below any cut line)
-      if (buf.length >= 2 * K) truncate(buf)
-    }
-    buf
-  }
-
-  override def merge(a: ArrayBuffer[(Long, Double)],
-      b: ArrayBuffer[(Long, Double)]): ArrayBuffer[(Long, Double)] = {
-    a ++= b
-    if (a.length > K) truncate(a)
-    a
-  }
-
-  override def eval(buf: ArrayBuffer[(Long, Double)]): Any = evalPairs(buf)
-
-  override def serialize(buf: ArrayBuffer[(Long, Double)]): Array[Byte] =
-    serializePairs(buf)
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[(Long, Double)] =
-    deserializePairs(bytes)
-
-  override def dataType: DataType = PairArrayType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_quantile"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QuantileSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QuantileSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): QuantileSketchAgg =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Merge aggregate over PERSISTED bottom-k quantile sketches — the
-  * rollup half (store fine-grained sketches, answer coarser quantiles by
-  * merging; no raw re-read). Same truncation as QuantileSketchAgg's
-  * partial combine, so merged(fine) == direct(raw) is an algebraic
-  * identity the graded query checks cross-engine.
-  *
-  * Registered as `graft_quantile_merge(array<struct<h,v>>) →
-  * array<struct<h: bigint, v: double>>`. */
-case class QuantileMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayBuffer[(Long, Double)]]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
-  with UnaryLike[Expression] {
-
-  import QuantileSketchAgg._
-
-  override def inputTypes: Seq[DataType] = Seq(PairArrayType)
-
-  override def createAggregationBuffer(): ArrayBuffer[(Long, Double)] =
-    new ArrayBuffer[(Long, Double)]
-
-  override def update(buf: ArrayBuffer[(Long, Double)], input: InternalRow)
-      : ArrayBuffer[(Long, Double)] = {
-    val a = child.eval(input)
-    if (a != null) {
-      val arr = a.asInstanceOf[ArrayData]
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        if (!arr.isNullAt(i)) {
-          val p = arr.getStruct(i, 2)
-          buf += ((p.getLong(0), p.getDouble(1)))
-        }
-        i += 1
-      }
-      if (buf.length >= 2 * K) truncate(buf)
-    }
-    buf
-  }
-
-  override def merge(a: ArrayBuffer[(Long, Double)],
-      b: ArrayBuffer[(Long, Double)]): ArrayBuffer[(Long, Double)] = {
-    a ++= b
-    if (a.length > K) truncate(a)
-    a
-  }
-
-  override def eval(buf: ArrayBuffer[(Long, Double)]): Any = evalPairs(buf)
-
-  override def serialize(buf: ArrayBuffer[(Long, Double)]): Array[Byte] =
-    serializePairs(buf)
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[(Long, Double)] =
-    deserializePairs(bytes)
-
-  override def dataType: DataType = PairArrayType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_quantile_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QuantileMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QuantileMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): QuantileMergeAgg =
-    copy(child = newChild)
-}
-
-object QuantileSketchAgg {
+object QuantileSketchAgg extends BottomKPairs {
   /** Sample size. Rank-error stddev at the median is √(0.25/K)·n ≈
     * 0.022·n; the spec pins a 4σ band. */
   val K: Int = 512
@@ -214,5 +115,42 @@ object QuantileSketchAgg {
     var i = 0
     while (i < n) { buf += ((bb.getLong, bb.getDouble)); i += 1 }
     buf
+  }
+
+  val name = "graft_quantile"
+  val inputTypes: Seq[DataType] = Seq(LongType, DoubleType)
+
+  def update(buf: ArrayBuffer[(Long, Double)], x: Any, y: Any)
+      : ArrayBuffer[(Long, Double)] = {
+    buf += ((x.asInstanceOf[Long], y.asInstanceOf[Double]))
+    bounded(buf)
+  }
+}
+
+/** Merge aggregate over PERSISTED bottom-k quantile sketches — the
+  * rollup half (store fine-grained sketches, answer coarser quantiles by
+  * merging; no raw re-read). Same sample and truncation as
+  * QuantileSketchAgg, so merged(fine) == direct(raw) is an algebraic
+  * identity the graded query checks cross-engine.
+  *
+  * Registered as `graft_quantile_merge(array<struct<h,v>>) →
+  * array<struct<h: bigint, v: double>>`. */
+object QuantileMergeAgg extends BottomKPairs {
+  val name = "graft_quantile_merge"
+  val inputTypes: Seq[DataType] = Seq(QuantileSketchAgg.PairArrayType)
+
+  def update(buf: ArrayBuffer[(Long, Double)], x: Any, y: Any)
+      : ArrayBuffer[(Long, Double)] = {
+    val arr = x.asInstanceOf[ArrayData]
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      if (!arr.isNullAt(i)) {
+        val p = arr.getStruct(i, 2)
+        buf += ((p.getLong(0), p.getDouble(1)))
+      }
+      i += 1
+    }
+    bounded(buf)
   }
 }

@@ -521,6 +521,12 @@ object VectorFunctions {
     e.eval(null).asInstanceOf[Number].intValue()
   }
 
+  /** Every sketch aggregate; each registers under its own name as a
+    * [[SketchAgg]]. */
+  val sketches: Seq[Sketch[_]] = Seq(MinHashSketchAgg, MisraGriesAgg, KmvDistinctAgg,
+    HllSketchAgg, HllMergeAgg, BitmapDistinctAgg, CountMinAgg, QuantileSketchAgg,
+    QuantileMergeAgg)
+
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
@@ -528,33 +534,6 @@ object VectorFunctions {
     (FunctionIdentifier("graft_norm_sq"),
       new ExpressionInfo(classOf[NormSq].getName, "graft_norm_sq"),
       (es: Seq[Expression]) => NormSq(es.head)),
-    (FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSketchAgg].getName, "graft_minhash"),
-      (es: Seq[Expression]) => MinHashSketchAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_topk_freq"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "graft_topk_freq"),
-      (es: Seq[Expression]) => MisraGriesAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_approx_distinct"),
-      new ExpressionInfo(classOf[KmvDistinctAgg].getName, "graft_approx_distinct"),
-      (es: Seq[Expression]) => KmvDistinctAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "graft_hll"),
-      (es: Seq[Expression]) => HllSketchAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[HllMergeAgg].getName, "graft_hll_merge"),
-      (es: Seq[Expression]) => HllMergeAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_bitmap_distinct"),
-      new ExpressionInfo(classOf[BitmapDistinctAgg].getName, "graft_bitmap_distinct"),
-      (es: Seq[Expression]) => BitmapDistinctAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_count_min"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "graft_count_min"),
-      (es: Seq[Expression]) => CountMinAgg(es.head).toAggregateExpression()),
-    (FunctionIdentifier("graft_quantile"),
-      new ExpressionInfo(classOf[QuantileSketchAgg].getName, "graft_quantile"),
-      (es: Seq[Expression]) => QuantileSketchAgg(es(0), es(1)).toAggregateExpression()),
-    (FunctionIdentifier("graft_quantile_merge"),
-      new ExpressionInfo(classOf[QuantileMergeAgg].getName, "graft_quantile_merge"),
-      (es: Seq[Expression]) => QuantileMergeAgg(es.head).toAggregateExpression()),
     (FunctionIdentifier("graft_pq_subdists"),
       new ExpressionInfo(classOf[PqSubDistances].getName, "graft_pq_subdists"),
       (es: Seq[Expression]) => PqSubDistances(es(0), es(1), litInt(es(2), "graft_pq_subdists", "m"))),
@@ -570,7 +549,10 @@ object VectorFunctions {
     (FunctionIdentifier("graft_nfc"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
       (es: Seq[Expression]) => NfcNormalize(es.head)),
-  )
+  ) ++ sketches.map { s =>
+    (FunctionIdentifier(s.name), new ExpressionInfo(classOf[SketchAgg[_]].getName, s.name),
+      (es: Seq[Expression]) => s(es: _*).toAggregateExpression())
+  }
 
   /** Session-local registration — lets any query use the expressions
     * through `expr("graft_dot(...)")` without requiring the session to
