@@ -87,9 +87,11 @@ object GraphOps {
   /** The fixed-point iteration itself, over any (node) universe and any
     * share-normalized edge list (src, dst, wshare out of `Share`) —
     * exposed so specs can drive it on synthetic graphs (dangling nodes,
-    * disconnected components) the fixture's trade graph doesn't contain. */
+    * disconnected components) the fixture's trade graph doesn't contain.
+    * No nodes (`n` = 0), no ranks: the empty rank frame. */
   private[graft] def pagerankIterate(nodeIds: DataFrame, edges: DataFrame,
       n: Long, rounds: Int = Rounds): DataFrame = {
+    if (n == 0) return nodeIds.select(col("node"), lit(0L).as("r"))
     val base = 15L * Scale / (100L * n)
     val outSrc = edges.select("src").distinct()
     var ranks = nodeIds.select(col("node"), lit(Scale / n).as("r"))

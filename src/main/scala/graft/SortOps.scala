@@ -45,13 +45,12 @@ object SortOps {
     * scale factor, so the sort load scales with sf. spark.range needs a
     * literal, so one count job per (session, sfDir) is unavoidable — but
     * only one: the result is memoized so building the four sort/source
-    * queries costs a single metadata-only parquet count, not four (the
-    * r4 verdict flagged the repeated builder-time action). */
+    * queries costs a single metadata-only parquet count, not four. */
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
   private def recordCount(s: SparkSession, d: String): Long =
     // keyed by applicationId like SharedStage (identity hashes of dead
-    // and live sessions can collide — r12 ADVICE); the mapping function
+    // and live sessions can collide); the mapping function
     // runs a count but never re-enters this map, so no recursion hazard
     countCache.computeIfAbsent((s.sparkContext.applicationId, d),
       _ => lineitem(s, d).count())
@@ -161,8 +160,8 @@ object SortOps {
     * engine-independent by construction — total rows, overlap count
     * (0 iff the range exchange produced disjoint ordered ranges), and
     * the global key range — so the raw (engine-specific) partition ids
-    * never reach the compare, unlike the pre-r7 per-pid output that
-    * could only be rows-checked. The non-empty-partition count is
+    * never reach the compare (a per-pid output could only be
+    * rows-checked). The non-empty-partition count is
     * deliberately NOT graded: Spark's sampled cut points can in rare
     * cases leave an edge partition empty, which would make the gate
     * flaky without indicating a correctness bug. */
@@ -196,8 +195,9 @@ object SortOps {
   // -------------------------------------------- binary file I/O, graded
 
   /** The reference's whole FILE pipeline under the oracle: teragen →
-    * raw fixed-width binary sink (RawRecordOutputFormat) → DSv2
-    * `terarecord` scan (record-aligned splits, column pruning, session
+    * raw fixed-width binary sink (RawRecordOutputFormat) → the
+    * `terarecord` scan that `BinaryRecords.read` and the TeraSort also
+    * read through (record-aligned splits, pruned here to the key, session
     * Hadoop conf) → count + order-independent modular checksum + key
     * range. The oracle reproduces the generator arithmetic in SQL, so a
     * single flipped byte anywhere in the write→read path breaks the

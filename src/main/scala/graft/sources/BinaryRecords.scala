@@ -5,10 +5,9 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.{BytesWritable, NullWritable}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
-import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.ByteArray
 
 import graft.functions.RangePartitionId
@@ -19,10 +18,10 @@ import graft.functions.RangePartitionId
   * (SURVEY.md §2.3 R1–R6; gensort record spec: 10-byte key ‖ 90-byte
   * payload, unsigned byte-lexicographic key order).
   *
-  * Read: `sparkContext.binaryRecords` (Hadoop FixedLengthInputFormat
-  * underneath — splits on exact record boundaries, no record parsing on
-  * the driver) lifted to a DataFrame of (key BinaryType, payload
-  * BinaryType).
+  * Read: the DSv2 `terarecord` source (TeraRecordSource) — record-aligned
+  * splits, no record parsing on the driver, column pruning — gives
+  * (key BinaryType, payload BinaryType) to `read` and whole 100-byte
+  * `rec` values to the sort.
   *
   * Sort: like TeraInputFormat.writePartitionFile, the driver reads a small
   * fixed sample of the input files before the job and takes the cut
@@ -49,17 +48,10 @@ object BinaryRecords {
       expr("cast(lpad(cast((1103515245 * id + 12345) % 2147483647 as string), 10, '0') as binary)").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
 
-  /** Scan a directory/file of fixed 100-byte records. */
+  /** Scan fixed 100-byte records: `path` is a comma-separated list of
+    * directories and files, read in list order (TeraRecordSource.splits). */
   def read(spark: SparkSession, path: String): DataFrame =
-    records(spark, path).select(
-      expr(s"substring(rec, 1, $KeyLen)").as("key"),
-      expr(s"substring(rec, ${KeyLen + 1}, ${RecordLen - KeyLen})").as("payload"))
-
-  /** The records of a directory/file as one binary `rec` column. */
-  private def records(spark: SparkSession, path: String): DataFrame = {
-    val rdd = spark.sparkContext.binaryRecords(path, RecordLen).map(Row(_))
-    spark.createDataFrame(rdd, StructType(Seq(StructField("rec", BinaryType, nullable = false))))
-  }
+    spark.read.format("terarecord").load(path).select("key", "payload")
 
   /** Sink a DataFrame with binary `key` and `payload` columns as raw
     * fixed-width records. Partition order (and order within partitions) is
@@ -141,13 +133,13 @@ object BinaryRecords {
     sample
   }
 
-  /** End-to-end TeraSort over binary record files (`in` names a directory
-    * of record files or one file): choose the cut points from the driver
-    * sample (`cutPoints`), route each record to its range by partition
-    * id (`repartitionById` over `RangePartitionId`: a binary search of the
-    * cuts, no sampling job), sort each partition, write. The plan executes
-    * once: one shuffle-map stage that reads the input once, one reduce
-    * stage with the sink; the exchange keeps exactly `partitions`
+  /** End-to-end TeraSort over binary record files (`in` is a path list
+    * as for `read`): choose the cut points from the driver sample
+    * (`cutPoints`), scan whole records (`rec`), route each record to its
+    * range by partition id (`repartitionById` over `RangePartitionId`: a
+    * binary search of the cuts, no sampling job), sort each partition,
+    * write. The plan executes once: one shuffle-map stage that reads the
+    * input once, one reduce stage with the sink; the exchange keeps exactly `partitions`
     * partitions, so an empty one still writes its (empty) part file (an
     * input with no records at all writes none). Each record
     * stays one 100-byte binary value from scan to sink and is ordered as a
@@ -161,7 +153,7 @@ object BinaryRecords {
     * sort (the prefix does not decide a binary order). */
   def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
     val pid = RangePartitionId(UnresolvedAttribute("rec"), cutPoints(spark, in, partitions))
-    sink(records(spark, in)
+    sink(spark.read.format("terarecord").load(in).select("rec")
       .repartitionById(partitions, GraftShim.column(pid))
       .sortWithinPartitions(col("rec")), out)
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -10,42 +10,26 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.util
-import scala.jdk.CollectionConverters._
+import scala.collection.immutable.ListMap
 
 import BinaryRecords.{KeyLen, RecordLen}
 
-/** Java-serializable Hadoop Configuration carrier (Configuration itself is
-  * Writable but not Serializable) — the standard wrapper pattern, so the
-  * session's `spark.hadoop.*` settings captured on the driver reach the
-  * executor-side readers instead of being silently dropped by a fresh
-  * `new Configuration()`. */
-class SerializableHadoopConf(@transient private var conf: Configuration)
-    extends Serializable {
-  def value: Configuration = conf
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
-}
-
 /** DataSource V2 provider for fixed-width 100-byte TeraSort record files:
-  * `spark.read.format("terarecord").load(path)` → (key binary, payload
-  * binary). The modern-API twin of BinaryRecords.read (which wraps the
-  * legacy binaryRecords RDD).
+  * `spark.read.format("terarecord").load(path)` → (key, payload, rec), all
+  * binary: the 10-byte key, the 90-byte payload and the whole record. It is
+  * the one reader of record files — `BinaryRecords.read`, the TeraSort scan
+  * and its driver sampler all list their splits through `splits` — as
+  * Hadoop's TeraInputFormat serves both the job and its partition sampler.
   *
   * Scale behaviors built in:
   *  - splits are record-aligned byte ranges (~32 MB) — no record ever
   *    spans readers, no parsing on the driver;
-  *  - column pruning pushes into the reader: a key-only projection skips
-  *    materializing the 90-byte payload (9/10 of the bytes never reach
+  *  - column pruning pushes into the reader: each required column is one
+  *    byte range copied out of the record, so a key-only projection never
+  *    materializes the 90-byte payload (9/10 of the bytes never reach
   *    the row).
   */
 class TeraRecordSource extends TableProvider with DataSourceRegister {
@@ -61,23 +45,29 @@ class TeraRecordSource extends TableProvider with DataSourceRegister {
 
 object TeraRecordSource {
   val TargetSplitBytes: Long = 32L * 1024 * 1024
-  val fullSchema: StructType = StructType(Seq(
-    StructField("key", BinaryType, nullable = false),
-    StructField("payload", BinaryType, nullable = false)))
 
-  /** The record-aligned splits of the record files at `path` (a directory
-    * or one file), in file-name order. As in Hadoop's FileInputFormat,
-    * names starting with `_` or `.` are skipped; so are empty files. */
+  /** Each column's byte range `[from, until)` in a record, in schema order. */
+  private[sources] val ranges: ListMap[String, (Int, Int)] = ListMap(
+    "key" -> (0, KeyLen), "payload" -> (KeyLen, RecordLen), "rec" -> (0, RecordLen))
+  val fullSchema: StructType =
+    StructType(ranges.keys.map(StructField(_, BinaryType, nullable = false)).toSeq)
+
+  /** The record-aligned splits of the record files at `path` — a
+    * comma-separated list of directories and files, kept in list order;
+    * inside a directory, files go in name order. As in Hadoop's
+    * FileInputFormat, names starting with `_` or `.` are skipped in a
+    * directory; so are empty files. */
   def splits(path: String, conf: Configuration): Array[TeraRecordPartition] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
+    val files = path.split(",").flatMap { one =>
+      val p = new Path(one)
+      val fs = p.getFileSystem(conf)
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter { f =>
           val name = f.getPath.getName
           f.isFile && f.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
         }.sortBy(_.getPath.getName)
       else Array(fs.getFileStatus(p))
+    }
     val step = math.max(RecordLen, TargetSplitBytes / RecordLen * RecordLen) // record-aligned
     files.flatMap { f =>
       require(f.getLen % RecordLen == 0,
@@ -97,13 +87,13 @@ class TeraRecordTable(path: String) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // capture the live session's Hadoop conf (fs settings, spark.hadoop.*)
     // at scan-build time — this runs on the driver where the session exists
-    val conf = new SerializableHadoopConf(
+    val conf = new SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     new TeraScanBuilder(path, conf)
   }
 }
 
-class TeraScanBuilder(path: String, conf: SerializableHadoopConf)
+class TeraScanBuilder(path: String, conf: SerializableConfiguration)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = TeraRecordSource.fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -115,7 +105,7 @@ case class TeraRecordPartition(file: String, start: Long, length: Long)
   extends InputPartition
 
 class TeraScan(path: String, required: StructType,
-    private[graft] val conf: SerializableHadoopConf)
+    private[graft] val conf: SerializableConfiguration)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -126,10 +116,11 @@ class TeraScan(path: String, required: StructType,
     TeraRecordSource.splits(path, conf.value).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TeraReaderFactory(required.fieldNames, conf)
+    new TeraReaderFactory(required.fieldNames.map(TeraRecordSource.ranges), conf)
 }
 
-class TeraReaderFactory(columns: Array[String], conf: SerializableHadoopConf)
+/** Reads whole records and copies each required column's byte range. */
+class TeraReaderFactory(slices: Array[(Int, Int)], conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TeraRecordPartition]
@@ -139,8 +130,6 @@ class TeraReaderFactory(columns: Array[String], conf: SerializableHadoopConf)
       in.seek(p.start)
       private val buf = new Array[Byte](RecordLen)
       private var remaining = p.length / RecordLen
-      private val wantKey = columns.contains("key")
-      private val wantPayload = columns.contains("payload")
 
       override def next(): Boolean = {
         if (remaining <= 0) return false
@@ -149,14 +138,8 @@ class TeraReaderFactory(columns: Array[String], conf: SerializableHadoopConf)
         true
       }
 
-      override def get(): InternalRow = {
-        val vals = columns.map {
-          case "key" if wantKey => java.util.Arrays.copyOfRange(buf, 0, KeyLen)
-          case "payload" if wantPayload => java.util.Arrays.copyOfRange(buf, KeyLen, RecordLen)
-          case other => throw new IllegalArgumentException(s"unknown column $other")
-        }
-        new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-      }
+      override def get(): InternalRow = new GenericInternalRow(
+        slices.map { case (from, until) => java.util.Arrays.copyOfRange(buf, from, until): Any })
 
       override def close(): Unit = in.close()
     }

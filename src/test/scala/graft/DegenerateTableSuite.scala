@@ -1,14 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One row of a degenerate-table spec: `table` from the sf0.001 fixture,
-  * ordered by `order` and cut to each of `cuts` rows in a temp sfDir, and
-  * the module queries (with the module's oracle SQL) that read it. */
+  * ordered by `order` and cut to each of `cuts` rows in a temp sfDir (next
+  * to links to the fixture's other tables, whole), and the module queries
+  * (with the module's oracle SQL) that read it. */
 case class DegenerateTable(
     table: String,
     order: Seq[String],
@@ -35,8 +37,14 @@ abstract class DegenerateTableSuite(tables: DegenerateTable*) extends AnyFunSuit
       val dir = Files.createTempDirectory(s"graft_${t.table}_$n").toString
       read(t.table, TestSpark.sf).orderBy(t.order.map(col): _*)
         .limit(n).coalesce(1).write.parquet(s"$dir/${t.table}.parquet")
+      for (other <- tableNames(TestSpark.sf) if other != t.table)
+        Files.createSymbolicLink(Paths.get(dir, s"$other.parquet"),
+          Paths.get(TestSpark.sf, s"$other.parquet").toAbsolutePath)
       dir
     })
+
+  private def tableNames(dir: String): Seq[String] =
+    new File(dir).list().toSeq.filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
 
   /** The DuckDB oracle in Spark's dialect: `//` is `div`, VARCHAR is
     * STRING, ROW_NUMBER is a BIGINT that needs an order (any order numbers
@@ -49,10 +57,12 @@ abstract class DegenerateTableSuite(tables: DegenerateTable*) extends AnyFunSuit
     .replaceAll("""(?s)'0x' \|\| (substr\(.*?, 1, 12\))""", "conv($1, 16, 10)")
     .replaceAll("""unnest\(range\(0, (\d+)\)\)""", "explode(sequence(0, $1 - 1))")
 
-  /** The oracle SQL's rows over the cut table, run in this session. */
+  /** The oracle SQL's rows over the cut table and the fixture's others,
+    * run in this session. */
   private def oracle(t: DegenerateTable, q: String, dir: String): Seq[Seq[Any]] = {
-    read(t.table, dir).createOrReplaceTempView(t.table)
-    try rows(spark.sql(inSpark(t.oracle(q)))) finally spark.catalog.dropTempView(t.table)
+    val views = tableNames(dir)
+    views.foreach(v => read(v, dir).createOrReplaceTempView(v))
+    try rows(spark.sql(inSpark(t.oracle(q)))) finally views.foreach(spark.catalog.dropTempView)
   }
 
   for (t <- tables; n <- t.cuts; q <- t.queries.keys.toSeq.sorted) {

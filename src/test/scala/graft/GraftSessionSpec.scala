@@ -27,7 +27,7 @@ class GraftSessionSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  test("src/main has exactly the five mains") {
+  test("src/main has exactly the four mains") {
     // each `def main` belongs to the nearest object declared above it
     val mains = sources("src/main/scala").flatMap { f =>
       val src = Files.readString(f)
@@ -37,7 +37,7 @@ class GraftSessionSpec extends AnyFunSuite {
       }
     }
     assert(mains.sorted ==
-      Seq("Bench", "Explain", "SortBench", "TimeQ", "Verify"))
+      Seq("Bench", "Explain", "TimeQ", "Verify"))
   }
 
   test("GraftSession is the only session builder in src") {

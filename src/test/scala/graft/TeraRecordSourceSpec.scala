@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 import graft.sources.BinaryRecords
 
-/** DSv2 source: format("terarecord") must agree with the RDD-based reader,
-  * prune the payload on key-only projections, and sort end-to-end. */
+/** DSv2 source, the one reader of record files: `BinaryRecords.read` keeps
+  * a path list's order, `rec` is the whole record, projections prune in the
+  * scan, a torn file fails by name, and the source sorts end-to-end. */
 class TeraRecordSourceSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -18,14 +22,47 @@ class TeraRecordSourceSpec extends AnyFunSuite {
     dir
   }
 
-  test("DSv2 scan matches the RDD-based reader record-for-record") {
-    val dir = writeRecords(4000)
-    val v2 = spark.read.format("terarecord").load(dir)
-    val v1 = BinaryRecords.read(spark, dir)
-    assert(v2.count() === 4000)
-    val k2 = v2.select(col("key").cast("string")).collect().map(_.getString(0)).sorted
-    val k1 = v1.select(col("key").cast("string")).collect().map(_.getString(0)).sorted
-    assert(k2.sameElements(k1))
+  /** Each partition's keys, in partition index order. */
+  private def keysByPartition(df: DataFrame): Seq[Seq[String]] =
+    df.select(col("key")).queryExecution.toRdd
+      .mapPartitionsWithIndex { (i, it) =>
+        Iterator((i, it.map(r => new String(r.getBinary(0), ISO_8859_1)).toList))
+      }.collect().sortBy(_._1).map(_._2).toSeq
+
+  /** The keys of a record file, straight from its bytes. */
+  private def fileKeys(f: Path): Seq[String] =
+    Files.readAllBytes(f).grouped(BinaryRecords.RecordLen)
+      .map(r => new String(r, 0, BinaryRecords.KeyLen, ISO_8859_1)).toSeq
+
+  test("read over a path list keeps the list's order, not name order") {
+    val dir = Files.createTempDirectory("graft_dsv2").toString + "/in"
+    BinaryRecords.write(BinaryRecords.teragen(spark, 3000).repartition(2), dir)
+    val parts = Files.list(Paths.get(dir)).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
+    assert(parts.length === 2 && parts.forall(Files.size(_) > 0))
+    val got = keysByPartition(BinaryRecords.read(spark, parts.reverse.mkString(",")))
+    assert(got.length === 2)
+    assert(got(0) === fileKeys(parts(1)))
+    assert(got(1) === fileKeys(parts(0)))
+  }
+
+  test("rec is key ++ payload, and a rec-only projection reads only rec") {
+    val dir = writeRecords(2000)
+    val df = spark.read.format("terarecord").load(dir)
+    assert(df.columns.toSeq === Seq("key", "payload", "rec"))
+    assert(df.filter(col("rec") =!= concat(col("key"), col("payload"))).count() === 0)
+    val rec = df.select(col("rec"))
+    val scan = rec.queryExecution.executedPlan.toString
+    assert(scan.contains("columns=rec)"), s"not pruned to rec:\n$scan")
+    assert(rec.filter(length(col("rec")) === BinaryRecords.RecordLen).count() === 2000)
+  }
+
+  test("a file whose length is not a multiple of 100 fails with its path") {
+    val torn = Files.createTempDirectory("graft_dsv2").resolve("torn.bin")
+    Files.write(torn, new Array[Byte](150))
+    val e = intercept[IllegalArgumentException](BinaryRecords.read(spark, torn.toString).count())
+    assert(e.getMessage.contains(torn.toString), e.getMessage)
+    assert(e.getMessage.contains("not a multiple of 100"), e.getMessage)
   }
 
   test("key-only projection prunes the payload column in the scan") {

@@ -6,8 +6,9 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the same sfDir tables,
 and compares: column names (sorted), row count, and values (rows sorted by all
-columns, floats rounded to 6dp before hashing). Dev-only tool — the real gate
-is driver-side.
+columns, floats rounded to 6dp before hashing). Queries that share one oracle
+SQL text run it once; every query's Spark output is still compared. Dev-only
+tool — the real gate is driver-side.
 """
 import json, math, sys
 from pathlib import Path
@@ -51,6 +52,7 @@ def main():
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     n_pass = n_fail = 0
+    expected = {}  # oracle SQL text -> canonical (cols, rows)
     for name in sorted(oracle):
         rd = Path(out_dir) / name
         if not rd.exists():
@@ -60,8 +62,11 @@ def main():
         try:
             got_rel = con.sql(f"SELECT * FROM read_parquet('{rd}/*.parquet')")
             got_cols, got_rows = table_canon(got_rel.columns, got_rel.fetchall())
-            exp_rel = con.sql(oracle[name])
-            exp_cols, exp_rows = table_canon(exp_rel.columns, exp_rel.fetchall())
+            sql = oracle[name]
+            if sql not in expected:
+                exp_rel = con.sql(sql)
+                expected[sql] = table_canon(exp_rel.columns, exp_rel.fetchall())
+            exp_cols, exp_rows = expected[sql]
         except Exception as e:
             print(f"FAIL {name}: exception {e}")
             n_fail += 1
