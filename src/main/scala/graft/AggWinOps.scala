@@ -15,9 +15,6 @@ import org.apache.spark.sql.types._
 object AggWinOps {
   import Tables._
 
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
   // --------------------------------------------------------- aggregations
 
   /** Exact count-distinct per group (two-phase distinct aggregate). */
@@ -1084,22 +1081,22 @@ object AggWinOps {
   val qAggRegressionWideSql: String =
     qAggRegressionSql.replace("DECIMAL(18,4)", "DECIMAL(28,4)")
 
-  /** SEQUENCE PATTERN MATCHING (the MATCH_RECOGNIZE / CEP family),
-    * PARAMETERIZED since round 15: [[PatternMachine.compile]] turns
-    * each graded pattern (an ordered sequence of event-type initials +
-    * the boundary set that closes a segment) into a constant-space
-    * machine, and the batch form runs its [[PatternMachine.sqlFold]]
-    * compilation — a row-local `aggregate()` lambda over each user's
-    * event-time-ordered initials, whole-stage-codegen'd, no UDF, no
-    * regex engine (Java-vs-RE2 match semantics are an
-    * engine-portability trap; the oracle's regex formulation is
-    * derived from the SAME compile and property-pinned to the machine
-    * by PatternMachineSpec). All graded patterns fold over ONE
+  /** SEQUENCE PATTERN MATCHING (the MATCH_RECOGNIZE / CEP family):
+    * [[PatternMachine]] compiles each graded pattern (event-type
+    * initials, a boundary set that closes a segment, optionally
+    * quantifiers, contiguity and a time window) into one transition
+    * table, and the batch form runs its [[PatternMachine.sqlFold]] — a
+    * row-local `aggregate()` lambda over each user's event-time-ordered
+    * (tsu, event_id, t) structs, whole-stage-codegen'd, no UDF, no regex
+    * engine (Java-vs-RE2 match semantics are an engine-portability
+    * trap; the oracle's regex and replay formulations are derived from
+    * the SAME compile and property-pinned to the machine by
+    * PatternMachineSpec). All graded patterns fold over ONE
     * collect_list — one shuffle on user_id total, then unpivot. At
-    * 100 TB the collect_list holds one user's event INITIALS (bytes
-    * per event); a pathological user history would move this to the
-    * streaming form, whose state is O(#patterns) per user
-    * (q_stream_pattern — same machine, same oracle). */
+    * 100 TB the collect_list holds one user's event structs; a
+    * pathological user history would move this to the streaming form,
+    * whose state is O(#patterns) per user (q_stream_pattern — same
+    * machine, same oracle). */
   def qWindowPattern(s: SparkSession, d: String): DataFrame = {
     val evs = events(s, d)
       .select(col("user_id"),
@@ -1107,13 +1104,9 @@ object AggWinOps {
           substring(col("event_type"), 1, 1).as("t")).as("ev"))
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(col("ev"))).as("evs"))
-      .withColumn("ts_chars", expr("transform(evs, e -> e.t)"))
     val counted = PatternMachine.GradedAll.foldLeft(evs) {
       case (df, (name, c)) =>
-        // windowed machines fold over the (tsu, t) structs; time-free
-        // machines (subsequence and contiguous) fold the initial chars
-        df.withColumn(s"n_$name",
-          expr(PatternMachine.sqlFoldOf(c, "ts_chars", "evs")))
+        df.withColumn(s"n_$name", expr(PatternMachine.sqlFold(c, "evs")))
     }
     val stacked = PatternMachine.GradedAll
       .map { case (name, _) => s"'$name', n_$name" }.mkString(", ")

@@ -396,157 +396,69 @@ object LlmOps {
       |WHERE CAST(n_inter AS DOUBLE) / CAST(sza + szb - n_inter AS DOUBLE) >= 0.1
       |ORDER BY va, vb""".stripMargin
 
-  /** Connected components over an undirected edge list (va, vb). Two
-    * algorithms behind one dispatch (`spark.graft.ccAlgo`):
+  /** Connected components over an undirected edge list (va, vb):
+    * Pregel-style min-label propagation with a single pointer jump per
+    * round. The jump DOES halve on chains — measured (ChainGraphSpec):
+    * a 2048-node path converges in 12 rounds, the label travel distance
+    * doubling each round; shallow near-dup graphs converge in one round
+    * via the folded init. Round count still depends on the
+    * label-POINTER structure lining up, which no adversarial graph is
+    * obliged to do.
     *
-    *  - `minlabel` (default): Pregel-style min-label propagation with a
-    *    single pointer jump per round. The jump DOES halve on chains —
-    *    measured (r8, ChainGraphSpec): a 2048-node path converges in 12
-    *    rounds, the label travel distance doubling each round (the r7
-    *    "diameter-bound, doubling doesn't help" note was wrong for
-    *    chains); shallow near-dup graphs converge in one round via the
-    *    folded init. Round count still depends on the label-POINTER
-    *    structure lining up, which no adversarial graph is obliged to
-    *    do.
-    *  - `stars`: ALTERNATING large-star/small-star contraction (Kiveris
-    *    et al., "Connected Components in MapReduce and Beyond") — the
-    *    judge-requested alternating form: it contracts the EDGE SET
-    *    itself, with a proven O(log² n) round bound on ANY graph shape,
-    *    independent of pointer alignment. The belt-and-suspenders
-    *    setting for a 100 TB clustering job that cannot bound its
-    *    component structure in advance; ChainGraphSpec pins both
-    *    algorithms to identical labels on paths and on the real
-    *    candidate graph.
-    *
-    * Both cut lineage per round through Checkpoints.cut (reliable under
-    * spark.graft.reliableCheckpoint=true), free the prior round's blocks
-    * once the new round is live, and THROW at the iteration cap — a
-    * silent partial labeling is a wrong answer. */
+    * Lineage is cut per round through Checkpoints.cut (reliable under
+    * spark.graft.reliableCheckpoint=true), the prior round's blocks are
+    * freed once the new round is live, and the loop THROWS at the
+    * iteration cap — a silent partial labeling is a wrong answer. */
   private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // Shuffle parallelism inside the loop follows STATE volume, not the
     // session's scan parallelism (the same sizing decision as the
     // streaming runs' conf scope, GraftSession.withConfs): each round
-    // shuffles only (node, label) pairs — latency-bound at 32 partitions
+    // shuffles only (node, label) pairs — latency-bound at 8 partitions
     // for label sets this size, and at 100 TB the knob moves with the
     // graph. Conf restored on exit; the per-round eager checkpoints
     // materialize under the pinned value, so the returned labels frame
     // is independent of the session conf.
-    val s = pairs.sparkSession
-    val algo = s.conf.getOption("spark.graft.ccAlgo").getOrElse("minlabel")
-    GraftSession.withConfs(s, "spark.sql.shuffle.partitions" -> "8")(algo match {
-      // stars trades per-round distance-doubling for a shape-independent
-      // O(log² n) ROUND bound — its cap must budget for that bound, not
-      // inherit minlabel's diameter-tuned default (a 2048-path already
-      // needs ~20 alternations + fixpoint detection). The default floor
-      // of 60 would make a caller's tighter budget unenforceable, so
-      // spark.graft.ccStarsMaxIter overrides it VERBATIM (no floor) for
-      // callers that really do want a hard 40-round cap on stars
-      case "stars" =>
-        val cap = s.conf.getOption("spark.graft.ccStarsMaxIter")
-          .map(_.toInt).getOrElse(math.max(maxIter, 60))
-        connectedComponentsStars(pairs, cap)
-      case _ => connectedComponentsLoop(pairs, maxIter)
-    })
-  }
-
-  /** Alternating large-star/small-star contraction. Edge set kept
-    * canonical ((a, b), a < b, distinct); each round:
-    *   large-star: every node u attaches its STRICTLY LARGER neighbors
-    *     to m(u) = min(Γ(u) ∪ {u}) — long chains fold toward minima;
-    *   small-star: every node u (as the larger endpoint) re-points its
-    *     smaller neighbors and itself at m = min of them — stars
-    *     flatten.
-    * Both preserve connectivity exactly (the paper's invariant); the
-    * fixpoint is a forest of stars rooted at component minima, read off
-    * as (node → root) labels. Convergence = edge-set fixpoint, checked
-    * with a set difference (never a hash compare — a collision would be
-    * a silently wrong answer). */
-  private def connectedComponentsStars(pairs: DataFrame, maxIter: Int): DataFrame = {
-    val nodes = Checkpoints.cut(pairs.select(col("va").as("node"))
-      .union(pairs.select(col("vb").as("node"))).distinct())
-    var edges = Checkpoints.cut(pairs.select(
-        least(col("va"), col("vb")).as("a"), greatest(col("va"), col("vb")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      // large-star over both orientations
-      val bidir = edges.select(col("a").as("u"), col("b").as("v"))
-        .union(edges.select(col("b").as("u"), col("a").as("v")))
-      val lsMin = bidir.groupBy(col("u"))
-        .agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val ls = bidir.join(lsMin, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-      // small-star at each edge's larger endpoint (v < u by construction)
-      val ssIn = ls.select(col("b").as("u"), col("a").as("v"))
-      val ssMin = ssIn.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val updated = Checkpoints.cut(
-        ssIn.join(ssMin, Seq("u"))
-          .filter(col("v") =!= col("m"))
-          .select(col("m").as("a"), col("v").as("b"))
-          .union(ssMin.select(col("m").as("a"), col("u").as("b")))
-          .filter(col("a") =!= col("b")).distinct())
-      // fixpoint test materializes `updated` (cut is lazy — the count
-      // must run before the prior round's blocks are freed below)
-      changed = updated.exceptAll(edges).count() +
-        edges.exceptAll(updated).count()
-      org.apache.spark.sql.GraftShim.freeCheckpointBlocks(edges)
-      edges = updated
-      iter += 1
+    GraftSession.withConfs(pairs.sparkSession, "spark.sql.shuffle.partitions" -> "8") {
+      val edges = Checkpoints.cut(pairs
+        .union(pairs.select(col("vb").as("va"), col("va").as("vb"))))
+      // init with the first neighbor-min round already folded in: the same
+      // single shuffle a distinct-nodes init costs, but the loop starts one
+      // Pregel round ahead — on shallow near-dup graphs (components of 2-3)
+      // that is usually the only effective round, leaving just the
+      // convergence-confirming pass
+      var labels = Checkpoints.cut(edges.groupBy(col("va"))
+        .agg(least(col("va"), min(col("vb"))).as("label"))
+        .select(col("va").as("node"), col("label")))
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < maxIter) {
+        val neighborMin = edges.join(labels, col("vb") === col("node"))
+          .groupBy(col("va")).agg(min(col("label")).as("nmin"))
+        // single jump (label-chain compression). Measured on a 2048-node
+        // path (ChainGraphSpec), it halves as designed: 12 rounds, label
+        // distance doubling each round. A second composed jump was a net
+        // loss (an extra join per round)
+        val jump = labels.select(col("node").as("jnode"), col("label").as("jlabel"))
+        val updated = Checkpoints.cut(labels
+          .join(neighborMin, col("node") === col("va"), "left_outer")
+          .join(jump, col("label") === col("jnode"), "left_outer")
+          .select(col("node"), col("label"),
+            least(col("label"),
+              coalesce(col("nmin"), col("label")),
+              coalesce(col("jlabel"), col("label"))).as("new_label")))
+        changed = updated.filter(col("new_label") < col("label")).count()
+        // the count above is LOAD-BEARING: Checkpoints.cut is lazy, so that
+        // count is the only action materializing `updated`'s blocks — they
+        // MUST be live before the prior round's blocks are freed below
+        // (removing or moving the count would break this invariant)
+        org.apache.spark.sql.GraftShim.freeCheckpointBlocks(labels)
+        labels = updated.select(col("node"), col("new_label").as("label"))
+        iter += 1
+      }
+      if (changed > 0) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
+      labels
     }
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponentsStars did not converge in $maxIter rounds")
-    // fixpoint edges are (root, member) stars; edge-free nodes root themselves
-    nodes.join(edges.select(col("b").as("node"), col("a").as("root")),
-        Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("root"), col("node")).as("label"))
-  }
-
-  private def connectedComponentsLoop(pairs: DataFrame, maxIter: Int): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("vb").as("va"), col("va").as("vb"))))
-    // init with the first neighbor-min round already folded in: the same
-    // single shuffle a distinct-nodes init costs, but the loop starts one
-    // Pregel round ahead — on shallow near-dup graphs (components of 2-3)
-    // that is usually the only effective round, leaving just the
-    // convergence-confirming pass
-    var labels = Checkpoints.cut(edges.groupBy(col("va"))
-      .agg(least(col("va"), min(col("vb"))).as("label"))
-      .select(col("va").as("node"), col("label")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val neighborMin = edges.join(labels, col("vb") === col("node"))
-        .groupBy(col("va")).agg(min(col("label")).as("nmin"))
-      // single jump (label-chain compression). Measured r8
-      // (ChainGraphSpec): on a 2048-node path this halves as designed —
-      // 12 rounds, label distance doubling each round — so the r7 note
-      // here ("diameter-bound, doubling doesn't help") was wrong for
-      // chains; a second composed jump was still a net loss (extra join
-      // per round) when tried in r7
-      val jump = labels.select(col("node").as("jnode"), col("label").as("jlabel"))
-      val updated = Checkpoints.cut(labels
-        .join(neighborMin, col("node") === col("va"), "left_outer")
-        .join(jump, col("label") === col("jnode"), "left_outer")
-        .select(col("node"), col("label"),
-          least(col("label"),
-            coalesce(col("nmin"), col("label")),
-            coalesce(col("jlabel"), col("label"))).as("new_label")))
-      changed = updated.filter(col("new_label") < col("label")).count()
-      // the count above is LOAD-BEARING: Checkpoints.cut is lazy, so that
-      // count is the only action materializing `updated`'s blocks — they
-      // MUST be live before the prior round's blocks are freed below
-      // (removing or moving the count would break this invariant)
-      org.apache.spark.sql.GraftShim.freeCheckpointBlocks(labels)
-      labels = updated.select(col("node"), col("new_label").as("label"))
-      iter += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds")
-    labels
   }
 
   /** Near-dup CLUSTERS via connected components over the MinHash-band
@@ -571,24 +483,19 @@ object LlmOps {
         .distinct()
     }
 
-  /** Band-graph component labels, staged once per (application, sfDir,
-    * algorithm): q_dedup_components and q_sample_split_leakfree run the
+  /** Band-graph component labels, staged once per (application,
+    * sfDir): q_dedup_components and q_sample_split_leakfree run the
     * SAME multi-round CC loop over the SAME band-pair graph — the
     * labeling is the persisted artifact (at 100 TB a dedup pipeline
     * writes the component table once and every consumer — dedup stats,
-    * leak-free splits, cluster sampling — scans it). Both algorithms
-    * converge to min-id labels, but the stage key still carries the
-    * algo so an A/B with `spark.graft.ccAlgo=stars` can never read a
-    * minlabel-built table. */
+    * leak-free splits, cluster sampling — scans it). */
   private def bandComponentLabels(s: SparkSession, d: String): DataFrame = {
-    // the stage key carries every conf that changes HOW the loop runs
-    // (algo / reliable-checkpoint A/Bs must re-run the loop, never read
-    // a table the other mode built — outputs agree, but the A/B's whole
-    // point is exercising the mode)
-    val algo = s.conf.get("spark.graft.ccAlgo", "minlabel")
+    // the stage key carries the reliable-checkpoint mode: an A/B of it
+    // must re-run the loop, never read a table the other mode built —
+    // outputs agree, but the A/B's whole point is exercising the mode
     val rc = if (s.conf.get("spark.graft.reliableCheckpoint", "false") == "true")
       "_rc" else ""
-    SharedStage(s, d, s"dedup_cc_labels_$algo$rc") {
+    SharedStage(s, d, s"dedup_cc_labels$rc") {
       connectedComponents(bandPairs(s, d))
     }
   }

@@ -5,35 +5,37 @@ package graft
   * PATTERN (ordered sequence of event-type initials) plus a BOUNDARY
   * set compiles to a constant-space state machine whose fold over a
   * user's time-ordered events counts the pattern's non-overlapping
-  * subsequence completions within boundary-delimited segments.
+  * completions within boundary-delimited segments.
   *
-  * Semantics (the generalization of the round-14 hard-coded
-  * view→purchase machine, which is exactly `compile(Seq("v","p"))`):
+  * Semantics (the original hard-coded view→purchase machine is exactly
+  * `compile(Seq("v","p"))`):
   *   - events partition into per-user SEGMENTS: a boundary-typed event
   *     closes the current segment after itself being processed, so a
   *     boundary type may complete a pattern (as its final element) but
   *     never carries progress across segments;
   *   - within a segment, the machine advances on the earliest
   *     occurrence of the next needed pattern element (leftmost-
-  *     completion subsequence scan) and resets after each completion,
-  *     so completions are counted non-overlapping;
-  *   - state is ONE (progress, count) pair per pattern per key —
-  *     never a buffered event history — which is what lets the
+  *     completion scan) and resets after each completion, so
+  *     completions are counted non-overlapping;
+  *   - state is ONE (progress, count, first) triple per pattern per key
+  *     — never a buffered event history — which is what lets the
   *     streaming form run unbounded at 100 TB with O(#patterns) state
   *     per user.
   *
-  * The same compile emits THREE artifacts pinned to each other by
-  * PatternMachineSpec and the driver's oracle: (a) [[Compiled.stepT]]
-  * for the streaming StatefulProcessor, (b) [[sqlFoldOf]] — a Spark
-  * SQL `aggregate()` lambda for the batch form (row-local, codegen'd,
-  * no UDF), and (c) the independent DuckDB formulation —
-  * [[oracleRegexOf]] for time-free machines (lazy-quantifier regex
-  * whose non-overlapping leftmost-shortest scan over the segment-typed
-  * character string is the same count; banned-set character classes
-  * keep a match inside one segment), or [[duckReplaySql]] for windowed
-  * machines (no regex can see time).
+  * ONE TRANSITION TABLE per machine, whatever its dialect: every
+  * [[Compiled]] carries `(alpha, delta)` (see [[Compiled.delta]]), and
+  * one transition rule reads it in both runtimes — [[Compiled.stepT]]
+  * for the streaming StatefulProcessor and [[sqlFold]], a Spark SQL
+  * `aggregate()` lambda for the batch form (row-local, codegen'd, no
+  * UDF). The DuckDB oracle stays independent of the table where it
+  * can: [[oracleRegexOf]] for time-free machines (a lazy-quantifier
+  * regex whose non-overlapping leftmost-shortest scan over the
+  * segment-typed character string is the same count; banned-set
+  * character classes keep a match inside one segment), and
+  * [[duckReplaySql]] for windowed machines (no regex can see time), a
+  * recursive-CTE replay of the transition.
   *
-  * DIALECT TIERS (r15 verdict "MATCH_RECOGNIZE-class" gaps):
+  * DIALECT TIERS (only the table differs):
   *   - subsequence (default): skip-till-next-match between elements.
   *     Under this relaxed contiguity, `a+` and `a?` quantifiers are
   *     ABSORBED, not missing: extra occurrences of a matched element
@@ -41,35 +43,34 @@ package graft
   *     always be skipped (a? ≡ ε) — quantifiers only distinguish
   *     dialects that constrain adjacency, which is the next tier;
   *   - contiguous (`contiguous = true`): MATCH_RECOGNIZE's default
-  *     adjacency — the KMP automaton with non-overlapping reset,
-  *     still one long of progress per key/pattern;
-  *   - quantified contiguous ([[compileQuantified]], r17): the
+  *     adjacency — the subset DFA of the pattern's {1,1} blocks (the
+  *     KMP automaton) with non-overlapping reset;
+  *   - quantified contiguous ([[compileQuantified]]): the
   *     MATCH_RECOGNIZE `(a b+ c)` class — each pattern element carries
   *     a {min,max} repetition bound (max may be unbounded). Compiled
-  *     NFA→DFA by subset construction at pattern-compile time, so the
-  *     runtime artifact is the same DFA transition array as the
-  *     literal tier and progress stays ONE long of state; completion
-  *     is the DFA's earliest accept (leftmost-shortest, the lazy-regex
-  *     scan), counted non-overlapping;
+  *     NFA→DFA by subset construction at pattern-compile time, so
+  *     progress stays ONE long of state; completion is the DFA's
+  *     earliest accept (leftmost-shortest, the lazy-regex scan),
+  *     counted non-overlapping;
   *   - windowed (`maxSpanUs`): completion counts only if the match's
   *     span fits the window; one extra long (the partial's first
-  *     event time) of state. CAVEAT (r16 ADVICE, keep this visible):
-  *     this tier is NON-BACKTRACKING "leftmost attempt with expiry
-  *     restart" — a live partial discards later viable starts, so it
-  *     UNDERCOUNTS relative to standard MATCH_RECOGNIZE/CEP
-  *     skip-till-next-match WITHIN semantics (v@0, v@span/2,
-  *     p@span+1 counts 0 here, 1 under the standard dialect). That is
-  *     the deliberate price of three-longs-per-key state; a parity
-  *     audit must not read vp_w30 as the standard dialect.
-  *   - windowed × quantified (r18, [[compileQuantified]] with
-  *     `maxSpanUs`): MATCH_RECOGNIZE's `(a b+ c) WITHIN 30m` class —
-  *     the subset DFA under the SAME leftmost-attempt contract.
-  *     `first` is the event that moved the DFA off state 0; every NFA
-  *     start inside the live subset is at or after that event, so a
-  *     counted completion's true span never exceeds `tsu − first ≤
-  *     span` (no overcount), while an expiry kills the whole subset —
-  *     including later, still-viable starts — which is the SAME
-  *     disclosed undercount as the literal windowed tier.
+  *     event time) of state. CAVEAT, keep this visible: this tier is
+  *     NON-BACKTRACKING "leftmost attempt with expiry restart" — a live
+  *     partial discards later viable starts, so it UNDERCOUNTS
+  *     relative to standard MATCH_RECOGNIZE/CEP skip-till-next-match
+  *     WITHIN semantics (v@0, v@span/2, p@span+1 counts 0 here, 1 under
+  *     the standard dialect). That is the deliberate price of
+  *     three-longs-per-key state; a parity audit must not read vp_w30
+  *     as the standard dialect.
+  *   - windowed × quantified ([[compileQuantified]] with `maxSpanUs`):
+  *     MATCH_RECOGNIZE's `(a b+ c) WITHIN 30m` class — the subset DFA
+  *     under the SAME leftmost-attempt contract. `first` is the event
+  *     that moved the DFA off state 0; every NFA start inside the live
+  *     subset is at or after that event, so a counted completion's true
+  *     span never exceeds `tsu − first ≤ span` (no overcount), while an
+  *     expiry kills the whole subset — including later, still-viable
+  *     starts — which is the SAME disclosed undercount as the literal
+  *     windowed tier.
   */
 object PatternMachine {
 
@@ -89,13 +90,13 @@ object PatternMachine {
     "vcp" -> Seq("v", "c", "p"),
     "cv" -> Seq("c", "v"))
 
-  /** The graded within-window span (r15 verdict item 5): a completion
+  /** The graded within-window span: a completion
     * counts only if last − first event ≤ 30 minutes. Strongly
     * discriminating on the fixture (sf0.01: 480 unwindowed vp matches
     * → 20 windowed). */
   val WindowSpanUs: Long = 30L * 60 * 1000000
 
-  /** The windowed-QUANTIFIED arm's span (r18): 24 hours. Chosen from a
+  /** The windowed-QUANTIFIED arm's span: 24 hours. Chosen from a
     * measured span scan on the fixture — a contiguous match covers only
     * ADJACENT events, and adjacent fixture events sit HOURS apart (a
     * month of history per user), so the subsequence tier's 30-minute
@@ -109,28 +110,28 @@ object PatternMachine {
     * funnel `vp_w30` (view→purchase WITHIN 30 minutes), the literal
     * CONTIGUOUS `vv_adj` (two ADJACENT views — deliberately
     * self-overlapping so the KMP border fallback is graded), the
-    * r17 quantified/alternation pair `vvc_q` / `vva_alt`, and the r18
+    * quantified/alternation pair `vvc_q` / `vva_alt`, and the
     * windowed × quantified `vvc_qw`. Both the batch and the streaming
     * query iterate this list. */
   val GradedAll: Seq[(String, Compiled)] =
     Graded.map { case (n, p) => (n, compile(p)) } ++ Seq(
       "vp_w30" -> compile(Seq("v", "p"), maxSpanUs = Some(WindowSpanUs)),
       "vv_adj" -> compile(Seq("v", "v"), contiguous = true),
-      // r17 (r16 verdict item 5): ONE graded QUANTIFIED contiguous
+      // ONE graded QUANTIFIED contiguous
       // pattern — at least two ADJACENT views immediately followed by a
       // click (v{2,}c) — exercising a min-bound ≥ 2 AND an unbounded
       // repeat through the subset-constructed DFA; rides the existing
       // query pair like the other dialects (zero new timed queries)
       "vvc_q" -> compileQuantified(Seq(
         Block("v", 2, None), Block("c", 1, Some(1)))),
-      // r17 stretch: ALTERNATION — exactly two adjacent views then a
+      // ALTERNATION — exactly two adjacent views then a
       // click OR a purchase (v{2}[cp]), exercising a character class
       // through the same subset DFA, including a boundary type ('p')
       // inside a min==1 final class (any boundary match completes
       // instantly, so progress never has to survive a segment close)
       "vva_alt" -> compileQuantified(Seq(
         Block("v", 2, Some(2)), Block("cp", 1, Some(1)))),
-      // r18 (r17 verdict item 4): the WINDOWED × QUANTIFIED combination
+      // the WINDOWED × QUANTIFIED combination
       // — at least two ADJACENT views immediately followed by a click,
       // all within 24 hours (`v{2,}c WITHIN 24h`, MATCH_RECOGNIZE's
       // quantified-pattern-under-a-time-bound class). Same
@@ -151,49 +152,31 @@ object PatternMachine {
   final case class Compiled(steps: IndexedSeq[String], boundary: Set[String],
       maxSpanUs: Option[Long] = None, contiguous: Boolean = false,
       blocks: Option[Seq[Block]] = None) {
-    private val m = steps.length
 
-    /** CONTIGUOUS matching is a DFA with a non-overlapping reset:
-      * alphabet = the pattern's distinct initials (+ one "other"
-      * bucket), `delta(state)(charIdx)` is the transition, and a value
-      * of `delta.length` (the state count — `m` for literal patterns)
-      * encodes a completion. Progress is the DFA state — one long.
+    /** The machine's one transition table: alphabet = the pattern's
+      * distinct initials (+ one "other" column at index `alpha.length`),
+      * `delta(state)(column)` is the next state, and a value of
+      * `delta.length` (the state count) encodes a completion. Progress
+      * is the state — one long.
       *
-      * Literal patterns use the KMP string-matching automaton: a
+      * A SUBSEQUENCE machine's table is direct: a match of `steps(p)`
+      * goes to p+1 (the sentinel `m` when p+1 == m); every other
+      * initial, and the "other" column, keeps p. A CONTIGUOUS machine's
+      * table is [[subsetDfa]] of its blocks — a literal pattern is the
+      * all-{1,1} case, whose subset DFA is the KMP automaton (a
       * mismatch falls back to the longest border instead of naively
-      * restarting (naive restart would miss `vvc` inside `vvvc`; KMP
-      * correctness is what makes the machine equal the regex oracle's
-      * leftmost non-overlapping literal scan). QUANTIFIED patterns
-      * ([[compileQuantified]]) go through [[subsetDfa]] — the general
-      * construction whose literal special case IS the KMP automaton.
-      * Only reachable when `contiguous`. */
+      * restarting, so `vvc` is found inside `vvvc`). */
     private[graft] lazy val (alpha, delta): (IndexedSeq[String], Array[Array[Int]]) =
-      blocks match {
-        case Some(bs) => subsetDfa(bs)
-        case None =>
-          val a = steps.distinct
-          // fail(len): longest proper border of steps[0, len)
-          val fail = new Array[Int](m + 1)
-          var k = 0
-          for (i <- 1 until m) {
-            while (k > 0 && steps(i) != steps(k)) k = fail(k)
-            if (steps(i) == steps(k)) k += 1
-            fail(i + 1) = k
-          }
-          val d = Array.ofDim[Int](m, a.length + 1)
-          for (st <- 0 until m; ci <- 0 until a.length) {
-            var s = st
-            val ch = a(ci)
-            while (s > 0 && ch != steps(s)) s = fail(s)
-            d(st)(ci) = if (ch == steps(s)) s + 1 else 0
-          } // the "other" column (index a.length) stays 0: a non-pattern
-            // char can never sit inside a contiguous match
-          (a, d)
+      if (contiguous) subsetDfa(blocks.getOrElse(steps.map(Block(_, 1, Some(1)))))
+      else {
+        val a = steps.distinct
+        (a, Array.tabulate(steps.length, a.length + 1) { (p, ci) =>
+          if (ci < a.length && a(ci) == steps(p)) p + 1 else p })
       }
     private lazy val alphaIdx: Map[String, Int] = alpha.zipWithIndex.toMap
 
-    /** NFA→DFA subset construction for a QUANTIFIED contiguous pattern,
-      * entirely at compile time (r16 verdict item 5). The NFA is the
+    /** NFA→DFA subset construction for a contiguous pattern, entirely
+      * at compile time. The NFA is the
       * positional automaton of the blocks' expansion into elements
       * (ch, optional, looping): `c{m,n}` → m required + (n−m) optional
       * copies; `c{m,∞}` → m required copies, the last looping (and
@@ -207,8 +190,8 @@ object PatternMachine {
       * earliest match END, scanned non-overlapping, which is the
       * lazy-regex (leftmost-shortest) count the oracle computes.
       * Reachable subsets are few (patterns are 2–6 elements), and the
-      * resulting artifact is the same loop-free nested-array transition
-      * table the literal tier embeds — one long of runtime state. */
+      * result is a loop-free nested-array transition table — one long
+      * of runtime state. */
     private def subsetDfa(bs: Seq[Block])
         : (IndexedSeq[String], Array[Array[Int]]) = {
       // element = (char-CLASS, optional, looping); a length-1 class is
@@ -272,62 +255,33 @@ object PatternMachine {
       * WITHIN-WINDOW semantics (maxSpanUs): a partial whose span is
       * already exceeded when the next event arrives is EXPIRED before
       * that event participates — it can never complete within the
-      * span, and the event may itself start a new attempt. The machine
-      * is deliberately NON-BACKTRACKING: it never revisits older
-      * potential starts (a later first-element occurrence inside a
-      * dead partial is not reconsidered), which is exactly what keeps
-      * state three longs per (key, pattern) at any stream length. The
-      * contract is therefore "leftmost attempt with expiry restart",
-      * pinned identically in all three artifacts (this fold, the SQL
-      * fold, the DuckDB recursive replay) — the fold is the oracle of
-      * record; there is no regex formulation of a time constraint. */
+      * span, and the event may itself start a new attempt. `first` is
+      * the event that moved the machine off state 0; a time-free
+      * machine keeps it 0. The machine is deliberately
+      * NON-BACKTRACKING: it never revisits older potential starts (a
+      * later first-element occurrence inside a dead partial is not
+      * reconsidered), which is exactly what keeps state three longs
+      * per (key, pattern) at any stream length. The contract is
+      * therefore "leftmost attempt with expiry restart", pinned
+      * identically in this fold, [[sqlFold]] and the DuckDB recursive
+      * replay — the fold is the oracle of record; there is no regex
+      * formulation of a time constraint.
+      *
+      * The boundary closes the segment AFTER the event participates: a
+      * boundary type may complete the pattern, but any partial progress
+      * dies with the segment. */
     def stepT(state: (Long, Long, Long), t: String, tsu: Long)
         : (Long, Long, Long) = {
-      if (contiguous) {
-        // WINDOWED × QUANTIFIED (r18): expiry-before-participation on
-        // the DFA, same contract as the subsequence tier below. `first`
-        // = the event that moved the DFA off state 0 (the leftmost
-        // attempt); every NFA start inside the live subset is at or
-        // after it, so a counted completion's true span is ≤ tsu −
-        // first ≤ span (no overcount); the expiry kills the whole
-        // subset — the disclosed non-backtracking undercount.
-        val expired = maxSpanUs.exists(d => state._1 > 0 && tsu - state._3 > d)
-        val p0 = if (expired) 0L else state._1
-        val f0 = if (expired) 0L else state._3
-        val nxt = delta(p0.toInt)(alphaIdx.getOrElse(t, alpha.length))
-        val completed = nxt == delta.length
-        val prog1 = if (completed) 0L else nxt.toLong
-        val n1 = if (completed) state._2 + 1 else state._2
-        // time-free contiguous machines keep first ≡ 0 (their r17
-        // state layout, bit-identical)
-        val first1 =
-          if (maxSpanUs.isEmpty || completed || prog1 == 0L) 0L
-          else if (p0 == 0L) tsu
-          else f0
-        // boundary reset is kept for uniformity but is provably a
-        // no-op here: carried DFA progress consists only of matched
-        // NON-FINAL pattern elements, which compile forbids from being
-        // boundary types (a boundary-containing final class must have
-        // min == 1, so it completes instantly) — progress never spans
-        // a boundary event
-        return if (boundary(t)) (0L, n1, 0L) else (prog1, n1, first1)
-      }
       val expired = maxSpanUs.exists(d => state._1 > 0 && tsu - state._3 > d)
-      val prog = if (expired) 0L else state._1
-      val first = if (expired) 0L else state._3
-      val n = state._2
-      val matched = t == steps(prog.toInt)
-      val completed = matched && prog + 1 == m
-      val prog1 =
-        if (completed) 0L else if (matched) prog + 1 else prog
+      val p0 = if (expired) 0L else state._1
+      val nxt = delta(p0.toInt)(alphaIdx.getOrElse(t, alpha.length))
+      val completed = nxt == delta.length
+      val prog1 = if (completed) 0L else nxt.toLong
+      val n1 = if (completed) state._2 + 1 else state._2
       val first1 =
-        if (completed) 0L
-        else if (matched && prog == 0) tsu
-        else first
-      val n1 = if (completed) n + 1 else n
-      // the boundary closes the segment AFTER the event participates:
-      // a boundary type may be the pattern's final element, but any
-      // partial progress dies with the segment
+        if (maxSpanUs.isEmpty || prog1 == 0L) 0L
+        else if (p0 == 0L) tsu
+        else state._3
       if (boundary(t)) (0L, n1, 0L) else (prog1, n1, first1)
     }
 
@@ -338,18 +292,6 @@ object PatternMachine {
     def runT(state: (Long, Long, Long),
         evs: IterableOnce[(String, Long)]): (Long, Long, Long) =
       evs.iterator.foldLeft(state) { case (st, (t, tsu)) => stepT(st, t, tsu) }
-
-    /** Legacy time-free transition (unwindowed machines only):
-      * state = (progress, matches). */
-    def step(state: (Long, Long), t: String): (Long, Long) = {
-      require(maxSpanUs.isEmpty,
-        "a windowed machine needs event times — use stepT/runT")
-      val r = stepT((state._1, state._2, 0L), t, 0L)
-      (r._1, r._2)
-    }
-
-    def run(state: (Long, Long), ts: IterableOnce[String]): (Long, Long) =
-      ts.iterator.foldLeft(state)(step)
   }
 
   /** Compile a pattern. Only the FINAL element may be a boundary type:
@@ -389,7 +331,7 @@ object PatternMachine {
     * `min == 1`: a mid-pattern (or repeated-final) boundary element
     * would need its own progress to survive the segment close it
     * triggers, a contradiction rejected at compile like the literal
-    * tiers'. `maxSpanUs` (r18) adds the WITHIN-window bound under the
+    * tiers'. `maxSpanUs` adds the WITHIN-window bound under the
     * leftmost-attempt contract (see the tier doc). */
   def compileQuantified(blocks0: Seq[Block],
       boundary: Set[String] = Boundary,
@@ -424,132 +366,48 @@ object PatternMachine {
   private def sqlStr(xs: Iterable[String]): String =
     xs.map(x => s"'$x'").mkString(", ")
 
-  /** The batch form: a Spark SQL `aggregate()` fold over `arr` (an
-    * array column of event-type initials in event-time order) that
-    * computes exactly [[Compiled.run]] from the zero state — row-local
-    * and whole-stage-codegen'd, no UDF. */
-  def sqlFold(pattern: Seq[String], arr: String,
-      boundary: Set[String] = Boundary): String = {
-    val c = compile(pattern, boundary) // validates
-    val m = c.steps.length
-    val stepsArr = s"array(${sqlStr(c.steps)})"
-    val isBoundary = s"t IN (${sqlStr(boundary.toSeq.sorted)})"
-    val matched = s"t = element_at($stepsArr, CAST(st.prog AS INT) + 1)"
-    val completed = s"($matched AND st.prog = ${m - 1}L)"
-    s"""aggregate($arr, named_struct('prog', 0L, 'cnt', 0L),
-       |  (st, t) -> named_struct(
-       |    'prog', IF($isBoundary, 0L,
-       |      IF($completed, 0L, IF($matched, st.prog + 1L, st.prog))),
-       |    'cnt', IF($completed, st.cnt + 1L, st.cnt)),
-       |  st -> st.cnt)""".stripMargin
-  }
-
-  /** The batch form of a WINDOWED machine: a Spark SQL `aggregate()`
-    * fold over `arr` — an array column of structs carrying fields
-    * `t` (event-type initial) and `tsu` (event-time µs) in event-time
-    * order — computing exactly [[Compiled.stepT]] from the zero state.
-    * Row-local and whole-stage-codegen'd, no UDF, like [[sqlFold]];
-    * the state struct adds the in-flight partial's first timestamp. */
-  def sqlFoldSpan(c: Compiled, arr: String): String = {
-    val d = c.maxSpanUs.getOrElse(
-      sys.error("sqlFoldSpan needs a windowed machine"))
-    val m = c.steps.length
-    val stepsArr = s"array(${sqlStr(c.steps)})"
+  /** The batch form: a Spark SQL `aggregate()` fold over `arr` — an
+    * array column of structs carrying `t` (event-type initial) and
+    * `tsu` (event-time µs) in event-time order — computing exactly
+    * [[Compiled.runT]] from the zero state. The transition table is
+    * embedded as a nested array literal indexed by (state, char);
+    * `array_position` maps the initial to its alphabet column. A
+    * time-free machine's expiry term is the literal `false`, which
+    * Catalyst folds away, and its `first` stays 0. Row-local,
+    * whole-stage-codegen'd, no UDF. */
+  def sqlFold(c: Compiled, arr: String): String = {
     val isBoundary = s"e.t IN (${sqlStr(c.boundary.toSeq.sorted)})"
     // no let-bindings in SQL lambdas: the shared subexpressions are
     // inlined by substitution (codegen CSE's them)
-    val expired = s"(st.prog > 0L AND e.tsu - st.first > ${d}L)"
+    val expired = c.maxSpanUs.fold("false")(d =>
+      s"(st.prog > 0L AND e.tsu - st.first > ${d}L)")
     val p0 = s"IF($expired, 0L, st.prog)"
-    val f0 = s"IF($expired, 0L, st.first)"
-    val matched = s"e.t = element_at($stepsArr, CAST($p0 AS INT) + 1)"
-    val completed = s"($matched AND $p0 = ${m - 1}L)"
-    s"""aggregate($arr, named_struct('prog', 0L, 'cnt', 0L, 'first', 0L),
-       |  (st, e) -> named_struct(
-       |    'prog', IF($isBoundary, 0L,
-       |      IF($completed, 0L, IF($matched, $p0 + 1L, $p0))),
-       |    'cnt', IF($completed, st.cnt + 1L, st.cnt),
-       |    'first', IF($isBoundary OR $completed, 0L,
-       |      IF(($matched) AND $p0 = 0L, e.tsu, $f0))),
-       |  st -> st.cnt)""".stripMargin
-  }
-
-  /** The batch form of a CONTIGUOUS machine (literal KMP or
-    * quantified/alternation subset DFA — same artifact): the
-    * precomputed transition table embedded as a nested array literal,
-    * indexed by (state, char) — loop-free (border fallback / NFA
-    * simulation is unrolled into the table at compile time),
-    * row-local, codegen'd. `array_position` maps the event initial to
-    * its alphabet column (1-based; NULL → the "other" column, which
-    * always transitions to 0). A transition value of the state COUNT
-    * (== pattern length for literal machines) encodes completion. */
-  def sqlFoldContig(c: Compiled, arr: String): String = {
-    require(c.contiguous, "sqlFoldContig needs a contiguous machine")
-    val alphaArr = s"array(${sqlStr(c.alpha)})"
     val deltaArr = c.delta
       .map(_.map(v => s"${v}L").mkString("array(", ", ", ")"))
       .mkString("array(", ", ", ")")
-    val isBoundary = s"t IN (${sqlStr(c.boundary.toSeq.sorted)})"
     // Spark's array_position is 1-based and returns 0 (not NULL) when
     // absent → nullif+coalesce maps "other" chars to the last column
-    val idx = s"CAST(coalesce(nullif(array_position($alphaArr, t), 0), " +
-      s"${c.alpha.length + 1}) AS INT)"
-    val nxt = s"element_at(element_at($deltaArr, CAST(st.prog AS INT) + 1), $idx)"
-    // completion sentinel = the DFA state count (== pattern length for
-    // literal tiers, the subset count for quantified ones)
-    val completed = s"($nxt = ${c.delta.length}L)"
-    s"""aggregate($arr, named_struct('prog', 0L, 'cnt', 0L),
-       |  (st, t) -> named_struct(
-       |    'prog', IF($isBoundary, 0L, IF($completed, 0L, $nxt)),
-       |    'cnt', IF($completed, st.cnt + 1L, st.cnt)),
-       |  st -> st.cnt)""".stripMargin
-  }
-
-  /** The batch form of a WINDOWED CONTIGUOUS machine (r18 — the
-    * quantified DFA under a span bound): [[sqlFoldContig]]'s embedded
-    * transition table composed with [[sqlFoldSpan]]'s
-    * expiry-before-participation and first-timestamp tracking —
-    * exactly [[Compiled.stepT]]'s contiguous branch. Row-local,
-    * codegen'd, no UDF. */
-  def sqlFoldContigSpan(c: Compiled, arr: String): String = {
-    require(c.contiguous, "sqlFoldContigSpan needs a contiguous machine")
-    val d = c.maxSpanUs.getOrElse(
-      sys.error("sqlFoldContigSpan needs a windowed machine"))
-    val alphaArr = s"array(${sqlStr(c.alpha)})"
-    val deltaArr = c.delta
-      .map(_.map(v => s"${v}L").mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
-    val isBoundary = s"e.t IN (${sqlStr(c.boundary.toSeq.sorted)})"
-    val expired = s"(st.prog > 0L AND e.tsu - st.first > ${d}L)"
-    val p0 = s"IF($expired, 0L, st.prog)"
-    val f0 = s"IF($expired, 0L, st.first)"
-    val idx = s"CAST(coalesce(nullif(array_position($alphaArr, e.t), 0), " +
+    val idx = s"CAST(coalesce(nullif(array_position(array(${sqlStr(c.alpha)}), e.t), 0), " +
       s"${c.alpha.length + 1}) AS INT)"
     val nxt = s"element_at(element_at($deltaArr, CAST($p0 AS INT) + 1), $idx)"
     val completed = s"($nxt = ${c.delta.length}L)"
+    val prog1 = s"IF($completed, 0L, $nxt)"
+    val first =
+      if (c.maxSpanUs.isEmpty) "0L"
+      else s"IF($isBoundary OR $prog1 = 0L, 0L, IF($p0 = 0L, e.tsu, st.first))"
     s"""aggregate($arr, named_struct('prog', 0L, 'cnt', 0L, 'first', 0L),
        |  (st, e) -> named_struct(
-       |    'prog', IF($isBoundary, 0L, IF($completed, 0L, $nxt)),
+       |    'prog', IF($isBoundary, 0L, $prog1),
        |    'cnt', IF($completed, st.cnt + 1L, st.cnt),
-       |    'first', IF($isBoundary OR $completed OR $nxt = 0L, 0L,
-       |      IF($p0 = 0L, e.tsu, $f0))),
+       |    'first', $first),
        |  st -> st.cnt)""".stripMargin
   }
-
-  /** Dispatch to the right batch-fold artifact for any compiled
-    * machine: `charArr` is the plain initials array (time-free folds),
-    * `structArr` the (tsu, …, t) struct array (windowed folds). */
-  def sqlFoldOf(c: Compiled, charArr: String, structArr: String): String =
-    if (c.maxSpanUs.isDefined && c.contiguous) sqlFoldContigSpan(c, structArr)
-    else if (c.maxSpanUs.isDefined) sqlFoldSpan(c, structArr)
-    else if (c.contiguous) sqlFoldContig(c, charArr)
-    else sqlFold(c.steps, charArr, c.boundary)
 
   /** The DuckDB oracle formulation of a WINDOWED machine: there is no
     * regex for a time constraint, so the independent engine REPLAYS the
     * same transition — a recursive CTE stepping (prog, cnt, first_tsu)
-    * over each user's (ts, event_id)-ordered events (the r15 verdict's
-    * prescribed shape: fold as oracle-of-record, DuckDB replay as the
-    * cross-engine check). Expects a CTE `$ev` with columns (user_id,
+    * over each user's (ts, event_id)-ordered events (fold as
+    * oracle-of-record, DuckDB replay as the cross-engine check). Expects a CTE `$ev` with columns (user_id,
     * tsu, t, i) where i is the per-user 1-based event rank; emits the
     * recursive CTE body for `$rec`. The final per-user count is
     * MAX(cnt) over `$rec` (cnt is monotone in i). */
@@ -562,13 +420,13 @@ object PatternMachine {
     val f0 = s"(CASE WHEN $expired THEN 0 ELSE r.first_tsu END)"
     val (progExpr, cntExpr, firstExpr) =
       if (c.contiguous) {
-        // windowed × quantified (r18): replay the embedded subset-DFA
-        // transition table — stepT's contiguous branch, re-executed by
-        // the independent engine. This DuckDB's list_position returns 0
+        // windowed × quantified: replay the embedded subset-DFA
+        // transition table — stepT's table, re-executed by the
+        // independent engine. This DuckDB's list_position returns 0
         // when absent (same as Spark's array_position — measured, the
         // fuzz tool caught the bare-COALESCE form silently NULLing the
         // state on any non-pattern char) → NULLIF+COALESCE to the
-        // "other" column, the exact sqlFoldContig trick.
+        // "other" column, the same trick as sqlFold.
         val alphaList = s"[${sqlStr(c.alpha)}]"
         val deltaList = c.delta
           .map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -636,7 +494,7 @@ object PatternMachine {
     // class: literal alphanumeric chars, negated classes, lazy
     // quantifiers (*?, +?, {m,n}?). Reject anything that could smuggle
     // a metacharacter past it — general regex semantics are NOT
-    // portable across engines (the r12 lesson that moved pattern
+    // portable across engines (the lesson that moved pattern
     // matching off regexes in the first place).
     require((c.steps ++ c.boundary).forall(_.forall(_.isLetterOrDigit)),
       s"pattern/boundary must be alphanumeric initials: ${c.steps} / ${c.boundary}")

@@ -20,13 +20,6 @@ import org.apache.spark.sql.types._
 object RelOps {
   import Tables._
 
-  /** Exact, engine-portable sum of a double column: round each value to a
-    * fixed decimal scale, sum exactly, emit as double. Decimal addition is
-    * associative, so the result is independent of Spark's partial-agg order
-    * and identical to DuckDB's. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
   private def davg(c: Column, scale: Int = 2): Column =
     (sum(c.cast(DecimalType(18, scale))).cast(DoubleType) /
       count(lit(1)).cast(DoubleType))

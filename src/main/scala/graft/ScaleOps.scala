@@ -15,9 +15,6 @@ import graft.functions.VectorFunctions
 object ScaleOps {
   import Tables._
 
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
   // ------------------------------------------------- salted aggregation
 
   /** Skew-resistant aggregation: event_type has only 5 distinct values, so

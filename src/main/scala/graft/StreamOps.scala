@@ -27,9 +27,6 @@ import org.apache.spark.sql.types._
 object StreamOps {
   import Tables._
 
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
-
   /** Parquet schema of a source path, memoized per (application, path):
     * every readStream needs an explicit schema, and each batch-side
     * `s.read.parquet(...).schema` pays a listing + footer read — pure
@@ -765,14 +762,6 @@ object StreamOps {
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
   // ------------------------------------------------------------- registry
-
-  /** The r14 hard-coded view→purchase transition, kept as the
-    * compiled instance it always was — PatternMachineSpec still pins
-    * it to the brute segment semantics, and since round 15 it is
-    * literally `PatternMachine.compile(Seq("v","p")).step`. */
-  private[graft] def patternStep(state: (Long, Long), t: String): (Long, Long) =
-    patternVP.step(state, t)
-  private lazy val patternVP = PatternMachine.compile(Seq("v", "p"))
 
   /** The per-user CEP processor behind q_stream_pattern, PARAMETERIZED
     * since round 15: one compiled [[PatternMachine]] per graded

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Typed readers for the driver-generated parquet tables
   * (schemas: /root/repo/FIXTURES.md §A). Every graded query reads through
@@ -49,4 +50,11 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** Exact, engine-portable sum of a double column: round each value to a
+    * fixed decimal scale, sum exactly, emit as double. Decimal addition is
+    * associative, so the result is independent of Spark's partial-agg order
+    * and identical to DuckDB's. */
+  def dsum(c: Column, scale: Int = 2): Column =
+    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
 }

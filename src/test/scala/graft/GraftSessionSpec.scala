@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session factory's cpu parse, and a guard that keeps it the only
-  * session builder and keeps `src/main` to its five mains. */
+/** The session factory's cpu parse, and guards that keep it the only
+  * session builder, keep `src/main` to its four mains and keep the
+  * `spark.graft.*` conf keys it reads to a fixed list. */
 class GraftSessionSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
     assert(GraftSession.parseCpus(Some("8")) == 8)
@@ -38,6 +39,17 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     assert(mains.sorted ==
       Seq("Bench", "Explain", "TimeQ", "Verify"))
+  }
+
+  test("src/main reads exactly the five spark.graft conf keys") {
+    // a key is read through a string literal naming it in full; a new
+    // knob has to be added here on purpose
+    val keys = sources("src/main/scala").flatMap { f =>
+      """"spark\.graft\.(\w+)"""".r.findAllMatchIn(Files.readString(f))
+        .map(_.group(1))
+    }.toSet
+    assert(keys == Set("checkpointDir", "reliableCheckpoint", "topkRewrite",
+      "topkRewriteMaxK", "topkRewritePartialRowBudget"))
   }
 
   test("GraftSession is the only session builder in src") {

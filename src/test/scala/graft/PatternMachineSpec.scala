@@ -48,7 +48,7 @@ class PatternMachineSpec extends AnyFunSuite {
   }
 
   private def machine(ts: Seq[String], pattern: Seq[String]): Long =
-    PatternMachine.compile(pattern).run((0L, 0L), ts)._2
+    PatternMachine.compile(pattern).runT((0L, 0L, 0L), ts.map((_, 0L)))._2
 
   private val eventGen: Gen[String] =
     Gen.frequency(4 -> "v", 3 -> "c", 2 -> "p", 1 -> "e", 1 -> "s", 1 -> "x")
@@ -63,8 +63,7 @@ class PatternMachineSpec extends AnyFunSuite {
 
   test("compile(v,p) equals the r14 hard-coded machine and its brute semantics") {
     check("vp-equals-brute", Prop.forAll(seqGen) { ts =>
-      ts.foldLeft((0L, 0L))(StreamOps.patternStep)._2 == bruteMatches(ts) &&
-        machine(ts, Seq("v", "p")) == bruteMatches(ts)
+      machine(ts, Seq("v", "p")) == bruteMatches(ts)
     })
   }
 
@@ -136,9 +135,9 @@ class PatternMachineSpec extends AnyFunSuite {
   }
 
   test("a {1,1}-quantified pattern equals the literal contiguous machine") {
-    // the literal tier is the quantified tier's special case: the
-    // subset DFA of all-{1,1} blocks must count exactly like the KMP
-    // automaton on every sequence
+    // the literal tier is the quantified tier's special case: both
+    // compile entry points must give the same machine, whose all-{1,1}
+    // subset DFA counts like the KMP automaton on every sequence
     check("quant-specializes-to-literal", Prop.forAll(seqGen, patternGen) {
       (ts, pat) =>
         val lit = PatternMachine.compile(pat, contiguous = true)
@@ -511,15 +510,20 @@ class PatternMachineSpec extends AnyFunSuite {
     })
   }
 
-  test("sqlFoldSpan (the windowed batch artifact) equals the machine") {
-    // execution-pinned like the sqlFold test below: the generated
-    // aggregate() lambda runs through real Catalyst/codegen over
-    // random timestamped sequences and must reproduce stepT exactly
+  // the batch artifact, pinned by EXECUTION for every dialect: the
+  // generated aggregate() lambda runs through real Catalyst/codegen over
+  // random timestamped sequences and must reproduce runT exactly — a bug
+  // in the SQL string (IF-nesting, the 1-based element_at /
+  // array_position indexing, quoting) would otherwise hide until the
+  // driver grades fixture data that may not cover the diverging sequence.
+  // One harness; the four tests below feed it one dialect each.
+  private def checkSqlFold(machines: Seq[PatternMachine.Compiled],
+      seed: Long): Unit = {
+    val span = PatternMachine.WindowSpanUs
     val spark = TestSpark.spark
     import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(20260816L)
+    val rnd = new scala.util.Random(seed)
     val alphabet = Vector("v", "c", "p", "e", "s", "x")
-    val span = PatternMachine.WindowSpanUs
     val seqs = (0 until 60).map { i =>
       var tsu = 1000000L
       (i.toLong, (0 until rnd.nextInt(120)).map { j =>
@@ -527,10 +531,6 @@ class PatternMachineSpec extends AnyFunSuite {
         (tsu, j.toLong, alphabet(rnd.nextInt(alphabet.size)))
       })
     }
-    val machines = Seq(
-      PatternMachine.compile(Seq("v", "p"), maxSpanUs = Some(span)),
-      PatternMachine.compile(Seq("v", "c", "p"), maxSpanUs = Some(span)),
-      PatternMachine.compile(Seq("c", "v"), maxSpanUs = Some(span / 7)))
     import org.apache.spark.sql.{types => st}
     val df = spark.createDataFrame(
       seqs.map { case (id, evs) => org.apache.spark.sql.Row(id,
@@ -543,166 +543,64 @@ class PatternMachineSpec extends AnyFunSuite {
           st.StructField("tsu", st.LongType),
           st.StructField("event_id", st.LongType),
           st.StructField("t", st.StringType))))))))
-    val folded = machines.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
-      acc.withColumn(s"n_$i",
+    val folded = df.select(org.apache.spark.sql.functions.col("id") +:
+      machines.zipWithIndex.map { case (c, i) =>
         org.apache.spark.sql.functions.expr(
-          PatternMachine.sqlFoldSpan(c, "evs")))
-    }
+          PatternMachine.sqlFold(c, "evs")).as(s"n_$i") }: _*)
     val got = folded.collect().map(r =>
-      r.getLong(0) -> machines.indices.map(i => r.getLong(2 + i))).toMap
+      r.getLong(0) -> machines.indices.map(i => r.getLong(1 + i))).toMap
     seqs.foreach { case (id, evs) =>
       machines.zipWithIndex.foreach { case (c, i) =>
         val want = c.runT((0L, 0L, 0L), evs.map(e => (e._3, e._1)))._2
         assert(got(id)(i) === want,
-          s"sqlFoldSpan diverged from machine: id=$id steps=${c.steps} " +
-            s"sql=${got(id)(i)} machine=$want")
+          s"sqlFold diverged from machine: id=$id steps=${c.steps} " +
+            s"contiguous=${c.contiguous} span=${c.maxSpanUs} " +
+            s"seq=${evs.map(_._3).mkString} sql=${got(id)(i)} machine=$want")
       }
     }
   }
 
-  test("sqlFoldContigSpan (the windowed-quantified batch artifact) equals the machine") {
-    // execution-pinned: the embedded DFA literal + expiry/first logic
-    // runs through real Catalyst/codegen over random timestamped
-    // sequences and must reproduce stepT's contiguous-windowed branch
-    val spark = TestSpark.spark
-    import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(20260818L)
-    val alphabet = Vector("v", "c", "p", "e", "s", "x")
-    val span = PatternMachine.WindowSpanUs
-    val seqs = (0 until 60).map { i =>
-      var tsu = 1000000L
-      (i.toLong, (0 until rnd.nextInt(120)).map { j =>
-        tsu += (if (rnd.nextInt(6) == 0) 0L else rnd.nextLong(2 * span))
-        (tsu, j.toLong, alphabet(rnd.nextInt(alphabet.size)))
-      })
-    }
-    val machines = Seq(
-      PatternMachine.GradedAll.collectFirst { case ("vvc_qw", c) => c }.get,
-      PatternMachine.compileQuantified(Seq(
-        PatternMachine.Block("v", 1, Some(2)), PatternMachine.Block("c", 1, Some(1))),
-        maxSpanUs = Some(span / 7)),
-      PatternMachine.compileQuantified(Seq(
-        PatternMachine.Block("v", 1, Some(1)), PatternMachine.Block("c", 0, Some(1)),
-        PatternMachine.Block("v", 1, Some(1))), maxSpanUs = Some(span)))
-    import org.apache.spark.sql.{types => st}
-    val df = spark.createDataFrame(
-      seqs.map { case (id, evs) => org.apache.spark.sql.Row(id,
-        evs.map { case (tsu, eid, t) =>
-          org.apache.spark.sql.Row(tsu, eid, t) }.toArray)
-      }.asJava,
-      st.StructType(Seq(
-        st.StructField("id", st.LongType),
-        st.StructField("evs", st.ArrayType(st.StructType(Seq(
-          st.StructField("tsu", st.LongType),
-          st.StructField("event_id", st.LongType),
-          st.StructField("t", st.StringType))))))))
-    val folded = machines.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
-      acc.withColumn(s"n_$i",
-        org.apache.spark.sql.functions.expr(
-          PatternMachine.sqlFoldContigSpan(c, "evs")))
-    }
-    val got = folded.collect().map(r =>
-      r.getLong(0) -> machines.indices.map(i => r.getLong(2 + i))).toMap
-    seqs.foreach { case (id, evs) =>
-      machines.zipWithIndex.foreach { case (c, i) =>
-        val want = c.runT((0L, 0L, 0L), evs.map(e => (e._3, e._1)))._2
-        assert(got(id)(i) === want,
-          s"sqlFoldContigSpan diverged from machine: id=$id steps=${c.steps} " +
-            s"sql=${got(id)(i)} machine=$want")
-      }
-    }
-  }
+  private val vvOptC = Seq(PatternMachine.Block("v", 1, Some(2)),
+    PatternMachine.Block("c", 1, Some(1)))
+  private val vOptCv = Seq(PatternMachine.Block("v", 1, Some(1)),
+    PatternMachine.Block("c", 0, Some(1)), PatternMachine.Block("v", 1, Some(1)))
 
   test("sqlFold (the batch query's executed artifact) equals the machine") {
-    // the third compiled artifact, pinned by EXECUTION: the generated
-    // aggregate() lambda runs through real Catalyst/codegen over random
-    // sequences and must reproduce the machine fold exactly — a bug in
-    // the SQL string (IF-nesting, element_at indexing, quoting) would
-    // otherwise hide until the driver grades fixture data that may not
-    // cover the diverging sequence
-    val spark = TestSpark.spark
-    import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(20260815L)
-    val alphabet = Vector("v", "c", "p", "e", "s", "x")
-    val seqs = (0 until 60).map { i =>
-      (i.toLong, (0 until rnd.nextInt(120)).map(_ =>
-        alphabet(rnd.nextInt(alphabet.size))))
-    }
-    val patterns = PatternMachine.Graded.map(_._2) ++
-      Seq(Seq("v", "v", "p"), Seq("x", "c"), Seq("c", "x", "v", "p"))
-    val df = spark.createDataFrame(
-      seqs.map { case (id, ts) => org.apache.spark.sql.Row(id, ts.toArray) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts_chars",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StringType)))))
-    val folded = patterns.zipWithIndex.foldLeft(df) { case (acc, (pat, i)) =>
-      acc.withColumn(s"n_$i",
-        org.apache.spark.sql.functions.expr(
-          PatternMachine.sqlFold(pat, "ts_chars")))
-    }
-    val got = folded.collect().map(r =>
-      r.getLong(0) -> patterns.indices.map(i => r.getLong(2 + i))).toMap
-    seqs.foreach { case (id, ts) =>
-      patterns.zipWithIndex.foreach { case (pat, i) =>
-        val want = PatternMachine.compile(pat).run((0L, 0L), ts)._2
-        assert(got(id)(i) === want,
-          s"sqlFold diverged from machine: id=$id pattern=$pat " +
-            s"seq=${ts.mkString} sql=${got(id)(i)} machine=$want")
-      }
-    }
+    // time-free subsequence machines, plus every graded machine
+    checkSqlFold((PatternMachine.Graded.map(_._2) ++
+      Seq(Seq("v", "v", "p"), Seq("x", "c"), Seq("c", "x", "v", "p")))
+      .map(PatternMachine.compile(_)) ++ PatternMachine.GradedAll.map(_._2),
+      20260815L)
+  }
+
+  test("sqlFoldSpan (the windowed batch artifact) equals the machine") {
+    // windowed subsequence machines (the dialect's former name)
+    val span = PatternMachine.WindowSpanUs
+    checkSqlFold(Seq(
+      PatternMachine.compile(Seq("v", "p"), maxSpanUs = Some(span)),
+      PatternMachine.compile(Seq("v", "c", "p"), maxSpanUs = Some(span)),
+      PatternMachine.compile(Seq("c", "v"), maxSpanUs = Some(span / 7))),
+      20260816L)
   }
 
   test("sqlFoldContig (the contiguous batch artifact) equals the machine") {
-    // execution-pinned: the embedded KMP DFA literal runs through real
-    // Catalyst/codegen over random sequences and must reproduce the
-    // automaton exactly (an off-by-one in the 1-based element_at /
-    // array_position indexing would hide until fixture data hit it)
-    val spark = TestSpark.spark
-    import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(20260817L)
-    val alphabet = Vector("v", "c", "p", "e", "s", "x")
-    val seqs = (0 until 60).map { i =>
-      (i.toLong, (0 until rnd.nextInt(120)).map(_ =>
-        alphabet(rnd.nextInt(alphabet.size))))
-    }
-    val machines = Seq(Seq("v", "v"), Seq("v", "v", "c"), Seq("c", "v"),
-      Seq("v", "c", "v", "p"))
-      .map(p => PatternMachine.compile(p, contiguous = true)) ++ Seq(
-      // quantified tier: the graded patterns plus bounded/optional
-      // shapes (their subset-DFA literals must survive Catalyst/codegen)
-      PatternMachine.GradedAll.collectFirst { case ("vvc_q", c) => c }.get,
-      PatternMachine.GradedAll.collectFirst { case ("vva_alt", c) => c }.get,
-      PatternMachine.compileQuantified(Seq(
-        PatternMachine.Block("v", 1, Some(2)), PatternMachine.Block("c", 1, Some(1)))),
-      PatternMachine.compileQuantified(Seq(
-        PatternMachine.Block("v", 1, Some(1)), PatternMachine.Block("c", 0, Some(1)),
-        PatternMachine.Block("v", 1, Some(1)))))
-    val df = spark.createDataFrame(
-      seqs.map { case (id, ts) => org.apache.spark.sql.Row(id, ts.toArray) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts_chars",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StringType)))))
-    val folded = machines.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
-      acc.withColumn(s"n_$i",
-        org.apache.spark.sql.functions.expr(
-          PatternMachine.sqlFoldContig(c, "ts_chars")))
-    }
-    val got = folded.collect().map(r =>
-      r.getLong(0) -> machines.indices.map(i => r.getLong(2 + i))).toMap
-    seqs.foreach { case (id, ts) =>
-      machines.zipWithIndex.foreach { case (c, i) =>
-        val want = c.runT((0L, 0L, 0L), ts.map((_, 0L)))._2
-        assert(got(id)(i) === want,
-          s"sqlFoldContig diverged: id=$id steps=${c.steps} " +
-            s"seq=${ts.mkString} sql=${got(id)(i)} machine=$want")
-      }
-    }
+    // time-free contiguous literals and quantified machines: their
+    // subset-DFA literals must survive Catalyst/codegen
+    checkSqlFold(Seq(Seq("v", "v"), Seq("v", "v", "c"), Seq("c", "v"),
+      Seq("v", "c", "v", "p")).map(PatternMachine.compile(_, contiguous = true)) ++
+      Seq(PatternMachine.compileQuantified(vvOptC),
+        PatternMachine.compileQuantified(vOptCv)),
+      20260817L)
+  }
+
+  test("sqlFoldContigSpan (the windowed-quantified batch artifact) equals the machine") {
+    // windowed quantified machines: the table plus the expiry and
+    // first-timestamp terms
+    val span = PatternMachine.WindowSpanUs
+    checkSqlFold(Seq(
+      PatternMachine.compileQuantified(vvOptC, maxSpanUs = Some(span / 7)),
+      PatternMachine.compileQuantified(vOptCv, maxSpanUs = Some(span))),
+      20260818L)
   }
 
   test("compiler rejects mid-pattern boundary types") {
@@ -714,7 +612,7 @@ class PatternMachineSpec extends AnyFunSuite {
   }
 
   test("known vignettes") {
-    def n(ts: Seq[String]) = ts.foldLeft((0L, 0L))(StreamOps.patternStep)._2
+    def n(ts: Seq[String]) = machine(ts, Seq("v", "p"))
     // v p → match; p v → no match (v lands after the boundary p);
     // v e p → no match (error closes the flagged segment);
     // v p v p → two matches; c/x never affect anything
