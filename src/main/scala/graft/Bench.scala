@@ -1,13 +1,21 @@
 package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.Locale.ROOT
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics.{METRIC_COMPILATION_TIME => compiles}
+
 object Bench {
   // UNTIMED-BUT-VERIFIED set: queries Verify still dumps and the DuckDB
-  // oracle still grades every round, but the TIMED fleet omits because
+  // oracle still grades every run, but the TIMED fleet omits because
   // each is the batch-shaped twin of a live streaming query that grades
-  // the SAME operator shape through the real engine (both sides green
-  // since r4-r6). The bench's job is to price each distinct operator
-  // once; pricing the cheap batch shadow of an already-timed live
-  // operator twice buys no signal. The list is printed to stderr and
-  // into the JSON line so the composition is auditable, never silent.
+  // the SAME operator shape through the real engine. The bench's job is
+  // to price each distinct operator once; pricing the cheap batch shadow
+  // of an already-timed live operator twice buys no signal. The list is
+  // printed to stderr and into the bench files so the composition is
+  // auditable, never silent.
   // Object-level (not main-local) so PublishedAnswerSpec can pin the
   // first-consumer invariant against it.
   private[graft] val untimed = Map(
@@ -41,18 +49,14 @@ object Bench {
       "cross-join + window shape runs timed inside q_sim_ann_recall's " +
       "single-pass truth builder; the ANN family is the scale path"))
 
-  def main(args: Array[String]): Unit = {
-    Scratch.init() // RAM-backed staging/checkpoint/spill (SCALE.md)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.envCpus
-    val spark = GraftSession(cpus)
-    // untimed JVM/scheduler/codegen warmup (no table IO — that stays timed)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // untimed STREAMING-ENGINE warmup, same rule (no table IO): the first
-    // stream start pays one-time engine costs — StreamExecution/state-store
-    // class loading, micro-batch planner JIT — that are identical for every
-    // live query; a throwaway MemoryStream windowed aggregation absorbs
-    // them so the graded readStream queries time their own work
+  def main(args: Array[String]): Unit = Runner.run { (spark, env) =>
+    val sfDir = env.sfDir
+    // untimed STREAMING-ENGINE warmup (no table IO, which stays timed): the
+    // first stream start pays one-time engine costs — StreamExecution and
+    // state-store class loading, micro-batch planner JIT — that are the
+    // same for every live query; a throwaway MemoryStream windowed
+    // aggregation absorbs them so the graded readStream queries time their
+    // own work
     try {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
@@ -70,260 +74,142 @@ object Bench {
       try q.processAllAvailable() finally q.stop()
       spark.sql("DROP VIEW IF EXISTS graft_bench_warmup")
     } catch { case _: Throwable => () }
-    // untimed STEADY-STATE warmup (SPARK_GRAFT_WARMUP=off to disable): run
-    // the whole fleet once against the TINY sf0.001 tables before timing
-    // anything. This compiles the ~1k generated wholestage/expression
-    // classes (measured 13.3 s of janino at r8 HEAD) and JITs the
-    // scheduler paths, so the timed sf0.1 loop measures the ENGINE's
-    // per-query cost, not one-shot JVM compilation — the same
-    // steady-state-measurement rule JMH applies, and the same rule the
-    // streaming warmup above already established. Integrity line: the
-    // warmup runs on a DIFFERENT, 100×-smaller dataset — no graded sf0.1
-    // table is read, no graded result is precomputed, and every timed
-    // query still does all of its own IO and compute at sf0.1.
     untimed.foreach { case (k, why) =>
       require(SparkEntry.queries.contains(k),
         s"untimed entry $k is not a declared query")
       System.err.println(s"[bench] untimed (verified elsewhere): $k — $why")
     }
-    // compile-count snapshot BEFORE the fleet warmup: the delta to the
-    // post-warmup snapshot is how many one-shot compilations the warmup
-    // absorbed, which feeds the warmup-off estimate printed at the end
-    val cgmPre = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "on") != "off") {
-      val wDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
-        java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString)
-      val sameAsTimed =
-        try java.nio.file.Files.isSameFile(java.nio.file.Paths.get(wDir),
-          java.nio.file.Paths.get(sfDir))
-        catch { case _: Throwable => wDir == sfDir }
-      if (sameAsTimed) {
-        // refuse, loudly: warming up ON the graded dataset would violate
-        // the integrity line above (it pre-reads the timed tables into
-        // the page cache) — possible when the timed run is itself
-        // sf0.001 or SPARK_GRAFT_WARMUP_DIR points at the graded dir
-        System.err.println(s"[bench] WARMUP REFUSED: warmup dir $wDir " +
-          s"is the timed dataset — timed totals will include one-shot " +
-          "codegen cost")
-      } else if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(wDir))) {
-        // untimed queries skip the warmup too: their codegen shapes warm
-        // nothing the timed fleet runs, and the streaming twin costs a
-        // real engine start — pure wasted (if untimed) wall-clock
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .filterNot { case (name, _) => untimed.contains(name) }
-          .foreach { case (name, fn) =>
-          try { fn(spark, wDir).count() } catch {
-            case t: Throwable =>
-              System.err.println(s"[bench] warmup $name failed: $t")
-          }
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      } else {
-        // LOUD skip: without the warmup the totals include ~13 s of
-        // one-shot codegen + cold-start attribution — a silent skip
-        // reads as an engine regression (this repo has mis-attributed
-        // exactly that before)
-        System.err.println(s"[bench] WARMUP SKIPPED: $wDir is not a " +
-          "directory — timed totals will include one-shot codegen cost")
-      }
-    }
-    // snapshot AFTER warmup so the end-of-run diagnostic describes the
-    // TIMED loop's compilations, not the ~1k the warmup already absorbed.
-    // The reservoir mean is captured HERE, while it is dominated by the
-    // warmup's own compilations — representative for estimating what the
-    // warmup absorbed, NOT for pricing the few timed-loop compiles (that
-    // biased estimate was printed through r8 and is now dropped)
-    val cgm0 = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
-    val warmupMeanMs = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getSnapshot.getMean
     // sorted order: deterministic run-to-run (Map iteration order shifts
     // whenever a key is added) and family-local (q_sim_ann_*, q_text_*, …
-    // run adjacently, so their shared compiled shapes stay hot)
-    // NOTE: no inter-query System.gc() — tried and reverted. A G1 full
-    // collection resets young-gen ergonomics to the minimum, so every
-    // query after it runs against a tiny eden until the heuristics
-    // re-adapt: measured as a uniform ~1.3-1.8x inflation of the whole
-    // fleet, far worse than the occasional organic old-gen pause it was
-    // meant to prevent.
-    val fleet = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => untimed.contains(name) }
-    def timeFleet(): Seq[(String, Double)] = fleet.map { case (name, fn) =>
-      SharedStage.consumerLabel = name // first-consumer staging attribution
-      val t0 = System.nanoTime()
-      // a failed query still records its timing (the fleet total must not
-      // silently shrink) but is LOUD on stderr — a regression should show
-      // up here, not only in the correctness gate
-      try { fn(spark, sfDir).count() } catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] QUERY FAILED $name: $t")
-          -1L
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // free this query's localCheckpoint blocks: the fleet shares one JVM,
-      // and leaked checkpoint storage compounds into GC pressure that
-      // uniformly inflates every later query (the r4 ~1.3× drift)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      name -> dt
+    // run adjacently, so their shared compiled shapes stay hot).
+    // PublishedAnswerSpec relies on this order. No System.gc() between
+    // queries: a G1 full collection resets young-gen ergonomics to the
+    // minimum, measured as a uniform ~1.3-1.8x inflation of the fleet.
+    val fleet = Runner.named(
+      SparkEntry.queries.keys.toSeq.sorted.filterNot(untimed.contains))
+    // untimed STEADY-STATE warmup (SPARK_GRAFT_WARMUP_DIR=off disables it):
+    // run the timed fleet once against the TINY sf0.001 tables first. This
+    // compiles the ~1k generated wholestage/expression classes and JITs
+    // the scheduler paths, so the timed loop measures the engine's
+    // per-query cost, not one-shot JVM compilation — the steady-state rule
+    // JMH applies. Integrity line: the warmup runs on a DIFFERENT,
+    // 100×-smaller dataset, so no graded table is read and no graded
+    // result is precomputed. The untimed queries skip it: their shapes
+    // warm nothing the timed fleet runs.
+    val cgmPre = compiles.getCount
+    env.warmupDir.foreach { wDir =>
+      if (try Files.isSameFile(Paths.get(wDir), Paths.get(sfDir))
+          catch { case _: Throwable => wDir == sfDir })
+        // refuse, loudly: warming up ON the graded dataset would break the
+        // integrity line (it pre-reads the timed tables into the page cache)
+        System.err.println(s"[bench] WARMUP REFUSED: warmup dir $wDir " +
+          "is the timed dataset — timed totals will include one-shot codegen cost")
+      else if (Files.isDirectory(Paths.get(wDir)))
+        Runner.loop(spark, wDir, fleet, n => s"[bench] warmup $n failed")(
+          (_, df) => df.count())
+      else // loud: a silent skip reads as an engine regression
+        System.err.println(s"[bench] WARMUP SKIPPED: $wDir is not a " +
+          "directory — timed totals will include one-shot codegen cost")
     }
-    // DUAL METHODOLOGY (r15 verdict item 1 — the graded driver number
-    // has been set by co-tenant spikes three rounds running, ±20%
-    // measured on identical code): the fleet runs SPARK_GRAFT_BENCH_REPS
-    // times (default 2) and the line reports BOTH totals side by side —
-    //   value / queries  = the FIRST pass, the same single-pass
-    //                      methodology every prior round graded
-    //                      (nothing is silently replaced);
-    //   total_steady_s / queries_steady = per-query MIN across reps —
-    //                      the JMH steady-state view that a transient
-    //                      co-tenant spike cannot inflate (a spike can
-    //                      only ever ADD time to a pass, so the min is
-    //                      the best available estimate of the engine's
-    //                      own cost; it still contains all of the
-    //                      query's real IO + compute).
-    // Two disclosed caveats, both pinned by specs: the published-answer
-    // ANN queries serve a staged ≤30-row read after their first call,
-    // so their steady entry is PINNED to the first pass (set below,
-    // locked by PublishedAnswerSpec); and rep 2+ reuses session-scoped
-    // SharedStage staging (trained codebooks, staged stream sources) —
-    // the build-once/serve-many split, disclosed here, identical to how
-    // a warmed production service amortizes offline builds. For a few
-    // queries that shared midpoint dominates the first pass (e.g. the
-    // connected-components labels under q_dedup_components), so their
-    // steady entry is mostly the serve path — the single-pass `queries`
-    // map remains the full-cost, graded record of every query.
-    // default 3 since r17 (r16 verdict item 2): with 2 reps the min gets
-    // one chance to dodge a co-tenant spike; min-of-3 is meaningfully
-    // more spike-robust and the wall budget below still bounds the cost.
-    // The rep count actually run is disclosed as bench_reps either way.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // wall budget for the TIMED loops (not warmup): on a hot co-tenant
-    // day a 2-rep run could stretch a driver-side timeout we don't
-    // control — losing the whole BENCH artifact. If the loops have
-    // already burned the budget, skip the remaining steady reps LOUDLY
-    // and report the rep count actually run (the single-pass graded
-    // number is complete after rep 1 either way).
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "300").toInt
+    // snapshot AFTER warmup so the end-of-run diagnostic describes the
+    // timed loop's compilations. The reservoir mean is taken HERE, while
+    // the warmup's own compilations dominate it: representative for what
+    // the warmup absorbed, not for pricing the few timed-loop compiles.
+    val cgm0 = compiles.getCount
+    val warmupMeanMs = compiles.getSnapshot.getMean
+    // TWO METHODOLOGIES (single passes vary ±20% on identical code under
+    // co-tenant load): the fleet runs SPARK_GRAFT_REPS times (default 3)
+    // and the line reports both totals side by side —
+    //   value / queries  = the FIRST pass, the graded single-pass number;
+    //   total_steady_s / queries_steady = per-query MIN across reps, the
+    //                      JMH steady-state view: a spike can only ADD
+    //                      time to a pass, and the min still holds all
+    //                      of the query's real IO + compute.
+    // Reps 2+ reuse session-scoped SharedStage staging (codebooks, staged
+    // stream sources), the build-once/serve-many split a warmed service
+    // has, so for a few queries the steady entry is mostly the serve path;
+    // `queries` stays the full-cost record. Past the wall budget (a hot
+    // day must not stretch a timeout we don't control and lose the whole
+    // record) the remaining steady reps are skipped LOUDLY, and bench_reps
+    // reports the reps actually run.
     val loopStart = System.nanoTime()
-    val runs = (1 to reps).flatMap { r =>
+    val runs = (1 to env.reps).flatMap { r =>
       val elapsed = (System.nanoTime() - loopStart) / 1e9
-      if (r > 1 && elapsed > budgetS) {
-        System.err.println(f"[bench] BUDGET: skipping steady rep $r/$reps " +
-          f"($elapsed%.0f s of timed loops > $budgetS s) — " +
+      if (r > 1 && elapsed > env.budgetS) {
+        System.err.println(f"[bench] BUDGET: skipping steady rep $r/${env.reps} " +
+          f"($elapsed%.0f s of timed loops > ${env.budgetS} s) — " +
           "steady totals degrade toward the single pass, never silently")
         None
       } else {
-        if (r > 1) System.err.println(s"[bench] steady-state rep $r/$reps")
-        Some(timeFleet().toMap)
+        if (r > 1) System.err.println(s"[bench] steady-state rep $r/${env.reps}")
+        // a failed query still records its time (the total must not
+        // silently shrink) and is loud on stderr
+        Some(Runner.loop(spark, sfDir, fleet, n => s"[bench] QUERY FAILED $n")(
+          (_, df) => df.count()).toMap)
       }
     }
-    val repsRun = runs.size
     val results = fleet.map { case (name, _) => name -> runs.head(name) }
-    // pinned to FIRST-pass time: the published-answer serving queries
-    // (rep 2 reads a staged ≤30-row parquet) AND the recall scorecard —
-    // q_sim_ann_prefix is untimed, so the scorecard's rep 1 is the
-    // prefix pipeline's first consumer and pays its build; letting
-    // min() pick rep 2 would silently drop that pipeline from the
-    // steady total (the exact leak PublishedAnswerSpec polices).
-    // MAINTENANCE RULE (r16 ADVICE): any NEW SharedStage consumer must be
-    // evaluated here — pin it if its reps 2+ serve a staged ANSWER
-    // (nothing of the operator runs), leave it unpinned if later reps
-    // still execute the operator against staged INPUTS (the disclosed
-    // build-once/serve-many split). Evaluated r17 for every new
-    // SharedStage consumer: ANN index family UNPINNED (every rep
-    // re-clones its table and runs the full probe + maintenance verb;
-    // only the base-table write is first-consumer); zorder UNPINNED
-    // (reps run the real stats-pruned scan + aggregation — the layout's
-    // serving half); merge_overwrite / maintenance_compact / merge_scd2
-    // UNPINNED (reps re-clone and run their full mutation verbs);
-    // join_bucketed UNPINNED (reps run the real shuffle-free bucket
-    // join — the amortized layout's whole point). Evaluated r19 for the
-    // new rot-arm stages (ann_rotcb / ann_rotcodes): their consumer
-    // q_sim_ann_recall is ALREADY pinned to its first pass, which is
-    // exactly where the build lands — nothing new to pin.
+    // pinned to the FIRST pass: the published-answer queries (reps 2+ read
+    // a staged ≤30-row parquet) and the recall scorecard (q_sim_ann_prefix
+    // is untimed, so the scorecard's first pass pays the prefix build and a
+    // min over reps would drop it; PublishedAnswerSpec polices this). Any
+    // NEW SharedStage consumer must be judged here: pin it if its reps 2+
+    // serve a staged ANSWER, leave it unpinned if they still run the
+    // operator against staged INPUTS (the ANN index family, zorder, the
+    // merge/maintenance verbs and join_bucketed all do).
     val steadyPinned = AnnOps.publishedAnswerQueries + "q_sim_ann_recall"
     val steady = fleet.map { case (name, _) =>
       name -> (if (steadyPinned(name)) runs.head(name)
                else runs.map(_(name)).min)
     }
-    // 3-decimal timings: the full-precision line was ~3.5 KB and the
-    // driver's r4/r5 log-tail captures truncated its head (BENCH_r05
-    // "parsed": null); millisecond resolution keeps the line well inside
-    // the tail window without losing anything a ±15%-noisy bench can use
+    // millisecond resolution keeps the line inside the driver's log tail
     def jmap(xs: Seq[(String, Double)]): String = xs.map { case (k, v) =>
-      "\"%s\":%.3f".formatLocal(java.util.Locale.ROOT, k, v)
+      "\"%s\":%.3f".formatLocal(ROOT, k, v)
     }.mkString("{", ",", "}")
-    val qs = jmap(results)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val steadyTotal = if (steady.nonEmpty) steady.map(_._2).sum else 0.0
-    // diagnostics (stderr, not part of the JSON contract).
-    // 1) timed-loop compile COUNT only — the per-compile ms estimate that
-    //    was printed through r8 multiplied this count by the reservoir
-    //    mean, which is dominated by the ~1k warmup compilations, so it
-    //    systematically mis-priced the handful of timed compiles; count
-    //    alone is the honest number (pair it with TimeQ to price one).
-    // 2) warmup-off estimate — the auditable second methodology: timed
-    //    total PLUS the compile time the warmup absorbed. For THAT term
-    //    the warmup-dominated reservoir mean is the representative price,
-    //    so count × mean is the right estimator there. ~ because the
-    //    reservoir samples; cross-check is a real SPARK_GRAFT_WARMUP=off
-    //    run (r8 measured ~77 s vs ~71.6 s warm at 110-114 queries).
-    val cgm = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    val timedCompiles = cgm.getCount - cgm0
+    val total = results.map(_._2).sum
+    val steadyTotal = steady.map(_._2).sum
+    // diagnostics on stderr, not part of the JSON contract: the timed-loop
+    // compile COUNT (pair it with TimeQ to price one), and the warmup-off
+    // estimate, the timed total PLUS the compile time the warmup absorbed
+    // (count × the warmup-dominated mean; ~ because the reservoir samples,
+    // cross-checked by a real SPARK_GRAFT_WARMUP_DIR=off run)
     val warmupCompiles = cgm0 - cgmPre
     val warmupCompileS = warmupCompiles * warmupMeanMs / 1000.0
-    System.err.println("[bench] codegen timed-loop compiles=" + timedCompiles +
-      " (jvm total=" + cgm.getCount + ")")
+    System.err.println("[bench] codegen timed-loop compiles=" +
+      (compiles.getCount - cgm0) + " (jvm total=" + compiles.getCount + ")")
     System.err.println(
       f"[bench] ~warmupOff_total_s=${total + warmupCompileS}%.1f " +
         f"(timed=$total%.1f + warmup-absorbed $warmupCompiles compiles " +
         f"~$warmupCompileS%.1f s)")
-    val untimedJson = untimed.keys.toSeq.sorted
-      .map(k => s""""$k"""").mkString("[", ",", "]")
-    // first-consumer staging disclosure (r17 verdict item 3): every
-    // SharedStage build that ran against the TIMED dataset, with its
-    // wall seconds and the query whose pass-1 timing absorbed it.
-    // Nested stages itemize inside their outer stage's figure (see
-    // SharedStage.buildLog) — this names where pass-1 surcharges land;
-    // the single-pass `value` methodology is untouched.
-    import scala.jdk.CollectionConverters._
+    // first-consumer staging: every SharedStage build that ran against the
+    // timed dataset, with its wall seconds and the query whose first pass
+    // absorbed it (nested stages itemize inside their outer stage's figure)
     val stagingJson = SharedStage.buildLog.asScala.toSeq
       .collect { case ((dir, stage), (secs, q)) if dir == sfDir =>
-        """"%s":[%.3f,"%s"]""".formatLocal(java.util.Locale.ROOT,
-          stage, secs, q)
+        """"%s":[%.3f,"%s"]""".formatLocal(ROOT, stage, secs, q)
       }.sorted.mkString("{", ",", "}")
-    // LEAN stdout line (r19 verdict item 2): machine fields only —
-    // value / total_steady_s / bench_reps / cpus / queries /
-    // queries_steady / staging / sf. The static untimed list lives in the
-    // file artifacts + stderr.
     val line =
       ("""{"metric":"total","value":%.3f,"unit":"sec",""" +
         """"total_steady_s":%.3f,"bench_reps":%d,"cpus":%d,"queries":%s,""" +
         """"queries_steady":%s,"staging":%s,"sf":"%s"}""")
-        .formatLocal(java.util.Locale.ROOT, total, steadyTotal, repsRun,
-          cpus, qs, jmap(steady), stagingJson, sfDir)
+        .formatLocal(ROOT, total, steadyTotal, runs.size,
+          env.cpus, jmap(results), jmap(steady), stagingJson, sfDir)
     println(line)
-    // second, SHORT total line: the driver's log-tail window clipped the
-    // big per-query JSON line in 4 of 7 rounds ("parsed": null) — a
-    // trailing one-field line always survives the tail capture
+    // a second, SHORT total line: the driver's log tail has clipped the
+    // long line's head before, and a one-field line always survives it
     println("""{"total_s":%.3f,"total_steady_s":%.3f}"""
-      .formatLocal(java.util.Locale.ROOT, total, steadyTotal))
-    // land the FULL record (lean line fields + untimed list) in
-    // files: target/bench.json (the driver's known lossless fallback,
-    // kept) AND target/bench_c<cpus>.json (NEW, r19 verdict item 2: the
-    // driver's second, lower-cpus scaling run used to overwrite
-    // bench.json and destroy the main run's per-query record — the
-    // per-cpus name keeps both runs' artifacts)
-    val fileLine = line.dropRight(1) +
-      s""","untimed_verified":$untimedJson}"""
+      .formatLocal(ROOT, total, steadyTotal))
+    // the full record (line fields + the untimed list) in files:
+    // target/bench.json, the driver's lossless fallback, and
+    // target/bench_c<cpus>.json, so a second run at fewer cpus keeps the
+    // first run's record
+    val fileLine = line.dropRight(1) + untimed.keys.toSeq.sorted
+      .map(k => s""""$k"""").mkString(""","untimed_verified":[""", ",", "]}")
     try {
-      val out = java.nio.file.Paths.get("target/bench.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, fileLine + "\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"target/bench_c$cpus.json"), fileLine + "\n")
+      val out = Paths.get("target/bench.json")
+      Files.createDirectories(out.getParent)
+      Files.writeString(out, fileLine + "\n")
+      Files.writeString(Paths.get(s"target/bench_c${env.cpus}.json"), fileLine + "\n")
     } catch { case _: Throwable => () }
-    spark.stop()
   }
 }

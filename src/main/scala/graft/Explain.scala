@@ -4,16 +4,13 @@ package graft
   * default) so plan quality — pushdown, pruning, join strategy, codegen
   * spans — can be reviewed. Usage: runMain graft.Explain [sfDir] [q...] */
 object Explain {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+  def main(args: Array[String]): Unit = Runner.run { (spark, _) =>
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession()
-    names.foreach { n =>
+    Runner.loop(spark, args.headOption.getOrElse("/root/testdata/sf0.01"),
+      Runner.named(names), n => s"[explain] $n failed") { (n, df) =>
       println(s"\n===================== $n =====================")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      df.explain("formatted")
     }
-    spark.stop()
   }
 }

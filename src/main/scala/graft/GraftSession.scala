@@ -1,19 +1,26 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one way to build a session: every main and the test suite get the
   * configuration Bench measures. */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS`, or every available processor when it is unset. */
-  def envCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+  def envCpus: Int = envInt("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
 
-  private[graft] def parseCpus(v: Option[String]): Int = v match {
-    case None => Runtime.getRuntime.availableProcessors
-    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
-  }
+  /** The environment variable `name` as a positive Int, `default` when unset. */
+  private[graft] def envInt(name: String, default: => Int): Int =
+    positiveInt(name, sys.env.get(name), default)
+
+  /** `v` as a positive Int; anything else fails, naming the variable. */
+  private[graft] def positiveInt(name: String, v: Option[String], default: => Int): Int =
+    v match {
+      case None => default
+      case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"$name must be a positive integer, got '$s'"))
+    }
 
   def apply(cpus: Int = envCpus): SparkSession = {
     val spark = SparkSession.builder()
@@ -33,6 +40,11 @@ object GraftSession {
         System.getProperty("java.io.tmpdir") + "/graft-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // warnings that every run repeats by design, so that a real one shows
+    Seq("org.apache.spark.sql.execution.window.WindowExec", // unpartitioned window
+      "org.apache.spark.rdd.MapPartitionsRDD", // localCheckpoint truncates lineage
+      "org.apache.spark.scheduler.DAGScheduler" // large task binary, cancel at stop
+    ).foreach(Configurator.setLevel(_, Level.ERROR))
     spark
   }
 

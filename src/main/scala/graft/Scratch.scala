@@ -2,19 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Scratch placement for the driver-contract mains (Bench / Verify /
-  * TimeQ): point `java.io.tmpdir` — and through it every staging dir
-  * (RelOps.stagingDir), streaming temp checkpoint, RocksDB working
-  * dir, and (via GraftSession's `spark.local.dir`) shuffle spill — at
-  * RAM-backed /dev/shm when it exists. This is the local-mode analogue
-  * of the standard production sizing rule "put spark.local.dir on the
-  * fastest scratch device you have" (NVMe on a real executor): the
-  * harness's staged sources, checkpoint logs, and state stores are
-  * ephemeral by construction (deleted on exit), and the backing store
-  * for the GRADED tables (`/root/testdata`) is untouched. Measured
-  * r15: the win is concentrated in the streaming fleet's
-  * offset/commit/state-store log churn and the staged-source rewrites
-  * (see SCALE.md "scratch placement").
+/** Scratch placement for the four mains (Bench, Verify, TimeQ and
+  * Explain, all through [[Runner.run]]) and perfbench: point
+  * `java.io.tmpdir` at RAM-backed /dev/shm when it exists, and through it
+  * every staging dir (RelOps.stagingDir), streaming temp checkpoint,
+  * RocksDB working dir and the managed-table warehouse, which is per
+  * process so two JVMs on one box never share one. Shuffle spill stays on
+  * disk (see [[diskTmp]]). This is the local-mode analogue of the
+  * standard production sizing rule "put spark.local.dir on the fastest
+  * scratch device you have" (NVMe on a real executor): the harness's
+  * staged sources, checkpoint logs, and state stores are ephemeral by
+  * construction (deleted on exit), and the backing store for the GRADED
+  * tables (`/root/testdata`) is untouched. The win is concentrated in the
+  * streaming fleet's offset/commit/state-store log churn and the
+  * staged-source rewrites (see SCALE.md "scratch placement").
   *
   * Opt-outs: `SPARK_GRAFT_SCRATCH=off` keeps the JVM default (/tmp);
   * any other value is used as the scratch base verbatim. Unit tests

@@ -1,40 +1,28 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics.{METRIC_COMPILATION_TIME => compiles}
+
 /** Dev harness: time named SparkEntry queries (args) on SPARK_GRAFT_SF_DIR,
-  * N repetitions each, printing per-run seconds — the tool for isolating a
-  * single query's cost from Bench's 84-query JVM. */
+  * SPARK_GRAFT_REPS runs each, printing per-run seconds — the tool for
+  * isolating a single query's cost from Bench's fleet JVM. */
 object TimeQ {
-  def main(args: Array[String]): Unit = {
-    Scratch.init() // match Bench's scratch placement
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = GraftSession()
-    spark.range(1000).selectExpr("sum(id)").collect()
+  def main(args: Array[String]): Unit = Runner.run { (spark, env) =>
     args.foreach { name =>
       if (AnnOps.publishedAnswerQueries(name))
         System.err.println(s"[timeq] WARNING: $name serves a staged " +
           "published answer after its first call - reps 2+ time a " +
           "<=30-row parquet read, not the pipeline; time the inner " +
           "*Search frame instead (see AnnOps.publishedAnswer)")
-      val fn = SparkEntry.queries(name)
-      val ts = (1 to reps).map { _ =>
-        // number of janino compilations attributable to this run (from
-        // Spark's CodegenMetrics histogram count) — a cold run compiling
-        // ~40+ units at ~30-50 ms each IS the cold-vs-steady gap; a
-        // repeat showing c0 proves the cache absorbed all of it
-        val c0 = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val cMs = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount - c0
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        (dt, cMs)
+      // janino compilations during each run (c<N>): a cold run compiling
+      // ~40+ units IS the cold-vs-steady gap; c0 on a repeat proves the
+      // cache absorbed all of it
+      val ts = Seq.fill(env.reps) {
+        val c0 = compiles.getCount
+        val secs = Runner.loop(spark, env.sfDir, Runner.named(Seq(name)),
+          n => s"[timeq] $n failed")((_, df) => df.count()).head._2
+        f"$secs%.2f(c${compiles.getCount - c0}%d)"
       }
-      println(f"[timeq] $name%-28s " +
-        ts.map { case (t, c) => f"$t%.2f(c$c%d)" }.mkString(" "))
+      println(f"[timeq] $name%-28s " + ts.mkString(" "))
     }
-    spark.stop()
   }
 }

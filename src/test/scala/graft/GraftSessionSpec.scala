@@ -6,19 +6,23 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session factory's cpu parse, and guards that keep it the only
-  * session builder, keep `src/main` to its four mains and keep the
-  * `spark.graft.*` conf keys it reads to a fixed list. */
+/** The environment's positive-int parse, and guards that keep the session
+  * factory the only session builder, keep `src/main` to its four mains and
+  * keep the `spark.graft.*` conf keys and `SPARK_GRAFT_*` variables it
+  * reads to fixed lists. */
 class GraftSessionSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
-    assert(GraftSession.parseCpus(Some("8")) == 8)
-    assert(GraftSession.parseCpus(Some(" 2 ")) == 2)
-    assert(GraftSession.parseCpus(None) ==
-      Runtime.getRuntime.availableProcessors)
-    Seq("*", "", "0", "-1", "4.5", "four").foreach { bad =>
-      val e = intercept[IllegalArgumentException](
-        GraftSession.parseCpus(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    val cpus = Runtime.getRuntime.availableProcessors
+    Seq("SPARK_GRAFT_CPUS" -> cpus, "SPARK_GRAFT_REPS" -> 3,
+        "SPARK_GRAFT_BENCH_BUDGET_S" -> 300).foreach { case (name, default) =>
+      def parse(v: Option[String]) = GraftSession.positiveInt(name, v, default)
+      assert(parse(Some("8")) == 8)
+      assert(parse(Some(" 2 ")) == 2)
+      assert(parse(None) == default)
+      Seq("*", "", "0", "-1", "4.5", "four").foreach { bad =>
+        val e = intercept[IllegalArgumentException](parse(Some(bad)))
+        assert(e.getMessage.contains(name), s"$name=$bad")
+      }
     }
   }
 
@@ -50,6 +54,24 @@ class GraftSessionSpec extends AnyFunSuite {
     }.toSet
     assert(keys == Set("checkpointDir", "reliableCheckpoint", "topkRewrite",
       "topkRewriteMaxK", "topkRewritePartialRowBudget"))
+  }
+
+  test("src/main reads exactly these SPARK_GRAFT_* variables") {
+    // a variable is read through a string literal naming it in full, and
+    // only the runner and the two setup objects touch the environment
+    val files = sources("src/main/scala")
+    val names = files.flatMap { f =>
+      """"(SPARK_GRAFT_\w+)"""".r.findAllMatchIn(Files.readString(f))
+        .map(_.group(1))
+    }.toSet
+    assert(names == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_REPS", "SPARK_GRAFT_BENCH_BUDGET_S", "SPARK_GRAFT_WARMUP_DIR",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SCRATCH"))
+    val readers = files.filter { f =>
+      val src = Files.readString(f)
+      src.contains("sys.env") || src.contains("getenv")
+    }.map(_.getFileName.toString).toSet
+    assert(readers == Set("Runner.scala", "GraftSession.scala", "Scratch.scala"))
   }
 
   test("GraftSession is the only session builder in src") {
