@@ -756,7 +756,8 @@ object AggWinOps {
     * run-to-run with task scheduling; the moment form is bit-stable under
     * any partitioning AND map-side partial-aggregable — strictly better at
     * 100 TB, where the built-ins pay the same shuffle but lose
-    * determinism. */
+    * determinism. A one-row group divides by zero: `try_divide` makes
+    * that NULL, as DuckDB's `/` does. */
   def qAggStatsMoments(s: SparkSession, d: String): DataFrame = {
     def m(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast(DoubleType)
     val x = col("l_quantity")
@@ -767,13 +768,13 @@ object AggWinOps {
         m(x).as("sx"), m(y).as("sy"),
         m(x * x).as("sxx"), m(y * y).as("syy"), m(x * y).as("sxy"))
       .select(col("l_returnflag"), col("n"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
+        round(try_divide(col("n") * col("sxy") - col("sx") * col("sy"),
           sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))), 6).as("corr_qty_price"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * (col("n") - lit(1L))), 4).as("covar_samp"),
-        round(sqrt((col("n") * col("sxx") - col("sx") * col("sx")) /
-          (col("n") * (col("n") - lit(1L)))), 6).as("stddev_qty"))
+            (col("n") * col("syy") - col("sy") * col("sy")))), 6).as("corr_qty_price"),
+        round(try_divide(col("n") * col("sxy") - col("sx") * col("sy"),
+          col("n") * (col("n") - lit(1L))), 4).as("covar_samp"),
+        round(sqrt(try_divide(col("n") * col("sxx") - col("sx") * col("sx"),
+          col("n") * (col("n") - lit(1L)))), 6).as("stddev_qty"))
       .orderBy(col("l_returnflag"))
   }
 
@@ -996,7 +997,9 @@ object AggWinOps {
     * ONE double division (plus two IEEE ops for the intercept) on
     * bit-identical exact inputs. x = day of month over the fixture's
     * single month; the daily pre-aggregation bounds the regression
-    * input at 31 rows per group no matter the corpus size. */
+    * input at 31 rows per group no matter the corpus size. A group with
+    * one day has no slope: its zero divisor gives NULL (`try_divide`, as
+    * DuckDB's `/`). */
   def qAggRegression(s: SparkSession, d: String): DataFrame = {
     val daily = events(s, d)
       .groupBy(col("event_type"), dayofmonth(col("ts")).cast(LongType).as("x"))
@@ -1043,7 +1046,7 @@ object AggWinOps {
         sum(col("x") * col("x")).as("sxx"))
       .select(col("event_type"), col("n_days"),
         col("sx"), col("sy").cast(DoubleType).as("sum_y"),
-        ((col("n_days") * col("sxy") - col("sx") * col("sy")).cast(DoubleType) /
+        try_divide((col("n_days") * col("sxy") - col("sx") * col("sy")).cast(DoubleType),
           (col("n_days") * col("sxx") - col("sx") * col("sx")).cast(DoubleType))
           .as("slope"))
       .withColumn("intercept",
@@ -1256,7 +1259,7 @@ object AggWinOps {
       |  CAST(SUM(CASE WHEN k = 21 THEN 1 ELSE 0 END) AS BIGINT) AS r21
       |FROM j GROUP BY c_day ORDER BY c_day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_window_funnel" -> (qWindowFunnel _),
     "q_window_pattern" -> (qWindowPattern _),
     "q_agg_regression" -> (qAggRegression _),
@@ -1297,7 +1300,7 @@ object AggWinOps {
     "q_scalar_math_fns" -> (qScalarMathFns _),
     "q_scalar_date_fns" -> (qScalarDateFns _),
     "q_scalar_array" -> (qScalarArray _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_window_navigation" -> qWindowNavigationSql,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.functions.{BmpCodec, VectorFunctions, WavCodec}
+import graft.functions.{BmpCodec, WavCodec}
 
 /** Approximate-nearest-neighbor and embedding near-dup operators plus the
   * multimodal binary-column pipeline (BASELINE.json north star).
@@ -112,11 +112,9 @@ object AnnOps {
   // exact re-score and per-probe top-k. These are the shared parts: the
   // Spark Column/DataFrame builders, then their DuckDB SQL-fragment twins.
 
-  /** The corpus (vec_id, embedding), with the vector kernels registered. */
-  private def plainVectors(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
+  /** The corpus (vec_id, embedding). */
+  private def plainVectors(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).select(col("vec_id"), col("embedding"))
-  }
 
   /** The corpus with its squared norms (vec_id, embedding, na). */
   private[graft] def vectors(s: SparkSession, d: String): DataFrame =
@@ -157,13 +155,9 @@ object AnnOps {
     * probe under the method's cheap `approx` order, re-scored by
     * `rescore`, then the top `k` under the `exact` order. */
   private def refine(cand: DataFrame, r: Int, approx: Seq[Column], k: Int,
-      exact: Seq[Column])(rescore: DataFrame => DataFrame): DataFrame = {
-    // the shortlist IS the bounded-heap rewrite's namesake shape — register
-    // here so the plan never depends on which query touched the session first
-    plans.TopKRewriteApi.ensureRegistered(cand.sparkSession)
+      exact: Seq[Column])(rescore: DataFrame => DataFrame): DataFrame =
     topK(rescore(rankLimit(cand, Seq("probe_id"), r, "srn", approx)),
       "probe_id", k, exact: _*)
-  }
 
   /** ADC scoring: code rows (vec_id, m, code, …) meet the broadcast ADC
     * table (c_id, pm, pd, …) on subspace, code and `on`; each (probe,
@@ -250,7 +244,6 @@ object AnnOps {
     * grid over this one definition is SCALE.md's `q_sim_ann_lsh` row. */
   private[graft] def lshSearch(s: SparkSession, d: String, tables: Int,
       radius: Int): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val totalBits = Bits * tables
     val sigs = vectors(s, d)
       .withColumn("sig", expr(s"graft_lsh_sig(embedding, $totalBits)"))
@@ -1611,7 +1604,6 @@ object AnnOps {
     * probes, no cartesian) now that qSimAnnRecall's OUTPUT plan is a
     * local relation. */
   private[graft] def recallFrames(s: SparkSession, d: String): Seq[DataFrame] = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val eb = recallViews(s, d)
     // eight consumers, one computation
     val truthAll = recallTruth(eb, recallMethods).localCheckpoint(eager = false)
@@ -2097,7 +2089,6 @@ object AnnOps {
     * round(), whose half-tie mode differs (Spark HALF_UP, DuckDB
     * HALF_EVEN). */
   def qEmbedInt8(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val q = embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
@@ -2358,7 +2349,7 @@ object AnnOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_embed_int8" -> (qEmbedInt8 _),
     "q_embed_bit" -> (qEmbedBit _),
     "q_sim_ann_prefix" -> (qSimAnnPrefix _),
@@ -2379,7 +2370,7 @@ object AnnOps {
     "q_multimodal_frames" -> (qMultimodalFrames _),
     "q_multimodal_image" -> (qMultimodalImage _),
     "q_multimodal_shots" -> (qMultimodalShots _),
-  )
+  ))
 
   /** Registered query names whose frame serves a staged published
     * answer (see [[publishedAnswer]]): their FIRST execution per

@@ -212,10 +212,10 @@ object GraphOps {
        |       ELSE 0.0 END AS clustering
        |FROM w, t, ne""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_graph_pagerank" -> (qGraphPagerank _),
     "q_graph_triangles" -> (qGraphTriangles _)
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_graph_pagerank" -> qGraphPagerankSql,

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.functions.VectorFunctions
-
 /** IVF coarse-quantizer training: Lloyd's k-means iterations as pure
   * DataFrame operations (q_sim_ann_ivf uses seeded centroids for oracle
   * determinism; this is the production path that refines them).
@@ -32,7 +30,6 @@ object IvfTraining {
   /** (cell_id, centroid: array<double>, n) after `iters` Lloyd rounds,
     * seeded from the first k vectors. */
   def train(spark: SparkSession, vectors: DataFrame, k: Int, iters: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val vecs = vectors.select(col("vec_id"), col("embedding"))
     var cents = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").as("cell_id"),
@@ -70,7 +67,6 @@ object IvfTraining {
     * shuffles of (k × dim) fixed-point aggregates. */
   def trainFixedPoint(spark: SparkSession, vectors: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val e = vectors.select(col("vec_id"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("emb"))
     var cents = e.filter(col("vec_id") < k)
@@ -99,8 +95,7 @@ object IvfTraining {
   }
 
   /** Mean within-cluster squared distance — the k-means objective. */
-  def objective(spark: SparkSession, vectors: DataFrame, cents: DataFrame): Double = {
-    VectorFunctions.register(spark)
+  def objective(spark: SparkSession, vectors: DataFrame, cents: DataFrame): Double =
     assign(vectors.select(col("vec_id"), col("embedding")),
         cents.select(col("cell_id"), col("centroid")))
       .join(cents, Seq("cell_id"))
@@ -108,5 +103,4 @@ object IvfTraining {
         lit(2.0) * expr("graft_dot(embedding, centroid)") +
         expr("graft_norm_sq(centroid)")).as("d2"))
       .agg(avg(col("d2"))).collect()(0).getDouble(0)
-  }
 }

@@ -264,15 +264,13 @@ object LlmOps {
   /** The same minima through the MinHash sketch aggregate
     * ([[graft.functions.MinHashSketchAgg]], called via SQL function
     * graft_minhash) — serialized-partial merge path, same oracle. */
-  def qDedupMinhashNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+  def qDedupMinhashNative(s: SparkSession, d: String): DataFrame =
     shingles(s, d)
       .groupBy(col("doc_id"))
       .agg(expr("graft_minhash(v)").as("sketch"))
       .select(col("doc_id") +:
         (0 until MH.K).map(j => element_at(col("sketch"), j + 1).as(s"m$j")): _*)
       .orderBy(col("doc_id"))
-  }
 
   /** Exact n-gram Jaccard verification over the MinHash-band candidate
     * pairs: |A∩B| / |A∪B| on the distinct 3-shingle sets. The candidate
@@ -596,7 +594,6 @@ object LlmOps {
     * top-5 pins the whole composition; the ANN index queries grade the
     * sublinear retrieval tier this brute-force scorer would swap to. */
   def qPipelineRag(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val ragQuery = "model training data quality and dedup"
     def embed(tokens: DataFrame, keys: Seq[String]): DataFrame = {
       val dims = (0 until 8).map(j =>
@@ -817,7 +814,6 @@ object LlmOps {
       """CASE WHEN size(tk) >= 2 THEN transform(
         |  sequence(1, size(tk) - 1), i -> struct(tk[i-1] AS w1, tk[i] AS w2))
         |ELSE slice(array(struct(tk[0] AS w1, tk[0] AS w2)), 1, 0) END""".stripMargin
-    graft.functions.VectorFunctions.register(s)
     val base = documents(s, d)
       .select(col("doc_id"), TextOps.normalizeCol(col("text")).as("norm"))
       .select(col("doc_id"), (length(col("norm")) > 0).as("s1"),
@@ -1052,7 +1048,6 @@ object LlmOps {
     // the graded query runs the cosine-top-k rewrite (plans.CosineTopKRewrite):
     // the rank-limit window below plans as the exact two-phase bounded-heap
     // operator, and this oracle hash-gates its exactness
-    plans.TopKRewriteApi.ensureRegistered(s)
     val e = embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
       .withColumn("na", sumSq(col("embedding")))
@@ -1083,7 +1078,6 @@ object LlmOps {
     * (count desc, token asc). Partial-aggregated counts, then a per-lang
     * top-k window over the small aggregate. */
   def qTextStats(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val counts = documents(s, d)
       .select(col("lang"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
@@ -1382,7 +1376,7 @@ object LlmOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_dedup_rewrite" -> (qDedupRewrite _),
     "q_dedup_bloom" -> (qDedupBloom _),
     "q_dedup_exact" -> (qDedupExact _),
@@ -1403,7 +1397,7 @@ object LlmOps {
     "q_sim_topk" -> (qSimTopk _),
     "q_text_stats" -> (qTextStats _),
     "q_multimodal_struct" -> (qMultimodalStruct _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_dedup_bloom" -> qDedupBloomSql,

@@ -1479,7 +1479,7 @@ object RelOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_join_interval" -> (qJoinInterval _),
     "q_source_binaryfile" -> (qSourceBinaryfile _),
     "q_join_null_safe" -> (qJoinNullSafe _),
@@ -1515,7 +1515,7 @@ object RelOps {
     "q_join_asof_native" -> (qJoinAsofNative _),
     "q_join_full_outer" -> (qJoinFullOuter _),
     "q_join_cross" -> (qJoinCross _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_join_interval" -> qJoinIntervalSql,

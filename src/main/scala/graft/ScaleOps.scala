@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.functions.VectorFunctions
-
 /** Scale-technique operators: skew-resistant salted aggregation and
   * IVF-cell ANN — the two remaining patterns a 100 TB deployment leans on
   * (salting for hot keys; inverted-file cells as the coarse-quantizer
@@ -193,8 +191,7 @@ object ScaleOps {
     * GROUP BY oracle hash-checks the whole sketch path: per-partition
     * update, partial serialization, merge, final eval. The >K
     * approximation regime is covered by MisraGriesSpec. */
-  def qAggHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
+  def qAggHeavyHitters(s: SparkSession, d: String): DataFrame =
     events(s, d)
       // sign-preserving % (not pmod) — matches the oracle's user_id % 8
       // semantics even if a fixture ever carries a negative user_id
@@ -204,7 +201,6 @@ object ScaleOps {
       .select(col("bucket"), explode(col("hh")).as("e"))
       .select(col("bucket"), col("e.value").as("event_type"), col("e.cnt").as("n"))
       .orderBy(col("bucket"), col("n").desc, col("event_type"))
-  }
 
   val qAggHeavyHittersSql: String =
     """SELECT user_id % 8 AS bucket, event_type, COUNT(*) AS n
@@ -222,15 +218,13 @@ object ScaleOps {
     * COUNT(DISTINCT) oracle hash-checks the entire native path: update,
     * partial serialization, set-union merge, final eval. The >K estimator
     * regime ((K−1)·P/θ_K, ~6% RSE) is covered by KmvSketchSpec. */
-  def qAggDistinctSketch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
+  def qAggDistinctSketch(s: SparkSession, d: String): DataFrame =
     events(s, d)
       .select(col("event_type"), (col("user_id") % 200).as("u"))
       .groupBy(col("event_type"))
       .agg(expr("graft_approx_distinct(u)").as("n_distinct_users"),
         count(lit(1)).as("n_events"))
       .orderBy(col("event_type"))
-  }
 
   val qAggDistinctSketchSql: String =
     """SELECT event_type,
@@ -307,7 +301,6 @@ object ScaleOps {
     * two-level aggregate path — fine-grain sketch, serialize, regroup,
     * merge — loses nothing. */
   def qAggHllReagg(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val daily = events(s, d)
       .select(col("event_type"), to_date(col("ts")).as("day"),
         expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT)")
@@ -386,7 +379,6 @@ object ScaleOps {
     * in both engines. See [[graft.functions.QuantileSketchAgg]] for why
     * bottom-k-by-hash beats KLL/t-digest here (deterministic merge). */
   def qAggQuantileSketch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     def qpos(p: Double): Column =
       element_at(col("vs"),
         (floor(lit(p) * (col("m") - 1)) + 1).cast(IntegerType))
@@ -591,8 +583,7 @@ object ScaleOps {
     * IEEE +,*,/ and a branch-free floor(x+0.5) (bit-deterministic across
     * engines); ln appears only in the linear-counting branch, whose 256
     * possible inputs all sit ≥0.005 from a rounding boundary. */
-  def qAggHll(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
+  def qAggHll(s: SparkSession, d: String): DataFrame =
     events(s, d)
       .select(col("event_type"),
         expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT)")
@@ -610,7 +601,6 @@ object ScaleOps {
           |  ELSE floor(1846528.0D / 2570790.0D * 144115188075855872.0D
           |             / s_scaled + 0.5D) END AS BIGINT)""".stripMargin))
       .orderBy(col("event_type"))
-  }
 
   val qAggHllSql: String =
     """WITH h AS (
@@ -675,7 +665,6 @@ object ScaleOps {
     * metadata pre-filter) met by the probes [10, 20) fanned out to their
     * AnnOps.IvfNProbe cells, top-3 per probe by rounded cosine. */
   private def ivfCosine(s: SparkSession, d: String, candPred: Column): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val e = AnnOps.vectors(s, d)
     // checkpointed: the ranked assignment feeds both the candidate set
     // (nearest cell only) and the probes (nprobe-cell fan-out) — without
@@ -732,7 +721,6 @@ object ScaleOps {
     * of (k × dim) aggregates — raw vectors never shuffle (the
     * IvfTraining.scala production topology, here in its portable form). */
   def qSimAnnIvfTrained(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("emb"))
     val cents = IvfTraining.trainFixedPoint(s,
@@ -805,7 +793,6 @@ object ScaleOps {
     * est ≥ exact always (upper-biased by construction); both columns are
     * emitted so the grade pins the overcount itself. */
   def qAggCountMin(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     import graft.functions.{CountMinAgg => CM}
     val sk = events(s, d).agg(expr("graft_count_min(user_id)").as("sk"))
     val probes = events(s, d)
@@ -855,7 +842,6 @@ object ScaleOps {
     * domain costs O(CAP) reducer state instead of domain-sized sort
     * spill. Totals are a separate tiny rollup joined back on source. */
   def qSampleDomainCap(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val CAP = 15
     val docs = documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -934,7 +920,6 @@ object ScaleOps {
     * window is the bounded-heap rewrite's shape — O(k) per source, no
     * sort; the scan is the only corpus pass. */
   def qSampleWeighted(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val P = 2147483647L
     val docs = documents(s, d)
       .select(col("source"), col("doc_id"), col("n_chars"))
@@ -1043,7 +1028,8 @@ object ScaleOps {
     * reduces to EXACT integer arithmetic over a common denominator —
     * tv_num = Σ|o_i·N2 − e_i·N1| (all BIGINT, order-free), and
     * tv = tv_num / (2·N1·N2) is the single IEEE division at the end, so
-    * the doubles are bit-identical cross-engine. One shuffle (the
+    * the doubles are bit-identical cross-engine (NULL when a window is
+    * empty, through `try_divide`, as DuckDB's `/`). One shuffle (the
     * (type, window, bin) agg), then a 100-row reshape. At counts beyond
     * ~1e9 per cell the cross products need DECIMAL(38) or per-million
     * pre-normalization — noted, not needed at any graded sf. */
@@ -1102,9 +1088,8 @@ object ScaleOps {
       .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
         sum(abs(w(col("o")) * w(col("n2")) - w(col("e")) * w(col("n1"))))
           .as("tv_num"))
-      .withColumn("tv",
-        col("tv_num").cast(DoubleType) /
-          (lit(2.0) * col("n1").cast(DoubleType) * col("n2").cast(DoubleType)))
+      .withColumn("tv", try_divide(col("tv_num").cast(DoubleType),
+        lit(2.0) * col("n1").cast(DoubleType) * col("n2").cast(DoubleType)))
       .orderBy(col("event_type"))
   }
 
@@ -1180,7 +1165,6 @@ object ScaleOps {
     * the oracle computes directly — the equality proves the
     * shard → bitmap → popcount → sum path is exact, not approximate. */
   def qAggDistinctBitmap(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val mapped = events(s, d)
       .select(col("event_type"), expr("user_id * 101").as("mid"))
     val perType = mapped
@@ -1322,7 +1306,7 @@ object ScaleOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_sample_temperature" -> (qSampleTemperature _),
     "q_profile_drift" -> (qProfileDrift _),
     "q_profile_drift_wide" -> (qProfileDriftWideGraded _),
@@ -1346,7 +1330,7 @@ object ScaleOps {
     "q_sample_mixture" -> (qSampleMixture _),
     "q_sim_ann_ivf" -> (qSimAnnIvf _),
     "q_sim_ann_ivf_trained" -> (qSimAnnIvfTrained _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_sample_temperature" -> qSampleTemperatureSql,

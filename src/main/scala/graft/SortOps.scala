@@ -232,12 +232,12 @@ object SortOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_source_terarecord" -> (qSourceTerarecord _),
     "q_sort_global" -> (qSortGlobal _),
     "q_sort_validate" -> (qSortValidate _),
     "q_sort_range_partition" -> (qSortRangePartition _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_source_terarecord" -> qSourceTerarecordSql,

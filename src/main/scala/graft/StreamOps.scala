@@ -921,7 +921,7 @@ object StreamOps {
       .orderBy(col("user_id"), col("pattern"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_stream_pattern" -> (qStreamPattern _),
     "q_stream_minilog" -> (qStreamMinilog _),
     "q_stream_join_outer" -> (qStreamJoinOuter _),
@@ -938,7 +938,7 @@ object StreamOps {
     "q_stream_sliding" -> (qStreamSliding _),
     "q_stream_session" -> (qStreamSession _),
     "q_stream_dedup" -> (qStreamDedup _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     // converged CEP state == the batch segment-pattern truth

@@ -300,7 +300,6 @@ object TextOps {
     * the vocabulary) and the tiny head set broadcasts back against the
     * bigram counts. */
   def qTextBigramLm(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     // bigram extraction is row-local (array transform over adjacent token
     // pairs) — the first shuffle in the plan is already the (w1, w2)
     // count aggregate, not a per-doc lead window
@@ -493,7 +492,6 @@ object TextOps {
     * ln/log, which differ in the last ulp between libm implementations).
     * Top-3 scored tokens per document over the first 50 docs. */
   def qTextTfidf(s: SparkSession, d: String): DataFrame = {
-    plans.TopKRewriteApi.ensureRegistered(s)
     val tk = toks(s, d)
     // N is a 1-row aggregate folded into the plan via broadcast cross join
     // (the in-plan form of the oracle's scalar subquery) — never a
@@ -608,8 +606,9 @@ object TextOps {
   private val wsPat = "[ \\t\\n\\r]+"
 
   /** The full normalization chain as a reusable Column — shared by
-    * q_text_normalize and the curation funnel's gate 0. Requires
-    * VectorFunctions.register on the session (for graft_nfc). */
+    * q_text_normalize and the curation funnel's gate 0. Its `graft_nfc`
+    * needs the surface installed (`Surface.install`), which the module
+    * query maps do. */
   private[graft] def normalizeCol(c: Column): Column = {
     val stripped = regexp_replace(c, tagPat, " ")
     val decoded =
@@ -632,8 +631,7 @@ object TextOps {
        |        '[\\x{200B}\\x{200C}\\x{200D}\\x{FEFF}]', '', 'g')),
        |      '[ \\t\\n\\r]+', ' ', 'g'))""".stripMargin
 
-  def qTextNormalize(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+  def qTextNormalize(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .select(col("doc_id"), col("lang"),
         concat(lit("<div id=\""), col("doc_id").cast(StringType),
@@ -648,7 +646,6 @@ object TextOps {
         length(col("dirty")).as("n_raw"), length(col("norm")).as("n_norm"),
         col("norm"))
       .orderBy(col("doc_id"))
-  }
 
   val qTextNormalizeSql: String =
     s"""WITH t AS (
@@ -1388,7 +1385,7 @@ object TextOps {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries = graft.functions.Surface.queries(Map(
     "q_text_url_canon" -> (qTextUrlCanon _),
     "q_text_editdist" -> (qTextEditdist _),
     "q_text_redact" -> (qTextRedact _),
@@ -1408,7 +1405,7 @@ object TextOps {
     "q_text_bpe_apply" -> (qTextBpeApply _),
     "q_pack_sequences" -> (qPackSequences _),
     "q_text_normalize" -> (qTextNormalize _),
-  )
+  ))
 
   val oracle: Map[String, String] = Map(
     "q_text_editdist" -> qTextEditdistSql,

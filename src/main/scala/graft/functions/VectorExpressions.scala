@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -552,18 +551,5 @@ object VectorFunctions {
   ) ++ sketches.map { s =>
     (FunctionIdentifier(s.name), new ExpressionInfo(classOf[SketchAgg[_]].getName, s.name),
       (es: Seq[Expression]) => s(es: _*).toAggregateExpression())
-  }
-
-  /** Session-local registration — lets any query use the expressions
-    * through `expr("graft_dot(...)")` without requiring the session to
-    * have been built with GraftExtensions. Idempotent: a function already
-    * in the registry is left alone, so repeat calls neither re-register
-    * nor log Spark's "replaced a previously registered function" warning. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, _, builder) =>
-      if (!reg.functionExists(id))
-        reg.createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
   }
 }

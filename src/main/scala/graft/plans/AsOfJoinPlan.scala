@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -187,9 +187,9 @@ object AsOfJoinTimeFilterPushdown
     e.dataType == TimestampType || e.dataType == TimestampNTZType
 
   /** A timestamp↔ntz Cast evaluates through the session time zone; treating
-    * it as micros-identity is only sound when that zone is UTC. All graft
-    * entrypoints pin UTC, but the rule must not rely on that for sessions
-    * that register GraftExtensions standalone. */
+    * it as micros-identity is only sound when that zone is UTC. Every
+    * `GraftSession` pins UTC, but `Surface.install` also runs on plain
+    * sessions with any zone, so the rule checks. */
   private def utcSession: Boolean = {
     val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
     try java.time.ZoneId.of(tz).normalized() == java.time.ZoneOffset.UTC
@@ -281,25 +281,8 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
-/** Dataset-level API + planner registration. */
+/** Dataset-level API. */
 object AsOfJoinApi {
-  /** Idempotently add the strategy to a live session (works on plain
-    * driver sessions; GraftExtensions does the same at build time). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    }
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(AsOfJoinLimitPushdown)) {
-      spark.experimental.extraOptimizations = opts :+ AsOfJoinLimitPushdown
-    }
-    val opts2 = spark.experimental.extraOptimizations
-    if (!opts2.contains(AsOfJoinTimeFilterPushdown)) {
-      spark.experimental.extraOptimizations = opts2 :+ AsOfJoinTimeFilterPushdown
-    }
-  }
-
   /** asofJoin(left, right): left rows + the latest right row per key at or
     * before the left time. Columns are resolved by name on each side.
     * Types are validated here because the exec reads keys and times as
@@ -310,7 +293,9 @@ object AsOfJoinApi {
       rightKey: String, rightTime: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val spark = left.sparkSession
-    ensureRegistered(spark)
+    // the one public builder of a custom logical node: nothing plans it
+    // without the strategy, so it installs the surface itself
+    graft.functions.Surface.install(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -3,7 +3,6 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -87,12 +86,12 @@ case class TopKPerGroup(
   * with non-empty partition AND order specs, a conjunct bounding that
   * row number by an integer literal, and k within the configured
   * threshold; anything else keeps the original node (by reference, so
-  * the fixed-point batch sees no change). An InferWindowGroupLimit
-  * pre-filter already inserted below the window (the rule ordering when
-  * this rule is session-registered via `experimental` rather than
-  * injected by GraftExtensions) is subsumed and removed when it matches
-  * the same spec. Non-limit conjuncts survive as a Filter above the
-  * rewritten node. */
+  * the fixed-point batch sees no change). The rule runs in the "User
+  * Provided Optimizers" batch (`Surface.install` lists it through
+  * `spark.experimental`), after Spark's InferWindowGroupLimit, so a
+  * WindowGroupLimit pre-filter already below the window is subsumed and
+  * removed when it matches the same spec. Non-limit conjuncts survive as
+  * a Filter above the rewritten node. */
 object CosineTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private def limitFrom(e: Expression, rn: Attribute): Option[Int] = e match {
@@ -245,20 +244,4 @@ case class TopKPerGroupExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
     copy(child = newChild)
-}
-
-/** Idempotent registration on a live session (the AsOfJoinApi pattern:
-  * the driver's plain sessions have no GraftExtensions, so the graded
-  * query self-registers). */
-object TopKRewriteApi {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val strats = spark.experimental.extraStrategies
-    if (!strats.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies = strats :+ TopKPerGroupStrategy
-    }
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(CosineTopKRewrite)) {
-      spark.experimental.extraOptimizations = opts :+ CosineTopKRewrite
-    }
-  }
 }

@@ -24,7 +24,6 @@ class AnisoRotSpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   test("signed-permutation rotation beats identity at raw-ADC on the aniso view") {
-    graft.functions.VectorFunctions.register(spark)
     val aniso = Tables.embeddings(spark, sf)
       .select(col("vec_id"), expr(AnnOps.anisoSql("embedding")).as("embedding"))
       .localCheckpoint()

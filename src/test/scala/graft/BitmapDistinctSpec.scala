@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
-
 /** Container-bitmap exact-distinct invariants: exactness under the
   * high-bits sharding contract, OR-merge partitioning invariance, and the
   * ignore rules (nulls, negatives). */
@@ -13,7 +11,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("sharded popcounts sum to the exact distinct count") {
-    VectorFunctions.register(spark)
     // ids with heavy duplication spanning several 2^16 containers
     val df = spark.range(200000)
       .select(((col("id") * 7919L) % 300000L).as("id"))
@@ -25,7 +22,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("popcount is invariant across partitionings (OR merge is order-free)") {
-    VectorFunctions.register(spark)
     val base = spark.range(50000).select((col("id") % 40000L).as("id"))
     val counts = Seq(1, 3, 17).map { p =>
       base.repartition(p)
@@ -37,7 +33,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("nulls and negative ids are ignored, not aliased into a container") {
-    VectorFunctions.register(spark)
     val df = Seq[java.lang.Long](1L, 2L, null, -5L, 2L, 65535L)
       .toDF("id")
     val got = df.agg(expr("graft_bitmap_distinct(id)")).collect()(0).getLong(0)

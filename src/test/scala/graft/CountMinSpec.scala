@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CountMinAgg, VectorFunctions}
+import graft.functions.CountMinAgg
 
 /** Count-Min sketch invariants beyond the oracle-gated graded query. */
 class CountMinSpec extends AnyFunSuite {
@@ -16,7 +16,6 @@ class CountMinSpec extends AnyFunSuite {
       .min
 
   test("estimates upper-bound exact counts for every key") {
-    VectorFunctions.register(spark)
     val df = spark.range(100000).select((col("id") % 1777).as("k"))
     val sk = df.agg(expr("graft_count_min(k)").as("sk"))
       .collect()(0).getSeq[Long](0)
@@ -29,7 +28,6 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("no-collision regime is exact") {
-    VectorFunctions.register(spark)
     // 20 keys in a 256-wide row: verify this family maps them injectively
     // per row, then the min-over-rows estimate must be exact
     val keys = (0L until 20L)
@@ -44,7 +42,6 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("merge-order invariance: sketch is identical across partitionings") {
-    VectorFunctions.register(spark)
     val base = spark.range(50000).select((col("id") % 997).as("k"))
     val sketches = Seq(1, 3, 17).map { p =>
       base.repartition(p).agg(expr("graft_count_min(k)"))
@@ -54,7 +51,6 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("negative and huge keys land in valid cells, same as the SQL arithmetic") {
-    VectorFunctions.register(spark)
     // keys that break sign-preserving % (negative) and 63-bit products
     // (A * k overflows without the mod-P reduction)
     val df = spark.range(4).selectExpr(
@@ -75,7 +71,6 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("counters are linear: sketch of a union is the elementwise sum") {
-    VectorFunctions.register(spark)
     def sketch(lo: Long, hi: Long): Seq[Long] =
       spark.range(lo, hi).select((col("id") % 313).as("k"))
         .agg(expr("graft_count_min(k)")).collect()(0).getSeq[Long](0)

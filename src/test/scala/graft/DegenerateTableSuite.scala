@@ -10,13 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One row of a degenerate-table spec: `table` from the sf0.001 fixture,
   * ordered by `order` and cut to each of `cuts` rows in a temp sfDir (next
   * to links to the fixture's other tables, whole), and the module queries
-  * (with the module's oracle SQL) that read it. */
+  * (with the module's oracle SQL, run under `oracleConfs`) that read it. */
 case class DegenerateTable(
     table: String,
     order: Seq[String],
     cuts: Seq[Int],
     queries: Map[String, (SparkSession, String) => DataFrame],
-    oracle: Map[String, String])
+    oracle: Map[String, String],
+    oracleConfs: Seq[(String, String)] = Nil)
 
 /** Runs every query of every row on every cut of its table. Each answer
   * must equal the rows of the query's oracle SQL, run in the test session
@@ -62,7 +63,8 @@ abstract class DegenerateTableSuite(tables: DegenerateTable*) extends AnyFunSuit
   private def oracle(t: DegenerateTable, q: String, dir: String): Seq[Seq[Any]] = {
     val views = tableNames(dir)
     views.foreach(v => read(v, dir).createOrReplaceTempView(v))
-    try rows(spark.sql(inSpark(t.oracle(q)))) finally views.foreach(spark.catalog.dropTempView)
+    try GraftSession.withConfs(spark, t.oracleConfs: _*)(rows(spark.sql(inSpark(t.oracle(q)))))
+    finally views.foreach(spark.catalog.dropTempView)
   }
 
   for (t <- tables; n <- t.cuts; q <- t.queries.keys.toSeq.sorted) {

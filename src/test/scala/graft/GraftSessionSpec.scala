@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The environment's positive-int parse, and guards that keep the session
-  * factory the only session builder, keep `src/main` to its four mains and
-  * keep the `spark.graft.*` conf keys and `SPARK_GRAFT_*` variables it
-  * reads to fixed lists. */
+  * factory the only session builder, `Surface` the only installer of the
+  * Catalyst surface, `src/main` to its four mains, and the
+  * `spark.graft.*` conf keys and `SPARK_GRAFT_*` variables it reads to
+  * fixed lists. */
 class GraftSessionSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
     val cpus = Runtime.getRuntime.availableProcessors
@@ -80,5 +81,17 @@ class GraftSessionSpec extends AnyFunSuite {
       .filter(f => Files.readString(f).contains(needle))
       .map(_.getFileName.toString)
     assert(users == Seq("GraftSession.scala"))
+  }
+
+  test("Surface is the only installer of the Catalyst surface in src/main") {
+    // a new function, strategy or rule is one entry that Surface.install
+    // reads; query code never registers anything itself
+    val touches = ("""\b(extraStrategies|extraOptimizations|""" +
+      """createOrReplaceTempFunction|inject[A-Z]\w*)\b""").r
+    val files = sources("src/main/scala")
+    val installers = files.filter(f => touches.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString)
+    assert(installers == Seq("Surface.scala"))
+    assert(!files.exists(f => Files.readString(f).contains("ensureRegistered")))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{KmvDistinctAgg, VectorFunctions}
+import graft.functions.KmvDistinctAgg
 
 /** KMV distinct-sketch invariants beyond the oracle-gated exact regime. */
 class KmvSketchSpec extends AnyFunSuite {
@@ -11,7 +11,6 @@ class KmvSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("exact regime: <= K distinct values per group match countDistinct") {
-    VectorFunctions.register(spark)
     val df = spark.range(100000)
       .select((col("id") % 7).as("g"), (col("id") % 211).as("v"))
     val got = df.groupBy(col("g"))
@@ -24,7 +23,6 @@ class KmvSketchSpec extends AnyFunSuite {
   }
 
   test("estimator regime: 50k distinct values within ~4 RSE of truth") {
-    VectorFunctions.register(spark)
     val n = 50000L
     val est = spark.range(n)
       // spread ids over [0, P) with the stratified-sampling mixer so the
@@ -38,7 +36,6 @@ class KmvSketchSpec extends AnyFunSuite {
   }
 
   test("merge-order invariance: estimate is identical across partitionings") {
-    VectorFunctions.register(spark)
     val base = spark.range(30000)
       .select(expr("(id * 2654435761) % 2147483647").as("v"))
     val estimates = Seq(1, 3, 17).map { p =>

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-import graft.functions.{MisraGriesAgg, VectorFunctions}
+import graft.functions.MisraGriesAgg
 
 /** Misra-Gries sketch properties: exact when the value domain fits the
   * counter budget (the graded regime) and within the n/(K+1) undercount
@@ -56,7 +56,6 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("<= K distinct values: sketch counts are exact under partial merge") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // 6 distinct values over many partitions — forces serialize + merge
     val df = spark.range(60000).repartition(16)
       .select(concat(lit("v"), (col("id") % 6)).as("v"))
@@ -69,7 +68,6 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("> K distinct values: true heavy hitter survives with bounded undercount") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // one value owns half the stream; 100 tail values share the rest
     val n = 40000L
     val df = spark.range(n).repartition(8)

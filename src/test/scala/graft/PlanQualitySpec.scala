@@ -63,17 +63,14 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), "expected top-k operator")
   }
 
-  test("windowed top-k is two-phased (WindowGroupLimit or the TopKPerGroup rewrite)") {
-    // which form appears depends on whether CosineTopKRewrite has been
-    // session-registered by an earlier query in this shared-JVM run —
-    // both are the two-phase shape (≤ k rows per group cross the wire)
+  test("windowed top-k is two-phased (the TopKPerGroup rewrite)") {
+    // the bounded-heap rewrite: ≤ k rows per group cross the wire
     val p = planOf(AnnOps.lshSearchGraded(spark, sf))
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
-      "rank-limit two-phase missing")
-    // r15 ADVICE: the fleet-wide no-cartesian test now sees the
-    // published-answer parquet scan for this query, so the LSH
-    // pipeline's own plan must carry the audit — band-keyed candidate
-    // equi-join, probe side broadcast, never all-pairs
+    assert(p.contains("TopKPerGroup"), s"rank-limit two-phase missing:\n$p")
+    // the fleet-wide no-cartesian test sees the published-answer parquet
+    // scan for this query, so the LSH pipeline's own plan must carry the
+    // audit — band-keyed candidate equi-join, probe side broadcast, never
+    // all-pairs
     assert(!p.contains("CartesianProduct"),
       s"LSH candidate generation must stay a band equi-join:\n$p")
     assert(p.contains("BroadcastExchange"),
@@ -89,7 +86,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"IVF scoring must never cross vectors with vectors:\n$p")
     assert(p.contains("BroadcastExchange"),
       s"the nprobe-cell probe fan-out should broadcast into the cell join:\n$p")
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"the per-probe top-3 should stay a two-phase rank limit:\n$p")
   }
 
@@ -190,7 +187,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange"),
       s"the 40-row probe fan-out should broadcast into the cell join:\n$p")
     // both rank limits (prefix shortlist + final top-3) stay two-phased
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"shortlist/top-k windows should plan the bounded-heap shape:\n$p")
   }
 
@@ -316,7 +313,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("weighted sample plans the two-phase rank limit, not a full sort") {
     val p = plan("q_sample_weighted")
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"priority top-k per source must be two-phase:\n$p")
   }
 
@@ -325,7 +322,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"probe fan-out must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"corpus must never cartesian:\n$p")
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"shortlist/top-3 windows must be two-phase rank limits:\n$p")
   }
 
@@ -334,7 +331,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"probe fan-out must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"corpus must never cartesian:\n$p")
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"shortlist/top-5 windows must be two-phase rank limits:\n$p")
   }
 
@@ -366,7 +363,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("correlated LATERAL decorrelates to a rank-limit join, not a per-row loop") {
     val p = plan("q_join_lateral")
-    assert(p.contains("WindowGroupLimit") || p.contains("TopKPerGroup"),
+    assert(p.contains("TopKPerGroup"),
       s"expected the LIMITed lateral subquery to decorrelate into a two-phase rank limit:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"lateral must not execute per driving row:\n$p")

@@ -119,7 +119,6 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("graded query end-to-end: merged fine sketches equal the direct sketch") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val df = spark.range(5000).select(
       (col("id") % 4).as("g"), (col("id") % 16).as("shard"),
       expr("CAST(conv(substring(md5(CAST(id AS STRING)), 1, 12), 16, 10) AS BIGINT)").as("hk"),

@@ -44,7 +44,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("k above spark.graft.topkRewriteMaxK falls back to the window plan") {
-    plans.TopKRewriteApi.ensureRegistered(spark)
     spark.conf.set("spark.graft.topkRewriteMaxK", "3")
     try {
       val df = spark.range(100)
@@ -57,7 +56,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("generic rank-limit shapes rewrite exactly (dense keys, ties broken by id)") {
-    plans.TopKRewriteApi.ensureRegistered(spark)
     val df = spark.range(1000)
       .select(col("id"), (col("id") % 13).as("g"),
         (col("id") * 2654435761L % 97).as("s"))
@@ -75,7 +73,6 @@ class TopKRewriteSpec extends AnyFunSuite {
     // budget 1 → at most one tracked group per partial partition; every
     // other group's rows pass through unfiltered and the final phase
     // must still produce the exact window answer
-    plans.TopKRewriteApi.ensureRegistered(spark)
     spark.conf.set("spark.graft.topkRewritePartialRowBudget", "1")
     try {
       val df = spark.range(2000)
@@ -110,18 +107,35 @@ class TopKRewriteSpec extends AnyFunSuite {
     }
   }
 
-  test("ANN re-rank shortlist self-registers the rewrite (no session-order dependence)") {
-    // wipe the session's experimental lists — the q_sim_ann_pq builder
-    // alone must bring the bounded-heap plan back
+  /** `body` on a session whose strategy and rule lists are wiped; the
+    * surface is installed again afterwards, for the suites that follow. */
+  private def onClearedSession[T](body: => T): T = {
     spark.experimental.extraStrategies = Nil
     spark.experimental.extraOptimizations = Nil
-    val p = withRewrite(on = true)(physical(AnnOps.pqSearchGraded(spark, sf)))
+    try body finally functions.Surface.install(spark)
+  }
+
+  test("ANN re-rank shortlist self-registers the rewrite (no session-order dependence)") {
+    // on a wiped session, the graded q_sim_ann_pq alone (through its
+    // queries entry) must bring the bounded-heap plan back
+    val p = onClearedSession {
+      AnnOps.queries("q_sim_ann_pq")(spark, sf)
+      withRewrite(on = true)(physical(AnnOps.pqSearchGraded(spark, sf)))
+    }
     assert(p.contains("TopKPerGroup"),
-      s"rerankAdc did not self-register the rewrite:\n$p")
+      s"q_sim_ann_pq did not install the rewrite:\n$p")
+  }
+
+  test("row-number-limit queries plan TopKPerGroup whatever ran before them") {
+    // none of the three calls refine: a dedup filter, a decorrelated
+    // LATERAL ... LIMIT and the kNN join's direct topK
+    for (q <- Seq("q_dedup_rewrite", "q_join_lateral", "q_sim_knn_join")) {
+      val p = onClearedSession(physical(SparkEntry.queries(q)(spark, sf)))
+      assert(p.contains("TopKPerGroup"), s"$q planned without the rewrite:\n$p")
+    }
   }
 
   test("non-limit conjuncts survive as a residual filter above the rewrite") {
-    plans.TopKRewriteApi.ensureRegistered(spark)
     val df = spark.range(200)
       .select(col("id"), (col("id") % 5).as("g"), (col("id") * 31 % 83).as("s"))
     val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("id"))

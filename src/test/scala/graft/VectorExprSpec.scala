@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
+import graft.functions.{Surface, VectorFunctions}
 
 /** The codegen'd vector kernels must agree bit-for-bit with the
   * higher-order-function formulation they replaced (that equivalence is
@@ -13,7 +13,6 @@ class VectorExprSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   test("graft_dot and graft_norm_sq match the HOF forms bit-for-bit") {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, TestSpark.sf).limit(200)
     val hofNorm = aggregate(col("embedding"), lit(0.0),
       (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType))
@@ -34,7 +33,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("graft_dot handles mixed float/double arrays (literal hyperplanes)") {
-    VectorFunctions.register(spark)
     val r = Tables.embeddings(spark, TestSpark.sf).limit(1)
       .select(expr(s"graft_dot(embedding, array(${Seq.fill(64)("1.0D").mkString(",")}))").as("s"),
         aggregate(col("embedding"), lit(0.0), (acc, x) => acc + x.cast(DoubleType)).as("h"))
@@ -43,7 +41,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("graft_pq_subdists and graft_pq_encode match the HOF argmin fold bit-for-bit") {
-    VectorFunctions.register(spark)
     val m = 4
     val sub = 16
     def hofSubdist(v: String, c: String, mi: Int): String = {
@@ -77,7 +74,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("graft_lsh_sig matches the per-plane dot/when expression form bit-for-bit") {
-    VectorFunctions.register(spark)
     for (bits <- Seq(8, 24)) {
       val rows = Tables.embeddings(spark, TestSpark.sf).limit(200)
         .select(expr(s"graft_lsh_sig(embedding, $bits)").as("native"),
@@ -90,7 +86,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("non-literal m/bits arguments fail at analysis with a clear error") {
-    VectorFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Tables.embeddings(spark, TestSpark.sf)
         .select(expr("graft_lsh_sig(embedding, CAST(vec_id AS INT))"))
@@ -99,13 +94,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(e.getMessage.contains("graft_lsh_sig"))
   }
 
-  test("GraftExtensions wiring applies cleanly") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-  }
-
   test("graft_minhash_arr matches the K array_min(transform(...)) subtrees bit-for-bit") {
-    VectorFunctions.register(spark)
     import graft.functions.{MinHash => MH}
     // shingle-hash-shaped arrays, including empty and single-element
     val df = spark.sql(
@@ -133,8 +122,9 @@ class VectorExprSpec extends AnyFunSuite {
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     val s = spark // Spark configures log4j on first use; attach after that
+    val reg = s.sessionState.functionRegistry
     val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val probe = new AbstractAppender("graft-register-probe", null, null,
+    val probe = new AbstractAppender("graft-install-probe", null, null,
         true, null) {
       override def append(e: LogEvent): Unit =
         warnings.add(e.getMessage.getFormattedMessage)
@@ -142,11 +132,28 @@ class VectorExprSpec extends AnyFunSuite {
     probe.start()
     val root = LogManager.getRootLogger.asInstanceOf[Logger]
     root.addAppender(probe)
-    try { VectorFunctions.register(s); VectorFunctions.register(s) }
-    finally { root.removeAppender(probe); probe.stop() }
+    val (before, after) =
+      try {
+        Surface.install(s); val b = reg.listFunction().size
+        Surface.install(s); (b, reg.listFunction().size)
+      } finally { root.removeAppender(probe); probe.stop() }
     assert(!warnings.toArray.exists(
       _.toString.contains("replaced a previously registered function")))
-    assert(s.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
+    assert(after == before)
+    assert(VectorFunctions.functions.forall { case (id, _, _) => reg.functionExists(id) })
+  }
+
+  test("install wires each strategy and rule once, and a second call adds none") {
+    val x = spark.experimental
+    def sizes = (x.extraStrategies.size, x.extraOptimizations.size)
+    Surface.install(spark)
+    val before = sizes
+    Surface.install(spark)
+    assert(sizes == before)
+    Seq(plans.TopKPerGroupStrategy, plans.AsOfJoinStrategy).foreach(st =>
+      assert(x.extraStrategies.count(_ == st) == 1, st))
+    Seq(plans.CosineTopKRewrite, plans.AsOfJoinLimitPushdown,
+        plans.AsOfJoinTimeFilterPushdown).foreach(r =>
+      assert(x.extraOptimizations.count(_ == r) == 1, r))
   }
 }
