@@ -5,10 +5,19 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.{BytesWritable, NullWritable}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.UnsafeExternalRowSorter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import org.apache.spark.unsafe.types.ByteArray
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
+
+import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.RangePartitionId
 
@@ -27,8 +36,9 @@ import graft.functions.RangePartitionId
   * fixed sample of the input files before the job and takes the cut
   * points from it; each record is then routed to its range by partition
   * id, so the job reads its input once and runs no sampling scan. The
-  * sample decides only how evenly the ranges fill, never whether the
-  * output is sorted.
+  * sample decides how evenly the ranges fill and whether each partition
+  * is radix-sorted on its 8-byte record prefix (`RecordSorter`), never
+  * whether the output is sorted.
   *
   * Write: raw record bytes through a minimal FileOutputFormat — one part
   * file per partition, named in partition order, so writing a
@@ -58,16 +68,14 @@ object BinaryRecords {
     * preserved — callers wanting a globally sorted file set should pass a
     * `repartitionByRange(...).sortWithinPartitions(...)` DataFrame. */
   def write(df: DataFrame, path: String): Unit =
-    sink(df.select(concat(col("key"), col("payload")).as("rec")), path)
+    sink(df.select(concat(col("key"), col("payload"))).queryExecution.toRdd.map(_.getBinary(0)), path)
 
-  /** Write a one-column binary frame's values verbatim, one part file per
-    * partition. The plan runs once: `toRdd` executes it (under adaptive
-    * execution that includes any range sampling and shuffle-map stages)
-    * and the sink consumes its `InternalRow`s directly. `getBinary` copies,
-    * so reused rows are safe. */
-  private def sink(recs: DataFrame, path: String): Unit =
-    recs.queryExecution.toRdd
-      .map(r => (NullWritable.get(), new BytesWritable(r.getBinary(0))))
+  /** Write each record verbatim, one part file per partition. A caller
+    * passing a plan's `toRdd` runs the plan once (under adaptive execution
+    * that includes its shuffle-map stages) and hands over `getBinary`
+    * copies, so reused rows are safe. */
+  private def sink(recs: RDD[Array[Byte]], path: String): Unit =
+    recs.map(r => (NullWritable.get(), new BytesWritable(r)))
       .saveAsNewAPIHadoopFile(path, classOf[NullWritable], classOf[BytesWritable],
         classOf[RawRecordOutputFormat])
 
@@ -79,21 +87,31 @@ object BinaryRecords {
   private val SampleSplits = 10
   private val SampleRun = 10
 
-  /** The `partitions` − 1 cut records for the input at `in`, ascending in
-    * unsigned byte order: the quantiles of a driver-side sample of
-    * `SampleSize` records from at most `SampleSplits` evenly chosen
-    * record-aligned splits. An input of at most `SampleSize` records is
-    * read whole. No records, no cuts. */
-  private def cutPoints(spark: SparkSession, in: String, partitions: Int): Array[Array[Byte]] = {
+  /** What the driver sample tells the sort about its input: how many
+    * records it holds, the `partitions` − 1 cut records (ascending in
+    * unsigned byte order; none when there are no records), and whether two
+    * sampled records share their first 8 bytes. */
+  private[sources] final case class CutPoints(records: Long, cuts: Array[Array[Byte]],
+      prefixTies: Boolean)
+
+  /** The cut points for the input at `in`: the quantiles of a driver-side
+    * sample of `SampleSize` records from at most `SampleSplits` evenly
+    * chosen record-aligned splits. An input of at most `SampleSize`
+    * records is read whole. Sorted in whole-record order, records sharing
+    * an 8-byte prefix are adjacent, so one pass over neighbours finds the
+    * prefix ties. */
+  private[sources] def cutPoints(spark: SparkSession, in: String, partitions: Int): CutPoints = {
     val conf = spark.sessionState.newHadoopConf()
     val all = TeraRecordSource.splits(in, conf)
-    val k =
-      if (all.map(_.length).sum <= SampleSize.toLong * RecordLen) all.length
-      else math.min(SampleSplits, all.length)
+    val bytes = all.map(_.length).sum
+    val k = if (bytes <= SampleSize.toLong * RecordLen) all.length else math.min(SampleSplits, all.length)
     val sample = sampleRecords(Array.tabulate(k)(i => all((i.toLong * all.length / k).toInt)), conf)
     java.util.Arrays.sort(sample, (a: Array[Byte], b: Array[Byte]) => ByteArray.compareBinary(a, b))
-    if (sample.isEmpty) Array.empty
-    else Array.tabulate(partitions - 1)(i => sample(((i + 1).toLong * sample.length / partitions).toInt))
+    val cuts =
+      if (sample.isEmpty) Array.empty[Array[Byte]]
+      else Array.tabulate(partitions - 1)(i => sample(((i + 1).toLong * sample.length / partitions).toInt))
+    CutPoints(bytes / RecordLen, cuts,
+      (1 until sample.length).exists(i => ByteArray.getPrefix(sample(i - 1)) == ByteArray.getPrefix(sample(i))))
   }
 
   /** `SampleSize` records of `splits`, in `SampleSize / SampleRun` runs at
@@ -137,26 +155,121 @@ object BinaryRecords {
     * as for `read`): choose the cut points from the driver sample
     * (`cutPoints`), scan whole records (`rec`), route each record to its
     * range by partition id (`repartitionById` over `RangePartitionId`: a
-    * binary search of the cuts, no sampling job), sort each partition,
-    * write. The plan executes once: one shuffle-map stage that reads the
-    * input once, one reduce stage with the sink; the exchange keeps exactly `partitions`
-    * partitions, so an empty one still writes its (empty) part file (an
-    * input with no records at all writes none). Each record
-    * stays one 100-byte binary value from scan to sink and is ordered as a
-    * whole: byte order of the record is key order first (TeraSort/valsort
-    * semantics), with the payload breaking ties, so the order is total and
-    * deterministic, and records sharing a key spread over reducers by
-    * payload. The order does not depend on the sample: routing is
-    * monotone in the record, so any cuts give sorted output, and a poor
-    * sample only unbalances the parts. Spark sorts binary values by an
-    * 8-byte prefix plus a full comparison on prefix ties, not by radix
-    * sort (the prefix does not decide a binary order). */
+    * binary search of the cuts, no sampling job), sort each partition
+    * (`RecordSorter` over the exchange's rows), write. The plan executes
+    * once: one shuffle-map stage that reads the input once, one reduce
+    * stage with the sort and the sink; the exchange keeps exactly
+    * `partitions` partitions, so an empty one still writes its (empty)
+    * part file, and an input with no records writes `partitions` empty
+    * parts, as Hadoop's TeraSort does. Each record stays one 100-byte
+    * binary value from scan to sink and is ordered as a whole: byte order
+    * of the record is key order first (TeraSort/valsort semantics), with
+    * the payload breaking ties, so the order is total and deterministic,
+    * and records sharing a key spread over reducers by payload. The order
+    * does not depend on the sample: routing is monotone in the record, so
+    * any cuts give sorted output, and a poor sample only unbalances the
+    * parts. The sample also picks the per-partition sort: when no two
+    * sampled records share their first 8 bytes, each partition is
+    * radix-sorted on that prefix and the runs of records sharing it are
+    * then put in whole-record order; otherwise (hot or constant prefixes,
+    * or `spark.sql.sort.enableRadixSort` off) it is a comparison sort on
+    * the prefix with a whole-record comparison on prefix ties. */
   def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
-    val pid = RangePartitionId(UnresolvedAttribute("rec"), cutPoints(spark, in, partitions))
-    sink(spark.read.format("terarecord").load(in).select("rec")
-      .repartitionById(partitions, GraftShim.column(pid))
-      .sortWithinPartitions(col("rec")), out)
+    val c = cutPoints(spark, in, partitions)
+    val recs =
+      if (c.records == 0) spark.sparkContext.parallelize(Seq.empty[Array[Byte]], partitions)
+      else {
+        val radix = !c.prefixTies && spark.sessionState.conf.enableRadixSort
+        spark.read.format("terarecord").load(in).select("rec")
+          .repartitionById(partitions, GraftShim.column(RangePartitionId(UnresolvedAttribute("rec"), c.cuts)))
+          .queryExecution.toRdd
+          .mapPartitions(rows => new RecordSorter(radix).sort(rows))
+      }
+    sink(recs, out)
   }
+}
+
+/** The per-partition sort of TeraSort's reduce stage: Spark's own
+  * external row sorter over one binary `rec` column, built as
+  * `SortExec.createSorter` builds it, with the record's first 8 bytes as
+  * the big-endian sort prefix (`SortPrefix`) and the unsigned
+  * `PrefixComparators.BINARY`. Spark never radix-sorts a binary column
+  * itself, since the prefix does not decide a binary order; here
+  * `radix = true` radix-sorts on the prefix alone and `sort` then puts
+  * each run of records sharing a prefix in whole-record order
+  * (`RecordSorter.repairTies`). That repair of the final iterator is
+  * enough after spills too: the spill merge compares prefixes first and
+  * the record comparator only on equal prefixes, so the merged stream is
+  * prefix-ordered and every run is contiguous across spill files. With
+  * `radix = false` the sorter compares whole records on prefix ties and
+  * no repair runs. Create one per task: the sorter takes its memory from
+  * the running task. */
+private[sources] final class RecordSorter(radix: Boolean) {
+  private val order = SortOrder(BoundReference(0, BinaryType, nullable = false), Ascending)
+  private val prefix = UnsafeProjection.create(Seq(SortPrefix(order)))
+  val rows: UnsafeExternalRowSorter = UnsafeExternalRowSorter.create(
+    StructType(Seq(StructField("rec", BinaryType, nullable = false))),
+    RowOrdering.create(Seq(order), Nil),
+    PrefixComparators.BINARY,
+    new UnsafeExternalRowSorter.PrefixComputer {
+      private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+      override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+        result.value = prefix(row).getLong(0)
+        result
+      }
+    },
+    SparkEnv.get.memoryManager.pageSizeBytes,
+    radix)
+
+  /** The records of `recs` (one-column unsafe rows) in whole-record order. */
+  def sort(recs: Iterator[InternalRow]): Iterator[Array[Byte]] = {
+    val sorted = rows.sort(recs.asInstanceOf[Iterator[UnsafeRow]]).map(_.getBinary(0))
+    if (radix) RecordSorter.repairTies(sorted) else sorted
+  }
+}
+
+private[sources] object RecordSorter {
+  /** `sorted`, which is in 8-byte prefix order, with each run of records
+    * sharing a prefix sorted in whole-record order. A run is buffered on
+    * the heap; a record whose prefix differs from both neighbours passes
+    * straight through. The bound on a run: the radix path runs only when
+    * no two of the driver's s = 10,000 sampled records share a prefix, and
+    * a prefix held by a fraction p of the input is sampled at most once
+    * with probability about e^(-ps)(1 + ps). So a run of more than 0.2 %
+    * of the input (p = 20 / s; 200 KB of a 100 MB input) reaches the
+    * repair with probability below 1e-7; a contiguous run that long, as
+    * in a presorted input, is always sampled more than once. */
+  private[sources] def repairTies(sorted: Iterator[Array[Byte]]): Iterator[Array[Byte]] =
+    new Iterator[Array[Byte]] {
+      private var run = Array.empty[Array[Byte]] // the current tie run, sorted; `i` is its next record
+      private var i = 0
+      private var ahead: Array[Byte] = _ // the record after the current run, or null at the end
+      private var aheadPrefix = 0L
+      advance()
+
+      private def advance(): Unit =
+        if (sorted.hasNext) { ahead = sorted.next(); aheadPrefix = ByteArray.getPrefix(ahead) }
+        else ahead = null
+
+      def hasNext: Boolean = i < run.length || ahead != null
+
+      def next(): Array[Byte] = {
+        if (i < run.length) { i += 1; return run(i - 1) }
+        if (ahead == null) throw new NoSuchElementException
+        val first = ahead
+        val p = aheadPrefix
+        advance()
+        if (ahead == null || aheadPrefix != p) first
+        else {
+          val b = ArrayBuffer(first)
+          while (ahead != null && aheadPrefix == p) { b += ahead; advance() }
+          run = b.toArray
+          java.util.Arrays.sort(run, (x: Array[Byte], y: Array[Byte]) => ByteArray.compareBinary(x, y))
+          i = 1
+          run(0)
+        }
+      }
+    }
 }
 
 /** Raw byte sink: writes each record's bytes verbatim, no markers/headers —

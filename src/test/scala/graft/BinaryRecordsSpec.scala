@@ -18,7 +18,8 @@ import graft.sources.BinaryRecords
   * sorted, the record multiset is preserved, the sort runs one
   * shuffle-map stage and no sampling scan, and the parts are balanced —
   * over a spread input, one hot key, presorted and reverse-sorted input,
-  * no records, one record, and 256 partitions. */
+  * one constant 8-byte prefix, no records (still one empty part per
+  * partition), one record, and 256 partitions. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -68,6 +69,10 @@ class BinaryRecordsSpec extends AnyFunSuite {
     val oneKey = spark.range(1000).select(
       expr("cast('0000000000' as binary)").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
+    // bytes 9-10 of the key and the payload vary, the first 8 bytes never
+    val onePrefix = spark.range(20000).select(
+      expr("concat(cast('ABCDEFGH' as binary), unhex(substring(md5(cast(id as string)), 1, 4)))").as("key"),
+      expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
     val byRecord = Seq(col("key"), col("payload"))
     // the largest part holds at most 1.5x the mean part
     def balanced(sizes: Seq[Long]) = sizes.max <= 1.5 * sizes.sum / sizes.size
@@ -81,7 +86,8 @@ class BinaryRecordsSpec extends AnyFunSuite {
       ("20000 reverse-sorted records", genTeraRecords(20000).orderBy(byRecord.map(_.desc): _*), 4,
         s => s.size == 4 && balanced(s)),
       ("5000 records over 256 partitions", genTeraRecords(5000), 256, _.size == 256),
-      ("no records", genTeraRecords(0), 3, _.forall(_ == 0L)),
+      ("20000 records with one constant 8-byte prefix", onePrefix, 4, s => s.size == 4 && balanced(s)),
+      ("no records", genTeraRecords(0), 3, _ == Seq.fill(3)(0L)),
       ("one record", genTeraRecords(1), 3, _.sum == 100L))
 
     for ((label, input, partitions, partsOk) <- inputs) withClue(s"$label: ") {

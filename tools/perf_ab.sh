@@ -8,20 +8,27 @@
 # repo (reused while the ref is the same, so its .bench_build survives).
 # Each side first runs one unreported warm-up (it builds the harness).
 # Then pair i runs `perfbench/run.py --workload <workload> --seed <seed_i>
-# --seconds 6 --trace 0` on both sides, the parent first in odd pairs and
+# --seconds 6 --trace <0|1>` on both sides, the parent first in odd pairs and
 # the change first in even ones, with one seed per pair. Results come only
 # from run.py's last stdout line (its JSON), so nothing under perfbench/
 # is read or changed.
 #
 # Prints, for the five end-to-end metrics: the per-pair table, Q1 / median
 # / Q3 per side, change ÷ parent medians, the change's wins (lower is
-# better; ties count for neither side) and each run's failed count.
+# better; ties count for neither side) and each run's failed count. With
+# GRAFT_PERF_AB_TRACE=1 the runs are traced (`--trace 1`) and the same
+# tables cover `trace.pass_s` and the TeraSort layers in place of the
+# end-to-end metrics: the time and CPU layers (`map_s`, `reduce_s`,
+# `task_cpu_s`, `gc_s`) and the counters that should not move
+# (`map_passes`, `scan_amplification`, `spill_bytes`).
 #
 # Environment:
 #   GRAFT_PERF_AB_DIR   parent checkouts go under it (default /tmp/graft_ab; keep
 #                       it short: sbt's socket path under it must fit 104 bytes)
-#   GRAFT_PERF_AB_OUT   raw JSON lines (default /tmp/graft_perf_ab_out/<workload>)
+#   GRAFT_PERF_AB_OUT   raw JSON lines (default /tmp/graft_perf_ab_out/<workload>,
+#                       with a -trace suffix for a traced A/B)
 #   GRAFT_PERF_AB_SEED  seed of pair 1; pair i uses seed + i - 1 (default 1001)
+#   GRAFT_PERF_AB_TRACE 1 runs the traced A/B described above (default 0)
 set -euo pipefail
 [ $# -eq 3 ] || { echo "usage: $0 <parent-ref> <workload> <pairs>" >&2; exit 2; }
 PARENT_REF=$1
@@ -30,7 +37,9 @@ PAIRS=$3
 ROOT=$(git rev-parse --show-toplevel)
 SHA=$(git -C "$ROOT" rev-parse --verify "$PARENT_REF^{commit}")
 PARENT_DIR=${GRAFT_PERF_AB_DIR:-/tmp/graft_ab}/${SHA:0:7}
-OUT=${GRAFT_PERF_AB_OUT:-/tmp/graft_perf_ab_out/$WORKLOAD}
+TRACE=${GRAFT_PERF_AB_TRACE:-0}
+[ "$TRACE" = 0 ] || [ "$TRACE" = 1 ] || { echo "GRAFT_PERF_AB_TRACE must be 0 or 1" >&2; exit 2; }
+OUT=${GRAFT_PERF_AB_OUT:-/tmp/graft_perf_ab_out/$WORKLOAD$([ "$TRACE" = 0 ] || echo -trace)}
 SEED0=${GRAFT_PERF_AB_SEED:-1001}
 
 if [ ! -f "$PARENT_DIR/.perf_ab_ref" ]; then
@@ -47,7 +56,7 @@ run() { # $1=side $2=seed $3=run name; writes $OUT/<name>.json and .err
   [ "$1" = parent ] && dir=$PARENT_DIR
   echo "[perf_ab] $3: $1, seed $2" >&2
   (cd "$dir" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$2" \
-    --seconds 6 --trace 0 2>"$OUT/$3.err" | tail -1 >"$OUT/$3.json") || true
+    --seconds 6 --trace "$TRACE" 2>"$OUT/$3.err" | tail -1 >"$OUT/$3.json") || true
   if ! grep -q '"metrics"' "$OUT/$3.json"; then
     echo "[perf_ab] $3 printed no result:" >&2
     tail -3 "$OUT/$3.err" >&2
@@ -65,16 +74,21 @@ for i in $(seq 1 "$PAIRS"); do
   for side in $order; do run "$side" "$seed" "${side}_$i" || true; done
 done
 
-python3 - "$OUT" "$PAIRS" "$SEED0" "${SHA:0:9}" <<'EOF'
+python3 - "$OUT" "$PAIRS" "$SEED0" "${SHA:0:9}" "$TRACE" <<'EOF'
 import json, statistics, sys
-out, pairs, seed0, sha = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4]
-metrics = [("pass_s", 3), ("op_p50_s", 3), ("setup_s", 1), ("peak_rss_mb", 0), ("peak_live_mb", 0)]
+out, pairs, seed0, sha, trace = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4], sys.argv[5] == "1"
+if trace:
+    metrics = [("trace.pass_s", 3)] + [(f"terasort.{m}", 3) for m in ("map_s", "reduce_s", "task_cpu_s", "gc_s")] \
+        + [("terasort.map_passes", 1), ("terasort.scan_amplification", 2), ("terasort.spill_bytes", 0)]
+else:
+    metrics = [("pass_s", 3), ("op_p50_s", 3), ("setup_s", 1), ("peak_rss_mb", 0), ("peak_live_mb", 0)]
 load = lambda side, i: json.load(open(f"{out}/{side}_{i}.json"))
 runs = {s: [load(s, i) for i in range(1, pairs + 1)] for s in ("parent", "change")}
 val = lambda r, m: r.get("metrics", {}).get(m, {}).get("value")
 fmt = lambda v, d: "—" if v is None else f"{v:.{d}f}"
 
-print(f"A/B of the working tree against {sha}: {pairs} pairs, first seed {seed0}\n")
+print(f"{'Traced A/B' if trace else 'A/B'} of the working tree against {sha}: "
+      f"{pairs} pairs, first seed {seed0}\n")
 print("| pair | seed | first | " + "".join(f"`{m}` | | " for m, _ in metrics) + "failed |")
 print("|---|---|---|" + "---|---|" * len(metrics) + "---|")
 for i in range(pairs):
