@@ -3,40 +3,29 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-cut policy for iterative operators (connected components'
-  * round loop is the model consumer).
+  * round loop is the model consumer). The mode follows the SparkContext.
   *
-  * Default: `localCheckpoint()` — blocks live on executors, fast, right
-  * for single-node and short jobs. But local checkpoints DIE WITH THEIR
-  * EXECUTOR: lineage is truncated, so a lost executor cannot recompute,
-  * and one loss kills a long iterative run. With
-  * `spark.graft.reliableCheckpoint=true` the cut goes through a RELIABLE
-  * checkpoint instead — data lands in the fault-tolerant checkpoint dir
-  * (`spark.graft.checkpointDir`, default
-  * `<java.io.tmpdir>/graft_ckpt_<applicationId>`; on a cluster point it
-  * at HDFS/object storage), so an executor loss costs one re-read, not
-  * the whole run. That is the setting a 100 TB dedup-clustering job
-  * should run with.
+  * No checkpoint dir: `localCheckpoint()` — blocks live on executors,
+  * fast, right for single-node and short jobs. But local checkpoints DIE
+  * WITH THEIR EXECUTOR: lineage is truncated, so a lost executor cannot
+  * recompute, and one loss kills a long iterative run.
+  *
+  * A checkpoint dir (Spark's static `spark.checkpoint.dir`, or
+  * `SparkContext.setCheckpointDir`; on a cluster point it at HDFS/object
+  * storage): the cut goes through a RELIABLE checkpoint instead — data
+  * lands in that fault-tolerant dir, so an executor loss costs one
+  * re-read, not the whole run. That is the setting a 100 TB
+  * dedup-clustering job should run with. The deployment owns the dir;
+  * graft never sets one.
   */
 object Checkpoints {
-  def cut(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val reliable =
-      s.conf.getOption("spark.graft.reliableCheckpoint").exists(_.toBoolean)
-    // lazy: the lineage cut and block caching are identical, but
-    // materialization folds into the FIRST consuming action instead of a
-    // dedicated job — in the CC round loop that halves the job count
-    // (cut+count per round becomes one count job). Loop callers always
+  def cut(df: DataFrame): DataFrame =
+    // the local cut is lazy: the lineage cut and block caching are
+    // identical, but materialization folds into the FIRST consuming action
+    // instead of a dedicated job — in the CC round loop that halves the
+    // job count (cut+count per round becomes one count job). Loop callers always
     // run an action inside the conf-pinned scope, so blocks still
     // materialize under the pinned shuffle parallelism.
-    if (!reliable) df.localCheckpoint(eager = false)
-    else {
-      if (s.sparkContext.getCheckpointDir.isEmpty) {
-        val dir = s.conf.getOption("spark.graft.checkpointDir").getOrElse(
-          s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_" +
-            s.sparkContext.applicationId)
-        s.sparkContext.setCheckpointDir(dir)
-      }
-      df.checkpoint()
-    }
-  }
+    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager = false)
+    else df.checkpoint()
 }

@@ -403,10 +403,11 @@ object LlmOps {
     * label-POINTER structure lining up, which no adversarial graph is
     * obliged to do.
     *
-    * Lineage is cut per round through Checkpoints.cut (reliable under
-    * spark.graft.reliableCheckpoint=true), the prior round's blocks are
-    * freed once the new round is live, and the loop THROWS at the
-    * iteration cap — a silent partial labeling is a wrong answer. */
+    * Lineage is cut per round through Checkpoints.cut (a reliable
+    * checkpoint when the SparkContext has a checkpoint dir, a local one
+    * otherwise), the prior round's blocks are freed once the new round is
+    * live, and the loop THROWS at the iteration cap — a silent partial
+    * labeling is a wrong answer. */
   private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // Shuffle parallelism inside the loop follows STATE volume, not the
     // session's scan parallelism (the same sizing decision as the
@@ -487,16 +488,10 @@ object LlmOps {
     * labeling is the persisted artifact (at 100 TB a dedup pipeline
     * writes the component table once and every consumer — dedup stats,
     * leak-free splits, cluster sampling — scans it). */
-  private def bandComponentLabels(s: SparkSession, d: String): DataFrame = {
-    // the stage key carries the reliable-checkpoint mode: an A/B of it
-    // must re-run the loop, never read a table the other mode built —
-    // outputs agree, but the A/B's whole point is exercising the mode
-    val rc = if (s.conf.get("spark.graft.reliableCheckpoint", "false") == "true")
-      "_rc" else ""
-    SharedStage(s, d, s"dedup_cc_labels$rc") {
+  private def bandComponentLabels(s: SparkSession, d: String): DataFrame =
+    SharedStage(s, d, "dedup_cc_labels") {
       connectedComponents(bandPairs(s, d))
     }
-  }
 
   def qDedupComponents(s: SparkSession, d: String): DataFrame =
     bandComponentLabels(s, d)

@@ -836,11 +836,11 @@ object ScaleOps {
     *
     * Shape: the kept set is a rank-limit window (rank ≤ CAP by hash
     * within source) — exactly the Filter(rn≤k, Window) shape the
-    * cosine-top-k rewrite generalizes, so with `spark.graft.topkRewrite`
-    * on it plans as the two-phase bounded-heap operator: per-partition
-    * heaps of CAP rows, then a CAP-rows-per-source exchange — a hot
-    * domain costs O(CAP) reducer state instead of domain-sized sort
-    * spill. Totals are a separate tiny rollup joined back on source. */
+    * cosine-top-k rewrite generalizes, so it plans as the two-phase
+    * bounded-heap operator: per-partition heaps of CAP rows, then a
+    * CAP-rows-per-source exchange — a hot domain costs O(CAP) reducer
+    * state instead of domain-sized sort spill. Totals are a separate
+    * tiny rollup joined back on source. */
   def qSampleDomainCap(s: SparkSession, d: String): DataFrame = {
     val CAP = 15
     val docs = documents(s, d)

@@ -782,8 +782,8 @@ object TextOps {
     * AND the final per-word symbol table are two outputs of the SAME
     * driver-loop run, so both stage together under one SharedStage key.
     * Parquet round-trips the exact strings/longs, so consumers' oracle
-    * hashes are unchanged. Since r15 the only consumer is q_text_bpe
-    * itself (untimed but Verify-graded every round); the timed pair
+    * hashes are unchanged. The only consumer is q_text_bpe itself
+    * (untimed but Verify-graded on every run); the timed pair
     * (q_text_bpe_batched, q_text_bpe_apply) stages via the independent
     * batched trainer instead — see [[bpeTrainedBatched]]. The two stages
     * deliberately do NOT share: the batched trainer's graded claim is
@@ -827,7 +827,7 @@ object TextOps {
     *    above every earlier accepted pair's max trigram extension and
     *    above every (y_j, x_k) count among accepted pairs guarantees no
     *    created pair can outrank it, even on ties. (Trigram bounds
-    *    replaced round 12's first pair-level maxima — maxInto/maxOutOf
+    *    replaced the earlier pair-level maxima — maxInto/maxOutOf
     *    collapse to the global top count for common symbols and capped
     *    batches at 1.62 merges/round; specific trigrams are far rarer.)
     *  - PREFIX discipline: the first candidate that fails ends the
@@ -849,7 +849,7 @@ object TextOps {
     * final per-word symbol table (word, st, n) — the same two artifacts
     * the sequential [[bpeTrain]] returns, so the batched trainer's final
     * segmentation is gradable against the sequential oracle too
-    * (q_text_bpe_apply consumes it since r15). */
+    * (q_text_bpe_apply consumes it). */
   private[graft] def bpeTrainBatched(s: SparkSession, d: String,
       maxBatch: Int = 8): (DataFrame, DataFrame) = {
     import s.implicits._
@@ -860,9 +860,11 @@ object TextOps {
       .select(col("word"),
         concat(regexp_replace(col("word"), "(.)", "  $1"), lit("  ")).as("st"),
         col("n")).localCheckpoint(eager = false)
-    var nTokens = st
-      .agg(sum(col("n") * size(split(trim(col("st")), "  "))))
+    // 0 on an empty corpus, which then trains no merge
+    def tokens(st: DataFrame): Long = st
+      .agg(coalesce(sum(col("n") * size(split(trim(col("st")), "  "))), lit(0L)))
       .collect()(0).getLong(0)
+    var nTokens = tokens(st)
     val out = Seq.newBuilder[(Int, String, String, Long, Long)]
     var rank = 0
     while (rank < BpeRounds) {
@@ -892,9 +894,7 @@ object TextOps {
         st = merged.localCheckpoint(eager = false)
         if (accepted.length == 1 && accepted(0)._1 == accepted(0)._2) {
           // self-pair: greedy run merging applies fewer than cnt — recount
-          nTokens = st
-            .agg(sum(col("n") * size(split(trim(col("st")), "  "))))
-            .collect()(0).getLong(0)
+          nTokens = tokens(st)
           val (x, y, cnt) = accepted(0)
           out += ((rank, x, y, cnt, nTokens))
           rank += 1
@@ -1195,14 +1195,14 @@ object TextOps {
 
   /** One BATCHED training per (application, sfDir): like [[bpeTrained]]
     * but staged from the batched trainer — the driver-round scale path.
-    * Since r15 this is the stage the TIMED fleet pays (q_text_bpe_batched
-    * reads the merges, q_text_bpe_apply the final table), while the
-    * sequential q_text_bpe — untimed but still Verify-dumped and
-    * oracle-graded every round — keeps its own [[bpeTrained]] stage, so
-    * the sequential implementation never goes unexercised. Both trainers
-    * hash against ONE sequential-replay DuckDB oracle; with apply reading
-    * this stage, the equivalence claim now covers the batched trainer's
-    * final symbol table, not just its merge rows. */
+    * This is the stage the TIMED fleet pays (q_text_bpe_batched reads the
+    * merges, q_text_bpe_apply the final table), while the sequential
+    * q_text_bpe — untimed but still Verify-dumped and oracle-graded —
+    * keeps its own [[bpeTrained]] stage, so the sequential implementation
+    * never goes unexercised. Both trainers hash against ONE
+    * sequential-replay DuckDB oracle; with apply reading this stage, the
+    * equivalence claim covers the batched trainer's final symbol table,
+    * not just its merge rows. */
   private def bpeTrainedBatched(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val dir = SharedStage.memoDir(s, d, "bpe_train_batched")(
@@ -1229,7 +1229,7 @@ object TextOps {
     * one broadcast-hash join. Reported per lang as exact integers:
     * whitespace words, pre-merge tokens (= characters, the round-0
     * symbols), and post-merge BPE tokens. Consumes the BATCHED trainer's
-    * final symbol table (r15): the oracle below replays the SEQUENTIAL
+    * final symbol table: the oracle below replays the SEQUENTIAL
     * chain, so this query's hash match grades batched ≡ sequential on
     * the whole final segmentation, not just the merge rows. */
   def qTextBpeApply(s: SparkSession, d: String): DataFrame = {

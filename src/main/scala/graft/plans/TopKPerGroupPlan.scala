@@ -40,12 +40,12 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * At 100 TB of scored candidates per probe the partial phase is the
   * difference between sorting the candidate set and scanning it.
   *
-  * Memory safety (r9 ADVICE — no OOM trap outside the design
-  * envelope): BOTH phases hold bounded state, so unbounded group
-  * cardinality degrades, never dies.
+  * Memory safety (no OOM trap outside the design envelope): BOTH
+  * phases hold bounded state, so unbounded group cardinality degrades,
+  * never dies.
   *   partial — heap state is capped by
-  *             `spark.graft.topkRewritePartialRowBudget` rows (default
-  *             4M ≈ tens of MB; tracked groups = budget/k). Once the
+  *             `TopKPerGroupStrategy.PartialRowBudget` rows (4M ≈ tens
+  *             of MB; tracked groups = budget/k). Once the
   *             budget is hit, rows of NEW groups pass through
   *             UNFILTERED — sound, because the partial phase is only a
   *             row-reducing optimization and the final phase computes
@@ -57,8 +57,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *             a time: O(k) state regardless of group count. The sort
   *             input is ≤ k rows per group per map partition — tiny
   *             relative to the scanned candidate set, where the win is.
-  * `spark.graft.topkRewriteMaxK` (default 1000) bounds k; set
-  * `spark.graft.topkRewrite=false` to disable the rewrite entirely.
+  * `CosineTopKRewrite.MaxK` (1000) bounds k. To disable the rewrite, use
+  * Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.CosineTopKRewrite`.
   * Exactness is oracle-gated fleet-wide either way.
   *
   * Tie semantics: `row_number` over a non-total within-group order is
@@ -84,15 +85,17 @@ case class TopKPerGroup(
 /** Optimizer rule matching the rank-limit shape. Conservative by
   * construction: fires only on a single-expression `row_number` window
   * with non-empty partition AND order specs, a conjunct bounding that
-  * row number by an integer literal, and k within the configured
-  * threshold; anything else keeps the original node (by reference, so
-  * the fixed-point batch sees no change). The rule runs in the "User
+  * row number by an integer literal, and k at most `MaxK`; anything
+  * else keeps the original node (by reference, so the fixed-point batch
+  * sees no change). The rule runs in the "User
   * Provided Optimizers" batch (`Surface.install` lists it through
   * `spark.experimental`), after Spark's InferWindowGroupLimit, so a
   * WindowGroupLimit pre-filter already below the window is subsumed and
   * removed when it matches the same spec. Non-limit conjuncts survive as
   * a Filter above the rewritten node. */
 object CosineTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
+  /** The largest k the rule rewrites; a larger k keeps the window plan. */
+  val MaxK = 1000
 
   private def limitFrom(e: Expression, rn: Attribute): Option[Int] = e match {
     case LessThanOrEqual(a: Attribute, IntegerLiteral(v)) if a.semanticEquals(rn) => Some(v)
@@ -105,8 +108,6 @@ object CosineTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.topkRewrite", "true") != "true") return plan
-    val maxK = conf.getConfString("spark.graft.topkRewriteMaxK", "1000").toInt
     plan.transform {
       case f @ Filter(cond,
           Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
@@ -114,7 +115,7 @@ object CosineTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
         val rn = alias.toAttribute
         val conjuncts = splitConjunctivePredicates(cond)
         val ks = conjuncts.flatMap(limitFrom(_, rn))
-        if (ks.isEmpty || ks.min <= 0 || ks.min > maxK) f
+        if (ks.isEmpty || ks.min <= 0 || ks.min > MaxK) f
         else {
           val k = ks.min
           val input = wchild match {
@@ -131,16 +132,16 @@ object CosineTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 object TopKPerGroupStrategy extends SparkStrategy {
+  /** The partial phase's heap state cap, in rows. */
+  val PartialRowBudget = 4000000L
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, rn, child) =>
       // partial (per input partition, no rn yet, state ≤ budget rows) →
       // group exchange + group sort (EnsureRequirements satisfies the
       // final's ClusteredDistribution + ordering) → final (one heap)
-      val budget = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.topkRewritePartialRowBudget", "4000000")
-        .toLong
-      val partial = TopKPerGroupExec(g, o, k, None, budget, planLater(child))
-      TopKPerGroupExec(g, o, k, Some(rn), budget, partial) :: Nil
+      val partial = TopKPerGroupExec(g, o, k, None, PartialRowBudget, planLater(child))
+      TopKPerGroupExec(g, o, k, Some(rn), PartialRowBudget, partial) :: Nil
     case _ => Nil
   }
 }

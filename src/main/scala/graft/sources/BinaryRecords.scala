@@ -10,12 +10,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, UnsafeRow}
 import org.apache.spark.sql.execution.UnsafeExternalRowSorter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.ByteArray
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
+
+import java.nio.ByteOrder
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -192,11 +195,13 @@ object BinaryRecords {
 /** The per-partition sort of TeraSort's reduce stage: Spark's own
   * external row sorter over one binary `rec` column, built as
   * `SortExec.createSorter` builds it, with the record's first 8 bytes as
-  * the big-endian sort prefix (`SortPrefix`) and the unsigned
-  * `PrefixComparators.BINARY`. Spark never radix-sorts a binary column
-  * itself, since the prefix does not decide a binary order; here
-  * `radix = true` radix-sorts on the prefix alone and `sort` then puts
-  * each run of records sharing a prefix in whole-record order
+  * the big-endian sort prefix (the value `ByteArray.getPrefix` gives) and
+  * the unsigned `PrefixComparators.BINARY`. The prefix is read in place
+  * from the row's memory, never copied out: TeraSort's records are 100
+  * bytes, so the first 8 are always there. Spark never radix-sorts a
+  * binary column itself, since the prefix does not decide a binary
+  * order; here `radix = true` radix-sorts on the prefix alone and `sort`
+  * then puts each run of records sharing a prefix in whole-record order
   * (`RecordSorter.repairTies`). That repair of the final iterator is
   * enough after spills too: the spill merge compares prefixes first and
   * the record comparator only on equal prefixes, so the merged stream is
@@ -206,7 +211,6 @@ object BinaryRecords {
   * the running task. */
 private[sources] final class RecordSorter(radix: Boolean) {
   private val order = SortOrder(BoundReference(0, BinaryType, nullable = false), Ascending)
-  private val prefix = UnsafeProjection.create(Seq(SortPrefix(order)))
   val rows: UnsafeExternalRowSorter = UnsafeExternalRowSorter.create(
     StructType(Seq(StructField("rec", BinaryType, nullable = false))),
     RowOrdering.create(Seq(order), Nil),
@@ -214,7 +218,7 @@ private[sources] final class RecordSorter(radix: Boolean) {
     new UnsafeExternalRowSorter.PrefixComputer {
       private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
       override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
-        result.value = prefix(row).getLong(0)
+        result.value = RecordSorter.prefix(row.asInstanceOf[UnsafeRow])
         result
       }
     },
@@ -229,6 +233,16 @@ private[sources] final class RecordSorter(radix: Boolean) {
 }
 
 private[sources] object RecordSorter {
+  private val LittleEndian = ByteOrder.nativeOrder == ByteOrder.LITTLE_ENDIAN
+
+  /** The big-endian first 8 bytes of `row`'s binary column 0, read where
+    * the row keeps them: the column's fixed-width word holds the bytes'
+    * offset in its upper 32 bits. */
+  private[sources] def prefix(row: UnsafeRow): Long = {
+    val word = Platform.getLong(row.getBaseObject, row.getBaseOffset + (row.getLong(0) >>> 32))
+    if (LittleEndian) java.lang.Long.reverseBytes(word) else word
+  }
+
   /** `sorted`, which is in 8-byte prefix order, with each run of records
     * sharing a prefix sorted in whole-record order. A run is buffered on
     * the heap; a record whose prefix differs from both neighbours passes

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The environment's positive-int parse, and guards that keep the session
   * factory the only session builder, `Surface` the only installer of the
-  * Catalyst surface, `src/main` to its four mains, and the
-  * `spark.graft.*` conf keys and `SPARK_GRAFT_*` variables it reads to
-  * fixed lists. */
+  * Catalyst surface, `src/main` to its four mains and its `SPARK_GRAFT_*`
+  * variables to a fixed list, and `src/main` free of `spark.graft.*` conf
+  * keys and of checkpoint-dir setters. */
 class GraftSessionSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
     val cpus = Runtime.getRuntime.availableProcessors
@@ -46,15 +46,14 @@ class GraftSessionSpec extends AnyFunSuite {
       Seq("Bench", "Explain", "TimeQ", "Verify"))
   }
 
-  test("src/main reads exactly the five spark.graft conf keys") {
-    // a key is read through a string literal naming it in full; a new
-    // knob has to be added here on purpose
-    val keys = sources("src/main/scala").flatMap { f =>
-      """"spark\.graft\.(\w+)"""".r.findAllMatchIn(Files.readString(f))
-        .map(_.group(1))
-    }.toSet
-    assert(keys == Set("checkpointDir", "reliableCheckpoint", "topkRewrite",
-      "topkRewriteMaxK", "topkRewritePartialRowBudget"))
+  test("src/main names no spark.graft conf key and never sets the checkpoint dir") {
+    // graft is tuned through Spark's own settings; the checkpoint dir
+    // belongs to the deployment (spark.checkpoint.dir)
+    def naming(pattern: String) = sources("src/main/scala")
+      .filter(f => pattern.r.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString)
+    assert(naming(""""spark\.graft\.""") == Nil)
+    assert(naming("""\.setCheckpointDir\s*\(""") == Nil)
   }
 
   test("src/main reads exactly these SPARK_GRAFT_* variables") {

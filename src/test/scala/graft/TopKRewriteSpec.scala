@@ -9,15 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * the rule fires on q_sim_topk's rank-limit shape, and exactness —
   * identical results with the rewrite on and off (it is an EXACT
   * physical rewrite; approximate search stays the explicit q_sim_ann_*
-  * surface). */
+  * surface). The rewrite is switched off through Spark's own
+  * `spark.sql.optimizer.excludedRules`. */
 class TopKRewriteSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  private def withRewrite[T](on: Boolean)(body: => T): T = {
-    spark.conf.set("spark.graft.topkRewrite", on.toString)
-    try body finally spark.conf.unset("spark.graft.topkRewrite")
-  }
+  private def withRewrite[T](on: Boolean)(body: => T): T =
+    if (on) body
+    else GraftSession.withConfs(spark,
+      "spark.sql.optimizer.excludedRules" -> plans.CosineTopKRewrite.ruleName)(body)
 
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -38,21 +39,19 @@ class TopKRewriteSpec extends AnyFunSuite {
     assert(on.sameElements(off))
   }
 
-  test("spark.graft.topkRewrite=false keeps the window plan") {
+  test("excludedRules=CosineTopKRewrite keeps the window plan") {
     val p = withRewrite(on = false)(physical(LlmOps.qSimTopk(spark, sf)))
     assert(!p.contains("TopKPerGroup"), s"rewrite fired while disabled:\n$p")
   }
 
-  test("k above spark.graft.topkRewriteMaxK falls back to the window plan") {
-    spark.conf.set("spark.graft.topkRewriteMaxK", "3")
-    try {
-      val df = spark.range(100)
-        .select(col("id"), (col("id") % 7).as("g"), (col("id") * 37 % 101).as("s"))
-      val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("id"))
-      val top5 = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      assert(!physical(top5).contains("TopKPerGroup"),
-        "k=5 must not rewrite under maxK=3")
-    } finally spark.conf.unset("spark.graft.topkRewriteMaxK")
+  test("k above MaxK (1000) falls back to the window plan") {
+    val df = spark.range(100)
+      .select(col("id"), (col("id") % 7).as("g"), (col("id") * 37 % 101).as("s"))
+    val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("id"))
+    def topk(k: Int) = physical(df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k))
+    assert(plans.CosineTopKRewrite.MaxK === 1000)
+    assert(topk(1000).contains("TopKPerGroup"), "k=1000 must rewrite")
+    assert(!topk(1001).contains("TopKPerGroup"), "k=1001 must not rewrite")
   }
 
   test("generic rank-limit shapes rewrite exactly (dense keys, ties broken by id)") {
@@ -72,21 +71,27 @@ class TopKRewriteSpec extends AnyFunSuite {
   test("partial row budget: pass-through overflow keeps results exact (budget=1)") {
     // budget 1 → at most one tracked group per partial partition; every
     // other group's rows pass through unfiltered and the final phase
-    // must still produce the exact window answer
-    spark.conf.set("spark.graft.topkRewritePartialRowBudget", "1")
-    try {
-      val df = spark.range(2000)
-        .select(col("id"), (col("id") % 97).as("g"),
-          (col("id") * 2654435761L % 89).as("s"))
-      val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("id"))
-      def topk(): Array[Seq[Any]] =
-        df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .orderBy(col("g"), col("rn")).collect().map(_.toSeq)
-      val on = withRewrite(on = true)(topk())
-      val off = withRewrite(on = false)(topk())
-      assert(on.length === 97 * 3)
-      assert(on.sameElements(off))
-    } finally spark.conf.unset("spark.graft.topkRewritePartialRowBudget")
+    // must still produce the exact window answer. The planned operators
+    // get the budget swapped in; AQE is off so the plan is the tree that
+    // runs.
+    val df = spark.range(2000)
+      .select(col("id"), (col("id") % 97).as("g"),
+        (col("id") * 2654435761L % 89).as("s"))
+    val w = Window.partitionBy(col("g")).orderBy(col("s").desc, col("id"))
+    def topk(): DataFrame =
+      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .orderBy(col("g"), col("rn"))
+    val on = GraftSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val plan = topk().queryExecution.executedPlan.transform {
+        case e: plans.TopKPerGroupExec => e.copy(partialRowBudget = 1)
+      }
+      val budgets = plan.collect { case e: plans.TopKPerGroupExec => e.partialRowBudget }
+      assert(budgets === Seq(1L, 1L), s"expected the two phases, budget 1:\n$plan")
+      plan.executeCollect().map(_.toSeq(plan.schema))
+    }
+    val off = withRewrite(on = false)(topk().collect().map(_.toSeq))
+    assert(on.length === 97 * 3)
+    assert(on.sameElements(off))
   }
 
   test("final phase requires a group sort: one live heap, O(k) state (plan guard)") {

@@ -2,10 +2,11 @@ package graft.sources
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.SorterSpillShim
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.ByteArray
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,8 +20,10 @@ import graft.TestSpark
   * radix path (a radix sort on the 8-byte prefix, then a repair of each
   * run of records sharing it) and the compare path give whole records in
   * unsigned byte order, with and without spills, over tie runs of one,
-  * two, many and the whole partition and exact duplicates; the sample
-  * reports prefix ties exactly where records share their first 8 bytes. */
+  * two, many and the whole partition and exact duplicates; the prefix
+  * read from the row's memory is `ByteArray.getPrefix` of the record; the
+  * sample reports prefix ties exactly where records share their first 8
+  * bytes. */
 class RecordSorterSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val Len = BinaryRecords.RecordLen
@@ -77,6 +80,27 @@ class RecordSorterSpec extends AnyFunSuite {
         if (every > 0) assert(spilled > 0, "the sorter never spilled")
         else assert(spilled === 0L)
       }
+    }
+  }
+
+  test("the prefix read in place equals ByteArray.getPrefix, bytes >= 0x80 included") {
+    val rnd = new Random(29)
+    val high = Seq(0x80, 0xff, 0x7f, 0x00).map { b =>
+      val r = new Array[Byte](Len)
+      rnd.nextBytes(r)
+      java.util.Arrays.fill(r, 0, 8, b.toByte)
+      r
+    }
+    val row = UnsafeProjection.create(Array[DataType](BinaryType))
+    for (rec <- records(rnd, 1000) ++ high) {
+      val r = row(InternalRow(rec))
+      assert(RecordSorter.prefix(r) === ByteArray.getPrefix(rec))
+      // the same row at an offset inside a larger buffer
+      val buf = new Array[Byte](r.getSizeInBytes + 24)
+      r.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + 24)
+      val moved = new UnsafeRow(1)
+      moved.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + 24, r.getSizeInBytes)
+      assert(RecordSorter.prefix(moved) === ByteArray.getPrefix(rec))
     }
   }
 
