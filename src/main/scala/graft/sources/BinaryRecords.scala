@@ -5,24 +5,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.{BytesWritable, NullWritable}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
-import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, UnsafeRow}
-import org.apache.spark.sql.execution.UnsafeExternalRowSorter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.ByteArray
-import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
-
-import java.nio.ByteOrder
-
-import scala.collection.mutable.ArrayBuffer
-
-import graft.functions.RangePartitionId
 
 /** Fixed-width 100-byte TeraSort record I/O and the TeraSort itself — the
   * Spark-native equivalent of the reference's vendored Hadoop
@@ -39,9 +25,9 @@ import graft.functions.RangePartitionId
   * fixed sample of the input files before the job and takes the cut
   * points from it; each record is then routed to its range by partition
   * id, so the job reads its input once and runs no sampling scan. The
-  * sample decides how evenly the ranges fill and whether each partition
-  * is radix-sorted on its 8-byte record prefix (`RecordSorter`), never
-  * whether the output is sorted.
+  * sample decides how evenly the ranges fill, never whether the output is
+  * sorted. Records cross the exchange in pages and each partition is
+  * sorted as flat bytes (RecordPages).
   *
   * Write: raw record bytes through a minimal FileOutputFormat — one part
   * file per partition, named in partition order, so writing a
@@ -73,12 +59,13 @@ object BinaryRecords {
   def write(df: DataFrame, path: String): Unit =
     sink(df.select(concat(col("key"), col("payload"))).queryExecution.toRdd.map(_.getBinary(0)), path)
 
-  /** Write each record verbatim, one part file per partition. A caller
-    * passing a plan's `toRdd` runs the plan once (under adaptive execution
-    * that includes its shuffle-map stages) and hands over `getBinary`
-    * copies, so reused rows are safe. */
-  private def sink(recs: RDD[Array[Byte]], path: String): Unit =
-    recs.map(r => (NullWritable.get(), new BytesWritable(r)))
+  /** Write each array — one record, or a chunk of whole records —
+    * verbatim, one part file per partition; the writer's
+    * `recordsWritten` counts arrays. A caller passing a plan's `toRdd`
+    * runs the plan once (under adaptive execution that includes its
+    * shuffle-map stages) and hands over copies, so reused rows are safe. */
+  private def sink(chunks: RDD[Array[Byte]], path: String): Unit =
+    chunks.map(c => (NullWritable.get(), new BytesWritable(c)))
       .saveAsNewAPIHadoopFile(path, classOf[NullWritable], classOf[BytesWritable],
         classOf[RawRecordOutputFormat])
 
@@ -91,18 +78,14 @@ object BinaryRecords {
   private val SampleRun = 10
 
   /** What the driver sample tells the sort about its input: how many
-    * records it holds, the `partitions` − 1 cut records (ascending in
-    * unsigned byte order; none when there are no records), and whether two
-    * sampled records share their first 8 bytes. */
-  private[sources] final case class CutPoints(records: Long, cuts: Array[Array[Byte]],
-      prefixTies: Boolean)
+    * records it holds, and the `partitions` − 1 cut records (ascending in
+    * unsigned byte order; none when there are no records). */
+  private[sources] final case class CutPoints(records: Long, cuts: Array[Array[Byte]])
 
   /** The cut points for the input at `in`: the quantiles of a driver-side
     * sample of `SampleSize` records from at most `SampleSplits` evenly
     * chosen record-aligned splits. An input of at most `SampleSize`
-    * records is read whole. Sorted in whole-record order, records sharing
-    * an 8-byte prefix are adjacent, so one pass over neighbours finds the
-    * prefix ties. */
+    * records is read whole. */
   private[sources] def cutPoints(spark: SparkSession, in: String, partitions: Int): CutPoints = {
     val conf = spark.sessionState.newHadoopConf()
     val all = TeraRecordSource.splits(in, conf)
@@ -113,8 +96,7 @@ object BinaryRecords {
     val cuts =
       if (sample.isEmpty) Array.empty[Array[Byte]]
       else Array.tabulate(partitions - 1)(i => sample(((i + 1).toLong * sample.length / partitions).toInt))
-    CutPoints(bytes / RecordLen, cuts,
-      (1 until sample.length).exists(i => ByteArray.getPrefix(sample(i - 1)) == ByteArray.getPrefix(sample(i))))
+    CutPoints(bytes / RecordLen, cuts)
   }
 
   /** `SampleSize` records of `splits`, in `SampleSize / SampleRun` runs at
@@ -156,134 +138,37 @@ object BinaryRecords {
 
   /** End-to-end TeraSort over binary record files (`in` is a path list
     * as for `read`): choose the cut points from the driver sample
-    * (`cutPoints`), scan whole records (`rec`), route each record to its
-    * range by partition id (`repartitionById` over `RangePartitionId`: a
-    * binary search of the cuts, no sampling job), sort each partition
-    * (`RecordSorter` over the exchange's rows), write. The plan executes
-    * once: one shuffle-map stage that reads the input once, one reduce
-    * stage with the sort and the sink; the exchange keeps exactly
-    * `partitions` partitions, so an empty one still writes its (empty)
-    * part file, and an input with no records writes `partitions` empty
-    * parts, as Hadoop's TeraSort does. Each record stays one 100-byte
-    * binary value from scan to sink and is ordered as a whole: byte order
+    * (`cutPoints`), scan whole records (`rec`), pack each map task's
+    * records into pages by range (`RecordPages.pack`: a binary search of
+    * the cuts, no sampling job), route the pages by range id
+    * (`repartitionById`), sort each partition's pages as flat bytes
+    * (`PageSorter`), write its sorted chunks. The plan executes once: one
+    * shuffle-map stage that reads the input once, one reduce stage with
+    * the sort and the sink; the exchange keeps exactly `partitions`
+    * partitions, so an empty one still writes its (empty) part file, and
+    * an input with no records writes `partitions` empty parts, as
+    * Hadoop's TeraSort does. Each record is ordered as a whole: byte order
     * of the record is key order first (TeraSort/valsort semantics), with
     * the payload breaking ties, so the order is total and deterministic,
     * and records sharing a key spread over reducers by payload. The order
     * does not depend on the sample: routing is monotone in the record, so
     * any cuts give sorted output, and a poor sample only unbalances the
-    * parts. The sample also picks the per-partition sort: when no two
-    * sampled records share their first 8 bytes, each partition is
-    * radix-sorted on that prefix and the runs of records sharing it are
-    * then put in whole-record order; otherwise (hot or constant prefixes,
-    * or `spark.sql.sort.enableRadixSort` off) it is a comparison sort on
-    * the prefix with a whole-record comparison on prefix ties. */
+    * parts. */
   def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
     val c = cutPoints(spark, in, partitions)
-    val recs =
+    val chunks =
       if (c.records == 0) spark.sparkContext.parallelize(Seq.empty[Array[Byte]], partitions)
       else {
-        val radix = !c.prefixTies && spark.sessionState.conf.enableRadixSort
-        spark.read.format("terarecord").load(in).select("rec")
-          .repartitionById(partitions, GraftShim.column(RangePartitionId(UnresolvedAttribute("rec"), c.cuts)))
+        val cuts = c.cuts
+        val pages = spark.read.format("terarecord").load(in).select("rec").queryExecution.toRdd
+          .mapPartitions(recs => RecordPages.pack(recs, cuts))
+        spark.createDataFrame(pages, RecordPages.Schema)
+          .repartitionById(partitions, col("range"))
           .queryExecution.toRdd
-          .mapPartitions(rows => new RecordSorter(radix).sort(rows))
+          .mapPartitions(pages => new PageSorter().sort(pages.map(_.getBinary(1))))
       }
-    sink(recs, out)
+    sink(chunks, out)
   }
-}
-
-/** The per-partition sort of TeraSort's reduce stage: Spark's own
-  * external row sorter over one binary `rec` column, built as
-  * `SortExec.createSorter` builds it, with the record's first 8 bytes as
-  * the big-endian sort prefix (the value `ByteArray.getPrefix` gives) and
-  * the unsigned `PrefixComparators.BINARY`. The prefix is read in place
-  * from the row's memory, never copied out: TeraSort's records are 100
-  * bytes, so the first 8 are always there. Spark never radix-sorts a
-  * binary column itself, since the prefix does not decide a binary
-  * order; here `radix = true` radix-sorts on the prefix alone and `sort`
-  * then puts each run of records sharing a prefix in whole-record order
-  * (`RecordSorter.repairTies`). That repair of the final iterator is
-  * enough after spills too: the spill merge compares prefixes first and
-  * the record comparator only on equal prefixes, so the merged stream is
-  * prefix-ordered and every run is contiguous across spill files. With
-  * `radix = false` the sorter compares whole records on prefix ties and
-  * no repair runs. Create one per task: the sorter takes its memory from
-  * the running task. */
-private[sources] final class RecordSorter(radix: Boolean) {
-  private val order = SortOrder(BoundReference(0, BinaryType, nullable = false), Ascending)
-  val rows: UnsafeExternalRowSorter = UnsafeExternalRowSorter.create(
-    StructType(Seq(StructField("rec", BinaryType, nullable = false))),
-    RowOrdering.create(Seq(order), Nil),
-    PrefixComparators.BINARY,
-    new UnsafeExternalRowSorter.PrefixComputer {
-      private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
-      override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
-        result.value = RecordSorter.prefix(row.asInstanceOf[UnsafeRow])
-        result
-      }
-    },
-    SparkEnv.get.memoryManager.pageSizeBytes,
-    radix)
-
-  /** The records of `recs` (one-column unsafe rows) in whole-record order. */
-  def sort(recs: Iterator[InternalRow]): Iterator[Array[Byte]] = {
-    val sorted = rows.sort(recs.asInstanceOf[Iterator[UnsafeRow]]).map(_.getBinary(0))
-    if (radix) RecordSorter.repairTies(sorted) else sorted
-  }
-}
-
-private[sources] object RecordSorter {
-  private val LittleEndian = ByteOrder.nativeOrder == ByteOrder.LITTLE_ENDIAN
-
-  /** The big-endian first 8 bytes of `row`'s binary column 0, read where
-    * the row keeps them: the column's fixed-width word holds the bytes'
-    * offset in its upper 32 bits. */
-  private[sources] def prefix(row: UnsafeRow): Long = {
-    val word = Platform.getLong(row.getBaseObject, row.getBaseOffset + (row.getLong(0) >>> 32))
-    if (LittleEndian) java.lang.Long.reverseBytes(word) else word
-  }
-
-  /** `sorted`, which is in 8-byte prefix order, with each run of records
-    * sharing a prefix sorted in whole-record order. A run is buffered on
-    * the heap; a record whose prefix differs from both neighbours passes
-    * straight through. The bound on a run: the radix path runs only when
-    * no two of the driver's s = 10,000 sampled records share a prefix, and
-    * a prefix held by a fraction p of the input is sampled at most once
-    * with probability about e^(-ps)(1 + ps). So a run of more than 0.2 %
-    * of the input (p = 20 / s; 200 KB of a 100 MB input) reaches the
-    * repair with probability below 1e-7; a contiguous run that long, as
-    * in a presorted input, is always sampled more than once. */
-  private[sources] def repairTies(sorted: Iterator[Array[Byte]]): Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
-      private var run = Array.empty[Array[Byte]] // the current tie run, sorted; `i` is its next record
-      private var i = 0
-      private var ahead: Array[Byte] = _ // the record after the current run, or null at the end
-      private var aheadPrefix = 0L
-      advance()
-
-      private def advance(): Unit =
-        if (sorted.hasNext) { ahead = sorted.next(); aheadPrefix = ByteArray.getPrefix(ahead) }
-        else ahead = null
-
-      def hasNext: Boolean = i < run.length || ahead != null
-
-      def next(): Array[Byte] = {
-        if (i < run.length) { i += 1; return run(i - 1) }
-        if (ahead == null) throw new NoSuchElementException
-        val first = ahead
-        val p = aheadPrefix
-        advance()
-        if (ahead == null || aheadPrefix != p) first
-        else {
-          val b = ArrayBuffer(first)
-          while (ahead != null && aheadPrefix == p) { b += ahead; advance() }
-          run = b.toArray
-          java.util.Arrays.sort(run, (x: Array[Byte], y: Array[Byte]) => ByteArray.compareBinary(x, y))
-          i = 1
-          run(0)
-        }
-      }
-    }
 }
 
 /** Raw byte sink: writes each record's bytes verbatim, no markers/headers —

@@ -160,10 +160,15 @@ object MiniLog {
         case _: java.nio.file.NoSuchFileException => 0 // no _graft_log yet
         case _: UnsupportedOperationException => 0 // empty.max: no manifests
       }
+    // a concurrent vacuum deletes the manifests below the version it
+    // keeps, so a parent manifest that vanished has a successor: re-read
     val parentFiles =
-      if (parent == 0) Map.empty[Long, String] else manifest(table, parent)
+      if (parent == 0) Some(Map.empty[Long, String])
+      else try Some(manifest(table, parent)) catch {
+        case _: java.nio.file.NoSuchFileException => None
+      }
     val v = parent + 1
-    if (tryCommit(table, v, files(v, parentFiles))) v
+    if (parentFiles.exists(p => tryCommit(table, v, files(v, p)))) v
     else commitNext(table, files)
   }
 

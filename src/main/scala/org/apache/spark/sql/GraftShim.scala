@@ -1,7 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.unsafe.array.LongArray
+import org.apache.spark.util.collection.Sorter
+import org.apache.spark.util.collection.unsafe.sort.{RecordPointerAndKeyPrefix, UnsafeSortDataFormat}
+
+import java.util.Comparator
 
 /** Library shim into the `private[sql]` Dataset factory — the standard way
   * for external Spark libraries to materialize a DataFrame from a custom
@@ -11,9 +17,20 @@ object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** A Column over a Catalyst expression built in code (one whose
-    * arguments SQL text cannot carry). */
-  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  /** The running task's memory manager (`private[spark]`), to book
+    * memory through a `MemoryConsumer`. */
+  def taskMemoryManager(): TaskMemoryManager = TaskContext.get().taskMemoryManager()
+
+  /** Spark's TimSort (`private[spark]`) over the (record pointer, key
+    * prefix) pairs of a `LongArray`, as `UnsafeInMemorySorter` uses it:
+    * the function sorts the pairs `[from, until)` of an array by `order`,
+    * with `buffer` (two longs per pair of the longest range sorted) as its
+    * scratch space. */
+  def pointerSorter(buffer: LongArray,
+      order: Comparator[RecordPointerAndKeyPrefix]): (LongArray, Int, Int) => Unit = {
+    val sorter = new Sorter(new UnsafeSortDataFormat(buffer))
+    (pairs, from, until) => sorter.sort(pairs, from, until, order)
+  }
 
   /** Unpersist the storage blocks behind a `localCheckpoint()`ed DataFrame
     * (or a projection over one). `Dataset.unpersist` only talks to the

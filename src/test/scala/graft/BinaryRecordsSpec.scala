@@ -18,8 +18,10 @@ import graft.sources.BinaryRecords
   * sorted, the record multiset is preserved, the sort runs one
   * shuffle-map stage and no sampling scan, and the parts are balanced —
   * over a spread input, one hot key, presorted and reverse-sorted input,
-  * one constant 8-byte prefix, no records (still one empty part per
-  * partition), one record, and 256 partitions. */
+  * one constant 8-byte prefix, a key held by 30 % of the records, 64
+  * partitions with empty ranges, a shared 8-byte prefix in the files the
+  * driver sample skips, no records (still one empty part per partition),
+  * one record, and 256 partitions. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -73,6 +75,20 @@ class BinaryRecordsSpec extends AnyFunSuite {
     val onePrefix = spark.range(20000).select(
       expr("concat(cast('ABCDEFGH' as binary), unhex(substring(md5(cast(id as string)), 1, 4)))").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
+    // 30 % of the records share one whole key
+    val hotKey = genTeraRecords(20000).withColumn("key",
+      expr("if(pmod(hash(payload), 10) < 3, cast('5555555555' as binary), key)"))
+    // three distinct records, repeated: most of the 63 cuts are equal
+    val threeRecords = spark.range(3000).select(
+      expr("cast(lpad(cast(id % 3 as string), 10, '7') as binary)").as("key"),
+      expr("cast(rpad(cast(id % 3 as string), 90, '.') as binary)").as("payload"))
+    // 12 files of 1000 records; the sample reads 10 of them (files 0-4 and
+    // 6-10), and the two it skips hold records sharing one 8-byte prefix
+    val unsampledPrefix = spark.range(0, 12000, 1, 12).select(
+      expr("""if(id div 1000 in (5, 11),
+        concat(cast('PPPPPPPP' as binary), unhex(substring(md5(cast(id as string)), 1, 4))),
+        cast(lpad(cast((1103515245 * id + 12345) % 2147483647 as string), 10, '0') as binary))""").as("key"),
+      expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload"))
     val byRecord = Seq(col("key"), col("payload"))
     // the largest part holds at most 1.5x the mean part
     def balanced(sizes: Seq[Long]) = sizes.max <= 1.5 * sizes.sum / sizes.size
@@ -87,6 +103,10 @@ class BinaryRecordsSpec extends AnyFunSuite {
         s => s.size == 4 && balanced(s)),
       ("5000 records over 256 partitions", genTeraRecords(5000), 256, _.size == 256),
       ("20000 records with one constant 8-byte prefix", onePrefix, 4, s => s.size == 4 && balanced(s)),
+      ("20000 records, 30 % of them of one key", hotKey, 4, s => s.size == 4 && balanced(s)),
+      ("3000 records of 3 distinct records over 64 partitions", threeRecords, 64,
+        s => s.size == 64 && s.count(_ > 0) == 3),
+      ("12 files whose unsampled files share an 8-byte prefix", unsampledPrefix, 4, _.size == 4),
       ("no records", genTeraRecords(0), 3, _ == Seq.fill(3)(0L)),
       ("one record", genTeraRecords(1), 3, _.sum == 100L))
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +9,13 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.sources.BinaryRecords
+import graft.sources.{BinaryRecords, TeraReaderFactory, TeraRecordPartition}
 
 /** DSv2 source, the one reader of record files: `BinaryRecords.read` keeps
   * a path list's order, `rec` is the whole record, projections prune in the
-  * scan, a torn file fails by name, and the source sorts end-to-end. */
+  * scan, a torn file fails by name, the reader's runs of records give each
+  * split's records whatever the split's start and length, and the source
+  * sorts end-to-end. */
 class TeraRecordSourceSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -86,6 +89,37 @@ class TeraRecordSourceSpec extends AnyFunSuite {
       assert(scan.conf.value.get("graft.test.hadoop.marker") === "teraconf42")
       assert(df.count() === 200)
     } finally spark.conf.unset("graft.test.hadoop.marker")
+  }
+
+  test("the reader reads in runs: short, uneven and mid-file splits give the file's records") {
+    val dir = Files.createTempDirectory("graft_dsv2").toString + "/in"
+    BinaryRecords.write(BinaryRecords.teragen(spark, 2000).coalesce(1), dir)
+    val file = Files.list(Paths.get(dir)).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq.head
+    val bytes = Files.readAllBytes(file)
+    assert(bytes.length === 2000 * BinaryRecords.RecordLen)
+    val run = TeraReaderFactory.RunBytes
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val columns = Array((0, BinaryRecords.KeyLen), (BinaryRecords.KeyLen, BinaryRecords.RecordLen),
+      (0, BinaryRecords.RecordLen)) // key, payload, rec
+    for ((label, start, records) <- Seq(
+        ("shorter than one run", 0L, 300),
+        ("not a multiple of the run", 0L, 2000),
+        ("starting inside the file", 700L * BinaryRecords.RecordLen, 1000))) withClue(s"$label: ") {
+      val length = records.toLong * BinaryRecords.RecordLen
+      assert(label != "shorter than one run" || length < run)
+      assert(label != "not a multiple of the run" || (length > run && length % run != 0))
+      val reader = new TeraReaderFactory(columns, conf)
+        .createReader(TeraRecordPartition(file.toString, start, length))
+      val got = try Iterator.continually(reader.next()).takeWhile(identity)
+          .map(_ => columns.indices.map(c => reader.get().getBinary(c).toSeq)).toVector
+        finally reader.close()
+      val want = (0 until records).map { i =>
+        val at = (start + i.toLong * BinaryRecords.RecordLen).toInt
+        columns.toSeq.map { case (from, until) => bytes.slice(at + from, at + until).toSeq }
+      }
+      assert(got == want)
+    }
   }
 
   test("orderBy over the DSv2 source produces a globally sorted result") {

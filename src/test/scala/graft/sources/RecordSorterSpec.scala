@@ -16,14 +16,14 @@ import scala.util.Random
 
 import graft.TestSpark
 
-/** TeraSort's per-partition sort and the driver sample that picks it: the
-  * radix path (a radix sort on the 8-byte prefix, then a repair of each
-  * run of records sharing it) and the compare path give whole records in
-  * unsigned byte order, with and without spills, over tie runs of one,
-  * two, many and the whole partition and exact duplicates; the prefix
-  * read from the row's memory is `ByteArray.getPrefix` of the record; the
-  * sample reports prefix ties exactly where records share their first 8
-  * bytes. */
+/** TeraSort's pages and per-partition sort: `pack` puts each record in a
+  * page of its range; the page sort (a radix sort on the 8-byte prefix,
+  * then each run of records sharing it in whole-record order) gives whole
+  * records in unsigned byte order over tie runs of one, two, many and the
+  * whole partition and exact duplicates; with its memory denied it hands
+  * the records to the spilling `RecordSorter`; the prefix read from a
+  * row's memory is `ByteArray.getPrefix` of the record; the driver sample
+  * counts the records and picks ascending cuts. */
 class RecordSorterSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val Len = BinaryRecords.RecordLen
@@ -39,48 +39,91 @@ class RecordSorterSpec extends AnyFunSuite {
       r
     }
 
-  /** Sorts `recs`, inserted in this order, in one task with a fresh
-    * `RecordSorter`; returns the sorted records and the bytes it spilled. */
-  private def sortInTask(recs: Seq[Array[Byte]], radix: Boolean, spillEvery: Int): (Seq[Array[Byte]], Long) =
+  /** `recs` in pages of 1 to 300 records. */
+  private def pages(rnd: Random, recs: Seq[Array[Byte]]): Seq[Array[Byte]] =
+    Iterator.unfold(recs)(rest =>
+      if (rest.isEmpty) None
+      else { val (page, more) = rest.splitAt(1 + rnd.nextInt(300)); Some((page.flatten.toArray, more)) }).toSeq
+
+  /** Sorts `pages` in one task with a `PageSorter` of `budget` bytes whose
+    * fallback spills every `spillEvery` rows; returns the chunks it gave,
+    * whether the fallback ran and the bytes the task spilled. */
+  private def sortInTask(pages: Seq[Array[Byte]], budget: Long = Long.MaxValue,
+      spillEvery: Int = 64): (Seq[Array[Byte]], Boolean, Long) =
     spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-      val row = UnsafeProjection.create(Array[DataType](BinaryType))
-      val sorter = new RecordSorter(radix)
-      if (spillEvery > 0) SorterSpillShim.spillEvery(sorter.rows, spillEvery)
-      val out = sorter.sort(recs.iterator.map(r => row(InternalRow(r)))).toVector
-      Iterator((out, TaskContext.get().taskMetrics().diskBytesSpilled))
+      var fellBack = false
+      val sorter = new PageSorter(budget, () => {
+        fellBack = true
+        val s = new RecordSorter
+        SorterSpillShim.spillEvery(s.rows, spillEvery)
+        s
+      })
+      val out = sorter.sort(pages.iterator).toVector
+      Iterator((out, fellBack, TaskContext.get().taskMetrics().diskBytesSpilled))
     }.collect().head
 
-  test("radix sort with tie repair and the compare sort give whole-record order, with and without spills") {
-    val rnd = new Random(13)
-    def prefix() = { val p = new Array[Byte](8); rnd.nextBytes(p); p }
-    val singles = records(rnd, 1000)
+  private def recordsOf(chunks: Seq[Array[Byte]]): Seq[String] = {
+    assert(chunks.forall(_.length % Len == 0), "a chunk holds a partial record")
+    chunks.flatMap(_.grouped(Len).map(str))
+  }
+
+  private val rnd = new Random(13)
+  private def prefix() = { val p = new Array[Byte](8); rnd.nextBytes(p); p }
+  private val singles = records(rnd, 1000)
+  private val mixed = {
     val pairs = Seq.fill(200)(prefix()).flatMap(p => records(rnd, 2, Some(p)))
     val many = records(rnd, 500, Some(prefix()))
-    val mixed = rnd.shuffle(singles ++ pairs ++ many ++ singles.take(100) ++ many.take(50))
-    // one 8-byte prefix for the whole partition: only bytes 9-100 differ
-    val onePrefix = {
-      val recs = records(rnd, 3000, Some("AAAAAAAA".getBytes(ISO_8859_1)))
-      rnd.shuffle(recs ++ recs.take(200))
-    }
-    val spillEvery = 64
+    rnd.shuffle(singles ++ pairs ++ many ++ singles.take(100) ++ many.take(50))
+  }
+  // one 8-byte prefix for the whole partition: only bytes 9-100 differ
+  private val onePrefix = {
+    val recs = records(rnd, 3000, Some("AAAAAAAA".getBytes(ISO_8859_1)))
+    rnd.shuffle(recs ++ recs.take(200))
+  }
+  private val inputs = Seq(
+    "tie runs of 1, 2 and many, and duplicates" -> mixed,
+    "one prefix for the whole partition, and duplicates" -> onePrefix,
+    "more records than one output chunk" -> records(rnd, RecordPages.ChunkRecords + 1234),
+    "no records" -> Nil)
 
-    for ((label, in) <- Seq("tie runs of 1, 2 and many, and duplicates" -> mixed,
-        "one prefix for the whole partition, and duplicates" -> onePrefix)) {
-      // the tie runs straddle the spill files: some run of each length > 1
-      // has records inserted before and after a spill
+  test("the page sort gives whole-record order over tie runs, one prefix and duplicates") {
+    for ((label, in) <- inputs) withClue(s"$label: ") {
+      val (out, fellBack, spilled) = sortInTask(pages(rnd, in))
+      assert(recordsOf(out) == in.map(str).sorted)
+      assert(out.forall(_.length <= RecordPages.ChunkRecords * Len))
+      assert(!fellBack && spilled === 0L)
+    }
+  }
+
+  test("with its memory denied the page sort falls back to the record sorter, which spills") {
+    for ((label, in) <- inputs.take(2)) withClue(s"$label: ") {
+      // some tie run of each length > 1 has records inserted before and after a spill
       val runs = in.indices.groupBy(i => ByteArray.getPrefix(in(i))).values.filter(_.size > 1)
-      val straddling = runs.filter(_.map(_ / spillEvery).distinct.size > 1).map(_.size).toSet
-      val lengths = runs.map(_.size).toSet
-      assert(lengths.forall(straddling.contains), s"$label: run lengths $lengths, straddling $straddling")
-
-      val want = in.map(str).sorted
-      for (radix <- Seq(true, false); every <- Seq(0, spillEvery)) withClue(s"$label, radix $radix, spill every $every: ") {
-        val (out, spilled) = sortInTask(in, radix, every)
-        assert(out.map(str) == want)
-        if (every > 0) assert(spilled > 0, "the sorter never spilled")
-        else assert(spilled === 0L)
-      }
+      val straddling = runs.filter(_.map(_ / 64).distinct.size > 1).map(_.size).toSet
+      assert(runs.map(_.size).toSet.forall(straddling.contains))
+      // the budget holds a few pages, so some records were taken before the denial
+      val (out, fellBack, spilled) = sortInTask(pages(rnd, in), budget = 500L * PageSorter.BookedPerRecord)
+      assert(fellBack, "the fallback never ran")
+      assert(spilled > 0, "the fallback never spilled")
+      assert(recordsOf(out) == in.map(str).sorted)
     }
+  }
+
+  test("pack puts every record in one page of its range, a chunk at a time") {
+    val recs = records(rnd, 2 * RecordPages.ChunkRecords + 77) ++ singles.take(10)
+    val cuts = Seq(recs(5), recs(17), recs(17), recs(99)).sortBy(str).toArray
+    val row = UnsafeProjection.create(Array[DataType](BinaryType))
+    val rows = RecordPages.pack(recs.iterator.map(r => row(InternalRow(r))), cuts).toVector
+    val byRange = rows.map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+    // at most one page per range and chunk
+    assert(byRange.size <= 3 * (cuts.length + 1))
+    for ((range, page) <- byRange; rec <- page.grouped(Len))
+      assert(range === cuts.count(c => ByteArray.compareBinary(c, rec) <= 0))
+    assert(byRange.flatMap(_._2.grouped(Len).map(str)).sorted == recs.map(str).sorted)
+    // two equal cuts leave the range between them empty
+    val equal = cuts.indexWhere(_ eq recs(17))
+    assert(cuts(equal + 1) eq recs(17))
+    assert(!byRange.exists(_._1 == equal + 1))
   }
 
   test("the prefix read in place equals ByteArray.getPrefix, bytes >= 0x80 included") {
@@ -104,43 +147,29 @@ class RecordSorterSpec extends AnyFunSuite {
     }
   }
 
-  test("repairTies sorts each run of equal prefixes and passes other records through") {
-    def rec(first: Int, rest: Int) = {
-      val r = Array.fill[Byte](Len)(rest.toByte)
-      java.util.Arrays.fill(r, 0, 8, first.toByte)
-      r
-    }
-    // prefix order, ties in reverse order: runs of 1, 3, 1, 2 (a run at the end)
-    val in = Seq(rec(1, 0), rec(7, 9), rec(7, 5), rec(7, 1), rec(8, 0), rec(9, 4), rec(9, 2))
-    val out = RecordSorter.repairTies(in.iterator).toVector
-    assert(out.map(str) == in.map(str).sorted)
-    assert(RecordSorter.repairTies(Iterator.empty).isEmpty)
-  }
-
-  test("the driver sample reports prefix ties: random keys none, a constant prefix and one key some") {
+  test("the driver sample counts the records and picks ascending cuts") {
     val rnd = new Random(7)
     def sampleOf(recs: Seq[Array[Byte]], partitions: Int) = {
       val dir = Files.createTempDirectory("graft_gate")
       Files.write(dir.resolve("part-00000"), recs.flatten.toArray)
       BinaryRecords.cutPoints(spark, dir.toString, partitions)
     }
-    // uniform random 10-byte keys: the radix path
+    def ascending(cuts: Array[Array[Byte]]) =
+      cuts.sliding(2).forall { case Array(a, b) => ByteArray.compareBinary(a, b) <= 0; case _ => true }
     val random = sampleOf(records(rnd, 20000), 4)
-    assert(random.records === 20000L && random.cuts.length === 3)
-    assert(!random.prefixTies)
-    // a constant 8-byte prefix with random bytes 9-10 and payload: the compare path
+    assert(random.records === 20000L && random.cuts.length === 3 && ascending(random.cuts))
     val constant = sampleOf(records(rnd, 20000, Some("ABCDEFGH".getBytes(ISO_8859_1))), 4)
-    assert(constant.records === 20000L && constant.prefixTies)
-    // BinaryRecordsSpec's one-key input: the compare path
+    assert(constant.records === 20000L && constant.cuts.length === 3 && ascending(constant.cuts))
+    // BinaryRecordsSpec's one-key input
     val dir = Files.createTempDirectory("graft_gate").toString
     BinaryRecords.write(spark.range(1000).select(
       expr("cast('0000000000' as binary)").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload")), s"$dir/in")
     val oneKey = BinaryRecords.cutPoints(spark, s"$dir/in", 4)
-    assert(oneKey.records === 1000L && oneKey.prefixTies)
-    // no records: no cuts, no ties
+    assert(oneKey.records === 1000L && oneKey.cuts.length === 3 && ascending(oneKey.cuts))
+    // no records: no cuts
     val empty = Files.createTempDirectory("graft_gate")
     val none = BinaryRecords.cutPoints(spark, empty.toString, 3)
-    assert(none.records === 0L && none.cuts.isEmpty && !none.prefixTies)
+    assert(none.records === 0L && none.cuts.isEmpty)
   }
 }

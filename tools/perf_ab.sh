@@ -19,8 +19,9 @@
 # GRAFT_PERF_AB_TRACE=1 the runs are traced (`--trace 1`) and the same
 # tables cover `trace.pass_s` and the TeraSort layers in place of the
 # end-to-end metrics: the time and CPU layers (`map_s`, `reduce_s`,
-# `task_cpu_s`, `gc_s`) and the counters that should not move
-# (`map_passes`, `scan_amplification`, `spill_bytes`).
+# `task_cpu_s`, `gc_s`), the exchange (`shuffle_bytes`, `fetch_wait_s`),
+# the validation read (`sources.read_s`) and the counters that should not
+# move (`map_passes`, `scan_amplification`, `spill_bytes`).
 #
 # Environment:
 #   GRAFT_PERF_AB_DIR   parent checkouts go under it (default /tmp/graft_ab; keep
@@ -79,6 +80,7 @@ import json, statistics, sys
 out, pairs, seed0, sha, trace = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4], sys.argv[5] == "1"
 if trace:
     metrics = [("trace.pass_s", 3)] + [(f"terasort.{m}", 3) for m in ("map_s", "reduce_s", "task_cpu_s", "gc_s")] \
+        + [("terasort.shuffle_bytes", 0), ("terasort.fetch_wait_s", 3), ("sources.read_s", 3)] \
         + [("terasort.map_passes", 1), ("terasort.scan_amplification", 2), ("terasort.spill_bytes", 0)]
 else:
     metrics = [("pass_s", 3), ("op_p50_s", 3), ("setup_s", 1), ("peak_rss_mb", 0), ("peak_live_mb", 0)]
