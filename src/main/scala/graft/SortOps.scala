@@ -195,10 +195,11 @@ object SortOps {
   // -------------------------------------------- binary file I/O, graded
 
   /** The reference's whole FILE pipeline under the oracle: teragen →
-    * raw fixed-width binary sink (RawRecordOutputFormat) → the
-    * `terarecord` scan that `BinaryRecords.read` and the TeraSort also
-    * read through (record-aligned splits, pruned here to the key, session
-    * Hadoop conf) → count + order-independent modular checksum + key
+    * raw fixed-width binary sink (`BinaryRecords.write`, whose tasks write
+    * their own parts) → the `terarecord` scan that `BinaryRecords.read`
+    * reads through and whose splits and split reader the TeraSort shares
+    * (record-aligned splits, pruned here to the key, session Hadoop conf)
+    * → count + order-independent modular checksum + key
     * range. The oracle reproduces the generator arithmetic in SQL, so a
     * single flipped byte anywhere in the write→read path breaks the
     * checksum. Record count tracks lineitem, scaling with sf. */

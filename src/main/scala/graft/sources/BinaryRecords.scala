@@ -2,13 +2,16 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
-import org.apache.hadoop.io.{BytesWritable, NullWritable}
-import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
-import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
+import org.apache.hadoop.mapred.FileAlreadyExistsException
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.ByteArray
+import org.apache.spark.util.SerializableConfiguration
+
+import java.io.IOException
 
 /** Fixed-width 100-byte TeraSort record I/O and the TeraSort itself — the
   * Spark-native equivalent of the reference's vendored Hadoop
@@ -18,19 +21,18 @@ import org.apache.spark.unsafe.types.ByteArray
   *
   * Read: the DSv2 `terarecord` source (TeraRecordSource) — record-aligned
   * splits, no record parsing on the driver, column pruning — gives
-  * (key BinaryType, payload BinaryType) to `read` and whole 100-byte
-  * `rec` values to the sort.
+  * (key BinaryType, payload BinaryType) to `read`.
   *
   * Sort: like TeraInputFormat.writePartitionFile, the driver reads a small
   * fixed sample of the input files before the job and takes the cut
-  * points from it; each record is then routed to its range by partition
-  * id, so the job reads its input once and runs no sampling scan. The
-  * sample decides how evenly the ranges fill, never whether the output is
-  * sorted. Records cross the exchange in pages and each partition is
-  * sorted as flat bytes (RecordPages).
+  * points from it; the job's map tasks read their splits straight into
+  * pages by range, the pages cross one RDD shuffle keyed by range id, and
+  * each reduce task sorts its partition as flat bytes (RecordPages) and
+  * writes its part. The sample decides how evenly the ranges fill, never
+  * whether the output is sorted.
   *
-  * Write: raw record bytes through a minimal FileOutputFormat — one part
-  * file per partition, named in partition order, so writing a
+  * Write: raw record bytes, one part file per partition, written by the
+  * part's own task and named in partition order (`sink`), so writing a
   * range-partitioned, partition-sorted DataFrame yields files whose
   * name-order concatenation is globally sorted — exactly TeraOutputFormat's
   * contract.
@@ -56,18 +58,64 @@ object BinaryRecords {
     * fixed-width records. Partition order (and order within partitions) is
     * preserved — callers wanting a globally sorted file set should pass a
     * `repartitionByRange(...).sortWithinPartitions(...)` DataFrame. */
-  def write(df: DataFrame, path: String): Unit =
-    sink(df.select(concat(col("key"), col("payload"))).queryExecution.toRdd.map(_.getBinary(0)), path)
+  def write(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    withSharedConf(spark, spark.sessionState.newHadoopConf()) { conf =>
+      sink(df.select(concat(col("key"), col("payload"))).queryExecution.toRdd.map(_.getBinary(0)), path, conf)
+    }
+  }
+
+  /** Runs `body` with `conf` broadcast once for its tasks, as Spark's file
+    * scans share theirs: each task then looks the conf up instead of
+    * deserializing its own copy (over a thousand properties). */
+  private def withSharedConf[T](spark: SparkSession, conf: Configuration)(
+      body: Broadcast[SerializableConfiguration] => T): T = {
+    val shared = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    try body(shared) finally shared.destroy()
+  }
+
+  /** Part file `i`'s name, as Hadoop's FileOutputFormat names a reduce
+    * task's output. */
+  private def partName(i: Int): String = f"part-r-$i%05d"
 
   /** Write each array — one record, or a chunk of whole records —
-    * verbatim, one part file per partition; the writer's
-    * `recordsWritten` counts arrays. A caller passing a plan's `toRdd`
+    * verbatim, one part file per partition, in one job; the part's output
+    * metrics are the bytes its task wrote (Hadoop's file system statistics,
+    * as Spark's Hadoop writer counts them) and its records. It keeps the
+    * contract of Hadoop's FileOutputFormat and output committer: an
+    * existing `path` fails before any task runs; each task attempt writes
+    * its part through the path's own file system (so a local path keeps
+    * its `.crc` sidecars) under a name of its own in `_temporary`; the
+    * parts take their `part-r-NNNNN` names only after the job succeeds,
+    * then `_SUCCESS` marks the directory complete, and `_temporary` goes
+    * whether the job succeeds or fails. A caller passing a plan's `toRdd`
     * runs the plan once (under adaptive execution that includes its
     * shuffle-map stages) and hands over copies, so reused rows are safe. */
-  private def sink(chunks: RDD[Array[Byte]], path: String): Unit =
-    chunks.map(c => (NullWritable.get(), new BytesWritable(c)))
-      .saveAsNewAPIHadoopFile(path, classOf[NullWritable], classOf[BytesWritable],
-        classOf[RawRecordOutputFormat])
+  private def sink(chunks: RDD[Array[Byte]], path: String,
+      conf: Broadcast[SerializableConfiguration]): Unit = {
+    val out = new Path(path)
+    val fs = out.getFileSystem(conf.value.value)
+    if (fs.exists(out))
+      throw new FileAlreadyExistsException(s"Output directory ${fs.makeQualified(out)} already exists")
+    val temp = new Path(out, "_temporary").toString
+    fs.mkdirs(new Path(temp))
+    try {
+      val parts = chunks.sparkContext.runJob(chunks, (task: TaskContext, it: Iterator[Array[Byte]]) => {
+        val file = new Path(temp, s"${partName(task.partitionId)}-${task.taskAttemptId}")
+        val part = file.getFileSystem(conf.value.value).create(file, false)
+        // after the file system is open, as Spark's Hadoop writer starts it
+        val metrics = GraftShim.outputMetrics()
+        var bytes = 0L
+        try it.foreach { c => part.write(c); bytes += c.length } finally part.close()
+        metrics(bytes / RecordLen)
+        file.toString
+      })
+      for ((part, i) <- parts.zipWithIndex)
+        if (!fs.rename(new Path(part), new Path(out, partName(i))))
+          throw new IOException(s"could not rename $part to ${partName(i)} in $out")
+      fs.create(new Path(out, "_SUCCESS"), false).close()
+    } finally fs.delete(new Path(temp), true)
+  }
 
   /** Records the driver reads to choose the cut points, and the most
     * splits it reads them from (Hadoop TeraSort reads 100,000 keys from at
@@ -82,13 +130,12 @@ object BinaryRecords {
     * unsigned byte order; none when there are no records). */
   private[sources] final case class CutPoints(records: Long, cuts: Array[Array[Byte]])
 
-  /** The cut points for the input at `in`: the quantiles of a driver-side
-    * sample of `SampleSize` records from at most `SampleSplits` evenly
-    * chosen record-aligned splits. An input of at most `SampleSize`
-    * records is read whole. */
-  private[sources] def cutPoints(spark: SparkSession, in: String, partitions: Int): CutPoints = {
-    val conf = spark.sessionState.newHadoopConf()
-    val all = TeraRecordSource.splits(in, conf)
+  /** The cut points for the input split into `all`: the quantiles of a
+    * driver-side sample of `SampleSize` records from at most `SampleSplits`
+    * evenly chosen splits. An input of at most `SampleSize` records is
+    * read whole. */
+  private[sources] def cutPoints(all: Array[TeraRecordPartition], conf: Configuration,
+      partitions: Int): CutPoints = {
     val bytes = all.map(_.length).sum
     val k = if (bytes <= SampleSize.toLong * RecordLen) all.length else math.min(SampleSplits, all.length)
     val sample = sampleRecords(Array.tabulate(k)(i => all((i.toLong * all.length / k).toInt)), conf)
@@ -98,7 +145,6 @@ object BinaryRecords {
       else Array.tabulate(partitions - 1)(i => sample(((i + 1).toLong * sample.length / partitions).toInt))
     CutPoints(bytes / RecordLen, cuts)
   }
-
   /** `SampleSize` records of `splits`, in `SampleSize / SampleRun` runs at
     * evenly spaced offsets over their concatenated records — spread out,
     * not each split's head, which is no independent sample of a presorted
@@ -136,51 +182,46 @@ object BinaryRecords {
     sample
   }
 
-  /** End-to-end TeraSort over binary record files (`in` is a path list
-    * as for `read`): choose the cut points from the driver sample
-    * (`cutPoints`), scan whole records (`rec`), pack each map task's
-    * records into pages by range (`RecordPages.pack`: a binary search of
-    * the cuts, no sampling job), route the pages by range id
-    * (`repartitionById`), sort each partition's pages as flat bytes
-    * (`PageSorter`), write its sorted chunks. The plan executes once: one
-    * shuffle-map stage that reads the input once, one reduce stage with
-    * the sort and the sink; the exchange keeps exactly `partitions`
-    * partitions, so an empty one still writes its (empty) part file, and
-    * an input with no records writes `partitions` empty parts, as
-    * Hadoop's TeraSort does. Each record is ordered as a whole: byte order
-    * of the record is key order first (TeraSort/valsort semantics), with
-    * the payload breaking ties, so the order is total and deterministic,
-    * and records sharing a key spread over reducers by payload. The order
-    * does not depend on the sample: routing is monotone in the record, so
-    * any cuts give sorted output, and a poor sample only unbalances the
-    * parts. */
-  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
-    val c = cutPoints(spark, in, partitions)
-    val chunks =
-      if (c.records == 0) spark.sparkContext.parallelize(Seq.empty[Array[Byte]], partitions)
-      else {
-        val cuts = c.cuts
-        val pages = spark.read.format("terarecord").load(in).select("rec").queryExecution.toRdd
-          .mapPartitions(recs => RecordPages.pack(recs, cuts))
-        spark.createDataFrame(pages, RecordPages.Schema)
-          .repartitionById(partitions, col("range"))
-          .queryExecution.toRdd
-          .mapPartitions(pages => new PageSorter().sort(pages.map(_.getBinary(1))))
-      }
-    sink(chunks, out)
+  /** Routes a (range id, page) pair to the partition of its range. */
+  private final class RangeIds(val numPartitions: Int) extends Partitioner {
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
-}
 
-/** Raw byte sink: writes each record's bytes verbatim, no markers/headers —
-  * byte-compatible with gensort/teravalidate tooling. */
-class RawRecordOutputFormat extends FileOutputFormat[NullWritable, BytesWritable] {
-  override def getRecordWriter(ctx: TaskAttemptContext): RecordWriter[NullWritable, BytesWritable] = {
-    val file = getDefaultWorkFile(ctx, "")
-    val out = file.getFileSystem(ctx.getConfiguration).create(file, false)
-    new RecordWriter[NullWritable, BytesWritable] {
-      override def write(k: NullWritable, v: BytesWritable): Unit =
-        out.write(v.getBytes, 0, v.getLength)
-      override def close(ctx: TaskAttemptContext): Unit = out.close()
+  /** End-to-end TeraSort over binary record files (`in` is a path list
+    * as for `read`) in one job of two stages. The driver chooses the cut
+    * points from its sample (`cutPoints`) of the splits it lists once
+    * (`TeraRecordSource.splits`). Each map task reads its split in 1 MB
+    * runs straight into pages by range (`RecordPages.pack`: a binary
+    * search of the cuts, no sampling job); the pages cross one shuffle
+    * keyed by range id (`RangeIds`), which reads the input once and keeps
+    * exactly `partitions` partitions; each reduce task sorts its pages as
+    * flat bytes (`PageSorter`) and writes its part (`sink`), so an empty
+    * partition still writes its (empty) part file, and an input with no
+    * records writes `partitions` empty parts, as Hadoop's TeraSort does.
+    * Map and sink share one broadcast Hadoop conf. Each record is ordered
+    * as a whole: byte order of the record is key order first
+    * (TeraSort/valsort semantics), with the payload breaking ties, so the
+    * order is total and deterministic, and records sharing a key spread
+    * over reducers by payload. The order does not depend on the sample:
+    * routing is monotone in the record, so any cuts give sorted output,
+    * and a poor sample only unbalances the parts. */
+  def terasort(spark: SparkSession, in: String, out: String, partitions: Int): Unit = {
+    require(partitions >= 1, s"terasort needs at least one partition, got $partitions")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val splits = TeraRecordSource.splits(in, hadoopConf)
+    val cuts = cutPoints(splits, hadoopConf, partitions).cuts
+    withSharedConf(spark, hadoopConf) { conf =>
+      val pages = spark.sparkContext.parallelize(splits.toSeq, splits.length max 1)
+        .mapPartitions { assigned =>
+          GraftShim.countInputBytes()
+          assigned.flatMap { s =>
+            val split = new TeraRecordSource.SplitReader(s, conf.value.value)
+            TaskContext.get().addTaskCompletionListener[Unit](_ => split.close())
+            RecordPages.pack(split.read, cuts)
+          }
+        }
+      sink(pages.partitionBy(new RangeIds(partitions))
+        .mapPartitions(pages => new PageSorter().sort(pages.map(_._2))), out, conf)
     }
   }
 }

@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.memory.{MemoryConsumer, MemoryMode}
-import org.apache.spark.sql.{GraftShim, Row}
+import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.UnsafeExternalRowSorter
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.LongArray
 import org.apache.spark.unsafe.memory.MemoryBlock
@@ -20,19 +20,13 @@ import scala.collection.mutable
 import BinaryRecords.RecordLen
 
 /** TeraSort's records in pages: the map side packs a task's records into
-  * one page per range and chunk (`pack`), so the exchange carries about
-  * one row per page, not one per record; the reduce side sorts the pages
-  * of its partition as flat bytes (`PageSorter`). */
+  * one (range id, page) pair per range and chunk (`pack`), so the shuffle
+  * carries about one pair per page, not one per record; the reduce side
+  * sorts the pages of its partition as flat bytes (`PageSorter`). */
 private[sources] object RecordPages {
   /** Records in one map-side chunk, and in one chunk handed to the sink
     * (1 MB). */
   val ChunkRecords = 10000
-
-  /** The exchange's rows: a range id and a page of whole records that all
-    * fall in that range. */
-  val Schema: StructType = StructType(Seq(
-    StructField("range", IntegerType, nullable = false),
-    StructField("page", BinaryType, nullable = false)))
 
   private val LittleEndian = ByteOrder.nativeOrder == ByteOrder.LITTLE_ENDIAN
 
@@ -63,46 +57,44 @@ private[sources] object RecordPages {
     if (LittleEndian) java.lang.Long.reverseBytes(word) else word
   }
 
-  /** The records of `recs` (one-column unsafe rows of whole records) as
-    * `Schema` rows: a chunk of `ChunkRecords` records at a time is copied
-    * out of the rows, each record's range is searched in place, and a
-    * counting sort by range moves the chunk into one page per non-empty
-    * range. Memory is the chunk and its pages, whatever the number of
-    * ranges or the split size. */
-  def pack(recs: Iterator[InternalRow], cuts: Array[Array[Byte]]): Iterator[Row] = new Iterator[Row] {
-    private val chunk = new Array[Byte](ChunkRecords * RecordLen)
-    private val range = new Array[Int](ChunkRecords)
-    private val count = new Array[Int](cuts.length + 1)
-    private val prefixes = cuts.map(prefix(_, Platform.BYTE_ARRAY_OFFSET))
-    private var pages: Iterator[Row] = Iterator.empty
+  /** The records `read` gives as (range id, page) pairs. `read` fills its
+    * buffer from the start with whole records and returns their bytes, 0
+    * at the end (`TeraRecordSource.SplitReader.read`). A chunk of up to
+    * `ChunkRecords` records at a time is read straight into the packer's
+    * buffer, each record's range is searched in place, and a counting sort
+    * by range moves the chunk into one page per non-empty range. Memory is
+    * the chunk and its pages, whatever the number of ranges or the split
+    * size. */
+  def pack(read: Array[Byte] => Int, cuts: Array[Array[Byte]]): Iterator[(Int, Array[Byte])] =
+    new Iterator[(Int, Array[Byte])] {
+      private val chunk = new Array[Byte](ChunkRecords * RecordLen)
+      private val range = new Array[Int](ChunkRecords)
+      private val count = new Array[Int](cuts.length + 1)
+      private val prefixes = cuts.map(prefix(_, Platform.BYTE_ARRAY_OFFSET))
+      private var pages: Iterator[(Int, Array[Byte])] = Iterator.empty
 
-    def hasNext: Boolean = pages.hasNext || { fill(); pages.hasNext }
+      def hasNext: Boolean = pages.hasNext || { fill(); pages.hasNext }
 
-    def next(): Row = if (hasNext) pages.next() else throw new NoSuchElementException
+      def next(): (Int, Array[Byte]) = if (hasNext) pages.next() else throw new NoSuchElementException
 
-    private def fill(): Unit = {
-      Arrays.fill(count, 0)
-      var n = 0
-      while (n < ChunkRecords && recs.hasNext) {
-        // the column's offset word holds the record's offset in its upper 32 bits
-        val row = recs.next().asInstanceOf[UnsafeRow]
-        Platform.copyMemory(row.getBaseObject, row.getBaseOffset + (row.getLong(0) >>> 32),
-          chunk, Platform.BYTE_ARRAY_OFFSET + n * RecordLen, RecordLen)
-        val r = search(cuts, prefixes, chunk, n * RecordLen)
-        range(n) = r
-        count(r) += 1
-        n += 1
+      private def fill(): Unit = {
+        val n = read(chunk) / RecordLen
+        Arrays.fill(count, 0)
+        for (i <- 0 until n) {
+          val r = search(cuts, prefixes, chunk, i * RecordLen)
+          range(i) = r
+          count(r) += 1
+        }
+        val page = count.map(c => if (c == 0) null else new Array[Byte](c * RecordLen))
+        val at = new Array[Int](count.length)
+        for (i <- 0 until n) {
+          val r = range(i)
+          System.arraycopy(chunk, i * RecordLen, page(r), at(r), RecordLen)
+          at(r) += RecordLen
+        }
+        pages = page.indices.iterator.filter(page(_) != null).map(r => (r, page(r)))
       }
-      val page = count.map(c => if (c == 0) null else new Array[Byte](c * RecordLen))
-      val at = new Array[Int](count.length)
-      for (i <- 0 until n) {
-        val r = range(i)
-        System.arraycopy(chunk, i * RecordLen, page(r), at(r), RecordLen)
-        at(r) += RecordLen
-      }
-      pages = page.indices.iterator.filter(page(_) != null).map(r => Row(r, page(r)))
     }
-  }
 }
 
 /** The per-partition sort of TeraSort's reduce stage, over the pages of

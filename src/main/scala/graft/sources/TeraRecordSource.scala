@@ -19,16 +19,19 @@ import BinaryRecords.{KeyLen, RecordLen}
 
 /** DataSource V2 provider for fixed-width 100-byte TeraSort record files:
   * `spark.read.format("terarecord").load(path)` → (key, payload, rec), all
-  * binary: the 10-byte key, the 90-byte payload and the whole record. It is
-  * the one reader of record files — `BinaryRecords.read`, the TeraSort scan
-  * and its driver sampler all list their splits through `splits` — as
-  * Hadoop's TeraInputFormat serves both the job and its partition sampler.
+  * binary: the 10-byte key, the 90-byte payload and the whole record. It
+  * owns the one split listing and the one reader of record files:
+  * `BinaryRecords.read`, TeraSort's map tasks and its driver sampler all
+  * list their splits through `splits`, as Hadoop's TeraInputFormat serves
+  * both the job and its partition sampler, and the scan and the map tasks
+  * read a split through `SplitReader`.
   *
   * Scale behaviors built in:
   *  - splits are record-aligned byte ranges (~32 MB) — no record ever
   *    spans readers, no parsing on the driver;
-  *  - a reader reads its split in runs of whole records (64 KB), not one
-  *    record per call into Hadoop's checksummed stream;
+  *  - a reader reads its split in runs of whole records (64 KB in the
+  *    scan, 1 MB in TeraSort's map tasks), not one record per call into
+  *    Hadoop's checksummed stream;
   *  - column pruning pushes into the reader: each required column is one
   *    byte range copied out of the record, so a key-only projection never
   *    materializes the 90-byte payload (9/10 of the bytes never reach
@@ -79,6 +82,30 @@ object TeraRecordSource {
       }
     }
   }
+
+  /** An open split, read from its start in runs of whole records. */
+  private[sources] final class SplitReader(split: TeraRecordPartition, conf: Configuration)
+      extends java.io.Closeable {
+    private val in = {
+      val path = new Path(split.file)
+      val s = path.getFileSystem(conf).open(path)
+      s.seek(split.start)
+      s
+    }
+    private var unread = split.length // bytes of the split not yet read
+
+    /** Reads the split's next run into `buf` from its start: as many whole
+      * records as `buf` holds, never past the split's end. Returns the
+      * run's bytes, 0 at the split's end. */
+    def read(buf: Array[Byte]): Int = {
+      val n = math.min(buf.length / RecordLen * RecordLen, unread).toInt
+      in.readFully(buf, 0, n)
+      unread -= n
+      n
+    }
+
+    override def close(): Unit = in.close()
+  }
 }
 
 class TeraRecordTable(path: String) extends Table with SupportsRead {
@@ -121,32 +148,21 @@ class TeraScan(path: String, required: StructType,
     new TeraReaderFactory(required.fieldNames.map(TeraRecordSource.ranges), conf)
 }
 
-/** Reads a split in runs of whole records (`RunBytes`, never past the
-  * split's end) and copies each required column's byte range out of the
-  * run. */
+/** Reads a split in runs of `RunBytes` and copies each required column's
+  * byte range out of the run. */
 class TeraReaderFactory(slices: Array[(Int, Int)], conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TeraRecordPartition]
     new PartitionReader[InternalRow] {
-      private val fs = new Path(p.file).getFileSystem(conf.value)
-      private val in = fs.open(new Path(p.file))
-      in.seek(p.start)
+      private val split = new TeraRecordSource.SplitReader(p, conf.value)
       private val run = new Array[Byte](math.min(TeraReaderFactory.RunBytes, p.length).toInt)
-      private var unread = p.length // bytes of the split not yet in `run`
       private var end = 0 // bytes of the current run
       private var at = -RecordLen // offset of the current record in `run`
 
       override def next(): Boolean = {
         at += RecordLen
-        if (at >= end) {
-          if (unread == 0) return false
-          end = math.min(run.length, unread).toInt
-          in.readFully(run, 0, end)
-          unread -= end
-          at = 0
-        }
-        true
+        at < end || { end = split.read(run); at = 0; end > 0 }
       }
 
       override def get(): InternalRow = {
@@ -159,7 +175,7 @@ class TeraReaderFactory(slices: Array[(Int, Int)], conf: SerializableConfigurati
         new GenericInternalRow(values)
       }
 
-      override def close(): Unit = in.close()
+      override def close(): Unit = split.close()
     }
   }
 }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.TaskContext
+import org.apache.spark.deploy.SparkHadoopUtil
+import org.apache.spark.internal.io.SparkHadoopWriterUtils
 import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.unsafe.array.LongArray
@@ -20,6 +22,30 @@ object GraftShim {
   /** The running task's memory manager (`private[spark]`), to book
     * memory through a `MemoryConsumer`. */
   def taskMemoryManager(): TaskMemoryManager = TaskContext.get().taskMemoryManager()
+
+  /** From now until the running task completes, count what its thread
+    * reads through Hadoop file systems as the task's input bytes, as
+    * `HadoopRDD` does (`InputMetrics.setBytesRead` is `private[spark]`). */
+  def countInputBytes(): Unit = {
+    val task = TaskContext.get()
+    val metrics = task.taskMetrics().inputMetrics
+    val before = metrics.bytesRead
+    val read = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+    task.addTaskCompletionListener[Unit](_ => metrics.setBytesRead(before + read()))
+  }
+
+  /** A function that sets the running task's output metrics, as Spark's
+    * Hadoop writer does: the bytes its thread wrote through Hadoop file
+    * systems since this call, and the records given. Call it on the task's
+    * thread, once the output's file system is open: only the file systems
+    * already open are counted. */
+  def outputMetrics(): Long => Unit = {
+    val (metrics, written) = SparkHadoopWriterUtils.initHadoopOutputMetrics(TaskContext.get())
+    records => {
+      metrics.setBytesWritten(written())
+      metrics.setRecordsWritten(records)
+    }
+  }
 
   /** Spark's TimSort (`private[spark]`) over the (record pointer, key
     * prefix) pairs of a `LongArray`, as `UnsafeInMemorySorter` uses it:

@@ -1,36 +1,51 @@
 package graft
 
+import org.apache.hadoop.mapred.FileAlreadyExistsException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import graft.sources.BinaryRecords
 
 /** Round-trip + TeraSort property for the fixed-width binary source/sink:
   * gen → write → terasort → files concatenated in name order are globally
-  * sorted, the record multiset is preserved, the sort runs one
-  * shuffle-map stage and no sampling scan, and the parts are balanced —
+  * sorted, the record multiset is preserved, the sort runs one job with
+  * one shuffle-map stage (which reads the input) and no sampling scan, the
+  * output directory holds only the parts and `_SUCCESS`, and the parts
+  * are balanced —
   * over a spread input, one hot key, presorted and reverse-sorted input,
   * one constant 8-byte prefix, a key held by 30 % of the records, 64
   * partitions with empty ranges, a shared 8-byte prefix in the files the
   * driver sample skips, no records (still one empty part per partition),
-  * one record, and 256 partitions. */
+  * one record, and 256 partitions. An existing output directory fails
+  * both sinks and stays as it was; fewer than one partition fails before
+  * the sample. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   private def genTeraRecords(n: Int) = BinaryRecords.teragen(spark, n)
 
+  /** The names in `dir`: exactly `parts` part files, `_SUCCESS` and the
+    * local file system's `.crc` sidecars, and nothing else. */
+  private def assertOnlyParts(dir: String, parts: Int): Unit = {
+    val names = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSet
+    val files = (0 until parts).map(i => f"part-r-$i%05d") :+ "_SUCCESS"
+    assert(names === (files ++ files.map(f => s".$f.crc")).toSet)
+  }
+
   test("binary record sink/scan round-trips 100-byte records") {
     val dir = Files.createTempDirectory("graft_bin").toString
     val in = s"$dir/in"
-    BinaryRecords.write(genTeraRecords(5000), in)
+    BinaryRecords.write(genTeraRecords(5000).repartition(3), in)
+    assertOnlyParts(in, 3)
     val back = BinaryRecords.read(spark, in)
     assert(back.count() === 5000)
     val r = back.select(length(col("key")).as("lk"), length(col("payload")).as("lp"))
@@ -38,24 +53,65 @@ class BinaryRecordsSpec extends AnyFunSuite {
     assert(r.length === 1 && r(0).getInt(0) === 10 && r(0).getInt(1) === 90)
   }
 
-  /** Runs `body` and counts its shuffle-map stages (stages that wrote
-    * shuffle records) and its sampling scans (stages that read input but
-    * wrote no shuffle records). Listener events arrive in posting order, so
-    * once a marker job started after `body` is seen, every stage of `body`
-    * is. */
-  private def mapStages(body: => Unit): (Int, Int) = {
+  /** Every file under `dir` with its bytes (directories with none). */
+  private def tree(dir: Path): Seq[(String, Seq[Byte])] =
+    Files.walk(dir).iterator().asScala.toSeq.map { f =>
+      (dir.relativize(f).toString, if (Files.isRegularFile(f)) Files.readAllBytes(f).toSeq else Nil)
+    }.sortBy(_._1)
+
+  test("write and terasort into an existing directory fail and leave it untouched") {
+    val dir = Files.createTempDirectory("graft_exists")
+    val in = s"$dir/in"
+    BinaryRecords.write(genTeraRecords(200), in)
+    val out = Files.createDirectories(dir.resolve("out"))
+    Files.write(out.resolve("kept"), Array[Byte](1, 2, 3))
+    val before = tree(dir)
+    intercept[FileAlreadyExistsException](BinaryRecords.write(genTeraRecords(10), out.toString))
+    intercept[FileAlreadyExistsException](BinaryRecords.terasort(spark, in, out.toString, 2))
+    // the input directory as the output, too
+    intercept[FileAlreadyExistsException](BinaryRecords.terasort(spark, in, in, 2))
+    assert(tree(dir) == before)
+  }
+
+  test("terasort rejects fewer than one partition before it samples") {
+    val dir = Files.createTempDirectory("graft_parts")
+    // no input at all: a sample would fail on the missing path instead
+    for (p <- Seq(0, -1)) withClue(s"$p partitions: ") {
+      val e = intercept[IllegalArgumentException](
+        BinaryRecords.terasort(spark, s"$dir/missing", s"$dir/out", p))
+      assert(e.getMessage.contains("at least one partition"), e.getMessage)
+      assert(!Files.exists(dir.resolve("out")))
+    }
+  }
+
+  /** What `body` ran: its jobs; the input bytes of each of its
+    * shuffle-map stages (stages that wrote shuffle records); its sampling
+    * scans (other stages that read input); and the bytes its other stages
+    * wrote. */
+  private case class Ran(jobs: Int, mapInputBytes: Seq[Long], scans: Int, reduceOutputBytes: Long)
+
+  /** Runs `body` and collects what it ran (`Ran`). Listener events arrive
+    * in posting order, so once a marker job started after `body` is seen,
+    * every job and stage of `body` is. */
+  private def ran(body: => Unit): Ran = {
     val sc = spark.sparkContext
     val marker = "graft.test.marker"
-    val seen, scans = new AtomicInteger
+    val jobs, scans = new AtomicInteger
+    val maps = new ConcurrentLinkedQueue[Long]
+    val written = new AtomicLong
     val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
-        if (m.shuffleWriteMetrics.recordsWritten > 0) seen.incrementAndGet()
-        else if (m.inputMetrics.bytesRead > 0) scans.incrementAndGet()
+        if (m.shuffleWriteMetrics.recordsWritten > 0) maps.add(m.inputMetrics.bytesRead)
+        else {
+          if (m.inputMetrics.bytesRead > 0) scans.incrementAndGet()
+          written.addAndGet(m.outputMetrics.bytesWritten)
+        }
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(marker) != null) markerSeen.countDown()
+        else jobs.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
@@ -63,7 +119,7 @@ class BinaryRecordsSpec extends AnyFunSuite {
       sc.setLocalProperty(marker, "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
       assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
-      (seen.get, scans.get)
+      Ran(jobs.get, maps.asScala.toSeq, scans.get, written.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -117,11 +173,16 @@ class BinaryRecordsSpec extends AnyFunSuite {
       BinaryRecords.write(input, in)
       val inRecs = input.select(concat(col("key"), col("payload")))
         .collect().map(r => new String(r.getAs[Array[Byte]](0), ISO_8859_1))
-      // the plan runs once: one shuffle-map stage (none writes on no input),
-      // and no stage scans the input only to sample it
-      val (maps, scans) = mapStages(BinaryRecords.terasort(spark, in, out, partitions))
-      assert(maps === inRecs.length.min(1))
-      assert(scans === 0)
+      // one job: one shuffle-map stage that reads the input (none writes on
+      // no input), no stage that scans the input only to sample it, and a
+      // reduce stage that writes the parts
+      val sorted = ran(BinaryRecords.terasort(spark, in, out, partitions))
+      assert(sorted.jobs === 1)
+      assert(sorted.mapInputBytes.size === inRecs.length.min(1))
+      assert(sorted.mapInputBytes.forall(_ > 0), s"map input bytes ${sorted.mapInputBytes}")
+      assert(sorted.scans === 0)
+      assert(inRecs.isEmpty || sorted.reduceOutputBytes > 0)
+      assertOnlyParts(out, partitions)
 
       // read output files in name order, byte-concatenate, check sortedness
       val parts = Files.list(Paths.get(out)).iterator().asScala

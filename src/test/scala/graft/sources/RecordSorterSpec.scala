@@ -16,9 +16,10 @@ import scala.util.Random
 
 import graft.TestSpark
 
-/** TeraSort's pages and per-partition sort: `pack` puts each record in a
-  * page of its range; the page sort (a radix sort on the 8-byte prefix,
-  * then each run of records sharing it in whole-record order) gives whole
+/** TeraSort's pages and per-partition sort: `pack`, reading a split's
+  * chunks, puts each record in a page of its range; the page sort (a
+  * radix sort on the 8-byte prefix, then each run of records sharing it
+  * in whole-record order) gives whole
   * records in unsigned byte order over tie runs of one, two, many and the
   * whole partition and exact duplicates; with its memory denied it hands
   * the records to the spilling `RecordSorter`; the prefix read from a
@@ -112,9 +113,12 @@ class RecordSorterSpec extends AnyFunSuite {
   test("pack puts every record in one page of its range, a chunk at a time") {
     val recs = records(rnd, 2 * RecordPages.ChunkRecords + 77) ++ singles.take(10)
     val cuts = Seq(recs(5), recs(17), recs(17), recs(99)).sortBy(str).toArray
-    val row = UnsafeProjection.create(Array[DataType](BinaryType))
-    val rows = RecordPages.pack(recs.iterator.map(r => row(InternalRow(r))), cuts).toVector
-    val byRange = rows.map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+    // the packer reads its chunks straight from a split of a record file
+    val file = Files.createTempDirectory("graft_pack").resolve("part-00000")
+    Files.write(file, recs.flatten.toArray)
+    val split = new TeraRecordSource.SplitReader(
+      TeraRecordPartition(file.toString, 0, Files.size(file)), spark.sessionState.newHadoopConf())
+    val byRange = try RecordPages.pack(split.read, cuts).toVector finally split.close()
     // at most one page per range and chunk
     assert(byRange.size <= 3 * (cuts.length + 1))
     for ((range, page) <- byRange; rec <- page.grouped(Len))
@@ -149,10 +153,14 @@ class RecordSorterSpec extends AnyFunSuite {
 
   test("the driver sample counts the records and picks ascending cuts") {
     val rnd = new Random(7)
+    def cutPoints(in: String, partitions: Int) = {
+      val conf = spark.sessionState.newHadoopConf()
+      BinaryRecords.cutPoints(TeraRecordSource.splits(in, conf), conf, partitions)
+    }
     def sampleOf(recs: Seq[Array[Byte]], partitions: Int) = {
       val dir = Files.createTempDirectory("graft_gate")
       Files.write(dir.resolve("part-00000"), recs.flatten.toArray)
-      BinaryRecords.cutPoints(spark, dir.toString, partitions)
+      cutPoints(dir.toString, partitions)
     }
     def ascending(cuts: Array[Array[Byte]]) =
       cuts.sliding(2).forall { case Array(a, b) => ByteArray.compareBinary(a, b) <= 0; case _ => true }
@@ -165,11 +173,11 @@ class RecordSorterSpec extends AnyFunSuite {
     BinaryRecords.write(spark.range(1000).select(
       expr("cast('0000000000' as binary)").as("key"),
       expr("cast(rpad(cast(id as string), 90, '.') as binary)").as("payload")), s"$dir/in")
-    val oneKey = BinaryRecords.cutPoints(spark, s"$dir/in", 4)
+    val oneKey = cutPoints(s"$dir/in", 4)
     assert(oneKey.records === 1000L && oneKey.cuts.length === 3 && ascending(oneKey.cuts))
     // no records: no cuts
     val empty = Files.createTempDirectory("graft_gate")
-    val none = BinaryRecords.cutPoints(spark, empty.toString, 3)
+    val none = cutPoints(empty.toString, 3)
     assert(none.records === 0L && none.cuts.isEmpty)
   }
 }

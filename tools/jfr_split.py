@@ -7,8 +7,11 @@ Usage:
 
 <run-record.json> is the record perfbench writes to
 .bench_build/results/<workload>-seed<N>-trace<T>.json. The executor-thread
-(`Executor task launch worker-*`) `jdk.ExecutionSample` events that fall
-inside a timed operation window (ops of kind `op`) are counted. With a
+(`Executor task launch worker-*`) samples that fall inside a timed
+operation window (ops of kind `op`) are counted, in two sets of tables:
+`jdk.ExecutionSample` (threads running Java code) and then
+`jdk.NativeMethodSample` (threads inside a native method: JNI compression,
+file reads and writes, a forked process such as Hadoop's `chmod`). With a
 traced record (`--trace 1`) each sample is put in the role (`map`,
 `reduce`, `sample`) of the stage of that window that was running at its
 time; stages of one sort run one after another, so the time says which
@@ -56,8 +59,8 @@ def main():
         sys.exit(f"no timed ops in {a.record}")
     windows = [(o["start_ms"], o["end_ms"], o.get("stages", [])) for o in ops]
 
-    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "64",
-                          "--events", "jdk.ExecutionSample", a.jfr],
+    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "64", "--events",
+                          "jdk.ExecutionSample,jdk.NativeMethodSample", a.jfr],
                          check=True, capture_output=True, text=True).stdout
     events = json.loads(out)["recording"]["events"]
 
@@ -70,10 +73,13 @@ def main():
                 return "op" if not stages else "between stages"
         return None
 
-    counts = collections.defaultdict(collections.Counter)
+    kinds = (("jdk.ExecutionSample", "executor samples"),
+             ("jdk.NativeMethodSample", "native executor samples"))
+    counts = {k: collections.defaultdict(collections.Counter) for k, _ in kinds}
     for e in events:
         v = e["values"]
-        if not v["sampledThread"]["javaName"].startswith("Executor task launch worker"):
+        if e["type"] not in counts or \
+                not v["sampledThread"]["javaName"].startswith("Executor task launch worker"):
             continue
         r = role(epoch_ms(v["startTime"]))
         frames = (v.get("stackTrace") or {}).get("frames") or []
@@ -82,21 +88,23 @@ def main():
         names = [frame_name(f) for f in frames]
         pick = next((n for n in names if n.startswith(tuple(a.frames_from))), names[0]) \
             if a.frames_from else names[0]
-        counts[r][pick] += 1
+        counts[e["type"]][r][pick] += 1
 
-    total = sum(sum(c.values()) for c in counts.values())
-    print(f"{total} executor samples in {len(ops)} `op` windows "
-          f"({sum(e - s for s, e, _ in windows) / 1000:.2f} s)\n")
-    for r in sorted(counts, key=lambda r: -sum(counts[r].values())):
-        c = counts[r]
-        n = sum(c.values())
-        print(f"| {r}: {n} samples | share |\n|---|---|")
-        for name, k in c.most_common(a.top):
-            print(f"| `{name}` | {k} ({100 * k / n:.0f} %) |")
-        rest = n - sum(k for _, k in c.most_common(a.top))
-        if rest:
-            print(f"| other frames | {rest} ({100 * rest / n:.0f} %) |")
-        print()
+    for kind, label in kinds:
+        by_role = counts[kind]
+        total = sum(sum(c.values()) for c in by_role.values())
+        print(f"{total} {label} in {len(ops)} `op` windows "
+              f"({sum(e - s for s, e, _ in windows) / 1000:.2f} s)\n")
+        for r in sorted(by_role, key=lambda r: -sum(by_role[r].values())):
+            c = by_role[r]
+            n = sum(c.values())
+            print(f"| {r}: {n} samples | share |\n|---|---|")
+            for name, k in c.most_common(a.top):
+                print(f"| `{name}` | {k} ({100 * k / n:.0f} %) |")
+            rest = n - sum(k for _, k in c.most_common(a.top))
+            if rest:
+                print(f"| other frames | {rest} ({100 * rest / n:.0f} %) |")
+            print()
 
 
 if __name__ == "__main__":
