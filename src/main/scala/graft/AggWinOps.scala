@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * between engines can't reorder rows; float aggregates go through exact
   * decimal sums.
   */
-object AggWinOps {
+object AggWinOps extends QueryModule {
   import Tables._
 
   // --------------------------------------------------------- aggregations
@@ -1007,17 +1007,14 @@ object AggWinOps {
     regressionFinish(daily, wide38 = false)
   }
 
-  /** The DECIMAL(38) regime of q_agg_regression for >1e9-row daily
-    * cells: the DAILY accumulator widens to DECIMAL(28,4) (the narrow
-    * regime's first overflow point — a day whose Σ|value| ≥ 1e14 cannot
-    * even be represented in DECIMAL(18,4)) and the moment products ride
-    * regressionFinish's wide path. Spec'd since r12 (WideDecimalSpec:
-    * bit-identical to the narrow form on the fixture, exact vs
-    * BigDecimal past the narrow bound) and GRADED since r18 (the r17
-    * verdict's item-5 decision, taken with the bench gate green): the
-    * oracle replays the SAME wide arithmetic in DuckDB, so the
-    * cross-engine hash now covers the regime a >1e9-row-cell corpus
-    * actually runs. */
+  /** The DECIMAL(38) regime of q_agg_regression for >1e9-row daily cells: the
+    * DAILY accumulator widens to DECIMAL(28,4) (the narrow regime's first
+    * overflow point — a day whose Σ|value| ≥ 1e14 cannot even be represented
+    * in DECIMAL(18,4)) and the moment products ride regressionFinish's wide
+    * path. WideDecimalSpec pins it bit-identical to the narrow form on the
+    * fixture and exact vs BigDecimal past the narrow bound; the oracle
+    * replays the SAME wide arithmetic in DuckDB, so the cross-engine hash
+    * covers the regime a >1e9-row-cell corpus actually runs. */
   private[graft] def qAggRegressionWide(s: SparkSession, d: String): DataFrame = {
     val daily = events(s, d)
       .groupBy(col("event_type"), dayofmonth(col("ts")).cast(LongType).as("x"))
@@ -1025,17 +1022,15 @@ object AggWinOps {
     regressionFinish(daily, wide38 = true)
   }
 
-  /** Least-squares finish over the (event_type, x, y) daily table, in
-    * either arithmetic regime. The graded DECIMAL(18,4) regime is exact
-    * while each day's Σ|value| < 1e14 and each moment sum < 1e24
-    * (Spark widens sum/product precision to 28/38 internally). The
-    * DECIMAL(38) regime (`wide38=true`, r12-verdict open item (d))
-    * re-casts y to DECIMAL(28,4) so x·y products carry ≤38 digits:
-    * exact while per-day Σ|value| < 1e24 — the >1e9-row-cell regime the
-    * graded form documents as out of bounds. Identical plan shape;
-    * WideDecimalSpec pins cross-regime equality on the fixture and
-    * exactness vs BigDecimal at magnitudes where DECIMAL(18,4) sums
-    * overflow. */
+  /** Least-squares finish over the (event_type, x, y) daily table, in either
+    * arithmetic regime. The graded DECIMAL(18,4) regime is exact while each
+    * day's Σ|value| < 1e14 and each moment sum < 1e24 (Spark widens
+    * sum/product precision to 28/38 internally). The DECIMAL(38) regime
+    * (`wide38=true`) re-casts y to DECIMAL(28,4) so x·y products carry ≤38
+    * digits: exact while per-day Σ|value| < 1e24 — the >1e9-row-cell regime
+    * the graded form documents as out of bounds. Identical plan shape;
+    * WideDecimalSpec pins cross-regime equality on the fixture and exactness
+    * vs BigDecimal at magnitudes where DECIMAL(18,4) sums overflow. */
   private[graft] def regressionFinish(daily: DataFrame, wide38: Boolean): DataFrame = {
     val y = if (wide38) col("y").cast(DecimalType(28, 4)) else col("y")
     daily.groupBy(col("event_type"))
@@ -1143,7 +1138,7 @@ object AggWinOps {
       .filter { case (_, c) => c.maxSpanUs.isDefined }
     // both sections are assembled conditionally so emptying EITHER
     // subset of GradedAll degrades to valid SQL instead of a dangling
-    // comma / empty UNION ALL branch (r16 self-review finding)
+    // comma / empty UNION ALL branch
     val recCtes = windowed.map { case (name, c) =>
       s",\nrec_$name AS (\n  ${PatternMachine.duckReplaySql(c, "ev", s"rec_$name")})"
     }.mkString
@@ -1218,14 +1213,13 @@ object AggWinOps {
       |  CAST(SUM(CASE WHEN step >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_step3
       |FROM steps GROUP BY day ORDER BY day""".stripMargin
 
-  /** COHORT RETENTION — the activation dashboard every event pipeline
-    * feeds: users grouped by first-SIGNUP day, retention measured as
-    * "active exactly k days after signup" for k ∈ {0, 7, 14, 21}
-    * (r0 doubles as a sanity row: signup itself is activity). Two
-    * keyed aggregations (distinct user-days; min day per user) and one
-    * user-keyed join — nothing wider than the user key shuffles, and
-    * the (cohort × offset) output is calendar-bounded regardless of
-    * corpus size. */
+  /** COHORT RETENTION — the activation dashboard every event pipeline feeds:
+    * users grouped by first-SIGNUP day, retention measured as "active exactly
+    * k days after signup" for k ∈ {0, 7, 14, 21} (day 0 doubles as a sanity
+    * row: signup itself is activity). Two keyed aggregations (distinct
+    * user-days; min day per user) and one user-keyed join — nothing wider
+    * than the user key shuffles, and the (cohort × offset) output is
+    * calendar-bounded regardless of corpus size. */
   def qAggCohort(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d)
     val ud = ev.select(col("user_id"), to_date(col("ts")).as("day")).distinct()

@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   * corpus never enters an exchange for assignment at all (at 100 TB the
   * windowed form shuffles k× the corpus; this shuffles nothing).
   *
-  * Bit-compatibility with the window it replaces (and with the DuckDB
-  * oracles that mirror it): dist = na − 2.0·graft_dot(vec, cvec) + nc in
-  * the same left-associated double arithmetic, and the array_sort over
-  * struct(dist, cell_id) is the same lexicographic (dist ASC, cell_id
-  * ASC) order as the window's ORDER BY — strict comparison, ties to the
-  * lower cell_id, NaN greatest.
+  * Bit-compatibility with the equivalent window (and with the DuckDB oracles
+  * that mirror it): dist = na − 2.0·graft_dot(vec, cvec) + nc in the same
+  * left-associated double arithmetic, and the array_sort over struct(dist,
+  * cell_id) is the same lexicographic (dist ASC, cell_id ASC) order as the
+  * window's ORDER BY — strict comparison, ties to the lower cell_id, NaN
+  * greatest.
   */
 object CellAssign {
 

@@ -32,6 +32,10 @@ object GraftSession {
       // holds 100 generated classes, but one fleet pass produces ~1.5k, so
       // shared shapes would be evicted and recompiled mid-run
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // a TIMESTAMP(NANOS) parquet column reads as its raw long, which
+      // Tables.normalizeTs turns into microseconds; Spark 4 refuses to
+      // read it otherwise
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // shuffle spill stays on disk, not on the tmpfs scratch (see Scratch)
       .config("spark.local.dir", Scratch.diskTmp)
       // managed tables (the ANN index family) are rebuilt per run, so the

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * division producing the display double happens once, at the end, on
   * bit-identical integers in both engines.
   */
-object GraphOps {
+object GraphOps extends QueryModule {
   import Tables._
 
   private val Scale = 1000000000000L // 1e12 fixed-point rank mass
@@ -54,13 +54,11 @@ object GraphOps {
       .join(supplier(s, d), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
-    // wout as a WINDOW over the aggregated edges (r20, guide §2.4
-    // "window partitioned like the preceding aggregation"): the former
-    // groupBy("src") + self-JOIN duplicated the whole 4-table fact
-    // subtree in the plan (two 20-operator arms + an SMJ whose single
-    // execution depended on ReuseExchange firing); the window computes
-    // the same per-src sum over the 625-row aggregate in the SAME plan
-    // arm — one fact pass by construction, plan 50 → 26 operators.
+    // wout as a WINDOW over the aggregated edges (guide §2.4 "window
+    // partitioned like the preceding aggregation"): a groupBy("src") +
+    // self-JOIN would duplicate the whole 4-table fact subtree in the
+    // plan, while the window computes the per-src sum over the 625-row
+    // aggregate in the SAME plan arm — one fact pass by construction.
     // wshare is the identical integer: sum-per-src then floor-div.
     // eager checkpoint: the fact-table join must run ONCE — the iteration
     // below references `edges` 2x per round, and without the cut the

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * md5 prefix bit-for-bit. The MinHash permutations on top are explicit
   * LCGs mod the same Mersenne prime.
   */
-object LlmOps {
+object LlmOps extends QueryModule {
   import Tables._
 
   private val P = 2147483647L
@@ -88,12 +88,11 @@ object LlmOps {
     * clusters.
     * Every stage is a keyed shuffle or row-local — no driver-side state. */
   /** (doc_id, v) 3-token shingle values — shared by the near-dup,
-    * fingerprint-style, and UDAF-sketch queries. Shingling is ROW-LOCAL:
-    * an array `transform` over token indices inside each document row —
-    * no per-doc window, no shuffle, embarrassingly parallel at any corpus
-    * size (the r4 lead-window form shuffled every token on doc_id before
-    * a single shingle existed). Docs under 3 tokens yield no shingles,
-    * exactly as the oracle's LEAD(t3) IS NOT NULL filter. */
+    * fingerprint-style, and UDAF-sketch queries. Shingling is ROW-LOCAL: an
+    * array `transform` over token indices inside each document row — no
+    * per-doc window, no shuffle, embarrassingly parallel at any corpus size.
+    * Docs under 3 tokens yield no shingles, exactly as the oracle's LEAD(t3)
+    * IS NOT NULL filter. */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
@@ -281,11 +280,10 @@ object LlmOps {
     * queries. ONLY the shingle scan is materialized (it feeds both the
     * sketch via bands and the exact sets via sa/sb/sizes — without this
     * one checkpoint the posexplode→window→md5 subtree re-executes per
-    * reference, the r2 2.6× bench regression). The band self-join and the
-    * sa/sb/sizes re-reads are deliberately NOT checkpointed: each branch
-    * reads the same child, so Spark's ReusedExchange dedupes the physical
-    * work — the r4 triple-checkpoint chain ran 3 extra eager jobs per
-    * query and made jaccard the slowest query in the suite (7.9 s).
+    * reference). The band self-join and the sa/sb/sizes re-reads are
+    * deliberately NOT checkpointed: each branch reads the same child, so
+    * Spark's ReusedExchange dedupes the physical work, where a checkpoint
+    * per branch would run an extra eager job each.
     * Band tag intentionally dropped: a cross-band (ka, kb) collision is a
     * candidate too — matches the oracle's untagged UNION ALL. */
   /** Staged once per (application, sfDir): q_dedup_jaccard and
@@ -301,18 +299,17 @@ object LlmOps {
     SharedStage(s, d, "dedup_cand_inter")(candidateIntersectionsBuild(s, d))
 
   private def candidateIntersectionsBuild(s: SparkSession, d: String): DataFrame = {
-    // candidates come from the STAGED band-pair graph (bandPairs —
-    // MinHash minima are duplicate-insensitive, so bands over the raw
-    // and the distinct shingle multiset are identical and the CC/
-    // triangle family's staged pairs are exactly this query's
-    // candidates); the distinct shingle set feeds the exact
-    // intersection and both size branches off one exchange.
-    // r19 (guide §3.2 — reduce the big side before shuffling it): every
-    // downstream use of ds is keyed by a CANDIDATE doc (sa on va, sb on
-    // vb, sizes joined back to va/vb), so non-candidate docs' shingles
-    // are dead weight through the distinct exchange — a broadcast
-    // semi-join against the pairs' tiny doc set drops them BEFORE the
-    // shuffle. n_inter/sza/szb for candidate docs are unchanged.
+    // candidates come from the STAGED band-pair graph (bandPairs — MinHash
+    // minima are duplicate-insensitive, so bands over the raw and the
+    // distinct shingle multiset are identical and the CC/ triangle family's
+    // staged pairs are exactly this query's candidates); the distinct shingle
+    // set feeds the exact intersection and both size branches off one
+    // exchange. Reduce the big side before shuffling it (guide §3.2): every
+    // downstream use of ds is keyed by a CANDIDATE doc (sa on va, sb on vb,
+    // sizes joined back to va/vb), so non-candidate docs' shingles are dead
+    // weight through the distinct exchange — a broadcast semi-join against
+    // the pairs' tiny doc set drops them BEFORE the shuffle. n_inter/sza/szb
+    // for candidate docs are unchanged.
     val pairs = bandPairs(s, d)
     val candDocs = pairs.select(col("va").as("doc_id"))
       .union(pairs.select(col("vb").as("doc_id"))).distinct()
@@ -433,10 +430,8 @@ object LlmOps {
       while (changed > 0 && iter < maxIter) {
         val neighborMin = edges.join(labels, col("vb") === col("node"))
           .groupBy(col("va")).agg(min(col("label")).as("nmin"))
-        // single jump (label-chain compression). Measured on a 2048-node
-        // path (ChainGraphSpec), it halves as designed: 12 rounds, label
-        // distance doubling each round. A second composed jump was a net
-        // loss (an extra join per round)
+        // single jump (label-chain compression, halving as the scaladoc
+        // says); a second composed jump costs an extra join per round
         val jump = labels.select(col("node").as("jnode"), col("label").as("jlabel"))
         val updated = Checkpoints.cut(labels
           .join(neighborMin, col("node") === col("va"), "left_outer")
@@ -473,7 +468,7 @@ object LlmOps {
   private[graft] def bandPairs(s: SparkSession, d: String): DataFrame =
     SharedStage(s, d, "dedup_band_pairs") {
       // checkpointed because the self-join references the band subtree
-      // twice — ReusedExchange alone leaves it running twice (r8: 1.8×)
+      // twice — ReusedExchange alone leaves it running twice
       val bands = bandsOf(minhashOf(shingles(s, d)))
         .select(bandKeys.map(col) :+ col("doc_id"): _*)
         .localCheckpoint(eager = false)
@@ -574,20 +569,19 @@ object LlmOps {
        |  COUNT(*) AS n_docs, COUNT(DISTINCT comp) AS n_components
        |FROM h GROUP BY lang, split ORDER BY lang, split""".stripMargin
 
-  /** END-TO-END RAG INGESTION + RETRIEVAL — the composed pipeline a
-    * retrieval corpus runs nightly: documents → 32-token chunks →
-    * per-chunk embedding → top-5 retrieval for a query. The "embedding
-    * model" is a deterministic integer projection (dim j of a chunk =
-    * Σ_tokens (token_hash·(2j+1)) mod 2003 — a stand-in with the same
-    * dataflow as a real encoder batch), which keeps every score's
-    * numerator EXACT in int64: cosine = int dot / sqrt(int norms), one
-    * IEEE division — bit-portable. Chunk+embed is one keyed aggregation
-    * over exploded tokens (at scale the same sums fold row-locally over
-    * the token array in the scan projection — the shape the TextOps r5
-    * rewrite uses); the query embeds in-plan from a literal and
-    * broadcasts, so retrieval never shuffles the corpus. The graded
-    * top-5 pins the whole composition; the ANN index queries grade the
-    * sublinear retrieval tier this brute-force scorer would swap to. */
+  /** END-TO-END RAG INGESTION + RETRIEVAL — the composed pipeline a retrieval
+    * corpus runs nightly: documents → 32-token chunks → per-chunk embedding →
+    * top-5 retrieval for a query. The "embedding model" is a deterministic
+    * integer projection (dim j of a chunk = Σ_tokens (token_hash·(2j+1)) mod
+    * 2003 — a stand-in with the same dataflow as a real encoder batch), which
+    * keeps every score's numerator EXACT in int64: cosine = int dot /
+    * sqrt(int norms), one IEEE division — bit-portable. Chunk+embed is one
+    * keyed aggregation over exploded tokens (at scale the same sums fold
+    * row-locally over the token array in the scan projection, as TextOps
+    * does); the query embeds in-plan from a literal and broadcasts, so
+    * retrieval never shuffles the corpus. The graded top-5 pins the whole
+    * composition; the ANN index queries grade the sublinear retrieval tier
+    * this brute-force scorer would swap to. */
   def qPipelineRag(s: SparkSession, d: String): DataFrame = {
     val ragQuery = "model training data quality and dedup"
     def embed(tokens: DataFrame, keys: Seq[String]): DataFrame = {
@@ -1148,17 +1142,16 @@ object LlmOps {
     * duplicated grams. Never all-pairs: cost is Σ|gram bucket|², i.e.
     * linear in corpus + duplicated volume.
     *
-    * Gram KEY (r19 verdict item 3, guide §2.3 "narrower types"): the
-    * 8-token gram STRING (unbounded bytes — avg ~50 B here, arbitrarily
-    * wide at 100 TB) is hashed row-locally to the repo's cross-engine
-    * 48-bit md5 key (the `textHash` pattern, byte-identical in Spark and
-    * DuckDB), so BOTH shuffles and the dup-join carry one fixed 8-byte
-    * BIGINT instead of the string. The oracle hashes identically, so
-    * parity is exact by construction; a 48-bit intra-corpus collision
-    * would merge two gram classes IDENTICALLY in both engines (expected
-    * collisions ≈ n²/2⁴⁹ ≈ 9e-5 at this corpus's ~225k distinct grams —
-    * verified zero at sf0.001/0.01/0.1: the hashed outputs are
-    * byte-identical to the string-keyed ones). */
+    * Gram KEY (guide §2.3 "narrower types"): the 8-token gram STRING
+    * (unbounded bytes — avg ~50 B here, arbitrarily wide at 100 TB) is hashed
+    * row-locally to the repo's cross-engine 48-bit md5 key (the `textHash`
+    * pattern, byte-identical in Spark and DuckDB), so BOTH shuffles and the
+    * dup-join carry one fixed 8-byte BIGINT instead of the string. The oracle
+    * hashes identically, so parity is exact by construction; a 48-bit
+    * intra-corpus collision would merge two gram classes IDENTICALLY in both
+    * engines (expected collisions ≈ n²/2⁴⁹ ≈ 9e-5 at this corpus's ~225k
+    * distinct grams — verified zero at sf0.001/0.01/0.1: the hashed outputs
+    * are byte-identical to the string-keyed ones). */
   def qDedupSubstring(s: SparkSession, d: String): DataFrame = {
     val K = 8
     val grams = documents(s, d)

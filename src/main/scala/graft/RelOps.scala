@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * window except where the semantics demand a total order over a tiny
   * aggregate result).
   */
-object RelOps {
+object RelOps extends QueryModule {
   import Tables._
 
   private def davg(c: Column, scale: Int = 2): Column =
@@ -308,39 +308,20 @@ object RelOps {
 
   // ------------------------------------------------- bucketed fact-fact join
 
-  /** The bucketed form of the fact-fact join — SCALE.md's headline lever
-    * for q_join_sortmerge at 100 TB: both sides written bucketed + sorted
-    * on the join key, so the sort-merge join runs with NO exchange (and no
-    * re-sort) on either side; the only shuffle in the whole plan is the
-    * final small priority rollup. Locally the bucket count is 8; at scale
-    * it is sized so each bucket ≈ one task's worth of data. The write is
-    * part of the operator (mode=overwrite keeps reruns idempotent) — the
-    * amortized pattern where the bucketed table is written once and joined
-    * many times. Results are graded against the plain-join oracle. */
-  /** Drop a managed table AND its warehouse location: the location
-    * survives across JVMs while the in-memory catalog does not, so a
-    * fresh session's overwrite would hit LOCATION_ALREADY_EXISTS. The
-    * location is resolved from the CATALOG when the table exists (a
-    * session parked on a non-default database would otherwise write under
-    * <db>.db/<table> while the cleanup deleted <warehouse>/<table>); the
-    * default-db layout is only the fallback for paths orphaned by an
-    * earlier JVM. All graft tables are created default-qualified. */
-  /** Materialize a fresh catalog table `default.$name` from a staged
-    * parquet STORE by hard-linking its files into the table's warehouse
-    * location and registering partitions via MSCK REPAIR — the r17
-    * shallow-clone primitive (first landed for the ANN index family,
-    * shared since by every query whose graded verb MUTATES a
-    * deterministic base table: the build is staged once per
-    * (application, sfDir), each call clones it in metadata time and
-    * mutates only the clone). `locate` maps a store file to its target
-    * partition directory name (None = excluded from this clone); linked
-    * files are renamed with their store-relative directory tag so files
-    * from different store dirs can never collide in one target
-    * partition. Copy fallback covers cross-device scratch layouts. The
-    * safety invariant — no mutation may write THROUGH a link into the
-    * store — holds because every mutation path here (dynamic partition
-    * overwrite, DROP PARTITION purge, append) replaces whole immutable
-    * parquet files; IndexCloneIsolationSpec pins it byte-level. */
+  /** Materialize a fresh catalog table `default.$name` from a staged parquet
+    * STORE by hard-linking its files into the table's warehouse location and
+    * registering partitions via MSCK REPAIR — the shallow-clone primitive of
+    * every query whose graded verb MUTATES a deterministic base table (the
+    * build is staged once per (application, sfDir), each call clones it in
+    * metadata time and mutates only the clone). `locate` maps a store file to
+    * its target partition directory name (None = excluded from this clone);
+    * linked files are renamed with their store-relative directory tag so
+    * files from different store dirs can never collide in one target
+    * partition. Copy fallback covers cross-device scratch layouts. The safety
+    * invariant — no mutation may write THROUGH a link into the store — holds
+    * because every mutation path here (dynamic partition overwrite, DROP
+    * PARTITION purge, append) replaces whole immutable parquet files;
+    * IndexCloneIsolationSpec pins it byte-level. */
   private[graft] def clonePartitionedTable(s: SparkSession, name: String,
       columnsDdl: String, partCol: String, store: java.nio.file.Path)(
       locate: java.nio.file.Path => Option[String]): String = {
@@ -379,6 +360,14 @@ object RelOps {
     s"default.$name"
   }
 
+  /** Drop a managed table AND its warehouse location: the location
+    * survives across sessions while the in-memory catalog does not, so a
+    * fresh session's overwrite would hit LOCATION_ALREADY_EXISTS. The
+    * location is resolved from the CATALOG when the table exists (a
+    * session parked on a non-default database would otherwise write under
+    * <db>.db/<table> while the cleanup deleted <warehouse>/<table>), and
+    * a location left without a catalog entry is found under the default
+    * db's layout. All graft tables are created default-qualified. */
   private[graft] def dropManaged(s: SparkSession, name: String): Unit = {
     val cat = s.sessionState.catalog
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(name, Some("default"))
@@ -390,19 +379,22 @@ object RelOps {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** (applicationId, sfDir) the bucketed tables were last built for —
-    * r17: the two bucketed tables are pure functions of sfDir and
-    * nothing ever mutates them, so they are written ONCE per
-    * (application, sfDir) and every later call goes straight to the
-    * graded verb (the shuffle-free bucket join). This is the
-    * production shape the query demonstrates: a bucketed table is an
-    * amortized layout investment written once and joined many times —
-    * rewriting it per join was never the point. Validity re-checks the
-    * CATALOG (BucketingSpec drops the tables after its run), and a
-    * different sfDir in the same application forces a rebuild. */
+  /** (applicationId, sfDir) the bucketed tables were last built for. Validity
+    * re-checks the CATALOG (BucketingSpec drops the tables after its run),
+    * and a different sfDir in the same application forces a rebuild. */
   private val bucketedBuiltFor =
     new java.util.concurrent.atomic.AtomicReference[(String, String)]()
 
+  /** The bucketed form of the fact-fact join — SCALE.md's headline lever
+    * for q_join_sortmerge at 100 TB: both sides written bucketed + sorted
+    * on the join key, so the sort-merge join runs with NO exchange (and no
+    * re-sort) on either side; the only shuffle in the whole plan is the
+    * final small priority rollup. Locally the bucket count is 8; at scale
+    * it is sized so each bucket ≈ one task's worth of data. The two
+    * tables are pure functions of sfDir and nothing mutates them, so they
+    * are written ONCE per (application, sfDir), an amortized layout
+    * investment joined many times; every later call runs only the
+    * shuffle-free join. Results are graded against the plain-join oracle. */
   def qJoinBucketed(s: SparkSession, d: String): DataFrame = {
     val key = (s.sparkContext.applicationId, d)
     def exists(n: String) = s.sessionState.catalog.tableExists(
@@ -417,13 +409,12 @@ object RelOps {
         dropManaged(s, "graft_bkt_lineitem")
         // repartition on the bucket key first: bucket assignment uses the
         // same hash family, so each write task produces one bucket file
-        // instead of every task writing a sliver of all 8 buckets.
-        // The two table builds are INDEPENDENT (different sources,
-        // different targets), and each schedules only 8 write tasks on a
-        // 32-core box — run them as two concurrent jobs (r20, guide §2.6
-        // "overlap independent jobs") so the second build back-fills the
-        // first's idle cores; same files, same catalog state, ~half the
-        // build wall-clock.
+        // instead of every task writing a sliver of all 8 buckets. The two
+        // table builds are INDEPENDENT (different sources, different
+        // targets), and each schedules only 8 write tasks on a 32-core box —
+        // run them as two concurrent jobs (guide §2.6 "overlap independent
+        // jobs") so the second build back-fills the first's idle cores; same
+        // files, same catalog state, ~half the build wall-clock.
         val builds = Seq(
           () => orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
             .repartition(8, col("o_orderkey"))
@@ -753,14 +744,13 @@ object RelOps {
     * count actually dropped. */
   def qMaintenanceCompact(s: SparkSession, d: String): DataFrame = {
     dropManaged(s, "graft_docs_compact")
-    // the FRAGMENTED state is a pure function of sfDir — stage it once
-    // per (application, sfDir) and clone per call (r17, the
-    // clonePartitionedTable discipline): the graded verb is the
-    // COMPACTION rewrite below, which still runs in full every call.
-    // Explicit numPartitions pins 16 writer tasks (AQE would otherwise
-    // coalesce the tiny shuffle away and un-fragment the fixture): each
-    // task holds docs of every lang, so every lang partition gets ~16
-    // files — the hourly-append debris shape
+    // the FRAGMENTED state is a pure function of sfDir — stage it once per
+    // (application, sfDir) and clone per call (the clonePartitionedTable
+    // discipline): the graded verb is the COMPACTION rewrite below, which
+    // still runs in full every call. Explicit numPartitions pins 16 writer
+    // tasks (AQE would otherwise coalesce the tiny shuffle away and
+    // un-fragment the fixture): each task holds docs of every lang, so every
+    // lang partition gets ~16 files — the hourly-append debris shape
     val store = SharedStage.memoDir(s, d, "docs_frag")(
       dd => new java.io.File(dd, "_SUCCESS").exists()) { dd =>
       documents(s, d).select(col("doc_id"), col("n_chars"), col("lang"))
@@ -870,11 +860,11 @@ object RelOps {
 
   /** Base-table materialization, shared with the spec (which hashes the
     * untouched partitions' files between this step and the merge).
-    * r17: the base is a pure function of sfDir, so its lang-partitioned
+    * The base is a pure function of sfDir, so its lang-partitioned
     * write stages once per (application, sfDir) and each call CLONES it
     * in metadata time ([[clonePartitionedTable]]); the merge then
     * mutates only the clone — the graded verb (dynamic overwrite of the
-    * en partition) is unchanged and still priced per call. */
+    * en partition) is priced per call. */
   private[graft] def writeMergeBase(s: SparkSession, d: String): DataFrame = {
     val base = documents(s, d).select(col("doc_id"), col("n_chars"), col("lang"))
     val store = SharedStage.memoDir(s, d, "merge_docs_base")(
@@ -962,7 +952,6 @@ object RelOps {
     * the current-row slice of affected keys) is ever computed. All work
     * is keyed shuffles/windows on the customer key — no driver state. */
   def qMergeScd2(s: SparkSession, d: String): DataFrame = {
-    dropManaged(s, "graft_dim_scd2") // legacy: pre-r17 runs left a managed copy
     dropManaged(s, "graft_dim_scd2_v2")
     val ch = orders(s, d)
       .groupBy(col("o_custkey").as("c"),
@@ -978,7 +967,7 @@ object RelOps {
 
     // phase 1: initial dimension from pre-cutoff history — a pure
     // function of sfDir, PERSISTED once per (application, sfDir)
-    // (SharedStage parquet IS the stored dimension; r17). Phase 2 only
+    // (SharedStage parquet IS the stored dimension). Phase 2 only
     // READS it, so no clone is needed — the graded verb (the
     // incremental merge + copy-on-write v2 commit) runs in full below.
     val dim = SharedStage(s, d, "dim_scd2") {
@@ -1227,9 +1216,9 @@ object RelOps {
   /** Build the 3-commit mini-log used by q_timetravel and
     * q_timetravel_diff. The log is a pure function of (sfDir), so it is
     * staged ONCE per (application, sfDir) and both queries read the same
-    * immutable snapshot set (the SharedStage discipline, r12 verdict
-    * lever #2: each query was re-staging all three commits inside its
-    * own timing). The memo is validated against the v3 manifest on every
+    * immutable snapshot set (the SharedStage discipline), rather than
+    * each query staging all three commits inside its own timing. The
+    * memo is validated against the v3 manifest on every
     * hit and rebuilt if an external cleaner removed it. */
   private[graft] def timetravelLog(s: SparkSession, d: String): String =
     SharedStage.memoDir(s, d, "timetravel")(
@@ -1242,19 +1231,16 @@ object RelOps {
     // v1: initial load, one immutable file per bucket
     val v1 = MiniLog.writeBucketFiles(base, table, "v1")
     MiniLog.commit(table, 1, v1)
-    // v2: copy-on-write UPDATE of exactly the keys in bucket 2
-    // (o_orderkey % 8 = 2): rewrite that one file, share the rest.
-    // v3: DELETE of bucket 5's 'F' rows — rewrite that one file, or drop
-    // the bucket from the manifest when the delete empties it. A bucket
-    // the load left empty has no file and no rewrite.
-    // The two rewrites are FUSED into one write job (r19 verdict item 4,
-    // guide §2.6 overlap / §2.4 fewer passes): they touch DISJOINT
-    // buckets and both read only v1 files (the old sequential build read
-    // v2(5L), which v2's bucket-2-only rewrite left ≡ v1(5L)), and a
-    // data file is invisible until a manifest names it — so writing
-    // v3's file before v2 commits changes neither snapshot. Commit
-    // ORDER and manifest CONTENTS are identical to the sequential form:
-    // v2 = v1 + new bucket-2 file, v3 = v2 + new bucket-5 file.
+    // v2: copy-on-write UPDATE of exactly the keys in bucket 2 (o_orderkey %
+    // 8 = 2): rewrite that one file, share the rest. v3: DELETE of bucket 5's
+    // 'F' rows — rewrite that one file, or drop the bucket from the manifest
+    // when the delete empties it. A bucket the load left empty has no file
+    // and no rewrite. The two rewrites are FUSED into one write job (guide
+    // §2.6 overlap / §2.4 fewer passes): they touch DISJOINT buckets and both
+    // read only v1 files (v2's bucket-2-only rewrite leaves v2(5L) ≡ v1(5L)),
+    // and a data file is invisible until a manifest names it — so writing
+    // v3's file before v2 commits changes neither snapshot. Commits stay in
+    // order: v2 = v1 + new bucket-2 file, v3 = v2 + new bucket-5 file.
     val b2 = v1.get(2L).map(s.read.parquet(_)
       .withColumn("o_totalprice", col("o_totalprice") + lit(100))
       .withColumn("bucket", lit(2L)))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * (salting for hot keys; inverted-file cells as the coarse-quantizer
   * alternative to hyperplane LSH). Both oracle-checked.
   */
-object ScaleOps {
+object ScaleOps extends QueryModule {
   import Tables._
 
   // ------------------------------------------------- salted aggregation
@@ -302,60 +302,23 @@ object ScaleOps {
     * merge — loses nothing. */
   def qAggHllReagg(s: SparkSession, d: String): DataFrame = {
     val daily = events(s, d)
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT)")
-          .as("h48"))
+      .select(col("event_type"), to_date(col("ts")).as("day"), h48)
       .groupBy(col("event_type"), col("day"))
       .agg(expr("graft_hll(h48)").as("regs"))
-    daily.groupBy(col("event_type"))
-      .agg(expr("graft_hll_merge(regs)").as("regs"),
-        count(lit(1)).as("n_days"))
-      .select(col("event_type"), col("n_days"),
-        expr("size(filter(regs, r -> r = 0))").as("v_empty"),
-        expr("aggregate(regs, 0, (a, x) -> a + x)").as("sum_ranks"),
-        expr("aggregate(regs, 0L, (a, x) -> a + shiftleft(1L, 41 - x))")
-          .as("s_scaled"))
-      .withColumn("est", expr(
-        """CAST(CASE WHEN v_empty > 0
-          |  THEN floor(256.0D * ln(256.0D / v_empty) + 0.5D)
-          |  ELSE floor(1846528.0D / 2570790.0D * 144115188075855872.0D
-          |             / s_scaled + 0.5D) END AS BIGINT)""".stripMargin))
-      .orderBy(col("event_type"))
+    hllEstimate(daily.groupBy(col("event_type"))
+      .agg(expr("graft_hll_merge(regs)").as("regs"), count(lit(1)).as("n_days")), "n_days")
   }
 
   val qAggHllReaggSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
       |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)) AS BIGINT)
       |      AS h48
       |  FROM events),
-      |rk AS (
-      |  SELECT event_type,
-      |    CAST(h48 // 1099511627776 AS INTEGER) AS bucket,
-      |    CASE WHEN h48 % 1099511627776 = 0 THEN 41
-      |         ELSE 41 - length(bin(h48 % 1099511627776)) END AS rank
-      |  FROM h),
-      |regs AS (SELECT event_type, bucket, MAX(rank) AS mj
-      |         FROM rk GROUP BY 1, 2),
-      |grid AS (SELECT event_type, unnest(range(0, 256)) AS bucket
-      |         FROM (SELECT DISTINCT event_type FROM events) t),
-      |fullregs AS (
-      |  SELECT g.event_type, COALESCE(r.mj, 0) AS mj
-      |  FROM grid g LEFT JOIN regs r
-      |    ON g.event_type = r.event_type AND g.bucket = r.bucket),
-      |agg AS (
-      |  SELECT event_type,
-      |    CAST(SUM(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS INTEGER) AS v_empty,
-      |    CAST(SUM(mj) AS INTEGER) AS sum_ranks,
-      |    CAST(SUM(CAST(1 AS BIGINT) << CAST(41 - mj AS INTEGER)) AS BIGINT)
-      |      AS s_scaled
-      |  FROM fullregs GROUP BY 1),
+      |$hllRegsSql
       |nd AS (SELECT event_type, COUNT(DISTINCT day) AS n_days FROM h GROUP BY 1)
       |SELECT a.event_type, nd.n_days, a.v_empty, a.sum_ranks, a.s_scaled,
-      |  CAST(CASE WHEN a.v_empty > 0
-      |    THEN floor(256.0 * ln(256.0 / a.v_empty) + 0.5)
-      |    ELSE floor(1846528.0 / 2570790.0 * 144115188075855872.0
-      |               / a.s_scaled + 0.5) END AS BIGINT) AS est
+      |$hllEstSql
       |FROM agg a JOIN nd ON a.event_type = nd.event_type
       |ORDER BY a.event_type""".stripMargin
 
@@ -502,18 +465,13 @@ object ScaleOps {
     * layout property lives in the parquet files' min/max stats, which
     * path reads prune exactly like table reads, and skipping the
     * managed-table round-trips (catalog create/drop + metastore-less
-    * bookkeeping) keeps the write the only real cost (measured ~0.25 s
-    * at sf0.1). Since r17 this is the SharedStage dir (the layout is a
-    * pure function of sfDir), computable without building — LayoutSpec
-    * reads the same path. */
+    * bookkeeping) keeps the write the only real cost. It is the
+    * SharedStage dir (the layout is a pure function of sfDir), computable
+    * without building — LayoutSpec reads the same path. */
   private[graft] def zorderPath(s: SparkSession, d: String): String =
     SharedStage.stagedPath(s, d, "orders_zorder")
 
   def qLayoutZorder(s: SparkSession, d: String): DataFrame = {
-    // one-time migration: environments that ran the pre-r14 form keep a
-    // managed default.graft_orders_z in their warehouse; drop it so no
-    // stale frozen copy lingers behind the name
-    RelOps.dropManaged(s, "graft_orders_z")
     // the z-ordered rewrite is a PURE function of sfDir → stage it once
     // per (application, sfDir), the established SharedStage discipline:
     // the first consumer pays the full clustered WRITE inside the timed
@@ -528,9 +486,9 @@ object ScaleOps {
       dd => new java.io.File(dd, "_SUCCESS").exists()) { dd =>
       ordersXY(s, d)
         // o_orderkey is dead downstream (the graded box read and
-        // LayoutSpec touch only x/y/z + the 3 payload columns) — r19:
-        // drop it from the rewrite, fewer bytes through the range
-        // exchange and the files (guide §2.3)
+        // LayoutSpec touch only x/y/z + the 3 payload columns): drop it
+        // from the rewrite, fewer bytes through the range exchange and
+        // the files (guide §2.3)
         .drop("o_orderkey")
         .withColumn("z", expr(zInterleaveSpark))
         .repartitionByRange(8, col("z"))
@@ -584,13 +542,19 @@ object ScaleOps {
     * engines); ln appears only in the linear-counting branch, whose 256
     * possible inputs all sit ≥0.005 from a rounding boundary. */
   def qAggHll(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .select(col("event_type"),
-        expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT)")
-          .as("h48"))
+    hllEstimate(events(s, d).select(col("event_type"), h48)
       .groupBy(col("event_type"))
-      .agg(expr("graft_hll(h48)").as("regs"), count(lit(1)).as("n_events"))
-      .select(col("event_type"), col("n_events"),
+      .agg(expr("graft_hll(h48)").as("regs"), count(lit(1)).as("n_events")), "n_events")
+
+  /** The 48-bit md5 prefix of user_id both engines compute byte-identically. */
+  private def h48 =
+    expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 12), 16, 10) AS BIGINT)").as("h48")
+
+  /** The estimate per event type from (event_type, `n`, regs): empty
+    * registers, rank sum, the scaled harmonic sum and the estimate,
+    * linear counting while any register is empty. */
+  private def hllEstimate(regs: DataFrame, n: String): DataFrame =
+    regs.select(col("event_type"), col(n),
         expr("size(filter(regs, r -> r = 0))").as("v_empty"),
         expr("aggregate(regs, 0, (a, x) -> a + x)").as("sum_ranks"),
         expr("aggregate(regs, 0L, (a, x) -> a + shiftleft(1L, 41 - x))")
@@ -602,13 +566,11 @@ object ScaleOps {
           |             / s_scaled + 0.5D) END AS BIGINT)""".stripMargin))
       .orderBy(col("event_type"))
 
-  val qAggHllSql: String =
-    """WITH h AS (
-      |  SELECT event_type,
-      |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)) AS BIGINT)
-      |      AS h48
-      |  FROM events),
-      |rk AS (
+  /** DuckDB's rebuild of the 256 registers per event type from a CTE
+    * h(event_type, h48): MAX rank per bucket over the full bucket grid,
+    * then the aggregates the estimate reads ([[hllEstSql]], over `a`). */
+  private def hllRegsSql: String =
+    """rk AS (
       |  SELECT event_type,
       |    CAST(h48 // 1099511627776 AS INTEGER) AS bucket,
       |    CASE WHEN h48 % 1099511627776 = 0 THEN 41
@@ -628,13 +590,24 @@ object ScaleOps {
       |    CAST(SUM(mj) AS INTEGER) AS sum_ranks,
       |    CAST(SUM(CAST(1 AS BIGINT) << CAST(41 - mj AS INTEGER)) AS BIGINT)
       |      AS s_scaled
-      |  FROM fullregs GROUP BY 1),
-      |ne AS (SELECT event_type, COUNT(*) AS n_events FROM events GROUP BY 1)
-      |SELECT a.event_type, ne.n_events, a.v_empty, a.sum_ranks, a.s_scaled,
-      |  CAST(CASE WHEN a.v_empty > 0
+      |  FROM fullregs GROUP BY 1),""".stripMargin
+
+  private def hllEstSql: String =
+    """  CAST(CASE WHEN a.v_empty > 0
       |    THEN floor(256.0 * ln(256.0 / a.v_empty) + 0.5)
       |    ELSE floor(1846528.0 / 2570790.0 * 144115188075855872.0
-      |               / a.s_scaled + 0.5) END AS BIGINT) AS est
+      |               / a.s_scaled + 0.5) END AS BIGINT) AS est""".stripMargin
+
+  val qAggHllSql: String =
+    s"""WITH h AS (
+      |  SELECT event_type,
+      |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)) AS BIGINT)
+      |      AS h48
+      |  FROM events),
+      |$hllRegsSql
+      |ne AS (SELECT event_type, COUNT(*) AS n_events FROM events GROUP BY 1)
+      |SELECT a.event_type, ne.n_events, a.v_empty, a.sum_ranks, a.s_scaled,
+      |$hllEstSql
       |FROM agg a JOIN ne ON a.event_type = ne.event_type
       |ORDER BY a.event_type""".stripMargin
 
@@ -1037,10 +1010,9 @@ object ScaleOps {
     driftFinish(driftCells(s, d), wide38 = false)
 
   /** The DECIMAL(38) regime of q_profile_drift for >3e9-row windows —
-    * identical topology, widened numerator arithmetic. Spec'd since r12
-    * (WideDecimalSpec: bit-identical to the narrow form on the fixture,
-    * exact vs BigInt past the BIGINT bound) and GRADED since r18 (the
-    * r17 verdict's item-5 decision, taken with the bench gate green). */
+    * identical topology, widened numerator arithmetic. Graded, and
+    * WideDecimalSpec pins it bit-identical to the narrow form on the
+    * fixture and exact vs BigInt past the BIGINT bound. */
   private[graft] def qProfileDriftWide(s: SparkSession, d: String): DataFrame =
     driftFinish(driftCells(s, d), wide38 = true)
 
@@ -1065,19 +1037,17 @@ object ScaleOps {
         sum(when(col("win") === 2L, col("c")).otherwise(0L)).as("e"))
   }
 
-  /** TV-numerator finish over the (event_type, bin, o, e) cell table,
-    * in either arithmetic regime. BIGINT (graded, `wide38=false`) is
-    * exact while max(o)·n2 and max(e)·n1 stay under 2⁶³ — i.e. while
-    * n1·n2 < 9.2e18, comfortably ~3e9 rows PER WINDOW per event_type —
-    * beyond that ANSI long multiplication faults rather than corrupts.
-    * The DECIMAL(38) regime (`wide38=true`, the r12-verdict open item
-    * (d)) casts each count to DECIMAL(19,0) so products carry ≤38
-    * digits exactly: exact while every count < 1e19 and the numerator
-    * sum < 1e38 — beyond any corpus (100 TB of 100-byte events is 1e12
-    * rows). Same plan shape, one extra decimal widening in the
-    * projection; WideDecimalSpec pins cross-regime equality on the
-    * fixture and exactness vs BigInt at magnitudes where the BIGINT
-    * regime overflows. */
+  /** TV-numerator finish over the (event_type, bin, o, e) cell table, in
+    * either arithmetic regime. BIGINT (graded, `wide38=false`) is exact while
+    * max(o)·n2 and max(e)·n1 stay under 2⁶³ — i.e. while n1·n2 < 9.2e18,
+    * comfortably ~3e9 rows PER WINDOW per event_type — beyond that ANSI long
+    * multiplication faults rather than corrupts. The DECIMAL(38) regime
+    * (`wide38=true`) casts each count to DECIMAL(19,0) so products carry ≤38
+    * digits exactly: exact while every count < 1e19 and the numerator sum <
+    * 1e38 — beyond any corpus (100 TB of 100-byte events is 1e12 rows). Same
+    * plan shape, one extra decimal widening in the projection;
+    * WideDecimalSpec pins cross-regime equality on the fixture and exactness
+    * vs BigInt at magnitudes where the BIGINT regime overflows. */
   private[graft] def driftFinish(wide: DataFrame, wide38: Boolean): DataFrame = {
     val totals = wide.groupBy(col("event_type"))
       .agg(sum(col("o")).as("n1"), sum(col("e")).as("n2"))
@@ -1093,7 +1063,9 @@ object ScaleOps {
       .orderBy(col("event_type"))
   }
 
-  val qProfileDriftSql: String =
+  /** The drift oracles' CTEs: per (event_type, bin) window counts o and
+    * e, and per-type window totals n1 and n2. */
+  private def driftCtesSql: String =
     """WITH binned AS (
       |  SELECT event_type,
       |    CASE WHEN date_part('day', CAST(ts AS TIMESTAMP)) <= 15
@@ -1109,7 +1081,10 @@ object ScaleOps {
       |  FROM cells GROUP BY 1, 2),
       |tot AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS n1,
       |          CAST(SUM(e) AS BIGINT) AS n2
-      |        FROM wide GROUP BY 1)
+      |        FROM wide GROUP BY 1)""".stripMargin
+
+  val qProfileDriftSql: String =
+    s"""$driftCtesSql
       |SELECT w.event_type, t.n1, t.n2,
       |  CAST(SUM(ABS(w.o * t.n2 - w.e * t.n1)) AS BIGINT) AS tv_num,
       |  CAST(SUM(ABS(w.o * t.n2 - w.e * t.n1)) AS BIGINT)
@@ -1123,22 +1098,7 @@ object ScaleOps {
     * exact), numerator narrowed back to BIGINT for the graded surface —
     * mirror of [[qProfileDriftWideGraded]]. */
   val qProfileDriftWideSql: String =
-    """WITH binned AS (
-      |  SELECT event_type,
-      |    CASE WHEN date_part('day', CAST(ts AS TIMESTAMP)) <= 15
-      |         THEN 1 ELSE 2 END AS win,
-      |    LEAST(9, CAST(FLOOR(value / 25.0) AS BIGINT)) AS bin
-      |  FROM events),
-      |cells AS (SELECT event_type, win, bin, COUNT(*) AS c
-      |          FROM binned GROUP BY 1, 2, 3),
-      |wide AS (
-      |  SELECT event_type, bin,
-      |    CAST(SUM(CASE WHEN win = 1 THEN c ELSE 0 END) AS BIGINT) AS o,
-      |    CAST(SUM(CASE WHEN win = 2 THEN c ELSE 0 END) AS BIGINT) AS e
-      |  FROM cells GROUP BY 1, 2),
-      |tot AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS n1,
-      |          CAST(SUM(e) AS BIGINT) AS n2
-      |        FROM wide GROUP BY 1)
+    s"""$driftCtesSql
       |SELECT w.event_type, t.n1, t.n2,
       |  CAST(SUM(ABS(CAST(w.o AS DECIMAL(19,0)) * CAST(t.n2 AS DECIMAL(19,0))
       |              - CAST(w.e AS DECIMAL(19,0)) * CAST(t.n1 AS DECIMAL(19,0))))

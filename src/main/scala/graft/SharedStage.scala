@@ -14,28 +14,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * oracle hash — is unchanged; only the plan's upstream subtree becomes
   * a scan.
   *
-  * Why files, not cached plans: the Verify/Bench harness unpersists all
-  * RDDs between queries, which would kill checkpoint-block memos (the
-  * lesson from the ANN index family's first memoization attempt). Why
-  * keyed by applicationId: identity hash codes of sessions can collide
-  * between a dead and a live session (r12 ADVICE) — the applicationId is
-  * unique per SparkContext and stagingDir embeds it in the path, so a
-  * new application can never read a stale entry even if the JVM is
-  * reused. The staged dir is re-validated on every hit (_SUCCESS marker)
-  * and rebuilt if an external cleaner removed it.
+  * Why files, not cached plans: the Verify/Bench harness unpersists all RDDs
+  * between queries, which would kill checkpoint-block memos. Why keyed by
+  * applicationId: identity hash codes of sessions can collide between a dead
+  * and a live session — the applicationId is unique per SparkContext and
+  * stagingDir embeds it in the path, so a new application can never read a
+  * stale entry even if the JVM is reused. The staged dir is re-validated on
+  * every hit (_SUCCESS marker) and rebuilt if an external cleaner removed it.
   *
-  * Concurrency (r13 ADVICE): builds must NOT run inside a
-  * ConcurrentHashMap mapping function — stages nest (the ANN base build
-  * itself stages the ranked truth and PQ codes), and CHM forbids a
-  * mapping function updating the same map (JDK 9+ throws "Recursive
-  * update" when the nested key lands in the outer key's bin). Instead
-  * each key gets a plain lock object from a second map whose mapping
-  * function allocates only (never re-enters a map); the build runs
-  * under that lock OUTSIDE any CHM mapping, and publishes with put().
-  * Nested stages take distinct inner locks — the stage graph is a DAG,
-  * so lock order is acyclic and deadlock-free — and concurrent rebuild
-  * of one key serializes on its lock (closing the delete+write race on
-  * the deterministic dir).
+  * Concurrency: builds must NOT run inside a ConcurrentHashMap mapping
+  * function — stages nest (the ANN base build itself stages the ranked truth
+  * and PQ codes), and CHM forbids a mapping function updating the same map
+  * (JDK 9+ throws "Recursive update" when the nested key lands in the outer
+  * key's bin). Instead each key gets a plain lock object from a second map
+  * whose mapping function allocates only (never re-enters a map); the build
+  * runs under that lock OUTSIDE any CHM mapping, and publishes with put().
+  * Nested stages take distinct inner locks — the stage graph is a DAG, so
+  * lock order is acyclic and deadlock-free — and concurrent rebuild of one
+  * key serializes on its lock (closing the delete+write race on the
+  * deterministic dir).
   *
   * At 100 TB this is exactly the build-once/serve-many split a
   * production system makes explicit: quantizer training and corpus
@@ -48,14 +45,12 @@ object SharedStage {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Object]()
 
-  /** First-consumer build ledger (r17 verdict item 3 — disclosure, not
-    * methodology): (sfDir, stage name) → (build seconds, consumer label).
-    * A stage's build cost lands inside whichever timed query happens to
-    * run first — e.g. q_timetravel pays the minilog staging, so its
-    * pass-1 reading is the stage build plus its own work. Bench reports
-    * this map (filtered to the timed sfDir) as a `staging` entry in
-    * bench.json so cross-round per-query diffs can subtract the
-    * surcharge instead of discovering phantom regressions. */
+  /** First-consumer build ledger: (sfDir, stage name) → (build seconds,
+    * consumer label). A stage's build cost lands inside whichever timed
+    * query happens to run first — e.g. q_timetravel pays the minilog
+    * staging, so its pass-1 reading is the stage build plus its own work.
+    * Bench records this map (filtered to the timed sfDir) as `staging` in
+    * bench.json, so per-query diffs can subtract the surcharge. */
   private[graft] val buildLog =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (Double, String)]()
 
@@ -63,13 +58,12 @@ object SharedStage {
     * build can name the query it landed in; empty outside the harness. */
   @volatile private[graft] var consumerLabel: String = ""
 
-  /** Collision-free directory tag for an arbitrary path (r13 ADVICE:
-    * `hashCode` tags let two distinct sfDirs silently share — and
-    * clobber — one staging dir): lowercase hex of the UTF-8 bytes for
-    * short paths (human-readable, trivially injective), SHA-256 hex
-    * once raw hex would push the directory NAME past filesystem
-    * component limits (~255 bytes) — fixed 64 chars, collision-free for
-    * every practical purpose. */
+  /** Collision-free directory tag for an arbitrary path (a `hashCode` tag
+    * would let two distinct sfDirs silently share — and clobber — one staging
+    * dir): lowercase hex of the UTF-8 bytes for short paths (human-readable,
+    * trivially injective), SHA-256 hex once raw hex would push the directory
+    * NAME past filesystem component limits (~255 bytes) — fixed 64 chars,
+    * collision-free for every practical purpose. */
   private[graft] def pathTag(p: String): String = {
     val bytes = p.getBytes("UTF-8")
     if (bytes.length <= 60) bytes.map(b => f"$b%02x").mkString
@@ -78,8 +72,8 @@ object SharedStage {
   }
 
   /** The deterministic staged-dir path for (application, sfDir, name) —
-    * computable WITHOUT building. The single naming authority (r17
-    * ADVICE): memoDir stages here, and any code that needs the path
+    * computable WITHOUT building. The single naming authority: memoDir
+    * stages here, and any code that needs the path
     * independently (ScaleOps.zorderPath, IndexCloneIsolationSpec) calls
     * this instead of re-deriving the string. */
   private[graft] def stagedPath(s: SparkSession, sfDir: String,

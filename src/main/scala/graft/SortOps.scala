@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   * itself is the scalable form: sampling + range exchange + external
   * per-partition sort, no single-node merge anywhere.
   */
-object SortOps {
+object SortOps extends QueryModule {
   import Tables._
 
   /** Mersenne prime 2^31 - 1: modulus for the portable key LCGs. */

@@ -3,7 +3,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -24,16 +24,16 @@ import org.apache.spark.sql.types._
   * ([[eventStream]], or a staged directory through [[reader]]), and one
   * bounded [[run]] under one conf scope ([[drain]] for memory sinks).
   */
-object StreamOps {
+object StreamOps extends QueryModule {
   import Tables._
 
-  /** Parquet schema of a source path, memoized per (application, path):
-    * every readStream needs an explicit schema, and each batch-side
-    * `s.read.parquet(...).schema` pays a listing + footer read — pure
-    * fixed overhead when eight live queries resolve the SAME immutable
-    * file (r15 verdict item 2, measured in SCALE.md). Keyed by
-    * applicationId like SharedStage so a new application never sees a
-    * stale schema even if the JVM is reused. */
+  /** Parquet schema of a source path, memoized per (application, path): every
+    * readStream needs an explicit schema, and each batch-side
+    * `s.read.parquet(...).schema` pays a listing + footer read — pure fixed
+    * overhead when eight live queries resolve the SAME immutable file
+    * (SCALE.md "structural live-streaming floor work"). Keyed by
+    * applicationId like SharedStage so a new application never sees a stale
+    * schema even if the JVM is reused. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
   private def cachedSchema(s: SparkSession, path: String): StructType =
@@ -162,22 +162,26 @@ object StreamOps {
     * stream-stream join: four per partition), and the count is frozen
     * into the query at start — at the batch session's partition count
     * that is fixed overhead against these single-micro-batch state
-    * volumes, and 2 or 1 measured flat to worse (SCALE.md, r14 ladder).
+    * volumes, and 2 or 1 measured flat to worse (SCALE.md "Streaming
+    * surface", the state-store-count ladder).
     * Production sizing is the same decision: state-store parallelism
     * follows state volume, not the batch session's scan parallelism.
     *
-    * Trailing no-data micro-batches off: they exist to advance the
-    * watermark and flush/evict state when no new data will do it. The
-    * bounded AvailableNow queries whose OUTPUT doesn't depend on that
-    * flush (complete-mode aggs re-emit full state each batch;
-    * update-mode stateful ops with TimeMode.None have no timers; inner
-    * stream-stream joins emit on match, not on eviction) turn them off —
-    * one full IncrementalExecution + state-commit round per query for
-    * nothing (3-rep TimeQ: −0.8 s across the eight eligible queries,
-    * q_stream_join −0.4 alone). The two queries whose SEMANTICS need the
-    * trailing flush — q_stream_sink and q_stream_join_outer, whose
-    * sentinel design exists exactly to drive it — run [[flushing]]. */
-  private val flushing = Seq("spark.sql.shuffle.partitions" -> "4")
+    * Trailing no-data micro-batches off: they exist to advance the watermark
+    * and flush/evict state when no new data will do it. The bounded
+    * AvailableNow queries whose OUTPUT doesn't depend on that flush
+    * (complete-mode aggs re-emit full state each batch; update-mode stateful
+    * ops with TimeMode.None have no timers; inner stream-stream joins emit on
+    * match, not on eviction) turn them off — one full IncrementalExecution +
+    * state-commit round per query for nothing (SCALE.md "streaming floor
+    * work"). The two queries whose SEMANTICS need the trailing flush —
+    * q_stream_sink and q_stream_join_outer, whose sentinel design exists
+    * exactly to drive it — run [[flushing]].
+    *
+    * AQE off: Spark turns it off for every streaming query anyway, and
+    * says so in a warning per run when the session has it on. */
+  private val flushing = Seq("spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.enabled" -> "false")
   private val bounded =
     flushing :+ ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
   /** transformWithState runs only on the RocksDB state store provider. */
@@ -193,19 +197,27 @@ object StreamOps {
     * read. Glob form: the file source requires a directory basePath, and
     * the driver's tables are single parquet files — the [e] glob matches
     * only the events file while the basePath resolves to the sf dir. */
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def eventStream(s: SparkSession, d: String): DataFrame =
     Tables.normalizeTs(reader(s, s"$d/events.parquet").parquet(s"$d/[e]vents.parquet"))
-  }
 
   /** One bounded run: start `w` with Trigger.AvailableNow under `confs`,
     * process every available input, stop. */
   private def run(s: SparkSession, w: DataStreamWriter[Row],
-      confs: Seq[(String, String)] = bounded): Unit =
+      confs: Seq[(String, String)]): Unit =
     GraftSession.withConfs(s, confs: _*) {
       val q = w.trigger(Trigger.AvailableNow()).start()
       try q.processAllAvailable() finally q.stop()
     }
+
+  /** [[run]] on a checkpoint of its own, `name`'s staging dir: emptied
+    * before the start and removed after the stop, the lifetime Spark gives
+    * the temporary checkpoint it would otherwise create. */
+  private def runFresh(s: SparkSession, w: DataStreamWriter[Row], name: String,
+      confs: Seq[(String, String)]): Unit = {
+    val ckpt = RelOps.stagingDir(s, s"ckpt_$name")
+    RelOps.deleteRecursively(ckpt)
+    try run(s, w.option("checkpointLocation", ckpt), confs) finally RelOps.deleteRecursively(ckpt)
+  }
 
   /** Drain `df` into the memory sink `sink` and return the sink's table.
     * Fixed per-query sink names: the memory sink registers the result via
@@ -214,8 +226,8 @@ object StreamOps {
     * the session lifetime (bench loops run these repeatedly). */
   private def drain(df: DataFrame, sink: String, mode: String,
       confs: Seq[(String, String)] = bounded): DataFrame = {
-    run(df.sparkSession,
-      df.writeStream.format("memory").queryName(sink).outputMode(mode), confs)
+    runFresh(df.sparkSession,
+      df.writeStream.format("memory").queryName(sink).outputMode(mode), sink, confs)
     df.sparkSession.table(sink)
   }
 
@@ -373,33 +385,6 @@ object StreamOps {
       _.transformWithState(new TokenStatsProcessor, TimeMode.None(), OutputMode.Update()))
   }
 
-  /** STREAMING FILE SINK — the missing half of the streaming story until
-    * now (every live query above drains into a memory sink): the tumbling
-    * aggregation written through `writeStream.format("parquet")` with a
-    * checkpoint, then read back from the committed files. This is the
-    * exactly-once contract a production pipeline actually relies on: the
-    * file sink records committed batches in the _spark_metadata log, a
-    * RESTART on the same checkpoint re-commits nothing (exercised inside
-    * the query: the stream is started twice, the second start finds no
-    * new files and adds no output — SinkSemanticsSpec asserts raw bytes
-    * equal metadata-resolved rows), and readers resolve the directory
-    * through the metadata log so half-written files are invisible.
-    *
-    * Append mode (the only file-sink mode) emits a window only after the
-    * watermark passes its end, and the watermark used by batch N comes
-    * from batch N−1's data — so a data-only bounded source would emit
-    * NOTHING. The stage therefore stages the events together with a
-    * far-future `__wm__` sentinel row: the single data batch processes
-    * everything and advances the watermark past every real window, and
-    * the engine's trailing no-data micro-batch
-    * (noDataMicroBatches.enabled, default on) flushes them all — one
-    * sequential micro-batch total, down from r11's staged
-    * data-then-sentinel pair (measured identical output at all three
-    * SFs). The sentinel's own window (2100-01-01+1h) sits above the
-    * final watermark and never flushes; the read-back filter drops it if
-    * a trailing batch ever does. This is exactly how a bounded backfill
-    * run of an unbounded pipeline terminates cleanly at 100 TB: a
-    * watermark heartbeat past the horizon, not a mode switch. */
   /** The staged source (events + far-future watermark sentinel) is a
     * pure function of sfDir, so it stages ONCE per (application, sfDir)
     * via SharedStage — the same build-once discipline as the trained
@@ -430,13 +415,13 @@ object StreamOps {
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode("append"), flushing)
 
-  /** The exactly-once RESTART half of the file-sink contract: start the
-    * same stream on the sink's existing out/ckpt — the commit log must
-    * re-emit nothing. Driven by SinkSemanticsSpec (always-run) rather
-    * than inside the timed query since r16: the restart is a
-    * correctness CONTRACT, not a second operator, and pricing a full
-    * extra StreamExecution per bench pass measured ~0.5 s of pure
-    * fixed overhead (SCALE.md r16). Call only after qStreamSink. */
+  /** The exactly-once RESTART half of the file-sink contract: start the same
+    * stream on the sink's existing out/ckpt — the commit log must re-emit
+    * nothing. Driven by SinkSemanticsSpec (always-run) rather than inside the
+    * timed query: the restart is a correctness CONTRACT, not a second
+    * operator, and a full extra StreamExecution per bench pass is pure fixed
+    * overhead (SCALE.md "structural live-streaming floor work"). Call only
+    * after qStreamSink. */
   private[graft] def streamSinkRestart(s: SparkSession, d: String): Unit = {
     val out = RelOps.stagingDir(s, "stream_sink_out")
     val ckpt = RelOps.stagingDir(s, "stream_sink_ckpt")
@@ -453,6 +438,28 @@ object StreamOps {
     streamSinkRun(s, streamSinkSrc(s, d), out, ckpt)
   }
 
+  /** STREAMING FILE SINK (every live query above drains into a memory sink):
+    * the tumbling aggregation written through `writeStream.format("parquet")`
+    * with a checkpoint, then read back from the committed files. This is the
+    * exactly-once contract a production pipeline actually relies on: the file
+    * sink records committed batches in the _spark_metadata log, a RESTART on
+    * the same checkpoint re-commits nothing ([[streamSinkRestart]], which
+    * SinkSemanticsSpec drives and checks raw bytes against metadata-resolved
+    * rows), and readers resolve the directory through the metadata log so
+    * half-written files are invisible.
+    *
+    * Append mode (the only file-sink mode) emits a window only after the
+    * watermark passes its end, and the watermark used by batch N comes from
+    * batch N−1's data — so a data-only bounded source would emit NOTHING. The
+    * stage therefore stages the events together with a far-future `__wm__`
+    * sentinel row: the single data batch processes everything and advances
+    * the watermark past every real window, and the engine's trailing no-data
+    * micro-batch (noDataMicroBatches.enabled, default on) flushes them all —
+    * one sequential micro-batch total. The sentinel's own window
+    * (2100-01-01+1h) sits above the final watermark and never flushes; the
+    * read-back filter drops it if a trailing batch ever does. This is exactly
+    * how a bounded backfill run of an unbounded pipeline terminates cleanly
+    * at 100 TB: a watermark heartbeat past the horizon, not a mode switch. */
   def qStreamSink(s: SparkSession, d: String): DataFrame = {
     val src = streamSinkSrc(s, d)
     val out = RelOps.stagingDir(s, "stream_sink_out")
@@ -571,29 +578,26 @@ object StreamOps {
 
   // ------------------------------------- outer stream-stream join
 
-  /** LEFT-OUTER STREAM-STREAM JOIN — q_stream_join's attribution funnel
-    * with the rows production actually wants MOST: the clicks that did
-    * NOT convert. Inner stream-stream joins emit on match; outer joins
-    * additionally emit the null-padded left row when the WATERMARK
-    * proves no match can still arrive (click_ts + 30 min join bound +
-    * 2 h watermark delay) — the state-eviction semantics that make the
-    * result exactly the batch LEFT JOIN, not a guess. A bounded run
-    * needs the watermark pushed past every real event or the unmatched
-    * rows stay in state forever, so the stage stages far-future click
-    * and purchase sentinel rows TOGETHER with the data: the single data
-    * batch matches every real pair and advances BOTH sides' watermarks
-    * past every data row's bound, and the engine's trailing no-data
-    * micro-batch (spark.sql.streaming.noDataMicroBatches.enabled,
-    * default on) evicts and emits every unmatched real click — one
-    * sequential micro-batch total, down from r11's three staged batches
-    * (measured identical output at all three SFs; matches are found
-    * before eviction within a batch, so no click is null-padded while
-    * its purchase sits in the same batch). Sentinels carry user_id = -1
-    * and are dropped on read-back; their own bounds sit past the final
-    * watermark and never flush. At 100 TB this is the bounded-backfill
-    * termination story again: a watermark heartbeat, not a mode switch.
-    * State stays bounded by the 30-min join range + watermark on BOTH
-    * sides. */
+  /** LEFT-OUTER STREAM-STREAM JOIN — q_stream_join's attribution funnel with
+    * the rows production actually wants MOST: the clicks that did NOT
+    * convert. Inner stream-stream joins emit on match; outer joins
+    * additionally emit the null-padded left row when the WATERMARK proves no
+    * match can still arrive (click_ts + 30 min join bound + 2 h watermark
+    * delay) — the state-eviction semantics that make the result exactly the
+    * batch LEFT JOIN, not a guess. A bounded run needs the watermark pushed
+    * past every real event or the unmatched rows stay in state forever, so
+    * the stage stages far-future click and purchase sentinel rows TOGETHER
+    * with the data: the single data batch matches every real pair and
+    * advances BOTH sides' watermarks past every data row's bound, and the
+    * engine's trailing no-data micro-batch
+    * (spark.sql.streaming.noDataMicroBatches.enabled, default on) evicts and
+    * emits every unmatched real click — one sequential micro-batch total
+    * (matches are found before eviction within a batch, so no click is
+    * null-padded while its purchase sits in the same batch). Sentinels carry
+    * user_id = -1 and are dropped on read-back; their own bounds sit past the
+    * final watermark and never flush. At 100 TB this is the bounded-backfill
+    * termination story again: a watermark heartbeat, not a mode switch. State
+    * stays bounded by the 30-min join range + watermark on BOTH sides. */
   def qStreamJoinOuter(s: SparkSession, d: String): DataFrame = {
     // staged source (events + both sentinels) is a pure function of
     // sfDir → stage once per (application, sfDir); the memory sink
@@ -631,25 +635,6 @@ object StreamOps {
       |WHERE c.event_type = 'click'
       |ORDER BY c.user_id, click_id, purchase_id""".stripMargin
 
-  /** STREAMING CDC INTO THE TABLE FORMAT — the lakehouse ingestion
-    * pattern that ties the streaming surface to the mini-log:
-    * `foreachBatch` merges each micro-batch's per-user (count, exact
-    * decimal sum) deltas into the bucketed mini-log table as a
-    * copy-on-write UPSERT (read ONLY the affected buckets, combine,
-    * rewrite those files, commit version N+1 sharing every untouched
-    * file), and the graded read is the FINAL SNAPSHOT — which must equal
-    * the plain batch aggregate because counts and decimal sums are
-    * associative across arbitrary micro-batch slicings. Two staged
-    * source files + maxFilesPerTrigger=1 force a real merge commit on
-    * top of the initial load (two versions — the minimum that exercises
-    * the read-combine-rewrite path; more batches repeat it).
-    * The affected-bucket list is a ≤8-row driver collect
-    * (metadata-scale, same justification as the index-maintenance
-    * queries); sums are pinned to DECIMAL(18,4) after every combine so
-    * all snapshot files share one schema across versions. At 100 TB this
-    * is exactly how a streaming pipeline lands in Delta/Iceberg:
-    * per-batch MERGE keyed by bucket, cost ∝ affected partitions, exact
-    * re-aggregation regardless of arrival slicing. */
   /** One micro-batch's copy-on-write merge into the mini-log table,
     * IDEMPOTENT BY batchId: Spark re-invokes foreachBatch with the SAME
     * batchId after a failure-retry, and a blind re-commit would either
@@ -686,19 +671,18 @@ object StreamOps {
         val parent = MiniLog.manifest(table, ver)
         val affected = delta.select(col("bucket")).distinct()
           .collect().map(_.getLong(0)).toSet // ≤8 buckets, metadata-scale
-        // ONE multi-path read of every affected bucket file (r16 verdict
-        // item: a per-bucket read.parquet + unionByName chain planned one
-        // job per bucket per micro-batch — real at 100 TB micro-batch
-        // rates). The bucket key is re-derived from each row's source
-        // file path: writeBucketFiles lays files out under bucket=<b>/,
+        // ONE multi-path read of every affected bucket file (a per-bucket
+        // read.parquet + unionByName chain would plan one job per bucket
+        // per micro-batch). The bucket key is re-derived from each row's
+        // source file path: writeBucketFiles lays files out under bucket=<b>/,
         // so the partition value rides in _metadata.file_path even though
         // the files themselves are read as bare paths.
         val affectedFiles = affected.toSeq.sorted.flatMap(parent.get)
         val current =
           if (affectedFiles.isEmpty) None
           else Some(s.read.parquet(affectedFiles: _*)
-            // anchored to the file's PARENT directory segment (r17
-            // ADVICE): an unanchored 'bucket=\d+' would match the first
+            // anchored to the file's PARENT directory segment: an
+            // unanchored 'bucket=\d+' would match the first
             // occurrence anywhere in the path, silently mis-keying rows
             // if a staging/table path component upstream of the
             // partition dir ever contained that substring
@@ -725,6 +709,23 @@ object StreamOps {
     }
   }
 
+  /** STREAMING CDC INTO THE TABLE FORMAT — the lakehouse ingestion pattern
+    * that ties the streaming surface to the mini-log: `foreachBatch` merges
+    * each micro-batch's per-user (count, exact decimal sum) deltas into the
+    * bucketed mini-log table as a copy-on-write UPSERT (read ONLY the
+    * affected buckets, combine, rewrite those files, commit version N+1
+    * sharing every untouched file), and the graded read is the FINAL SNAPSHOT
+    * — which must equal the plain batch aggregate because counts and decimal
+    * sums are associative across arbitrary micro-batch slicings. Two staged
+    * source files + maxFilesPerTrigger=1 force a real merge commit on top of
+    * the initial load (two versions — the minimum that exercises the
+    * read-combine-rewrite path; more batches repeat it). The affected-bucket
+    * list is a ≤8-row driver collect (metadata-scale, same justification as
+    * the index-maintenance queries); sums are pinned to DECIMAL(18,4) after
+    * every combine so all snapshot files share one schema across versions. At
+    * 100 TB this is exactly how a streaming pipeline lands in Delta/Iceberg:
+    * per-batch MERGE keyed by bucket, cost ∝ affected partitions, exact
+    * re-aggregation regardless of arrival slicing. */
   def qStreamMinilog(s: SparkSession, d: String): DataFrame = {
     import graft.sources.MiniLog
     // the 2-file staged source is a pure function of sfDir → stage once
@@ -745,9 +746,9 @@ object StreamOps {
         col("s").cast(DecimalType(18, 4)).as("sum_value"),
         pmod(col("user_id"), lit(8L)).as("bucket"))
     val stream = reader(s, src).option("maxFilesPerTrigger", "1").parquet(src)
-    run(s, stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    runFresh(s, stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       minilogMergeBatch(s, table, aggOf(batch), batchId)
-    })
+    }, "stream_minilog", bounded)
     // an empty events table commits a snapshot with no file: it reads as
     // an empty frame of the merged deltas' schema
     MiniLog.readAsOf(s, table, MiniLog.latestVersion(table), aggOf(stream).schema)
@@ -763,42 +764,14 @@ object StreamOps {
 
   // ------------------------------------------------------------- registry
 
-  /** The per-user CEP processor behind q_stream_pattern, PARAMETERIZED
-    * since round 15: one compiled [[PatternMachine]] per graded
-    * pattern, with per-pattern (progress, count, firstTsu) state in a
-    * named MapState keyed by pattern index — O(#patterns) state per
-    * user at any stream length, never a buffered event HISTORY, which
-    * is the property that lets this run unbounded where the batch
-    * query re-windows the whole corpus. Since r16 the pattern list
-    * includes the windowed machine (vp_w30): the extra long of state
-    * is the in-flight partial's first event time, the whole cost of
-    * the within-window constraint.
-    *
-    * PER-BATCH ORDERING (the r15 verdict's buffer item): within one
-    * micro-batch the key's rows are materialized and re-ordered by
-    * (event time, event_id) — the batch window's exact total order.
-    * This buffer is DELIBERATE, not removable by sorting the staged
-    * slice files: rows reach this processor through a shuffle on
-    * user_id, and Spark's shuffle read order is NOT a contract — a
-    * reducer interleaves map-output blocks in fetch-arrival order,
-    * and speculative or re-run map tasks can change it run to run.
-    * Even a perfectly sorted single-file slice therefore guarantees
-    * nothing once more than one input split/mapper exists, and the
-    * stateful operator itself adds no sort (unlike session_window,
-    * transformWithState imposes no child ordering).
-    * PatternMachineSpec's "order-invariance" property pins exactly
-    * the guarantee the buffer buys: the emitted state is invariant
-    * under ANY permutation of a batch's rows. The buffer is bounded
-    * by one key's rows in one micro-batch (one time-slice here); at
-    * 100 TB a hot key in a huge batch would move this to ListState
-    * spill or an event-time-ordered source contract (Kafka per-key
-    * order + one slice per trigger keeps the same bound in
-    * production). Across batches the time-sliced source delivers
-    * oldest-first, so cross-batch order needs no buffer at all. */
-  /** The per-batch ordering step [[PatternProcessor]] executes: sort a
-    * key's batch rows (user_id, tsu, event_id, t) into the batch
-    * engine's (tsu, event_id) total order — ONCE per batch, shared by
-    * every machine's fold. */
+  /** The per-batch ordering step [[PatternProcessor]] executes: sort a key's
+    * batch rows (user_id, tsu, event_id, t) into the batch engine's (tsu,
+    * event_id) total order — ONCE per batch, shared by every machine's fold.
+    * The buffer cannot be replaced by sorting the staged slices: rows arrive
+    * through a shuffle on user_id, whose read order is no contract, and
+    * transformWithState imposes no child ordering. It holds one key's rows of
+    * one micro-batch (one time slice); across batches the slices arrive
+    * oldest-first (SCALE.md "CEP hot-key buffer, measured"). */
   private[graft] def cepOrder(
       rows: Seq[(Long, Long, Long, String)]): Seq[(String, Long)] =
     rows.sortBy(r => (r._2, r._3)).map(r => (r._4, r._2))
@@ -813,6 +786,12 @@ object StreamOps {
       rows: Seq[(Long, Long, Long, String)]): (Long, Long, Long) =
     c.runT(st0, cepOrder(rows))
 
+  /** The per-user CEP processor behind q_stream_pattern: one compiled
+    * [[PatternMachine]] per graded pattern, with per-pattern (progress,
+    * count, firstTsu) state in a MapState keyed by pattern index —
+    * O(#patterns) state per user at any stream length, never a buffered
+    * event HISTORY. For the windowed machine (vp_w30) the extra long is
+    * the in-flight partial's first event time. */
   private class PatternProcessor(patterns: Seq[(String, PatternMachine.Compiled)])
     extends org.apache.spark.sql.streaming.StatefulProcessor[
       Long, (Long, Long, Long, String), (Long, Int, Long)] {
@@ -830,8 +809,7 @@ object StreamOps {
         timers: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[(Long, Int, Long)] = {
       // ONE sort per batch (cepOrder), shared by all machines' folds —
-      // per-machine cepBatchFold would re-sort identical rows #patterns
-      // times (r16 self-review finding)
+      // per-machine cepBatchFold would re-sort identical rows #patterns times
       val ordered = cepOrder(rows.toSeq)
       // eager: state updates must happen inside this call, not while
       // the engine later drains the returned iterator
@@ -844,9 +822,8 @@ object StreamOps {
     }
   }
 
-  /** STREAMING CEP — the round-12 verdict's one streaming asymmetry
-    * closed: q_window_pattern's segment semantics running LIVE under
-    * `transformWithState` on RocksDB, graded against the SAME DuckDB
+  /** STREAMING CEP — q_window_pattern's segment semantics running LIVE
+    * under `transformWithState` on RocksDB, graded against the SAME DuckDB
     * oracle as the batch form, so the hash match IS the proof that the
     * incremental state machine converges to the windowed batch truth.
     * The events are staged into two event-time slices (one file per

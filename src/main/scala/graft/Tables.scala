@@ -19,15 +19,17 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
-  /** The driver has shipped events.ts under two parquet encodings:
-    * TIMESTAMP(NANOS) (which Spark 4 refuses to read as a timestamp — read
-    * as long via legacy nanosAsLong, ÷1000 → micros, same truncation DuckDB
-    * applies casting TIMESTAMP_NS to TIMESTAMP) and TIMESTAMP(MICROS)
-    * isAdjustedToUTC=false (TIMESTAMP_NTZ in Spark). Normalize either to a
-    * microsecond TimestampType so every downstream query sees one type;
-    * under the UTC session timezone all entrypoints set, the NTZ→TS cast is
-    * identity on the underlying micros, exactly matching DuckDB's naive
-    * reading of the same file. */
+  /** events.ts comes in two parquet encodings; normalize either to a
+    * microsecond TimestampType so every downstream query sees one type.
+    * TIMESTAMP(NANOS), which Spark 4 refuses to read as a timestamp, reads
+    * as its raw long because [[GraftSession]] sets
+    * `spark.sql.legacy.parquet.nanosAsLong` when it builds the session;
+    * ÷1000 → micros, the truncation DuckDB applies casting TIMESTAMP_NS to
+    * TIMESTAMP. TIMESTAMP(MICROS) isAdjustedToUTC=false reads as
+    * TIMESTAMP_NTZ, and under the UTC session timezone the NTZ→TS cast is
+    * identity on the micros, exactly DuckDB's naive reading of the file.
+    * A session built elsewhere (perfbench's) must set the key itself to
+    * read a nanos file; the benchmark's fixtures store microseconds. */
   def normalizeTs(df: DataFrame, colName: String = "ts"): DataFrame =
     df.schema(colName).dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -44,10 +46,7 @@ object Tables {
       case _ => df
     }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(table(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(table(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * global window, embarrassingly parallel at any scale) → per-doc
   * aggregates.
   */
-object TextOps {
+object TextOps extends QueryModule {
   import Tables._
 
   private val P = 2147483647L
@@ -26,8 +26,8 @@ object TextOps {
       posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
 
   /** Token stream + tid = 31-bit md5 content hash of the token, computed
-    * row-locally (the scale path that replaced the dense_rank vocabulary
-    * window; bit-identical in DuckDB via textHashSql). */
+    * row-locally, with no vocabulary window (bit-identical in DuckDB via
+    * textHashSql). */
   private def tokensWithId(s: SparkSession, d: String): DataFrame =
     toks(s, d).withColumn("tid", expr(LlmOps.textHash("tok")))
 
@@ -151,15 +151,13 @@ object TextOps {
 
   // ----------------------------------------------------- doc fingerprinting
 
-  /** Content fingerprint per document: sum of distinct 3-token shingle
-    * values mod 2^31-1 (rolling-hash-family: order-sensitive through the
-    * shingles, repetition-insensitive through DISTINCT). Each shingle value
-    * is itself reduced mod 2^31-1 so the per-doc distinct sum stays far
-    * from Long overflow at any document length. Fully ROW-LOCAL: token
-    * hashes, shingle values, distinct, and the modular sum are all array
-    * expressions inside one projection — zero shuffles before the final
-    * ORDER BY (the r4 form shuffled every token through a per-doc window
-    * plus a grouped sum-distinct). */
+  /** Content fingerprint per document: sum of distinct 3-token shingle values
+    * mod 2^31-1 (rolling-hash-family: order-sensitive through the shingles,
+    * repetition-insensitive through DISTINCT). Each shingle value is itself
+    * reduced mod 2^31-1 so the per-doc distinct sum stays far from Long
+    * overflow at any document length. Fully ROW-LOCAL: token hashes, shingle
+    * values, distinct, and the modular sum are all array expressions inside
+    * one projection — zero shuffles before the final ORDER BY. */
   def qTextFingerprint(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .select(col("doc_id"),
@@ -233,8 +231,7 @@ object TextOps {
     // (4,096 buckets) saturates with random collisions once the corpus
     // outgrows 2^12 docs AND caps the groupBy at 4,096 reducer keys — a
     // skew wall at scale. 2^24 buckets keeps Hamming-0 collisions
-    // meaningful and the shuffle key space wide (same rationale that
-    // widened the pairs query in r4).
+    // meaningful and the shuffle key space wide (as in the pairs query).
     simhashSigs(s, d, 24)
       .groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("rep_doc_id"), count(lit(1)).as("n_docs"))
@@ -818,18 +815,16 @@ object TextOps {
     *    instance is shared or newly created), so accepted counts stay
     *    exact through the batch.
     *  - FREQUENCY GAP beats cross-interference: a merge of p = (x,y)
-    *    can only create pairs (z,·xy), each instance a "z x y" trigram
-    *    before the merge, so count ≤ tripleCnt(z,x,y) ≤ the pair's max
-    *    trigram extension — and (xy·,w) symmetrically — plus
-    *    merged-merged adjacencies (x_jy_j, x_ky_k) whose every instance
-    *    overlies a (y_j, x_k) adjacency, bounded by that pair's EXACT
-    *    count in the same table. Requiring cnt(candidate) STRICTLY
-    *    above every earlier accepted pair's max trigram extension and
-    *    above every (y_j, x_k) count among accepted pairs guarantees no
-    *    created pair can outrank it, even on ties. (Trigram bounds
-    *    replaced the earlier pair-level maxima — maxInto/maxOutOf
-    *    collapse to the global top count for common symbols and capped
-    *    batches at 1.62 merges/round; specific trigrams are far rarer.)
+    * can only create pairs (z,·xy), each instance a "z x y" trigram before
+    * the merge, so count ≤ tripleCnt(z,x,y) ≤ the pair's max trigram
+    * extension — and (xy·,w) symmetrically — plus merged-merged adjacencies
+    * (x_jy_j, x_ky_k) whose every instance overlies a (y_j, x_k) adjacency,
+    * bounded by that pair's EXACT count in the same table. Requiring
+    * cnt(candidate) STRICTLY above every earlier accepted pair's max trigram
+    * extension and above every (y_j, x_k) count among accepted pairs
+    * guarantees no created pair can outrank it, even on ties. (Pair-level
+    * maxima would collapse to the global top count for common symbols and cap
+    * the batches; specific trigrams are far rarer.)
     *  - PREFIX discipline: the first candidate that fails ends the
     *    batch (skipping it would let it win the next sequential round).
     *    A first candidate with x = y is taken as a singleton batch (its
@@ -1219,19 +1214,18 @@ object TextOps {
   def qTextBpeBatched(s: SparkSession, d: String): DataFrame =
     bpeTrainedBatched(s, d)._1.orderBy(col("merge_rank"))
 
-  /** BPE APPLY — tokenize the corpus with the TRAINED vocabulary (the
-    * step every downstream consumer of a tokenizer runs; until now the
-    * engine trained merges but never applied them). Production shape:
-    * the tokenizer is applied to the VOCABULARY (the final symbol table
-    * is vocab-sized), and the corpus pass is a dictionary lookup — docs
-    * explode to words and join the broadcast per-word segmentation, so
-    * the 100 TB corpus never re-runs the merge rules, it streams through
-    * one broadcast-hash join. Reported per lang as exact integers:
-    * whitespace words, pre-merge tokens (= characters, the round-0
-    * symbols), and post-merge BPE tokens. Consumes the BATCHED trainer's
-    * final symbol table: the oracle below replays the SEQUENTIAL
-    * chain, so this query's hash match grades batched ≡ sequential on
-    * the whole final segmentation, not just the merge rows. */
+  /** BPE APPLY — tokenize the corpus with the TRAINED vocabulary (the step
+    * every downstream consumer of a tokenizer runs). Production shape: the
+    * tokenizer is applied to the VOCABULARY (the final symbol table is
+    * vocab-sized), and the corpus pass is a dictionary lookup — docs explode
+    * to words and join the broadcast per-word segmentation, so the 100 TB
+    * corpus never re-runs the merge rules, it streams through one
+    * broadcast-hash join. Reported per lang as exact integers: whitespace
+    * words, pre-merge tokens (= characters, the symbols before any merge),
+    * and post-merge BPE tokens. Consumes the BATCHED trainer's final symbol
+    * table: the oracle below replays the SEQUENTIAL chain, so this query's
+    * hash match grades batched ≡ sequential on the whole final segmentation,
+    * not just the merge rows. */
   def qTextBpeApply(s: SparkSession, d: String): DataFrame = {
     val finalSt = bpeTrainedBatched(s, d)._2
     val vocab = finalSt.select(col("word"),

@@ -6,13 +6,12 @@ package graft.functions
   * every generated DuckDB oracle — so all four stay arithmetically
   * identical by construction.
   *
-  * k = 16 permutations in 4 LSH bands of 4 rows: the r4 demo width
-  * (4 perms, 2×2 bands) had a ~0.71 Jaccard threshold but only 2-value
-  * band keys — collision noise grows with corpus size. 4-value keys keep
-  * the same s-curve midpoint ((1/4)^(1/4) ≈ 0.71) while making random
-  * band collisions vanishingly rare at any scale; production systems use
-  * 64–128 perms, which is this same machinery with a longer constant
-  * list.
+  * k = 16 permutations in 4 LSH bands of 4 rows: a 4-permutation demo width
+  * (2×2 bands) has a ~0.71 Jaccard threshold but only 2-value band keys —
+  * collision noise grows with corpus size. 4-value keys keep the same s-curve
+  * midpoint ((1/4)^(1/4) ≈ 0.71) while making random band collisions
+  * vanishingly rare at any scale; production systems use 64–128 perms, which
+  * is this same machinery with a longer constant list.
   *
   * Every permutation is h_j(v) = (A(j)·v + B(j)) mod P with P = 2^31−1
   * and A(j) < 2^31, so A·v + B < 2^62 never overflows a 64-bit signed

@@ -340,16 +340,15 @@ case class PqEncode(left: Expression, right: Expression, m: Int)
   * ((j·n + i)·48271 + 7) mod 97 mod 2 (n = vector length) — the SAME
   * family AnnOps inlines as array literals into the DuckDB oracle.
   *
-  * Why custom: the expression form is `bits` separate
-  * `graft_dot(emb, array(<n literals>))` calls wrapped in a when-chain —
-  * ~24 × 64 literal array constructions whose generated source dominated
-  * the embed/LSH queries' one-shot janino compile cost (the r6 bench's
-  * single biggest line item). This is one fused loop, and it is
+  * Why custom: the expression form is `bits` separate `graft_dot(emb,
+  * array(<n literals>))` calls wrapped in a when-chain — ~24 × 64 literal
+  * array constructions whose generated source dominated the embed/LSH
+  * queries' one-shot janino compile cost. This is one fused loop, and it is
   * bit-identical: x·(+1.0) = x and x·(−1.0) = −x exactly, and the
-  * accumulation order (i ascending per plane) matches graft_dot. NaN dots
-  * set no bit (NaN >= 0 is false), matching the when-predicate. Null
-  * elements are skipped like graft_dot; a null vector returns null
-  * (the when-chain form yielded 0 — the graded tables carry no nulls). */
+  * accumulation order (i ascending per plane) matches graft_dot. NaN dots set
+  * no bit (NaN >= 0 is false), matching the when-predicate. Null elements are
+  * skipped like graft_dot; a null vector returns null (the when-chain form
+  * yielded 0 — the graded tables carry no nulls). */
 case class LshSignature(child: Expression, bits: Int)
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
   *    carried over from the parent snapshot are referenced by path —
   *    structural sharing, never copied. Copy-on-write merges rewrite
   *    only the buckets their keys touch (the q_merge_* machinery's
-  *    partition-confined discipline, now with versioned metadata).
+  *    partition-confined discipline, with versioned metadata).
   *  - A READ resolves a manifest (latest or as-of-version) and scans
   *    exactly its file list — historical snapshots stay readable after
   *    later commits because no commit ever mutates or deletes a data

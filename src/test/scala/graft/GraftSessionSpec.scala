@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The environment's positive-int parse, and guards that keep the session
   * factory the only session builder, `Surface` the only installer of the
   * Catalyst surface, `src/main` to its four mains and its `SPARK_GRAFT_*`
-  * variables to a fixed list, and `src/main` free of `spark.graft.*` conf
-  * keys and of checkpoint-dir setters. */
+  * variables to a fixed list, `src/main` free of `spark.graft.*` conf
+  * keys, of checkpoint-dir setters and of conf setters outside
+  * `GraftSession`, and its comments free of round tags. */
 class GraftSessionSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses as a positive Int, unset means every cpu") {
     val cpus = Runtime.getRuntime.availableProcessors
@@ -92,5 +93,77 @@ class GraftSessionSpec extends AnyFunSuite {
       .map(_.getFileName.toString)
     assert(installers == Seq("Surface.scala"))
     assert(!files.exists(f => Files.readString(f).contains("ensureRegistered")))
+  }
+
+  test("outside GraftSession, src/main sets no session conf") {
+    // GraftSession configures the session and scopes a change
+    // (withConfs); a query that set a conf itself would change how every
+    // later query in the session plans
+    val setters = sources("src/main/scala")
+      .filter(f => Files.readString(f).contains(".conf.set("))
+      .map(_.getFileName.toString)
+    assert(setters == Seq("GraftSession.scala"))
+  }
+
+  test("src/main comments carry no round tags") {
+    // a comment says what is true now and why; when a reason rests on a
+    // measurement, it names the SCALE.md section that holds it
+    val tag = """\br\d{1,2}\b|(?i)\bround[ -]\d+""".r
+    val tagged = for {
+      f <- sources("src/main/scala")
+      c <- GraftSessionSpec.comments(Files.readString(f))
+      m <- tag.findFirstIn(c)
+    } yield s"${f.getFileName}: $m in ${c.take(80)}"
+    assert(tagged == Nil)
+  }
+
+  test("the comment scan reads comments only") {
+    val src = "val r0 = 1 // r1\n/* r2 /* r3 */ r4 */ s\"r5 // r6\"\n" +
+      "\"\"\"r7 /* r8\"\"\" ; '\"' ; '\\'' // r9\n"
+    assert(GraftSessionSpec.comments(src) == Seq("// r1", "/* r2 /* r3 */ r4 */", "// r9"))
+  }
+}
+
+object GraftSessionSpec {
+  /** The comments of a Scala source, each as written, skipping string and
+    * character literals (single-line and triple-quoted) and nesting block
+    * comments as Scala does. */
+  def comments(src: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val n = src.length
+    def skipQuoted(from: Int): Int = { // from is past the opening quote
+      var j = from
+      while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+      j + 1
+    }
+    var i = 0
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i)
+        val end = if (e < 0) n else e
+        out += src.substring(i, end)
+        i = end
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        out += src.substring(i, j)
+        i = j
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = src.indexOf("\"\"\"", i + 3)
+        i = if (e < 0) n else e + 3
+        while (i < n && src(i) == '"') i += 1
+      } else if (src(i) == '"') i = skipQuoted(i + 1)
+      else if (src.startsWith("'\\", i)) {
+        val e = src.indexOf('\'', i + 3)
+        i = if (e < 0) n else e + 1
+      } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') i += 3
+      else i += 1
+    }
+    out.result()
   }
 }

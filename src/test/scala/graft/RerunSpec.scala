@@ -69,7 +69,7 @@ class RerunSpec extends AnyFunSuite {
   }
 
   test("memoized-source stream queries are rerun-idempotent in one session") {
-    // r16 moved their staged sources under SharedStage (built once per
+    // their staged sources live under SharedStage (built once per
     // (application, sfDir)); the second call must serve the SAME staged
     // files and converge to the same answer — a staging-lifecycle bug
     // (stale slices, missing marker, reused checkpoint) would show here
@@ -85,8 +85,6 @@ class RerunSpec extends AnyFunSuite {
   }
 
   test("stream-stream join is rerun-idempotent and restores shuffle partitions") {
-    // every events read sets nanosAsLong for the whole session, on purpose
-    Tables.events(spark, sf)
     val before = spark.conf.getAll // holds the shuffle partition count
     val a = StreamOps.qStreamJoin(spark, sf).collect().map(_.toSeq)
     val b = StreamOps.qStreamJoin(spark, sf).collect().map(_.toSeq)
@@ -99,5 +97,16 @@ class RerunSpec extends AnyFunSuite {
       StreamOps.queries(q)(spark, sf).collect()
       assert(spark.conf.getAll === before, s"$q left the session confs changed")
     }
+  }
+
+  test("reading events, as a table or a stream, leaves the session confs unchanged") {
+    // GraftSession sets nanosAsLong when it builds the session; no query
+    // sets it again
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val before = spark.conf.getAll
+    Tables.events(spark, sf).count()
+    assert(spark.conf.getAll === before, "Tables.events left the session confs changed")
+    StreamOps.qStreamLive(spark, sf).collect()
+    assert(spark.conf.getAll === before, "an events stream left the session confs changed")
   }
 }

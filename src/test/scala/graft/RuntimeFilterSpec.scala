@@ -11,18 +11,8 @@ class RuntimeFilterSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("selective build side injects a bloom filter into the probe side") {
-    withConfs(
+    GraftSession.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
@@ -38,7 +28,8 @@ class RuntimeFilterSpec extends AnyFunSuite {
         s"no bloom runtime filter injected:\n$optimized")
       // and it must not change results vs the plain join
       val n = joined.count()
-      withConfs("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+      GraftSession.withConfs(spark,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
         assert(probe.join(selective,
           col("l_orderkey") === col("o_orderkey")).count() === n)
       }

@@ -11,19 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class SkewJoinSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the skewed partition of a sort-merge join") {
     import spark.implicits._
-    withConfs(
+    GraftSession.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",

@@ -50,10 +50,12 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 
 run_bench() { # $1=tree dir  $2=output json path
-  (cd "$1" && java $ADD_OPENS "-Xmx${SPARK_DRIVER_MEM:-8g}" \
+  # the per-query maps are in the record Bench writes to target/bench.json
+  # (its stdout line carries the totals only)
+  (cd "$1" && rm -f target/bench.json && java $ADD_OPENS "-Xmx${SPARK_DRIVER_MEM:-8g}" \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
-    2>"$2.err" | grep -m1 '"metric"' >"$2") \
+    2>"$2.err" >/dev/null && cp target/bench.json "$2") \
     || { echo "[ab] bench FAILED in $1 (stderr tail):" >&2; tail -5 "$2.err" >&2; exit 1; }
   # a failed query records a bogus-small timing (stale controls can't
   # read regenerated fixtures; resource-less builds can't find DSv2
